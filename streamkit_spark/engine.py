@@ -185,13 +185,8 @@ class StreamkitEngine:
     ) -> DataFrame:
         """Stored-status fast path with recompute fallback (J2 —
         pebblekit/store.go:151-157,368-409)."""
-        path = self._status_path(store_id)
-        if os.path.isdir(path):
-            df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(path)
-            df = df.filter(F.col("space") == space)
-            if segment is not None:
-                df = df.filter(F.col("segment") == segment)
-            return df.orderBy("space", "segment")
+        if os.path.isdir(self._status_path(store_id)):
+            return self.store(store_id).statuses(space, segment)
         return segment_status(
             self.store(store_id).events(), space=space, segment=segment
         )

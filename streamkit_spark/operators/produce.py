@@ -18,11 +18,13 @@ semantics for same-segment writers come from three layers: (1) in-process
 per-segment mutex (the reference's lock map), (2) cross-process per-segment
 flock held for the peek→append window, (3) a post-append tail verification
 that detects any write that slipped past both (stale status after a crash,
-lock-bypassing foreign writer), rolls back exactly the files this produce
+lock-bypassing foreign writer), rolls back exactly the file this produce
 renamed in, repairs the status row, and raises SequenceMismatchError — the
 reference's error-not-lock contract for racers (docs/limitations.md:57-60).
-Validation of an incoming batch is a DataFrame aggregation, not a driver
-loop — it scales to arbitrarily large produces.
+A produce is the client's batch, already in driver memory: it is validated
+and stamped on the driver and committed as ONE pyarrow-written parquet file;
+the tail verification is its one Spark job.  Bulk DataFrame loads go
+through ``streaming/ingest.ingest_batch`` (one produce per segment group).
 """
 
 from __future__ import annotations
@@ -34,9 +36,10 @@ import time
 import urllib.parse
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from streamkit_spark.errors import SequenceMismatchError, ValidationError
 from streamkit_spark.schema import (
@@ -86,15 +89,32 @@ def _part_dir(space: str, segment: str) -> str:
     q = lambda v: urllib.parse.quote(str(v), safe="")
     return f"space={q(space)}/segment={q(segment)}"
 
-# nullable on purpose: malformed input must reach the engine's own
-# validation (ValidationError), not fail at DataFrame construction
-RECORD_SCHEMA = T.StructType(
-    [
-        T.StructField("sequence", T.LongType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-    ]
+# one produce's parquet file: zstd like the session's Spark writer; dictionary
+# encoding only for the envelope columns repeated on every row; min/max stats
+# only where a filter can prune (payload stats would bloat small files); no
+# ARROW:schema footer blob — readers take EVENTS_SCHEMA
+_WRITE_OPTIONS = dict(
+    compression="zstd",
+    use_dictionary=["store_id", "segment", "trx_id", "trx_node"],
+    write_statistics=[
+        "store_id", "segment", "sequence", "ts", "trx_id", "trx_node", "trx_number"
+    ],
+    store_schema=False,
 )
+
+
+def _status_aggs() -> list:
+    """A segment's status fields recomputed from its events, in
+    ``_write_status_row`` argument order — the one recompute rule of
+    :meth:`Store._repair_status` and :meth:`Store.recover`."""
+    seq = F.col("sequence")
+    return [
+        F.min(seq).alias("fs"),
+        F.min_by("ts", seq).alias("fts"),
+        F.max(seq).alias("ls"),
+        F.max_by("ts", seq).alias("lts"),
+        F.max("trx_number").alias("lt"),
+    ]
 
 
 class Store:
@@ -153,12 +173,36 @@ class Store:
 
     # ----------------------------------------------------------- status
 
-    def statuses(self) -> DataFrame:
+    def statuses(
+        self, space: str | None = None, segment: str | None = None
+    ) -> DataFrame:
         """The maintained segment_status table (A1, incrementally updated
-        at write time — reference: pebblekit/store.go:289-302)."""
+        at write time — reference: pebblekit/store.go:289-302), optionally
+        scoped to one space / segment: one row per segment, ordered by
+        (space, segment).
+
+        A status swap (:meth:`_write_status_row`) lands the new row file
+        before it removes the old one, so for an instant a partition holds
+        two row versions; as in :meth:`last_status`, the max-last_sequence
+        version wins.  The window runs on the sort's range partitioning
+        (no second shuffle); one segment's partition holds one or two tiny
+        files, so that lookup reads in a single task with no shuffle."""
         if not os.path.isdir(self.status_path):
             return self.spark.createDataFrame([], SEGMENT_STATUS_SCHEMA)
-        return self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(self.status_path)
+        df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(self.status_path)
+        if space is not None:
+            df = df.filter(F.col("space") == space)
+        if segment is not None:
+            df = df.filter(F.col("segment") == segment).coalesce(1)
+        versions = Window.partitionBy("space", "segment").orderBy(
+            F.desc("last_sequence")
+        )
+        return (
+            df.orderBy("space", "segment")
+            .withColumn("_version", F.row_number().over(versions))
+            .filter(F.col("_version") == 1)
+            .drop("_version")
+        )
 
     def last_status(self, space: str, segment: str) -> dict | None:
         """O(1) stored-status lookup: reads the one tiny parquet partition
@@ -169,8 +213,6 @@ class Store:
         During a concurrent status swap two row versions may coexist for an
         instant; the max-last_sequence row wins (monotone by construction).
         """
-        import pyarrow.parquet as pq
-
         part = os.path.join(self.status_path, _part_dir(space, segment))
         if not os.path.isdir(part):
             return None
@@ -202,9 +244,6 @@ class Store:
         file lands first, old row files are removed after — a concurrent
         reader sees one or both rows and `last_status` resolves by max
         last_sequence."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         part = os.path.join(self.status_path, _part_dir(space, segment))
         os.makedirs(part, exist_ok=True)
         old_files = [f for f in os.listdir(part) if f.endswith(".parquet")]
@@ -230,20 +269,11 @@ class Store:
         row = (
             self.events()
             .filter((F.col("space") == space) & (F.col("segment") == segment))
-            .agg(
-                F.min("sequence").alias("fs"),
-                F.min_by("ts", F.col("sequence")).alias("fts"),
-                F.max("sequence").alias("ls"),
-                F.max_by("ts", F.col("sequence")).alias("lts"),
-                F.max("trx_number").alias("lt"),
-            )
+            .agg(*_status_aggs())
             .first()
         )
-        if row["ls"] is None:
-            return
-        self._write_status_row(
-            space, segment, row["fs"], row["fts"], row["ls"], row["lts"], row["lt"]
-        )
+        if row["ls"] is not None:
+            self._write_status_row(space, segment, *row)
 
     def _last_state(self, space: str, segment: str) -> tuple[int, int]:
         """(last_sequence, last_trx_number) — the reference's pre-produce
@@ -281,38 +311,42 @@ class Store:
         self,
         space: str,
         segment: str,
-        records: DataFrame | list,
+        records: list,
         now_ms: int | None = None,
     ) -> list[dict]:
         """Append records to one segment; returns one SegmentStatus dict per
         committed chunk.
 
-        ``records``: DataFrame with RECORD_SCHEMA columns, or a list of
-        (sequence, payload, metadata) tuples / dicts.
-        """
+        ``records``: a list of (sequence, payload, metadata) tuples or dicts,
+        validated on the driver: null payloads, non-integer or non-positive
+        sequences raise ValidationError; gaps, duplicates or null sequences
+        raise SequenceMismatchError.  Bulk DataFrame loads go through
+        ``streaming/ingest.ingest_batch``."""
         if not space or not segment:
             raise ValidationError("space and segment must be non-empty")
-        df = self._as_records_df(records)
-
-        # -- validate the incoming batch as a whole (distributed, one agg)
-        stats = df.agg(
-            F.count("*").alias("n"),
-            F.min("sequence").alias("min_seq"),
-            F.max("sequence").alias("max_seq"),
-            F.count_distinct("sequence").alias("n_distinct"),
-            F.sum(F.when(F.col("payload").isNull(), 1).otherwise(0)).alias("n_null"),
-            F.sum(F.when(F.col("sequence") <= 0, 1).otherwise(0)).alias("n_badseq"),
-        ).first()
-        n = stats["n"]
+        batch = [
+            (r["sequence"], r["payload"], r.get("metadata"))
+            if isinstance(r, dict)
+            else (r[0], r[1], r[2] if len(r) > 2 else None)
+            for r in records
+        ]
+        n = len(batch)
         if n == 0:
             return []
-        if stats["n_null"] or stats["n_badseq"]:
+        seqs = [r[0] for r in batch if r[0] is not None]
+        if any(isinstance(q, bool) or not isinstance(q, int) for q in seqs):
+            raise ValidationError("sequences must be integers")
+        n_null = sum(r[1] is None for r in batch)
+        n_badseq = sum(q <= 0 for q in seqs)
+        if n_null or n_badseq:
             raise ValidationError(
-                f"{stats['n_null']} null payloads, {stats['n_badseq']} non-positive sequences"
+                f"{n_null} null payloads, {n_badseq} non-positive sequences"
             )
-        if stats["n_distinct"] != n or stats["max_seq"] - stats["min_seq"] + 1 != n:
-            # gaps or duplicates inside the batch (I1/I2 precondition)
+        if len(set(seqs)) != n or max(seqs) - min(seqs) + 1 != n:
+            # gaps, duplicates or null sequences inside the batch (I1/I2
+            # precondition)
             raise SequenceMismatchError(space, segment, -1, -1)
+        batch.sort(key=lambda r: r[0])
 
         # lock order: in-process segment lock → store flock (shared) →
         # segment flock (exclusive).  compact() takes the store flock
@@ -321,66 +355,68 @@ class Store:
         with self._segment_lock(space, segment), _flock(
             self._store_lock_path, exclusive=False
         ), _flock(self._seg_flock_path(space, segment), exclusive=True):
-            return self._produce_locked(space, segment, df, stats, now_ms)
+            return self._produce_locked(space, segment, batch, now_ms)
 
-    def _produce_locked(self, space, segment, df, stats, now_ms) -> list[dict]:
-        n = stats["n"]
+    def _produce_locked(self, space, segment, batch, now_ms) -> list[dict]:
+        n = len(batch)
+        base, max_seq = batch[0][0], batch[-1][0]
         last_seq, last_trx = self._last_state(space, segment)
-        if stats["min_seq"] != last_seq + 1:
-            raise SequenceMismatchError(space, segment, last_seq + 1, stats["min_seq"])
+        if base != last_seq + 1:
+            raise SequenceMismatchError(space, segment, last_seq + 1, base)
 
-        # -- stamp chunk lineage: chunk index from the sequence itself
-        # (deterministic, no window/shuffle); one ts + TRX per chunk.
-        base = int(stats["min_seq"])
+        # -- stamp chunk lineage: chunk index from the position in the
+        # contiguous batch; one ts + TRX per chunk.  Every chunk commits at
+        # the same wall-clock, so ts stays nondecreasing in sequence.
         ts = now_ms if now_ms is not None else int(time.time() * 1000)
         n_chunks = (n + PRODUCE_CHUNK_SIZE - 1) // PRODUCE_CHUNK_SIZE
         chunk_ids = [str(uuid.uuid4()) for _ in range(n_chunks)]
-        chunk_map = F.array(*[F.lit(c) for c in chunk_ids])
-        chunk_idx = ((F.col("sequence") - base) / PRODUCE_CHUNK_SIZE).cast("long")
-        stamped = (
-            df.withColumn("store_id", F.lit(self.store_id))
-            .withColumn("space", F.lit(space))
-            .withColumn("segment", F.lit(segment))
-            # every chunk commits at the same wall-clock in this batch write;
-            # ts still nondecreasing in sequence (commit invariant)
-            .withColumn("ts", F.lit(ts).cast("long"))
-            .withColumn("trx_id", F.element_at(chunk_map, (chunk_idx + 1).cast("int")))
-            .withColumn("trx_node", F.lit(self._node_id))
-            .withColumn("trx_number", (F.lit(last_trx) + 1 + chunk_idx).cast("long"))
-            .select(*[f.name for f in EVENTS_SCHEMA.fields])
+        chunk = [i // PRODUCE_CHUNK_SIZE for i in range(n)]
+        # the EVENTS_SCHEMA columns minus the ``space`` partition column,
+        # in the order Spark's partitionBy writer lays them out
+        table = pa.table(
+            {
+                "store_id": pa.repeat(self.store_id, n),
+                "segment": pa.repeat(segment, n),
+                "sequence": pa.array([r[0] for r in batch], pa.int64()),
+                "ts": pa.repeat(ts, n),
+                "payload": pa.array([r[1] for r in batch], pa.binary()),
+                "metadata": pa.array(
+                    [r[2] for r in batch], pa.map_(pa.string(), pa.string())
+                ),
+                "trx_id": pa.array([chunk_ids[c] for c in chunk], pa.string()),
+                "trx_node": pa.repeat(self._node_id, n),
+                "trx_number": pa.array([last_trx + 1 + c for c in chunk], pa.int64()),
+            }
         )
 
         # -- append, then verify the tail actually reads back contiguous.
         # The segment flock already excludes same-segment writers that
         # honor the lock protocol; this check catches everything else —
         # a stale status row after a crash, or a foreign writer bypassing
-        # the locks — and rolls the just-renamed files back so the
+        # the locks — and rolls the just-renamed file back so the
         # violation is surfaced as an error, not silent duplicate
-        # sequences (I1/I2 stay invariant for either racer).  The scan is
-        # bounded: `sequence > last_seq` prunes every file whose max
-        # sequence stat is below the new tail.
-        appended = self._append_files(stamped)
-        tail = (
-            self.events()
+        # sequences (I1/I2 stay invariant for either racer).  The read
+        # goes through events(), the reader consumers use, as ONE job;
+        # `sequence > last_seq` prunes every file whose max sequence stat
+        # is below the new tail.
+        appended = self._append_file(space, table)
+        tail = sorted(
+            r[0]
+            for r in self.events()
             .filter(
                 (F.col("space") == space)
                 & (F.col("segment") == segment)
                 & (F.col("sequence") > last_seq)
             )
-            .agg(
-                F.count("*").alias("cnt"),
-                F.count_distinct("sequence").alias("dst"),
-                F.max("sequence").alias("mx"),
-            )
-            .first()
+            .select("sequence")
+            .collect()
         )
-        if tail["cnt"] != n or tail["dst"] != n or tail["mx"] != int(stats["max_seq"]):
-            for path in appended:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(path)
+        if tail != list(range(last_seq + 1, max_seq + 1)):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(appended)
             self._repair_status(space, segment)
             cur_seq, _ = self._last_state(space, segment)
-            raise SequenceMismatchError(space, segment, cur_seq + 1, stats["min_seq"])
+            raise SequenceMismatchError(space, segment, cur_seq + 1, base)
 
         # -- merge the status this produce just created (no events scan)
         prior = None if last_seq == 0 else self.last_status(space, segment)
@@ -393,7 +429,7 @@ class Store:
                 segment,
                 first_sequence=prior["first_sequence"] if prior else base,
                 first_ts=prior["first_ts"] if prior else ts,
-                last_sequence=int(stats["max_seq"]),
+                last_sequence=max_seq,
                 last_ts=ts,
                 last_trx_number=last_trx + n_chunks,
             )
@@ -402,7 +438,7 @@ class Store:
         statuses = []
         for ci in range(n_chunks):
             first = base + ci * PRODUCE_CHUNK_SIZE
-            last = min(base + (ci + 1) * PRODUCE_CHUNK_SIZE - 1, int(stats["max_seq"]))
+            last = min(base + (ci + 1) * PRODUCE_CHUNK_SIZE - 1, max_seq)
             statuses.append(
                 {
                     "space": space,
@@ -438,43 +474,26 @@ class Store:
         avg_bytes, n_small (files under ``small_file_bytes``), and
         ``needs_compaction`` (more than one file and a majority small).
 
-        Driver-side directory walk: cost is proportional to the FILE
-        COUNT (the very thing being measured), no data is read.  Takes
-        the store flock SHARED (compatible with producers, excludes
-        compact's directory swap); individual files that a concurrent
-        produce rollback removes mid-walk are skipped, not crashed on.
-        Space names are unquoted from the partition-dir encoding (the
-        ``_part_dir`` round trip).  At the 256 MB-target layout of
-        docs/SCALE.md, a healthy space reports n_small ≈ 0; a
-        streaming-append space drifts upward until the scheduled
-        compact."""
-        root = self.events_path
+        Driver-side directory walk (:meth:`_space_files`): cost is
+        proportional to the FILE COUNT (the very thing being measured), no
+        data is read.  At the 256 MB-target layout of docs/SCALE.md, a
+        healthy space reports n_small ≈ 0; a streaming-append space drifts
+        upward until the scheduled compact."""
         out = []
-        if not os.path.isdir(root):
-            return out
-        with _flock(self._store_lock_path, exclusive=False):
-            for entry in sorted(os.listdir(root)):
-                spath = os.path.join(root, entry)
-                if not (os.path.isdir(spath) and "=" in entry):
-                    continue
-                sizes = []
-                for p in _parquet_paths(spath):
-                    try:
-                        sizes.append(os.path.getsize(p))
-                    except OSError:
-                        continue  # rolled back / renamed between walk+stat
-                n, total = len(sizes), sum(sizes)
-                small = sum(1 for s in sizes if s < small_file_bytes)
-                out.append(
-                    {
-                        "space": urllib.parse.unquote(entry.split("=", 1)[1]),
-                        "n_files": n,
-                        "total_bytes": total,
-                        "avg_bytes": total // n if n else 0,
-                        "n_small": small,
-                        "needs_compaction": n > 1 and small * 2 > n,
-                    }
-                )
+        for space, files in self._space_files():
+            sizes = [size for _, size in files]
+            n, total = len(sizes), sum(sizes)
+            small = sum(1 for s in sizes if s < small_file_bytes)
+            out.append(
+                {
+                    "space": space,
+                    "n_files": n,
+                    "total_bytes": total,
+                    "avg_bytes": total // n if n else 0,
+                    "n_small": small,
+                    "needs_compaction": n > 1 and small * 2 > n,
+                }
+            )
         return out
 
     def compaction_plan(self, target_bytes: int = 256 * 1024 * 1024):
@@ -485,25 +504,16 @@ class Store:
         plans SIZE-bounded outputs so a petabyte space compacts into
         ~target-sized files instead of one giant one.
 
-        The file walk reuses :meth:`file_stats`' discipline (shared
-        flock, skip files removed mid-walk); the plan itself is a
-        metadata-scale DataFrame — nothing reads data bytes."""
+        The file walk is :meth:`file_stats`' (:meth:`_space_files`); the
+        plan itself is a metadata-scale DataFrame — nothing reads data
+        bytes."""
         from streamkit_spark.functions.layout import compaction_plan
 
-        rows = []
-        root = self.events_path
-        if os.path.isdir(root):
-            with _flock(self._store_lock_path, exclusive=False):
-                for entry in sorted(os.listdir(root)):
-                    spath = os.path.join(root, entry)
-                    if not (os.path.isdir(spath) and "=" in entry):
-                        continue
-                    space = urllib.parse.unquote(entry.split("=", 1)[1])
-                    for p in _parquet_paths(spath):
-                        try:
-                            rows.append((space, p, os.path.getsize(p)))
-                        except OSError:
-                            continue  # rolled back mid-walk
+        rows = [
+            (space, p, size)
+            for space, files in self._space_files()
+            for p, size in files
+        ]
         files = self.spark.createDataFrame(
             rows, "space string, file string, bytes long"
         )
@@ -675,17 +685,7 @@ class Store:
                 ev = self.events()
                 if spaces:
                     ev = ev.filter(F.col("space").isin(spaces))
-                actual = (
-                    ev.groupBy("space", "segment")
-                    .agg(
-                        F.min("sequence").alias("fs"),
-                        F.min_by("ts", F.col("sequence")).alias("fts"),
-                        F.max("sequence").alias("ls"),
-                        F.max_by("ts", F.col("sequence")).alias("lts"),
-                        F.max("trx_number").alias("lt"),
-                    )
-                    .collect()
-                )
+                actual = ev.groupBy("space", "segment").agg(*_status_aggs()).collect()
                 for row in actual:
                     st = self.last_status(row["space"], row["segment"])
                     if (
@@ -694,67 +694,60 @@ class Store:
                         or st["last_trx_number"] != row["lt"]
                         or st["first_sequence"] != row["fs"]
                     ):
-                        self._write_status_row(
-                            row["space"],
-                            row["segment"],
-                            row["fs"],
-                            row["fts"],
-                            row["ls"],
-                            row["lts"],
-                            row["lt"],
-                        )
+                        self._write_status_row(*row)
                         report["status_repaired"] += 1
         return report
 
     # ---------------------------------------------------------- helpers
 
-    def _append_files(self, stamped: DataFrame) -> list[str]:
-        """Concurrent-safe append: write to a produce-private staging dir,
-        then move the parquet files into the table with unique names.
-        Returns the destination paths (so a failed post-append verification
-        can roll this exact write back).
+    def _space_files(self) -> list[tuple[str, list[tuple[str, int]]]]:
+        """(space, [(path, bytes), ...]) per ``space=`` directory of the
+        events table, walked under the store flock SHARED (compatible with
+        producers, excludes compact's directory swap).  Files a concurrent
+        produce rollback removes mid-walk are skipped, not crashed on.
+        Space names are unescaped from Spark's partition-dir encoding."""
+        out = []
+        if not os.path.isdir(self.events_path):
+            return out
+        with _flock(self._store_lock_path, exclusive=False):
+            for entry in sorted(os.listdir(self.events_path)):
+                spath = os.path.join(self.events_path, entry)
+                if not (os.path.isdir(spath) and "=" in entry):
+                    continue
+                files = []
+                for p in _parquet_paths(spath):
+                    try:
+                        files.append((p, os.path.getsize(p)))
+                    except OSError:
+                        continue  # rolled back / renamed between walk+stat
+                out.append((urllib.parse.unquote(entry.split("=", 1)[1]), files))
+        return out
 
-        The default Hadoop committer stages every concurrent write of one
-        table under the SAME ``_temporary/0`` directory — parallel
-        producers corrupt each other's staging (observed under the
-        high-volume test).  A private staging dir + per-file rename gives
-        lock-free cross-segment write parallelism — the reference's model
+    def _append_file(self, space: str, table: pa.Table) -> str:
+        """Concurrent-safe append of one produce as ONE parquet file: write
+        it into a produce-private staging dir, then rename it into the
+        table under a unique name.  Returns the destination path (so a
+        failed post-append verification can roll this exact write back).
+
+        The ``space=`` directory is named by Spark's own escaping, so the
+        layout is exactly what ``partitionBy("space")`` writes.  A crash
+        before the rename leaves only the staging dir, which
+        :meth:`recover` sweeps.  Writers of different segments never share
+        a staging path, so they run in parallel — the reference's model
         (per-segment serialization only, docs/production.md:85-91)."""
         import shutil
 
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+        space_dir = f"space={utils.ExternalCatalogUtils.escapePathName(space)}"
         staging = os.path.join(self.root, f".staging-{uuid.uuid4()}")
-        moved: list[str] = []
+        os.makedirs(staging)
         try:
-            (
-                stamped.repartition(1)
-                .sortWithinPartitions("segment", "sequence")
-                .write.mode("overwrite")
-                .partitionBy("space")
-                .parquet(staging)
-            )
-            for entry in os.listdir(staging):
-                if not entry.startswith("space="):
-                    continue
-                dest_dir = os.path.join(self.events_path, entry)
-                os.makedirs(dest_dir, exist_ok=True)
-                src_dir = os.path.join(staging, entry)
-                for f in os.listdir(src_dir):
-                    if f.endswith(".parquet"):
-                        dest = os.path.join(dest_dir, f"{uuid.uuid4()}.parquet")
-                        os.rename(os.path.join(src_dir, f), dest)
-                        moved.append(dest)
-            return moved
+            tmp = os.path.join(staging, "part.parquet")
+            pq.write_table(table, tmp, **_WRITE_OPTIONS)
+            dest_dir = os.path.join(self.events_path, space_dir)
+            os.makedirs(dest_dir, exist_ok=True)
+            dest = os.path.join(dest_dir, f"{uuid.uuid4()}.parquet")
+            os.rename(tmp, dest)
+            return dest
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-
-    def _as_records_df(self, records: DataFrame | list) -> DataFrame:
-        if isinstance(records, DataFrame):
-            return records.select("sequence", "payload", "metadata")
-        rows = []
-        for r in records:
-            if isinstance(r, dict):
-                rows.append((r["sequence"], r["payload"], r.get("metadata")))
-            else:
-                seq, payload, *rest = r
-                rows.append((seq, payload, rest[0] if rest else None))
-        return self.spark.createDataFrame(rows, RECORD_SCHEMA)

@@ -66,6 +66,31 @@ def test_status_table_maintained_and_consistent(engine):
     assert stored == recomputed
 
 
+def test_get_segment_status_one_row_per_segment_mid_swap(engine):
+    """A stale row version left next to the current one (the instant
+    inside a status swap) must not surface as a second status row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamkit_spark.operators.produce import _part_dir
+
+    engine.produce(STORE, "s0", "g0", recs(1, 4), now_ms=50)
+    engine.produce(STORE, "s0", "g0", recs(5, 2), now_ms=70)
+    part = os.path.join(engine.store(STORE).status_path, _part_dir("s0", "g0"))
+    pq.write_table(
+        pa.table({"first_sequence": [1], "first_ts": [50], "last_sequence": [4],
+                  "last_ts": [50], "last_trx_number": [1]}),
+        os.path.join(part, "stale.parquet"),
+    )
+    for segment in ("g0", None):
+        rows = engine.get_segment_status(STORE, "s0", segment).collect()
+        assert [(r["segment"], r["last_sequence"], r["last_ts"]) for r in rows] == [
+            ("g0", 6, 70)
+        ]
+
+
 def test_multi_store_isolation(engine):
     other = "99999999-8888-7777-6666-555555555555"
     engine.produce(STORE, "s0", "g0", recs(1, 1), now_ms=10)

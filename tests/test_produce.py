@@ -4,6 +4,9 @@ test/consume_boundaries_integration_test.go semantics)."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pytest
 
 from streamkit_spark.errors import SequenceMismatchError, ValidationError
@@ -11,7 +14,7 @@ from streamkit_spark.operators import invariants
 from streamkit_spark.operators.consume import ConsumeBounds, consume_segment, peek
 from streamkit_spark.operators.produce import Store
 from streamkit_spark.operators.status import get_segments, get_spaces, segment_status
-from streamkit_spark.schema import ENVELOPE_BINDING, PRODUCE_CHUNK_SIZE
+from streamkit_spark.schema import ENVELOPE_BINDING, EVENTS_SCHEMA, PRODUCE_CHUNK_SIZE
 
 
 @pytest.fixture()
@@ -46,6 +49,8 @@ def test_should_reject_internal_gap_or_dup(store):
         store.produce("s0", "g0", [(1, b"a", None), (3, b"b", None)], now_ms=1)
     with pytest.raises(SequenceMismatchError):
         store.produce("s0", "g0", [(1, b"a", None), (1, b"b", None)], now_ms=1)
+    with pytest.raises(SequenceMismatchError):  # a null sequence is a gap
+        store.produce("s0", "g0", [(1, b"a", None), (None, b"b", None)], now_ms=1)
 
 
 def test_should_reject_invalid_records(store):
@@ -55,6 +60,59 @@ def test_should_reject_invalid_records(store):
         store.produce("s0", "g0", [(0, b"a", None)], now_ms=1)
     with pytest.raises(ValidationError):
         store.produce("s0", "g0", [(1, None, None)], now_ms=1)
+    with pytest.raises(ValidationError):
+        store.produce("s0", "g0", [(1, b"a", None), ("2", b"b", None)], now_ms=1)
+    assert not os.path.exists(store.events_path)  # rejected before any write
+
+
+def test_produce_starts_exactly_one_spark_job(store, spark):
+    """A produce commits the batch from the driver; its one Spark job is
+    the post-append tail verification read."""
+    sc = spark.sparkContext
+    for start in (1, 301):  # first produce of a segment, then a follow-up
+        group = f"produce-{uuid.uuid4()}"
+        sc.setJobGroup(group, "produce job-count pin")
+        try:
+            store.produce("s0", "g0", recs(start, 300), now_ms=start)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert store.events().count() == 600
+
+
+def test_produce_layout_matches_spark_partition_writer(store, spark, tmp_path):
+    """A produced file reads back exactly like the same rows written by
+    Spark's partitionBy("space") writer, under a byte-equal ``space=``
+    directory — also for a space name Spark escapes and for null vs empty
+    metadata maps."""
+    from pyspark.sql import functions as F
+
+    space = "a/b:c d%"
+    batch = [(1, b"p1", None), (2, b"p2", {}), (3, b"p3", {"k": "v", "e": ""})]
+    store.produce(space, "g0", batch, now_ms=7)
+    trx_id = store.events().first()["trx_id"]
+    ref_path = str(tmp_path / "ref")
+    spark.createDataFrame(
+        [
+            (store.store_id, space, "g0", q, 7, p, m, trx_id, store._node_id, 1)
+            for q, p, m in batch
+        ],
+        EVENTS_SCHEMA,
+    ).write.partitionBy("space").parquet(ref_path)
+
+    def rows(df):  # set operations cannot take map columns
+        return df.withColumn("metadata", F.array_sort(F.map_entries("metadata")))
+
+    ours = rows(store.events())
+    ref = rows(spark.read.schema(EVENTS_SCHEMA).parquet(ref_path))
+    assert ours.exceptAll(ref).count() == 0
+    assert ref.exceptAll(ours).count() == 0
+    assert [r["metadata"] for r in store.events().orderBy("sequence").collect()] == [
+        None, {}, {"k": "v", "e": ""},
+    ]
+    ref_dirs = [d for d in os.listdir(ref_path) if d.startswith("space=")]
+    assert os.listdir(store.events_path) == ref_dirs == ["space=a%2Fb%3Ac d%25"]
+    assert [r["space"] for r in store.file_stats()] == [space]
 
 
 def test_should_assign_one_trx_per_chunk(store):
@@ -236,6 +294,32 @@ def test_stale_status_is_detected_rolled_back_and_repaired(store, spark):
     assert store.last_status("s0", "g0")["last_sequence"] == 5  # repaired
     store.produce("s0", "g0", recs(6, 1), now_ms=4)  # retry from true tail
     assert store.events().count() == 6
+
+
+def test_statuses_resolve_overlapping_row_versions(store):
+    """Mid status swap a partition holds the new row file AND the old one;
+    the Spark-side status table resolves them like last_status does (the
+    max-last_sequence version wins), one row per segment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamkit_spark.operators.produce import _part_dir
+
+    store.produce("s0", "g0", recs(1, 4), now_ms=50)
+    store.produce("s0", "g0", recs(5, 2), now_ms=70)
+    store.produce("s0", "g1", recs(1, 1), now_ms=80)
+    stale = pa.table(
+        {"first_sequence": [1], "first_ts": [50], "last_sequence": [4],
+         "last_ts": [50], "last_trx_number": [1]}
+    )
+    part = os.path.join(store.status_path, _part_dir("s0", "g0"))
+    pq.write_table(stale, os.path.join(part, "stale.parquet"))
+    assert store.last_status("s0", "g0")["last_sequence"] == 6
+    cols = ("space", "segment", "first_sequence", "last_sequence", "last_ts")
+    got = [tuple(r[c] for c in cols) for r in store.statuses().collect()]
+    assert got == [("s0", "g0", 1, 6, 70), ("s0", "g1", 1, 1, 80)]
+    got = [tuple(r[c] for c in cols) for r in store.statuses("s0", "g0").collect()]
+    assert got == [("s0", "g0", 1, 6, 70)]
 
 
 def test_second_store_instance_sees_status(store, spark):
