@@ -3549,9 +3549,10 @@ def q_containment_split(spark, sf_dir):
     from streamkit_spark.functions import curation as C
 
     docs = tables.load(spark, sf_dir, "documents")
+    ranks = D.shingle_ranks(docs)
     edges = D.union_pair_edges(
-        D.ngram_jaccard_pairs(docs, threshold=0.6),
-        D.containment_pairs(docs, threshold=0.6),
+        D.ngram_jaccard_pairs_from_ranks(ranks, threshold=0.6),
+        D.containment_pairs_from_ranks(ranks, threshold=0.6),
     )
     return (
         C.cluster_safe_split(docs, edges)
@@ -3880,16 +3881,17 @@ def q_detector_agreement(spark, sf_dir):
     Detector configs match the declared dedup_* queries EXACTLY, so the
     oracle composes those four oracle strings verbatim (the ivf_recall
     one-source-of-truth discipline)."""
-    from streamkit_spark.functions.dedup import containment_pairs
-
     docs = tables.load(spark, sf_dir, "documents")
+    ranks = D.shingle_ranks(docs, n=3)
     return D.detector_agreement(
         {
-            "jaccard": D.ngram_jaccard_pairs(docs, n=3, threshold=0.6),
-            "overlap": D.overlap_coefficient_pairs(
-                docs, n=3, threshold=0.8, max_df=64
+            "jaccard": D.ngram_jaccard_pairs_from_ranks(ranks, threshold=0.6),
+            "overlap": D.overlap_coefficient_pairs_from_ranks(
+                ranks, threshold=0.8, max_df=64
             ),
-            "containment": containment_pairs(docs, threshold=0.6),
+            "containment": D.containment_pairs_from_ranks(
+                ranks, threshold=0.6
+            ),
             "substring": D.substring_dup_pairs(
                 docs, k=16, w=8, min_shared=2, hash_fn="md5"
             ).select(

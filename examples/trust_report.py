@@ -69,10 +69,11 @@ def main(sf_dir: str) -> None:
     ).show(truncate=False)
 
     print("== 3. Near-dup detector agreement matrix ==")
+    ranks = D.shingle_ranks(docs, n=3)  # one table for both exact detectors
     D.detector_agreement(
         {
-            "jaccard": D.ngram_jaccard_pairs(docs, n=3, threshold=0.6),
-            "containment": D.containment_pairs(docs, threshold=0.6),
+            "jaccard": D.ngram_jaccard_pairs_from_ranks(ranks, threshold=0.6),
+            "containment": D.containment_pairs_from_ranks(ranks, threshold=0.6),
             "substring": D.substring_dup_pairs(
                 docs, k=16, w=8, min_shared=2
             ).select(

@@ -17,7 +17,9 @@ Strategies, cheapest first:
 * **embedding cosine** — near-dup by embedding similarity; random-hyperplane
   LSH buckets then exact cosine verify (see similarity.py).
 
-Every function returns a DataFrame builder (lazy); nothing collects.
+Every function returns a DataFrame builder; nothing collects.  Builders
+that localCheckpoint eagerly (the exact prefix-filter detectors, via
+:func:`shingle_ranks`) say so in their docstrings.
 """
 
 from __future__ import annotations
@@ -89,31 +91,124 @@ def shingle_table(
     )
 
 
+def shingle_ranks(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+) -> DataFrame:
+    """The ranked-shingle table the exact prefix-filter detectors share:
+    one row per (doc, distinct shingle), ``(doc_id, sid, df, rk, nsh)``.
+
+    * ``sid`` — dense LONG shingle id, ``pmod(xxhash64(shingle), 2^16) ·
+      2^43 + dense_rank`` of the shingle within its bucket.  Injective
+      while each bucket holds < 2^31 shingles, with no single-partition
+      global window at any vocabulary size.  The map is a bijection, so
+      every set and intersection size computed on ids equals the one on
+      shingle strings; only the per-element hash work shrinks.
+    * ``df`` — the shingle's global document frequency.
+    * ``rk`` — 0-based rank of the shingle in its doc's (df asc, shingle
+      asc) order.
+    * ``nsh`` — the doc's distinct-shingle count.
+
+    One ``shingle_table`` pass feeds two window stages: ``sid`` and
+    ``df`` from one sort of the bucket-partitioned rows (a shingle's
+    rows meet in one task, as they would in a join on the shingle), and
+    ``rk``/``nsh`` from one sort of the doc-partitioned rows (ONE doc's
+    shingle set per task, O(doc length)).  The table is
+    ``localCheckpoint``-ed EAGERLY: Spark jobs run when this function is
+    called.  The shingle string is dropped before the checkpoint, so it
+    holds numbers only.  Build it once per (corpus, n) and pass it to
+    the ``*_from_ranks`` operators.
+
+    Recall argument (the AllPairs/PPJoin prefix filter — Bayardo, Ma &
+    Srikant, WWW'07), stated once for every consumer.  If a pair must
+    share ``o`` shingles, a doc's first ``|A| − o + 1`` ranks cannot all
+    miss the intersection, so the pair shares a shingle inside that
+    prefix.  Jaccard needs ``o = ⌈t·|A|⌉`` on each side; containment
+    needs it on the SMALLER side only (the containing side emits every
+    shingle).  POSITIONAL filter: every common shingle ranks at or after
+    the pair's smallest common shingle (in the shared (df, shingle)
+    order) in both docs, so a shared shingle at ranks (i, j) bounds the
+    intersection by min(|A|−i, |B|−j); the smallest common shingle's
+    row always passes, so filtering on that bound keeps recall exactly
+    1.  A ``max_df`` cut drops the highest-df shingles, which rank LAST
+    in that order: it removes the smallest common shingle only when it
+    removes every common shingle, so a pair sharing any prefix shingle
+    with df ≤ max_df still passes through that smallest one.
+
+    PRECONDITION: ``id_col`` unique per doc (duplicate ids merge in the
+    per-doc windows)."""
+    return _rank_plan(df, text_col, id_col, n).localCheckpoint()
+
+
+def _rank_plan(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """The lazy plan :func:`shingle_ranks` checkpoints."""
+    bucket = F.pmod(F.xxhash64("shingle"), F.lit(1 << 16))
+    sh = shingle_table(df, text_col, id_col, n).withColumn("__b", bucket)
+    # both windows below sort by (__b, shingle) over ONE exchange
+    sid = F.col("__b").cast("long") * F.lit(1 << 43).cast("long") + (
+        F.dense_rank().over(Window.partitionBy("__b").orderBy("shingle"))
+    )
+    dfreq = F.count("*").over(Window.partitionBy("__b", "shingle"))
+    return sh.select(
+        "doc_id", "shingle", sid.alias("sid"), dfreq.alias("df")
+    ).select(
+        "doc_id",
+        "sid",
+        "df",
+        (
+            F.row_number().over(
+                Window.partitionBy("doc_id").orderBy("df", "shingle")
+            )
+            - 1
+        ).alias("rk"),
+        F.count("*").over(Window.partitionBy("doc_id")).alias("nsh"),
+    )
+
+
+def _rational(threshold: float) -> tuple[int, int]:
+    """threshold as t_num/t_den so every bound is exact integer
+    arithmetic — a float ceil an ulp high would shorten a prefix and
+    silently lose pairs."""
+    return int(round(threshold * 1_000_000)), 1_000_000
+
+
+def _prefix(ranks: DataFrame, t_num: int, t_den: int) -> DataFrame:
+    """Rows inside each doc's prefix, rk < nsh − ⌈t·nsh⌉ + 1.  The ceil
+    multiplies in BIGINT: nsh · t_num overflows INT32 past ~3.6k
+    distinct shingles (ANSI crash or silent wrap)."""
+    return ranks.filter(
+        F.col("rk")
+        < F.expr(
+            f"nsh - ((cast(nsh as bigint) * {t_num} + {t_den - 1})"
+            f" div {t_den}) + 1"
+        )
+    )
+
+
+def _verified_pair_sids(ranks: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate ``(id_a, id_b)`` pairs joined to both docs' sid arrays,
+    ``(id_a, id_b, __sa, __sb)`` — the verify of the candidate-heavy
+    ``*_from_ranks`` operators.  cand stays un-hinted (maybe_broadcast):
+    AQE broadcasts it from its measured size."""
+    vec = ranks.groupBy("doc_id").agg(F.collect_list("sid").alias("__sv"))
+    va = vec.select(F.col("doc_id").alias("id_a"), F.col("__sv").alias("__sa"))
+    vb = vec.select(F.col("doc_id").alias("id_b"), F.col("__sv").alias("__sb"))
+    return va.join(maybe_broadcast(cand), "id_a").join(vb, "id_b")
+
+
 def _verified_pair_arrays(
     df: DataFrame, cand: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """Exact-verification join shared by the pair operators whose
-    candidate sets are SMALL (LSH banding, signature fidelity):
-    candidate (id_a, id_b) pairs joined to the map-only distinct
-    shingle STRING arrays recomputed straight from the docs scan
-    (cheap — no dfreq pipeline), returning ``(id_a, id_b, __sa, __sb)``.
+    """Same contract as :func:`_verified_pair_sids`, but the arrays are
+    the distinct shingle STRINGS recomputed map-only from the docs scan.
+    It serves SMALL candidate sets (LSH banding, signature fidelity),
+    where building a rank table costs more than it saves (r12
+    interleaved A/B on ids: minhash_lsh 2.15 → 3.06 s, fidelity
+    1.42 → 2.70 s), and the lazy ``verify="arrays"`` jaccard path.
 
-    Sibling: :func:`_verified_pair_ids` serves the CANDIDATE-HEAVY
-    operators (prefix-filter jaccard/overlap/containment, ~10⁵+ pairs
-    at sf0.1) where per-candidate string hashing dominates — there the
-    dense-long-id arrays win big; HERE the id pipeline's fixed cost
-    (vocab distinct + rank window + checkpoint + per-doc collect)
-    LOSES to it (r12 interleaved A/B: minhash_lsh 2.15 → 3.06 s,
-    fidelity 1.42 → 2.70 s WORSE on ids; jaccard 5.75 → 4.72 s better).
-
-    cand is normally tiny next to the shingle arrays, but its size is
-    corpus-dependent (a boilerplate-heavy corpus can explode it) and
-    its pipeline is too expensive for a count probe — it stays
-    un-hinted (maybe_broadcast) so AQE broadcasts from the measured
-    runtime size and the pathological case shuffles instead of OOMing.
-    ONE copy per regime: the r6 review found three dedup oracles
-    diverging on tokenization that only the shared-helper discipline
-    prevents."""
+    cand stays un-hinted (maybe_broadcast): its size is corpus-dependent
+    and its pipeline too expensive for a count probe, so AQE broadcasts
+    from the measured size and a pathological case shuffles instead of
+    OOMing.  PRECONDITION: ``id_col`` unique per doc."""
     arrays = _spread(df).select(
         F.col(id_col).alias("doc_id"), word_ngrams(_lc(text_col), n).alias("sh")
     )
@@ -122,171 +217,33 @@ def _verified_pair_arrays(
     return va.join(maybe_broadcast(cand), "id_a").join(vb, "id_b")
 
 
-def _verified_pair_ids(
-    df: DataFrame, cand: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """Exact-verification join for the CANDIDATE-HEAVY pair operators
-    (prefix-filter jaccard / overlap / containment): same contract as
-    :func:`_verified_pair_arrays` — ``(id_a, id_b, __sa, __sb)``, with
-    downstream code reading only ``F.size`` and ``F.array_intersect``
-    sizes — but the arrays carry dense LONG shingle ids instead of the
-    ~25-byte shingle strings.
-
-    The id map is a BIJECTION, so every set size and intersection size
-    is IDENTICAL to the string computation (proven by exceptAll both
-    ways on all five verify consumers at two SFs); only the hash work
-    per candidate element changes.  Ids are a bucketed dense rank,
-    ``pmod(xxhash64(shingle), 2^16) · 2^43 + row_number within the
-    bucket`` — injective while each bucket holds < 2^31 shingles
-    (row_number is INT-typed; with 2^16 buckets that is ~1.4e14
-    distinct shingles total) with no single-partition global window at
-    any vocabulary size.  The id table is localCheckpoint'ed — an
-    EAGER job at plan-construction time, which is why logical-plan-only
-    contexts (the SQL view registry) must route through the string
-    sibling.  The per-doc vector table built on it is referenced by
-    both array sides and re-planned per side (the join+collect runs
-    ≤2×; the measured wins below INCLUDE that cost — checkpointing the
-    vectors too would trade more eager materialization for the saved
-    re-plan and is left unmeasured).
-
-    PRECONDITION (both siblings): ``id_col`` must be unique per doc.
-    The candidate stages already MERGE duplicate-id rows (their df
-    counts and per-doc rank windows key on doc_id), so duplicate ids
-    are incoherent upstream of the verify; this helper's per-doc
-    groupBy additionally concatenates duplicate rows' id arrays where
-    the string sibling would emit one (duplicated) row per input row —
-    neither behavior is meaningful, fix the input.
-
-    Measured at sf0.1: dedup_containment 5.59 → 4.77 s (32 cores) and
-    8.06 → 4.79 s (8 cores, where string hashing was the compute
-    floor); dedup_ngram_jaccard 5.75 → 4.72 s; effective_tokens
-    6.49 → 5.85 s.  For SMALL candidate sets the fixed id-pipeline cost
-    dominates — use the string sibling there (numbers in its
-    docstring)."""
-    sh = shingle_table(df, text_col, id_col, n)
-    bucket = F.pmod(F.xxhash64("shingle"), F.lit(1 << 16))
-    wid = Window.partitionBy("__b").orderBy("shingle")
-    ids = (
-        sh.select("shingle")
-        .distinct()
-        .select("shingle", bucket.alias("__b"))
-        .select(
-            "shingle",
+def _jaccard_verified(verified: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) from verify-joined arrays.
+    |A∪B| = |A| + |B| − |A∩B| (the arrays are distinct sets), so the
+    union array is never materialized."""
+    inter = F.size(F.array_intersect("__sa", "__sb"))
+    return (
+        verified.select(
+            "id_a",
+            "id_b",
             (
-                F.col("__b").cast("long") * F.lit(1 << 43).cast("long")
-                + F.row_number().over(wid)
-            ).alias("__sid"),
+                inter.cast("double") / (F.size("__sa") + F.size("__sb") - inter)
+            ).alias("jaccard"),
         )
-        .localCheckpoint()
+        .filter(F.col("jaccard") >= F.lit(threshold))
+        .orderBy("id_a", "id_b")
     )
-    vec = (
-        sh.join(ids, "shingle")
-        .groupBy("doc_id")
-        .agg(F.collect_list("__sid").alias("__sv"))
-    )
-    va = vec.select(F.col("doc_id").alias("id_a"), F.col("__sv").alias("__sa"))
-    vb = vec.select(F.col("doc_id").alias("id_b"), F.col("__sv").alias("__sb"))
-    return va.join(maybe_broadcast(cand), "id_a").join(vb, "id_b")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    verify: str = "ids",
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via prefix filtering (the AllPairs /
-    PPJoin family — Bayardo, Ma & Srikant, "Scaling Up All Pairs
-    Similarity Search", WWW'07).  Output: (id_a, id_b, jaccard) with
-    id_a < id_b and jaccard ≥ threshold — identical to the naive
-    all-candidates computation, but without its hot-shingle skew.
-
-    ``verify``: ``"ids"`` (default — the dense-long-id verify, fastest
-    on this operator's large candidate sets, but its id table runs an
-    EAGER localCheckpoint job at plan-construction time) or
-    ``"arrays"`` (the string-array verify, fully LAZY — required by
-    logical-plan-only contexts like the SQL view registry, which must
-    not run jobs at registration).  Both produce byte-identical output
-    (the id map is a bijection).
-
-    Why this scales where the raw shingle self-join doesn't: joining on
-    every shingle explodes quadratically on common shingles ("the end of"
-    appearing in D docs → D² candidate rows on one shuffle key).  Prefix
-    filtering orders each doc's shingles by ascending global document
-    frequency and emits only the first ``|A| - ⌈t·|A|⌉ + 1`` of them; any
-    pair with J ≥ t provably shares a prefix shingle (|A∩B| ≥ ⌈t·|A|⌉
-    elements can't all hide in the ⌈t·|A|⌉-1 suffix positions), so
-    candidate recall is exactly 1 — while the join keys are now the RARE
-    shingles, removing the skew by construction.  Candidates are verified
-    with exact jaccard over the full shingle arrays (broadcast, as in
-    :func:`minhash_lsh_pairs`).
-
-    The prefix length uses integer arithmetic (``⌈t·n⌉`` via a rational
-    t), never float ceil — a float ulp upward would shorten the prefix
-    and silently lose pairs.
-    """
-    # The exploded (doc, shingle) table has TWO consumers (the df
-    # aggregate and the ranked join's probe side).  r12 MEASURED a
-    # localCheckpoint here (VERDICT r11 item #4) and REJECTED it:
-    # interleaved A/B at sf0.1 gave old 6.92 vs new 7.67 s (runs=4) then
-    # 6.52 vs 6.50 (runs=6) — materializing ~25-byte shingle strings
-    # costs at least what the second map-only tokenize pass saves, and
-    # AQE exchange reuse already dedupes the shuffle when it fires.
-    # Keep the double map-side derivation; at 100 TB the shingle table
-    # would be materialized at ingest anyway.
-    sh = shingle_table(df, text_col, id_col, n)
-    # threshold as a rational t_num/t_den so every bound below is exact
-    # integer arithmetic
-    t_num, t_den = int(round(threshold * 1_000_000)), 1_000_000
-    # per-doc (global df asc, shingle) rank via ONE window over the
-    # doc-partitioned rows — the same total order the prefix theorem
-    # needs, WITHOUT materializing per-doc sorted arrays and re-exploding
-    # them (the old collect_list + array_sort + slice + posexplode shape
-    # buffered every group as an array and paid per-element struct churn;
-    # the sort-based window streams it — measured 5.25 -> 4.63 s median
-    # on the threshold-0.6 pipeline, identical candidates).  The window
-    # is also a materialization barrier with a single downstream
-    # consumer, so nothing re-derives it.  Scale bound (VERDICT r11 #6):
-    # partitionBy(doc_id) holds ONE DOC's shingle set per task — the
-    # same O(doc length) bound the old collect_list shape had, and the
-    # order the in-row shingle-array expressions elsewhere already hold
-    # per row; the window input is the spread shingle table (plan
-    # contract: test_r12_prefix_window_shapes).
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    wrk = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    wct = Window.partitionBy("doc_id")
-    ranked = sh.join(dfreq, "shingle").select(
-        "doc_id",
-        "shingle",
-        F.row_number().over(wrk).alias("rk1"),
-        F.count("*").over(wct).alias("nsh"),
-    )
-    # prefix = first n - ceil(t*n) + 1 shingles; carry set size and prefix
-    # position for the PPJoin length/position filters
-    # ceil multiply in BIGINT: nsh is INT/LONG and n * t_num overflows an
-    # INT32 past ~⌈2^31/t_num⌉ ≈ 3.6k distinct shingles (ANSI crash /
-    # silent wrap)
-    plen = F.expr(
-        f"cast(nsh - ((cast(nsh as bigint) * {t_num}"
-        f" + {t_den - 1}) div {t_den}) + 1 as int)"
-    )
-    prefix = ranked.filter(F.col("rk1") <= plen).select(
-        "doc_id",
-        F.col("nsh").cast("int").alias("nsh"),
-        (F.col("rk1") - 1).alias("rk"),
-        "shingle",
-    )
-    # Candidate generation WITHOUT a self-join: group prefix rows by
-    # shingle and enumerate in-group pairs.  A self-join would instantiate
-    # the whole dfreq+sort pipeline twice (observed: Catalyst plans 4
-    # copies of it across prefix(a), prefix(b) and the two verify
-    # branches, each independently broadcast — bimodal 3 s/24 s runtimes
-    # depending on whether AQE reuses the exchanges).  Grouping keeps ONE
-    # reference; group sizes are bounded because prefixes hold the RARE
-    # shingles.
-    grouped = prefix.groupBy("shingle").agg(
+def _jaccard_candidates(ranks: DataFrame, threshold: float) -> DataFrame:
+    """Distinct (id_a, id_b) prefix-filter candidates of
+    :func:`ngram_jaccard_pairs` (recall argument on
+    :func:`shingle_ranks`)."""
+    t_num, t_den = _rational(threshold)
+    # group prefix rows by sid and enumerate in-group pairs instead of a
+    # self-join, which would plan the rank pipeline once per side; group
+    # sizes stay bounded because prefixes hold the RARE shingles
+    grouped = _prefix(ranks, t_num, t_den).groupBy("sid").agg(
         F.collect_list(F.struct("doc_id", "nsh", "rk")).alias("ds")
     )
     pair = grouped.filter(F.size("ds") > 1).select(
@@ -302,28 +259,20 @@ def ngram_jaccard_pairs(
             )
         ).alias("p")
     )
-    # overlap requirement α = ceil(t/(1+t) · (|A|+|B|)); a shared prefix
-    # shingle at 0-based ranks (i, j) bounds the overlap by
-    # min(|A|-i, |B|-j), and the pair's globally-smallest common shingle
-    # always yields a passing row, so the filters lose no qualifying pair
-    # (both filters are symmetric in x/y, so pair order is irrelevant)
     xa, ya = F.col("p.x"), F.col("p.y")
-    # every size × t_num/t_den product runs in BIGINT: INT32 nsh times a
-    # ~10^6 literal overflows at ~2.1k distinct shingles (ANSI crash /
-    # silent wrap breaking exact recall) — the plen bug class
+    # positional filter: overlap requirement α = ⌈t/(1+t) · (|A|+|B|)⌉
+    # against min(|A|−i, |B|−j); every size × t_num product runs in
+    # BIGINT (the prefix-length overflow class)
     alpha = F.expr(
         f"((cast(p.x.nsh as bigint) + p.y.nsh) * {t_num}"
         f" + {t_num + t_den - 1}) div {t_num + t_den}"
     )
-    cand = (
+    return (
         pair.filter(
             # length filter: t·|A| ≤ |B| ≤ |A|/t
             (ya["nsh"].cast("long") * t_den >= xa["nsh"].cast("long") * t_num)
             & (xa["nsh"].cast("long") * t_den >= ya["nsh"].cast("long") * t_num)
-            # position filter
-            & (
-                F.least(xa["nsh"] - xa["rk"], ya["nsh"] - ya["rk"]) >= alpha
-            )
+            & (F.least(xa["nsh"] - xa["rk"], ya["nsh"] - ya["rk"]) >= alpha)
         )
         .select(
             F.least(xa["doc_id"], ya["doc_id"]).alias("id_a"),
@@ -331,25 +280,72 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    # exact-jaccard verify on candidates (shared helper).  |A∪B| =
-    # |A| + |B| − |A∩B| (word_ngrams arrays are distinct sets), so the
-    # union array is never materialized — same two exact integers, the
-    # identical double division.
-    if verify not in ("ids", "arrays"):
-        raise ValueError(f"unknown verify mode: {verify!r} (ids|arrays)")
-    _verify = _verified_pair_ids if verify == "ids" else _verified_pair_arrays
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        _verify(df, cand, text_col, id_col, n)
-        .select(
-            "id_a",
-            "id_b",
-            (
-                inter.cast("double")
-                / (F.size("__sa") + F.size("__sb") - inter)
-            ).alias("jaccard"),
+
+
+def ngram_jaccard_pairs_from_ranks(
+    ranks: DataFrame, threshold: float = 0.8
+) -> DataFrame:
+    """:func:`ngram_jaccard_pairs` over a prebuilt :func:`shingle_ranks`
+    table."""
+    return _jaccard_verified(
+        _verified_pair_sids(ranks, _jaccard_candidates(ranks, threshold)),
+        threshold,
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.8,
+    verify: str = "ids",
+) -> DataFrame:
+    """Exact n-gram Jaccard pairs via prefix filtering (the AllPairs /
+    PPJoin family).  Output: (id_a, id_b, jaccard) with id_a < id_b and
+    jaccard ≥ threshold — identical to the naive all-candidates
+    computation, but the join keys are the RARE shingles, so common
+    shingles ("the end of" in D docs) never put D² candidate rows on one
+    shuffle key.  Each doc emits its first ``|A| − ⌈t·|A|⌉ + 1`` ranks;
+    candidates pass the PPJoin length and position filters and are
+    verified with exact Jaccard (recall argument on
+    :func:`shingle_ranks`).
+
+    ``verify``: ``"ids"`` (default) builds the :func:`shingle_ranks`
+    table — an EAGER localCheckpoint at plan-construction time — and
+    verifies on its dense ids.  ``"arrays"`` runs the same rank plan
+    without the checkpoint and verifies on shingle-string arrays, so it
+    starts no Spark job until an action (the SQL view registry needs
+    that).  Both return identical rows (the id map is a bijection).
+    """
+    if verify == "ids":
+        return ngram_jaccard_pairs_from_ranks(
+            shingle_ranks(df, text_col, id_col, n), threshold
         )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    if verify != "arrays":
+        raise ValueError(f"unknown verify mode: {verify!r} (ids|arrays)")
+    cand = _jaccard_candidates(_rank_plan(df, text_col, id_col, n), threshold)
+    return _jaccard_verified(
+        _verified_pair_arrays(df, cand, text_col, id_col, n), threshold
+    )
+
+
+def overlap_coefficient_pairs_from_ranks(
+    ranks: DataFrame, threshold: float = 0.8, max_df: int = 64
+) -> DataFrame:
+    """:func:`overlap_coefficient_pairs` over a prebuilt
+    :func:`shingle_ranks` table."""
+    cand = pairs_from_sorted_groups(
+        ranks.filter((F.col("df") > 1) & (F.col("df") <= max_df))
+        .groupBy("sid")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+    )
+    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
+    denom = F.least(F.size("__sa"), F.size("__sb"))  # arrays are distinct
+    return (
+        _verified_pair_sids(ranks, cand)
+        .select("id_a", "id_b", (inter / denom).alias("overlap"))
+        .filter(F.col("overlap") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
 
@@ -370,31 +366,20 @@ def overlap_coefficient_pairs(
 
     Candidate generation: group-and-enumerate docs sharing a shingle with
     document frequency ≤ ``max_df``, then verify the exact coefficient
-    over the full shingle sets.  Unlike Jaccard, containment admits NO
-    exact prefix filter (a tiny doc inside a huge one constrains neither
-    side's prefix — the reason containment joins are the hard case in the
-    AllPairs literature), so the df-cut is the recall contract: a pair
-    sharing ONLY boilerplate shingles (df > max_df) is missed.  That is
-    the same deliberate trade :func:`substring_dup_pairs` makes, and the
-    oracle mirrors the cut exactly.
+    over the full shingle sets.  The df-cut is the recall contract: a
+    pair sharing ONLY boilerplate shingles (df > max_df) is missed.  That
+    is the same deliberate trade :func:`substring_dup_pairs` makes, and
+    the oracle mirrors the cut exactly; :func:`containment_pairs` is the
+    exact-recall path for the same statistic.
 
-    Output: (id_a, id_b, overlap) with id_a < id_b, overlap rounded 4dp.
+    Builds one eager :func:`shingle_ranks` table (Spark jobs run at
+    plan construction); pass a shared table to
+    :func:`overlap_coefficient_pairs_from_ranks` instead.
+
+    Output: (id_a, id_b, overlap) with id_a < id_b.
     """
-    # word_ngrams is per-doc distinct already, so shingle_table rows are
-    # unique (doc, shingle) pairs — no distinct pass needed
-    sh = shingle_table(df, text_col, id_col, n)
-    cand = pairs_from_sorted_groups(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_df))
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    denom = F.least(F.size("__sa"), F.size("__sb"))  # arrays are distinct
-    return (
-        _verified_pair_ids(df, cand, text_col, id_col, n)
-        .select("id_a", "id_b", (inter / denom).alias("overlap"))
-        .filter(F.col("overlap") >= F.lit(threshold))
-        .orderBy("id_a", "id_b")
+    return overlap_coefficient_pairs_from_ranks(
+        shingle_ranks(df, text_col, id_col, n), threshold, max_df
     )
 
 
@@ -518,23 +503,9 @@ def minhash_lsh_pairs(
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    # exact-Jaccard verify on candidates only — the shared int-id verify
-    # join (r12: the inline string-array copy folded into the ONE helper;
-    # maybe_broadcast rationale and the union-free |A∪B| identity live
-    # there)
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        _verified_pair_arrays(df, cand, text_col, id_col, ngram)
-        .select(
-            "id_a",
-            "id_b",
-            (
-                inter.cast("double")
-                / (F.size("__sa") + F.size("__sb") - inter)
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .orderBy("id_a", "id_b")
+    # exact-Jaccard verify on the (small) candidate set
+    return _jaccard_verified(
+        _verified_pair_arrays(df, cand, text_col, id_col, ngram), threshold
     )
 
 
@@ -1501,89 +1472,33 @@ def jaccard_threshold_sweep(
     )
 
 
-def containment_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = None,
+def containment_candidates_from_ranks(
+    ranks: DataFrame, threshold: float = 0.8, max_df: int | None = None
 ) -> DataFrame:
-    """The PPJoin-prefix candidate stage of :func:`containment_pairs`,
-    exposed so the df×prefix fan-out can be MEASURED directly
-    (tools/probe_containment_growth.py — the r6 editdist blocking-probe
-    discipline): distinct ``(id_a, id_b)`` candidate pairs BEFORE the
-    exact verify.  One source of truth — containment_pairs composes
-    this; see its docstring for the recall argument and the honest
-    scale note."""
-    # sh itself stays un-checkpointed (the jaccard/editdist r12 probes:
-    # materializing shingle strings ≥ the saved map-only re-derivation);
-    # the RANKED table below is the one with two consumers whose
-    # re-derivation would repeat the dfreq join + window — it is
-    # checkpointed (interleaved A/B: 6.63 s median with an sh checkpoint
-    # added vs 6.44 s without it, identical output).
-    sh = shingle_table(df, text_col, id_col, n)
-    t_num, t_den = int(round(threshold * 1_000_000)), 1_000_000
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    # per-doc (df asc, shingle asc) rank via ONE window — the same prefix
-    # set as the old collect_list + array_sort + slice + posexplode shape
-    # without materializing per-doc arrays (the ngram_jaccard_pairs
-    # rewrite); the df column riding along turns the max_df cut into a
-    # plain filter instead of a second dfreq join
-    wrk = Window.partitionBy("doc_id").orderBy("df", "shingle")
-    wct = Window.partitionBy("doc_id")
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .select(
-            "doc_id",
-            "shingle",
-            "df",
-            (F.row_number().over(wrk) - 1).alias("rk"),
-            F.count("*").over(wct).alias("nsh"),
-        )
-        .localCheckpoint()
-    )
-    # BIGINT ceil multiply — see ngram_jaccard_pairs: INT32 n * t_num
-    # overflows past ~3.6k distinct shingles.  0-based rank: rk ≤ plen-1.
-    plen = F.expr(
-        f"cast(nsh - ((cast(nsh as bigint) * {t_num}"
-        f" + {t_den - 1}) div {t_den}) + 1 as int)"
-    )
-    prefix = ranked.filter(F.col("rk") < plen)
+    """:func:`containment_candidates` over a prebuilt
+    :func:`shingle_ranks` table."""
+    t_num, t_den = _rational(threshold)
+    prefix = _prefix(ranks, t_num, t_den)
     if max_df is not None:
         prefix = prefix.filter(F.col("df") <= max_df)
-    prefix = prefix.select(
-        F.col("doc_id").alias("p_doc"),
-        "shingle",
-        F.col("rk").alias("p_rk"),
-        F.col("nsh").alias("p_nsh"),
+    psh = prefix.groupBy("sid").agg(
+        F.collect_list(
+            F.struct(
+                F.col("doc_id").alias("p_doc"),
+                F.col("rk").alias("p_rk"),
+                F.col("nsh").alias("p_nsh"),
+            )
+        ).alias("ps")
     )
-    psh = prefix.groupBy("shingle").agg(
-        F.collect_list(F.struct("p_doc", "p_rk", "p_nsh")).alias("ps")
-    )
-    # PPJoin POSITIONAL filter (VERDICT r11 item #1): a shared shingle at
-    # 0-based ranks (i, j) in the two docs' (df asc, shingle asc) orders
-    # bounds the intersection by min(|P|-i, |F|-j) — every common shingle
-    # ranks at-or-after the pair's globally-smallest common shingle in
-    # BOTH docs.  A qualifying pair (inter ≥ ⌈t·min⌉) always survives via
-    # that smallest common shingle's row: min(|P|-i*, |F|-j*) ≥ inter ≥
-    # ⌈t·min⌉, and i* is inside the smaller side's prefix (the recall
-    # argument in containment_pairs) — so recall stays exactly 1 while
-    # candidates whose suffixes provably can't reach the overlap never
-    # pay the full-array intersect in the verify stage.  Integer compare:
-    # x ≥ ⌈a·t_num/t_den⌉  ⟺  x·t_den ≥ a·t_num, in BIGINT (the plen
-    # overflow class).
+    # positional filter (see shingle_ranks): min(|P|−i, |F|−j) ≥
+    # ⌈t·min(|P|,|F|)⌉ as x·t_den ≥ a·t_num in BIGINT
     p = F.col("p")
     keep = (
-        F.least(
-            p["p_nsh"].cast("long") - p["p_rk"],
-            F.col("nsh").cast("long") - F.col("rk"),
-        )
-        * t_den
-        >= F.least(p["p_nsh"].cast("long"), F.col("nsh").cast("long")) * t_num
+        F.least(p["p_nsh"] - p["p_rk"], F.col("nsh") - F.col("rk")) * t_den
+        >= F.least(p["p_nsh"], F.col("nsh")) * t_num
     )
     return (
-        ranked.join(psh, "shingle")
+        ranks.join(psh, "sid")
         .select(
             F.col("doc_id").alias("f_doc"),
             "rk",
@@ -1596,6 +1511,70 @@ def containment_candidates(
             F.greatest(p["p_doc"], F.col("f_doc")).alias("id_b"),
         )
         .distinct()
+    )
+
+
+def containment_candidates(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.8,
+    max_df: int | None = None,
+) -> DataFrame:
+    """The PPJoin-prefix candidate stage of :func:`containment_pairs`,
+    exposed so the df×prefix fan-out can be MEASURED directly
+    (tools/probe_containment_growth.py): distinct ``(id_a, id_b)``
+    candidate pairs BEFORE the exact verify.  containment_pairs composes
+    the same stage.
+
+    Every qualifying pair (C_max ≥ t) is a candidate.  With ``max_df``
+    that holds for every qualifying pair sharing a prefix shingle with
+    df ≤ max_df: the cut removes the highest-df shingles, which rank
+    last, so the positional filter still sees the pair's smallest common
+    shingle (argument on :func:`shingle_ranks`)."""
+    return containment_candidates_from_ranks(
+        shingle_ranks(df, text_col, id_col, n), threshold, max_df
+    )
+
+
+def containment_pairs_from_ranks(
+    ranks: DataFrame, threshold: float = 0.8, max_df: int | None = None
+) -> DataFrame:
+    """:func:`containment_pairs` over a prebuilt :func:`shingle_ranks`
+    table."""
+    cand = containment_candidates_from_ranks(ranks, threshold, max_df)
+    t_num, t_den = _rational(threshold)
+    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
+    mins = F.least(F.size("__sa"), F.size("__sb")).cast("long")
+    # equal sizes tie to id_b, the jaccard convention
+    contained = F.when(
+        F.size("__sa") < F.size("__sb"), F.col("id_a")
+    ).otherwise(F.col("id_b"))
+    return (
+        _verified_pair_sids(ranks, cand)
+        .select(
+            "id_a",
+            "id_b",
+            inter.alias("inter"),
+            mins.alias("__min"),
+            contained.alias("contained_id"),
+        )
+        .filter(
+            (F.col("__min") > 0)
+            & (F.col("inter") * t_den >= F.col("__min") * t_num)
+        )
+        .select(
+            "id_a",
+            "id_b",
+            "inter",
+            F.round(
+                F.col("inter").cast("double") / F.col("__min").cast("double"),
+                4,
+            ).alias("containment"),
+            "contained_id",
+        )
+        .orderBy("id_a", "id_b")
     )
 
 
@@ -1619,37 +1598,28 @@ def containment_pairs(
     size-asymmetric, and dropping by id order could delete the superset
     document's unique content.
 
-    Candidate generation with EXACT recall, no self-join: if
-    C_max ≥ t then the smaller side A shares ≥ ⌈t·|A|⌉ shingles, so
-    its ``|A| − ⌈t·|A|⌉ + 1`` globally-RAREST shingles cannot all
-    avoid the intersection (the PPJoin prefix bound applied to the
-    overlap ⌈t·|A|⌉) — but the CONTAINING side can be arbitrarily
-    large, so the partner emits its full shingle set: candidates =
-    prefix(doc) × full(doc') grouped per shingle.  The threshold
-    compare in the verify is exact integer arithmetic
-    (inter·t_den ≥ min·t_num), never a float ceil.
-
-    r12: the PPJoin POSITIONAL filter now runs at candidate time — both
-    sides carry their 0-based (df asc, shingle asc) rank, and a
-    candidate row survives only if min(|P|−i, |F|−j) ≥ ⌈t·min(|P|,|F|)⌉
-    (the suffix bound on the intersection).  Recall stays exactly 1:
-    the pair's globally-smallest common shingle always passes (see
-    containment_candidates), but pairs whose suffixes provably cannot
-    reach the overlap no longer pay the full-array intersect in the
-    verify stage.
+    Candidates, with exact recall and no self-join: each doc's
+    ``|A| − ⌈t·|A|⌉ + 1`` rarest shingles (its prefix) meet the FULL
+    shingle set of every other doc, grouped per shingle, and pass the
+    PPJoin positional filter (recall argument on :func:`shingle_ranks`).
+    The verify compares inter·t_den ≥ min·t_num in integers, never a
+    float ceil.  Builds one eager :func:`shingle_ranks` table; pass a
+    shared one to :func:`containment_pairs_from_ranks` instead.
 
     Scale, honestly: the per-shingle fan-out is df(shingle) ×
     |prefix-docs(shingle)| — "rare" is relative to each DOC, so a
     boilerplate-only document puts globally-common shingles in its
     prefix and each such shingle emits df (corpus-scale) candidate rows
     on one shuffle key.  On corpora where that bites, pass ``max_df``
-    to drop shingles with global df > max_df from CANDIDATE GENERATION
-    — then a pair sharing ONLY boilerplate shingles is missed (the
-    :func:`substring_dup_pairs` ``max_df`` recall trade, documented
-    there); verification stays exact either way.  The df-cut HEURISTIC
-    sibling of this operator is :func:`overlap_coefficient_pairs`
-    (same statistic, blocking on all shingles with df ≤ max_df);
-    this one is the exact-recall path.
+    to drop shingles with global df > max_df from CANDIDATE GENERATION.
+    Every qualifying pair that shares a prefix shingle with df ≤ max_df
+    is still found (the cut drops the LAST-ranked shingles, so the
+    pair's smallest common shingle survives unless all common shingles
+    are cut); a pair sharing ONLY boilerplate shingles is missed (the
+    :func:`substring_dup_pairs` ``max_df`` recall trade).  Verification
+    stays exact either way.  The df-cut HEURISTIC sibling of this
+    operator is :func:`overlap_coefficient_pairs` (same statistic,
+    blocking on all shingles with df ≤ max_df).
 
     Measured (r10, tools/probe_containment_growth.py): on the synthetic
     fixtures candidates grow ~N^2.47 — but that corpus has a CLOSED
@@ -1660,41 +1630,8 @@ def containment_pairs(
     open-vocabulary corpus (Heaps' law) median df stays O(1) and the
     df tail — which max_df cuts — governs.
     """
-    cand = containment_candidates(df, text_col, id_col, n, threshold, max_df)
-    t_num, t_den = int(round(threshold * 1_000_000)), 1_000_000
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
-    mins = F.least(F.size("__sa"), F.size("__sb")).cast("long")
-    # the CONTAINED (smaller-shingle-set) side: containment pairs are
-    # size-asymmetric, so a drop policy must know which endpoint is the
-    # subset — dropping by id order could delete the superset document's
-    # unique content (equal sizes tie to id_b, the jaccard convention)
-    contained = F.when(
-        F.size("__sa") < F.size("__sb"), F.col("id_a")
-    ).otherwise(F.col("id_b"))
-    return (
-        _verified_pair_ids(df, cand, text_col, id_col, n)
-        .select(
-            "id_a",
-            "id_b",
-            inter.alias("inter"),
-            mins.alias("__min"),
-            contained.alias("contained_id"),
-        )
-        .filter(
-            (F.col("__min") > 0)
-            & (F.col("inter") * t_den >= F.col("__min") * t_num)
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            F.round(
-                F.col("inter").cast("double") / F.col("__min").cast("double"),
-                4,
-            ).alias("containment"),
-            "contained_id",
-        )
-        .orderBy("id_a", "id_b")
+    return containment_pairs_from_ranks(
+        shingle_ranks(df, text_col, id_col, n), threshold, max_df
     )
 
 

@@ -126,19 +126,22 @@ def _curate_stages(
     stages = [("input", docs)]
     exact = _stage(D.dedup_exact(docs))
     stages.append(("exact_dedup", exact))
+    # ONE ranked-shingle table serves both exact detectors
+    ranks = None
+    if not cfg.use_lsh or cfg.containment_threshold is not None:
+        ranks = D.shingle_ranks(exact, n=cfg.ngram)
     if cfg.use_lsh:
         near_pairs = D.minhash_lsh_pairs(
             exact, ngram=cfg.ngram, threshold=cfg.jaccard_threshold
         )
     else:
-        near_pairs = D.ngram_jaccard_pairs(
-            exact, n=cfg.ngram, threshold=cfg.jaccard_threshold
+        near_pairs = D.ngram_jaccard_pairs_from_ranks(
+            ranks, threshold=cfg.jaccard_threshold
         )
     cont_pairs = None
     if cfg.containment_threshold is not None:
-        cont_pairs = D.containment_pairs(
-            exact,
-            n=cfg.ngram,
+        cont_pairs = D.containment_pairs_from_ranks(
+            ranks,
             threshold=cfg.containment_threshold,
             max_df=cfg.containment_max_df,
         )

@@ -3,8 +3,12 @@ operator is reachable from ``spark.sql`` (the declared-query corpus in
 __spark_entry__.py is the DataFrame twin of this surface).
 
 The reference has no SQL; this is the engine's native query language on
-top of the same semantics.  Views are cheap (logical plans, no
-materialization) and inherit all pushdown.
+top of the same semantics.  Views are logical plans and inherit all
+pushdown.  Registering the curation and analytics views starts no Spark
+job.  The sketch, diagnostics and timeseries registries do: some of
+their views contain ``localCheckpoint(eager=False)``, and under AQE that
+runs the plan's shuffle stages when the DataFrame is built, not when the
+view is first queried.
 """
 
 from __future__ import annotations
@@ -151,8 +155,10 @@ def register_sketch_views(
     ``{p}distinct_users`` includes the exact-count audit columns (it
     pays the distinct the pure estimator avoids — use
     ``sketch.hll_distinct(include_exact=False)`` for the cheap path),
-    and ``{p}user_overlap`` materializes its ≤ G·k-row sketch
-    (localCheckpoint) on first use for the session's lifetime."""
+    and ``{p}user_overlap`` localCheckpoints its ≤ G·k-row sketch for
+    the session's lifetime — at registration, since under AQE the
+    checkpoint's shuffle stages run when the view's DataFrame is
+    built."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import sketch as S
@@ -226,8 +232,10 @@ def register_diagnostics_views(
       (Poisson-bootstrap 95% CI of mean tokens/doc per source), and
       ``{p}source_dup_matrix`` (cross-source near-dup pair counts)
 
-    Views are logical plans; each inherits the underlying scan's
-    pushdown.  The events frame must be normalized (``tables.load``)."""
+    Each view inherits the underlying scan's pushdown.  Registration
+    starts Spark jobs: the views' ``localCheckpoint(eager=False)`` calls
+    run their shuffle stages under AQE when the DataFrames are built.
+    The events frame must be normalized (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A
@@ -329,12 +337,11 @@ def register_diagnostics_views(
         from streamkit_spark.functions import dedup as D
 
         # NOTE: no effective_tokens view — its duplicate_clusters step
-        # runs eager driver-side work (edge count + union-find collect),
-        # which would break this function's views-are-logical-plans
-        # contract; use curation.effective_token_report directly.
-        # verify="arrays": the default id verify runs an EAGER
-        # localCheckpoint job building its shingle-id table, which the
-        # same contract forbids at registration time (r12 review).
+        # runs eager driver-side work (edge count + union-find collect)
+        # per registration; use curation.effective_token_report directly.
+        # verify="arrays": the default verify builds the shingle_ranks
+        # table with an EAGER localCheckpoint; the lazy path adds no
+        # job of its own at registration.
         views[f"{p}source_dup_matrix"] = D.pair_source_matrix(
             D.ngram_jaccard_pairs(documents, threshold=0.6, verify="arrays"),
             documents,
@@ -364,8 +371,10 @@ def register_timeseries_views(
     * with ``documents``: ``{p}jsd`` — pairwise Jensen-Shannon
       divergence between source unigram distributions
 
-    Views are logical plans; each inherits the underlying scan's
-    pushdown.  The events frame must be normalized (``tables.load``)."""
+    Each view inherits the underlying scan's pushdown.  Registration
+    starts Spark jobs: the views' ``localCheckpoint(eager=False)`` calls
+    run their shuffle stages under AQE when the DataFrames are built.
+    The events frame must be normalized (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A

@@ -607,3 +607,33 @@ def test_minhash_signature_hash_fn_validation(spark):
     df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
     with pytest.raises(ValueError):
         minhash_signature(df, hash_fn="sha1")
+
+
+def test_one_shingle_ranks_table_per_corpus(spark, monkeypatch):
+    """curate() with exact jaccard + containment, containment_split and
+    detector_agreement each build ONE ranked-shingle table and share it
+    across their exact detectors."""
+    import __spark_entry__ as E
+    from streamkit_spark.pipeline import CurationConfig, curate
+
+    calls = []
+    real = D.shingle_ranks
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(D, "shingle_ranks", counting)
+    docs = tables.load(spark, SF_DIR, "documents")
+    builds = {
+        "curate": lambda: curate(
+            docs, CurationConfig(use_lsh=False, containment_threshold=0.6)
+        ),
+        "containment_split": lambda: E.q_containment_split(spark, SF_DIR),
+        "detector_agreement": lambda: E.q_detector_agreement(spark, SF_DIR),
+    }
+    for name, build in builds.items():
+        calls.clear()
+        build()
+        assert len(calls) == 1, (name, len(calls))
+

@@ -329,18 +329,17 @@ def test_r11_plan_shapes(spark):
 
 
 def test_r12_prefix_window_shapes(spark):
-    """Plan contracts for the r11/r12 PPJoin window-prefix rewrite
-    (VERDICT r11 item #6): `row_number() over (partition by doc_id)`
-    holds each doc's whole shingle set in ONE task — the same per-doc
-    bound as the old collect_list shape, acceptable because a document's
-    shingle count is O(doc length), the same order the in-row shingle
-    array expressions elsewhere already hold per row.  The window must
-    read the SPREAD shingle table (never a 1-partition single-file
-    scan), and since the r12 localCheckpoint of the shingle table hides
-    the repartition behind Scan ExistingRDD, the spread is pinned at the
-    source level (the bm25 precedent) plus a checkpoint-scan assert in
-    the physical plan.  The containment candidate stage must carry the
-    positional-filter rank columns (p_rk / nsh in the plan)."""
+    """Plan contracts for the PPJoin window-prefix rank table
+    (dedup.shingle_ranks): `row_number() over (partition by doc_id)`
+    holds each doc's whole shingle set in ONE task — acceptable because
+    a document's shingle count is O(doc length), the same order the
+    in-row shingle array expressions elsewhere already hold per row.
+    The window must read the SPREAD shingle table (never a 1-partition
+    single-file scan).  The lazy verify="arrays" path runs the same
+    rank plan without the checkpoint, so the window and the spread's
+    repartition are visible there; the default path reads the
+    checkpointed table (Scan ExistingRDD), and so does the containment
+    candidate stage."""
     import inspect
 
     from streamkit_spark.functions import dedup as D
@@ -349,15 +348,15 @@ def test_r12_prefix_window_shapes(spark):
     # the shingle table spreads its input before the explode
     assert "_spread(" in inspect.getsource(shingle_table)
     docs = tables.load(spark, SF_DIR, "documents")
-    # jaccard: prefix via the row_number window over the spread shingle
-    # table (no checkpoint — r12 measured-and-rejected; the spread's
-    # repartition is visible since nothing hides it)
-    pj = plans.explain_str(D.ngram_jaccard_pairs(docs, threshold=0.6), "extended")
+    pj = plans.explain_str(
+        D.ngram_jaccard_pairs(docs, threshold=0.6, verify="arrays"), "extended"
+    )
     assert "row_number" in pj
     assert "RoundRobinPartitioning" in pj
     assert "CartesianProduct" not in pj
-    # containment: the ranked table is checkpointed ONCE (two consumers:
-    # prefix + full side) — the candidate stage reads Scan ExistingRDD
+    pj = plans.explain_str(D.ngram_jaccard_pairs(docs, threshold=0.6), "extended")
+    assert "Scan ExistingRDD" in pj
+    assert "CartesianProduct" not in pj
     pc = plans.explain_str(
         D.containment_candidates(docs, threshold=0.6), "extended"
     )

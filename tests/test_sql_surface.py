@@ -272,12 +272,45 @@ def test_timeseries_views_queryable_from_sql(spark):
     assert 0.0 <= row["max_jsd"] <= 0.6931471805599453 + 1e-9
 
 
+def test_curation_and_analytics_registries_start_no_jobs(spark):
+    """Registering the curation and analytics views builds logical plans
+    only: zero Spark jobs.  (The diagnostics, sketch and timeseries
+    registries do start jobs — their views contain
+    localCheckpoint(eager=False), which under AQE runs the plan's
+    shuffle stages when the DataFrame is built.)"""
+    import uuid
+
+    from streamkit_spark import tables
+    from streamkit_spark.sql import (
+        register_analytics_views,
+        register_curation_views,
+    )
+    from tests.conftest import SF_DIR
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    ev = tables.load(spark, SF_DIR, "events")
+    docs.count(), ev.count()  # settle any load-time probes
+    sc = spark.sparkContext
+    for register, frame in (
+        (register_curation_views, docs),
+        (register_analytics_views, ev),
+    ):
+        group = f"views-{uuid.uuid4()}"
+        sc.setJobGroup(group, "view registration job-count pin")
+        try:
+            register(spark, frame)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, (
+            register.__name__
+        )
+
+
 def test_jaccard_verify_modes_lazy_vs_eager(spark):
-    """The r12 dense-id verify runs an EAGER localCheckpoint job at
-    plan-construction time; verify="arrays" must stay fully lazy (the
-    SQL view registry depends on it — r9/r12 views-are-logical-plans
-    contract), and the registry must route through it.  Both modes
-    must return identical rows."""
+    """The dense-id verify builds the shingle_ranks table with an EAGER
+    localCheckpoint at plan-construction time; verify="arrays" must
+    stay fully lazy (the SQL view registry routes through it).  Both
+    modes must return identical rows."""
     import inspect
 
     from streamkit_spark import sql as SQ
@@ -297,7 +330,7 @@ def test_jaccard_verify_modes_lazy_vs_eager(spark):
     eager_df = D.ngram_jaccard_pairs(docs, threshold=0.6, verify="ids")
     after_eager = tracker.getJobIdsForGroup(None)
     assert list(after_eager) != list(after_lazy), (
-        "expected the ids verify to materialize its id table eagerly"
+        "expected the ids verify to materialize its rank table eagerly"
     )
     # identical output across modes (the id map is a bijection)
     assert lazy_df.exceptAll(eager_df).count() == 0

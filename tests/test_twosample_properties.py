@@ -584,14 +584,15 @@ def test_hill_cell_algebra_matches_row_definition(values, k):
     assert math.isclose(got, scaled, rel_tol=1e-9)
 
 
-def _containment_candidates_mirror(docs, t_num, t_den):
-    """The engine's containment_pairs candidate generation (r12 shape):
-    per-doc prefix = the |A| − ⌈t·|A|⌉ + 1 globally-rarest shingles
-    (integer ceil, (df, shingle)-ordered); candidates = prefix(doc) ×
-    any other doc containing that shingle, KEPT only if the POSITIONAL
-    suffix bound holds — min(|P|−i, |F|−j)·t_den ≥ min(|P|,|F|)·t_num
-    with i/j the shared shingle's 0-based (df, shingle)-order ranks in
-    each doc (dedup.containment_candidates' `keep` filter)."""
+def _containment_candidates_mirror(docs, t_num, t_den, max_df=None):
+    """The engine's containment_pairs candidate generation: per-doc
+    prefix = the |A| − ⌈t·|A|⌉ + 1 globally-rarest shingles (integer
+    ceil, (df, shingle)-ordered), minus shingles with df > max_df;
+    candidates = prefix(doc) × any other doc containing that shingle,
+    KEPT only if the POSITIONAL suffix bound holds —
+    min(|P|−i, |F|−j)·t_den ≥ min(|P|,|F|)·t_num with i/j the shared
+    shingle's 0-based (df, shingle)-order ranks in each doc
+    (dedup.containment_candidates_from_ranks' `keep` filter)."""
     df_ = Counter(s for ss in docs.values() for s in ss)
     order = {d: sorted(ss, key=lambda s: (df_[s], s)) for d, ss in docs.items()}
     rank = {d: {s: i for i, s in enumerate(o)} for d, o in order.items()}
@@ -602,6 +603,8 @@ def _containment_candidates_mirror(docs, t_num, t_den):
             continue
         plen = n - (n * t_num + t_den - 1) // t_den + 1
         for s in order[d][:plen]:
+            if max_df is not None and df_[s] > max_df:
+                continue
             i = rank[d][s]
             for d2, ss2 in docs.items():
                 if d2 == d or s not in ss2:
@@ -610,7 +613,7 @@ def _containment_candidates_mirror(docs, t_num, t_den):
                 n2 = len(ss2)
                 if min(n - i, n2 - j) * t_den >= min(n, n2) * t_num:
                     cands.add((min(d, d2), max(d, d2)))
-    return cands
+    return cands, order, df_
 
 
 @given(
@@ -629,7 +632,7 @@ def test_containment_prefix_candidates_have_exact_recall(sets, t10):
     hide outside its |A|−⌈t·|A|⌉+1 rarest."""
     docs = dict(enumerate(sets))
     t_num, t_den = t10, 10
-    cands = _containment_candidates_mirror(docs, t_num, t_den)
+    cands, _, _ = _containment_candidates_mirror(docs, t_num, t_den)
     for i, j in itertools.combinations(docs, 2):
         a, b = docs[i], docs[j]
         inter = len(a & b)
@@ -637,3 +640,46 @@ def test_containment_prefix_candidates_have_exact_recall(sets, t10):
         # the engine's exact integer threshold compare
         if m > 0 and inter * t_den >= m * t_num:
             assert (i, j) in cands, (docs[i], docs[j], t10)
+
+
+@given(
+    st.lists(
+        st.frozensets(st.integers(0, 12), min_size=1, max_size=10),
+        min_size=2,
+        max_size=8,
+    ),
+    st.integers(5, 10),
+    st.sampled_from([None, 1, 2, 3]),
+)
+@settings(max_examples=300, deadline=None)
+def test_containment_max_df_keeps_pairs_with_a_low_df_prefix_shingle(
+    sets, t10, max_df
+):
+    """The max_df recall contract: a qualifying pair that shares a
+    prefix shingle (of either doc) with df ≤ max_df stays a candidate.
+    The cut removes the highest-df shingles, which rank last in the
+    (df, shingle) order, so the pair's smallest common shingle — the
+    row that passes the positional filter — is cut only when every
+    common shingle is."""
+    docs = dict(enumerate(sets))
+    t_num, t_den = t10, 10
+    cands, order, df_ = _containment_candidates_mirror(
+        docs, t_num, t_den, max_df
+    )
+
+    def prefix(d):
+        n = len(docs[d])
+        return order[d][: n - (n * t_num + t_den - 1) // t_den + 1]
+
+    for i, j in itertools.combinations(docs, 2):
+        a, b = docs[i], docs[j]
+        m = min(len(a), len(b))
+        if not (m > 0 and len(a & b) * t_den >= m * t_num):
+            continue
+        low = [
+            s
+            for s in set(prefix(i)) | set(prefix(j))
+            if s in a and s in b and (max_df is None or df_[s] <= max_df)
+        ]
+        if low:
+            assert (i, j) in cands, (a, b, t10, max_df)
