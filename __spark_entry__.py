@@ -2768,7 +2768,8 @@ def q_benford_values(spark, sf_dir):
 def q_benford_value(spark, sf_dir):
     """Per-event-type Benford first-digit audit
     (analytics.benford_by_group — the value-cell sketch's 9th report,
-    streaming twin streaming/rankstats.finalize_benford): one
+    streaming twin analytics.benford_from_cells over a streaming
+    analytics.value_cells): one
     synthetic/capped segment can't hide inside a Benford-clean corpus
     total.  Same determinism contract as benford_values (cent-string
     digits, exact counts, repr-literal constants), segmented."""

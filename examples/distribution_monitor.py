@@ -1,7 +1,7 @@
 """Segment-distribution monitor — the "is this segment different, and
 how?" page, every report served by ONE of three shared sketches:
 
-value-cell sketch (analytics.value_cells → streaming/rankstats.py):
+value-cell sketch (analytics.value_cells, batch or streaming):
     1. Mann-Whitney z     (ranksum_by_group: is the segment SHIFTED?)
     2. KS distance        (ks_by_group: is its SHAPE different?)
     3. Anderson-Darling   (ad_by_group: including the TAILS?)
@@ -11,19 +11,19 @@ value-cell sketch (analytics.value_cells → streaming/rankstats.py):
                            CONCENTRATED is the value mass?)
     6. winsorized means   (winsorized_stats: robust location)
 
-contingency sketch (analytics.contingency_cells →
-streaming/contingency.py):
+contingency sketch (analytics.contingency_cells, batch or streaming):
     7. chi2 + Cramér's V  (cramers_v: is type × weekday associated,
                            and how strongly?)
     8. mutual information (mutual_information: in nats / normalized)
 
-daily sketch (analytics.daily_totals → streaming/daily.py):
+daily sketch (analytics.daily_totals, batch or streaming):
     9. weekday-adjusted anomalies (weekday_adjusted_outliers: which
                            days were unusual AFTER the weekly rhythm?)
 
-Each sketch is a monotone count/sum aggregate, so the identical
-finishers run LIVE over a streaming maintenance of the same table —
-see test_batch_stream_parity for the pinned equivalences.  Run:
+Each sketch is a monotone count/sum aggregate, so the same builder
+run on a streaming DataFrame maintains the table live and the
+identical finishers read it — see test_batch_stream_parity for the
+pinned equivalences.  Run:
 
     python examples/distribution_monitor.py [sf_dir]
 """

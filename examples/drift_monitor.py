@@ -2,7 +2,7 @@
 page, every report served by ONE of three shared sketches plus the
 classifier-gate table:
 
-token-cell sketch (text.token_cells → streaming/tokens.py):
+token-cell sketch (text.token_cells, batch or streaming):
     1. KL from corpus     (kl_from_cells: which source drifted from
                            the mixture it feeds?)
     2. JSD matrix         (jsd_from_cells: which source PAIRS diverge
@@ -18,8 +18,7 @@ embedding moments (similarity.embedding_drift):
     6. diagonal-Fréchet matrix (did a label's REPRESENTATION
                            distribution move — mean or spread?)
 
-calibration sketch (analytics.calibration_cells →
-streaming/calibration.py):
+calibration sketch (analytics.calibration_cells, batch or streaming):
     7. ECE / MCE          (ece_from_cells: do the classifier's scores
                            still mean what they say?)
     8. Brier decomposition (brier_from_cells: miscalibrated, or just
@@ -27,9 +26,10 @@ streaming/calibration.py):
     9. Cohen's kappa      (cohen_kappa: do the rule gate and the
                            classifier gate still agree beyond chance?)
 
-Each sketch is a monotone count/sum aggregate, so the identical
-finishers run LIVE over a streaming maintenance of the same table —
-see test_batch_stream_parity for the pinned equivalences.  Run:
+Each sketch is a monotone count/sum aggregate, so the same builder
+run on a streaming DataFrame maintains the table live and the
+identical finishers read it — see test_batch_stream_parity for the
+pinned equivalences.  Run:
 
     python examples/drift_monitor.py [sf_dir]
 """

@@ -13,10 +13,10 @@ on-call team wants on one page, all fed by ONE corpus scan each:
     5. high-value share    (analytics.wilson_by_group: value > 50 rate
                             with a calibrated interval per type)
 
-The same daily table also runs LIVE: streaming/daily.py maintains the
-(group, day) decimal sums as a streaming aggregate and the identical
-finishers read it — see test_batch_stream_parity for the pinned
-equivalence.  Run directly:
+The same daily table also runs LIVE: analytics.daily_totals on a
+streaming DataFrame maintains the (group, day) decimal sums as a
+streaming aggregate and the identical finishers read it — see
+test_batch_stream_parity for the pinned equivalence.  Run directly:
 
     python examples/timeseries_monitor.py [sf_dir]
 """

@@ -35,6 +35,7 @@ __all__ = [
     "rank_buckets",
     "user_accumulation",
     "accumulate_first_days",
+    "first_seen_days",
     "ewma_smooth",
     "spearman_by_group",
     "chi2_independence",
@@ -102,6 +103,7 @@ __all__ = [
     "auc_report",
     "average_precision_report",
     "ap_from_cells",
+    "finalize_ap",
     "cohen_kappa",
     "kappa_from_cells",
     "hill_tail_by_group",
@@ -748,21 +750,34 @@ def user_accumulation(
     combined aggregate), count users per first-day (tiny), cumulative
     sum over the day table (bounded by the calendar, not the corpus).
     Exact longs throughout."""
+    return accumulate_first_days(first_seen_days(df, key_col, ts_ms))
+
+
+def first_seen_days(
+    df: DataFrame,
+    key_col: str = "user_id",
+    ts_ms: Column | str = "ts_ms",
+) -> DataFrame:
+    """Per-key first day: (k, first_day), with ``ts_ms`` epoch millis
+    bucketed by integer ``div``.  On a streaming DataFrame this is the
+    live sketch (a monotone min, so a latest-wins sink converges under
+    replay; no watermark), its state one long per key, bounded by the
+    key population; pass ``F.expr("ts div 1000000")`` for the epoch-ns
+    envelope ``ts``."""
     ts_ms = F.col(ts_ms) if isinstance(ts_ms, str) else ts_ms
-    first_day = (
+    return (
         df.select(F.col(key_col).alias("k"), ts_ms.cast("long").alias("__ms"))
         .select("k", F.expr("__ms div 86400000").alias("day"))
         .groupBy("k")
         .agg(F.min("day").alias("first_day"))
     )
-    return accumulate_first_days(first_day)
 
 
 def accumulate_first_days(first_seen: DataFrame) -> DataFrame:
-    """Shared finisher for batch and streaming user accumulation: turn a
-    (key, first_day) table into (day, new_users, cum_users).  One
-    definition serves both paths (the batch/stream parity contract);
-    input is key-population-sized, the cumulative window runs over the
+    """Finisher of :func:`user_accumulation`: turn a (key, first_day)
+    table — batch, or the sink of :func:`first_seen_days` run on a
+    stream — into (day, new_users, cum_users).  Input is
+    key-population-sized, the cumulative window runs over the
     calendar-sized per-day table."""
     per_day = first_seen.groupBy(F.col("first_day").alias("day")).agg(
         F.count("*").cast("long").alias("new_users")
@@ -1059,9 +1074,10 @@ def contingency_cells(
     """Shared (r, c, o) observed-count table for the categorical-
     association statistics (chi2 / Cramér's V / mutual information):
     null-filtered exact BIGINT counts.  Counts are MONOTONE and merge
-    by ADDITION, so this aggregate is also the streaming sketch for
-    those statistics (``streaming/contingency.py``) — the value_cells
-    discipline for the categorical family."""
+    by ADDITION, so on a streaming DataFrame this aggregate is the live
+    sketch for those statistics, its state one count per occupied
+    (r, c) cell, bounded by the two category cardinalities — the
+    value_cells discipline for the categorical family."""
     return (
         df.filter(F.col(row_col).isNotNull() & F.col(col_col).isNotNull())
         .groupBy(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
@@ -1525,7 +1541,7 @@ def cusum_changepoint(
         .groupBy(
             F.col(group_col).alias("grp"), F.col(day_col).alias("day")
         )
-        .agg(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("sv"))
+        .agg(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("y"))
     )
     return cusum_from_daily(daily, group_col, round_digits)
 
@@ -1536,21 +1552,20 @@ def cusum_from_daily(
     round_digits: int = 4,
 ) -> DataFrame:
     """The finisher half of :func:`cusum_changepoint` over a PREBUILT
-    (grp, day, sv) daily-total table — decimal-width agnostic, so both
-    the batch aggregate and the ``streaming/daily.daily_totals_stream``
-    sketch (via ``finalize_cusum``) feed it; the table is
-    localCheckpoint'ed here because it fans into the cumsum and totals
-    branches."""
+    (grp, day, y) daily-total table — decimal-width agnostic, so both
+    the batch aggregate and :func:`daily_totals` (the live daily sketch
+    on a stream) feed it; the table is localCheckpoint'ed here because
+    it fans into the cumsum and totals branches."""
     daily = daily.localCheckpoint(eager=False)
     w = Window.partitionBy("grp").orderBy("day")
     cum = daily.select(
         "grp",
         "day",
         F.row_number().over(w).cast("long").alias("t"),
-        F.sum("sv").over(w).alias("s"),
+        F.sum("y").over(w).alias("s"),
     )
     tot = daily.groupBy("grp").agg(
-        F.sum("sv").alias("sn"), F.count("*").cast("long").alias("n")
+        F.sum("y").alias("sn"), F.count("*").cast("long").alias("n")
     )
     dev = F.abs(
         F.col("s").cast("double")
@@ -1659,7 +1674,8 @@ def benford_by_group(
 
     Built on the shared (grp, v, c) value-cell table so the SAME
     monotone sketch that serves the rank/CDF family also answers the
-    Benford question live (streaming/rankstats.finalize_benford)."""
+    Benford question live (:func:`benford_from_cells` over the
+    streaming :func:`value_cells` table)."""
     return benford_from_cells(
         value_cells(df, group_col, value_col), group_col, round_digits
     )
@@ -1772,11 +1788,11 @@ def histogram_buckets(
     bucket_cents: int = 2500,
 ) -> DataFrame:
     """The sketch-build half of :func:`histogram_quantiles`:
-    ``(group, b, c)`` integer bucket counts.  Pure aggregate — runs
-    unchanged as a Structured Streaming stateful agg (the HLL/KMV
-    shared-definition discipline, streaming/quantiles.py), and sketches
-    from different partitions/days/micro-batches merge by summing
-    ``c``."""
+    ``(group, b, c)`` integer bucket counts.  Pure aggregate — on a
+    streaming DataFrame it is the live quantile/PSI sketch, its state
+    one count per occupied bucket, bounded by the value range over
+    ``bucket_cents`` per group; sketches from different
+    partitions/days/micro-batches merge by summing ``c``."""
     cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
     return (
         df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
@@ -1809,7 +1825,7 @@ def quantiles_from_histogram(
 ) -> DataFrame:
     """The finisher half of :func:`histogram_quantiles` over a PREBUILT
     (grp, b, c) bucket table — e.g. one maintained incrementally by
-    ``streaming/quantiles.histogram_bucket_stream``.  The bucket table
+    :func:`histogram_buckets` on a stream.  The bucket table
     is localCheckpoint'ed: it feeds the cumulative window AND the
     per-group totals branch."""
     if not quantiles:
@@ -1883,11 +1899,12 @@ def rules_from_baskets(
     b_items: DataFrame, round_digits: int = 4
 ) -> DataFrame:
     """Association rules from an already-materialized basket table
-    (any key columns + an ``items`` sorted-distinct array) — the shared
-    finisher behind :func:`association_rules` and the streaming twin
-    (``streaming/association.py``), which maintains the monotone
-    (basket, item) distinct relation incrementally and groups it to
-    baskets at read time."""
+    (any key columns + an ``items`` sorted-distinct array) — the
+    finisher half of :func:`association_rules`, which also serves the
+    streaming twin: ``streaming/association.basket_items_stream``
+    maintains the monotone (basket, item) distinct relation, and
+    :func:`association_rules` over it groups it to baskets at read
+    time."""
     b_items = b_items.localCheckpoint(eager=False)
     n_baskets = b_items.agg(F.count("*").cast("long").alias("nb"))
     item_counts = (
@@ -1992,7 +2009,7 @@ def psi_from_histogram(
 ) -> DataFrame:
     """The finisher half of :func:`psi_profile` over a PREBUILT
     (grp, b, c) bucket table — the SAME table
-    ``streaming/quantiles.histogram_bucket_stream`` maintains, so one
+    :func:`histogram_buckets` maintains on a stream, so one
     streaming sketch serves both the quantile report and live drift
     monitoring.  The bucket table is localCheckpoint'ed: it feeds the
     spine, the per-bucket totals, and the per-group totals."""
@@ -2044,10 +2061,12 @@ def psi_from_histogram(
 def value_cells(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Shared (grp, v, c) count table for the rank/CDF statistics
     (ranksum_by_group, ks_by_group): null-filtered, double-cast.  Counts
-    are MONOTONE and merge by ADDITION, so this aggregate is also the
-    streaming sketch for those statistics (streaming/rankstats.py) —
-    the histogram_buckets discipline.  The finishers localCheckpoint it
-    (they fan it into ≥3 branches)."""
+    are MONOTONE and merge by ADDITION, so on a streaming DataFrame
+    this aggregate is the live sketch for the value-cell family, its
+    state one count per occupied (grp, v) cell, bounded by group ×
+    value cardinality (quantize unbounded doubles upstream with
+    :func:`floor_bucket`) — the histogram_buckets discipline.  The
+    finishers localCheckpoint it (they fan it into ≥3 branches)."""
     return (
         df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
         .select(
@@ -2102,8 +2121,8 @@ def ranksum_from_cells(
 ) -> DataFrame:
     """The finisher half of :func:`ranksum_by_group` over a PREBUILT
     (grp, v, c) cell table — e.g. one maintained incrementally by
-    ``streaming/rankstats.value_cells_stream`` (the
-    quantiles_from_histogram split)."""
+    :func:`value_cells` on a stream (the quantiles_from_histogram
+    split)."""
     per = _ranksum_parts(cells)
     n1d = F.col("n1").cast("double")
     n2d = (F.col("n") - F.col("n1")).cast("double")
@@ -2207,7 +2226,7 @@ def cliffs_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`cliffs_delta_by_group` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch)."""
+    (grp, v, c) cell table (the value-cell streaming sketch)."""
     per = _ranksum_parts(cells)
     u2 = F.col("r2") - F.col("n1") * (F.col("n1") + 1)
     n1n2 = F.col("n1") * (F.col("n") - F.col("n1"))
@@ -2264,9 +2283,9 @@ def ks_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """The finisher half of :func:`ks_by_group` over a PREBUILT
-    (grp, v, c) cell table — the SAME table
-    ``streaming/rankstats.value_cells_stream`` maintains, so one
-    streaming sketch serves both rank statistics."""
+    (grp, v, c) cell table — the SAME table :func:`value_cells`
+    maintains on a stream, so one streaming sketch serves both rank
+    statistics."""
     dec = "decimal(38,0)"
     grid = _cdf_grid(cells)
     dnum = F.abs(
@@ -2383,7 +2402,7 @@ def ad_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`ad_by_group` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch).  Built on
+    (grp, v, c) cell table (the value-cell streaming sketch).  Built on
     the shared :func:`_cdf_grid`: the doubled midranks are exactly
     ``m2 = 2·cum1 − cf`` and ``b2 = 2·cump − l``."""
     dec = "decimal(38,0)"
@@ -2485,7 +2504,7 @@ def cvm_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`cvm_by_group` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch), built on
+    (grp, v, c) cell table (the value-cell streaming sketch), built on
     the shared :func:`_cdf_grid`."""
     dec = "decimal(38,0)"
     grid = _cdf_grid(cells)
@@ -2819,7 +2838,7 @@ def gini_by_group(
     rank-weighted sum over a tie block of value v spanning rows
     cum+1..cum+c is exactly x·(c·cum + c·(c+1)/2) — the same tie-stable
     Σi·x the row formulation produced, now bounded by value cardinality
-    (and shared with the streaming sketch: ``finalize_gini``).
+    (and shared with the streaming sketch: :func:`gini_from_cells`).
     """
     return gini_from_cells(
         value_cells(df, group_col, value_col), group_col, round_digits
@@ -2834,7 +2853,7 @@ def gini_from_cells(
     """Finisher half of :func:`gini_by_group` over a prebuilt
     (grp, v, c) cell table — negative values are filtered HERE (the
     Lorenz construction needs a non-negative measure), so one shared
-    rankstats sketch can still feed it alongside ranksum/KS/Cliff's.
+    value-cell sketch can still feed it alongside ranksum/KS/Cliff's.
 
     The per-cell rank weight ``c·cum_prev + c·(c+1)/2`` is bounded by
     the group's rank sum n·(n+1)/2, so it must narrow to DECIMAL(18,0)
@@ -2940,7 +2959,7 @@ def theil_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`theil_by_group` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch); the
+    (grp, v, c) cell table (the value-cell streaming sketch); the
     positivity filter runs HERE, on cents."""
     cent = (
         cells.select(
@@ -3007,7 +3026,7 @@ def winsorized_stats(
     that rank (the rounding cast double→cents is monotone, so the cent
     at a row rank equals the cent of the cell at that rank), and the
     clamped sums are Σc·clamp(x).  Bounded by value cardinality and
-    shared with the streaming sketch (``finalize_winsorized``).
+    shared with the streaming sketch (:func:`winsorized_from_cells`).
     """
     return winsorized_from_cells(
         value_cells(df, group_col, value_col),
@@ -3026,7 +3045,7 @@ def winsorized_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`winsorized_stats` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch)."""
+    (grp, v, c) cell table (the value-cell streaming sketch)."""
     cells = cells.localCheckpoint(eager=False)
     wc = (
         Window.partitionBy("grp")
@@ -3399,10 +3418,12 @@ def daily_totals(
     grouped diagnostic (the NULLS FIRST/LAST cross-engine sort
     divergence).
 
-    Decimal sums are MONOTONE and merge by ADDITION, so this aggregate
-    is also the streaming sketch for the whole daily-series family
-    (``streaming/daily.py``) — the histogram_buckets discipline: one
-    live (grp, day, y) table feeds every ``*_from_daily`` finisher."""
+    Decimal sums are MONOTONE and merge by ADDITION, so on a streaming
+    DataFrame this aggregate is the live sketch for the whole
+    daily-series family, its state one decimal per observed
+    (grp, day), bounded by groups × days — the histogram_buckets
+    discipline: one live (grp, day, y) table feeds every
+    ``*_from_daily`` finisher and :func:`cusum_from_daily`."""
     return (
         df.filter(
             F.col(group_col).isNotNull()
@@ -3466,8 +3487,8 @@ def weekday_outliers_from_daily(
 ) -> DataFrame:
     """Finisher half of :func:`weekday_adjusted_outliers` over a
     prebuilt (grp, day, y DECIMAL) daily-total table — e.g. the one
-    ``streaming/daily.daily_totals_stream`` maintains (the sketch's
-    sixth report)."""
+    :func:`daily_totals` maintains on a stream (the sketch's sixth
+    report)."""
     daily = (
         totals
         .select(
@@ -3571,8 +3592,8 @@ def seasonal_from_daily(
 ) -> DataFrame:
     """The finisher half of :func:`seasonal_strength` over a PREBUILT
     (grp, day, y) daily-total table — e.g. one maintained incrementally
-    by ``streaming/daily.daily_totals_stream`` (the
-    quantiles_from_histogram split)."""
+    by :func:`daily_totals` on a stream (the quantiles_from_histogram
+    split)."""
     daily = daily.select(
         "grp",
         (F.col("day") % F.lit(int(period))).alias("phase"),
@@ -3673,7 +3694,7 @@ def acf_from_daily(
 ) -> DataFrame:
     """The finisher half of :func:`acf_by_group` over a PREBUILT
     (grp, day, y) daily-total table — the SAME table
-    ``streaming/daily.daily_totals_stream`` maintains, so one streaming
+    :func:`daily_totals` maintains on a stream, so one streaming
     sketch serves the whole daily-series diagnostic family."""
     if max_lag < 1:
         raise ValueError("max_lag must be >= 1")
@@ -3833,8 +3854,8 @@ def xcorr_from_daily(
 ) -> DataFrame:
     """The finisher half of :func:`xcorr_daily` over a PREBUILT
     (grp, day, y) daily-total table — the SAME table
-    ``streaming/daily.daily_totals_stream`` maintains (output columns
-    are fixed ``group_a``/``group_b``, so no group name is needed)."""
+    :func:`daily_totals` maintains on a stream (output columns are
+    fixed ``group_a``/``group_b``, so no group name is needed)."""
     from streamkit_spark.functions.util import pairs_from_sorted_groups
 
     spine = (
@@ -3953,7 +3974,10 @@ def interarrival_stats(
         )
         .withColumn("prev", F.lag("ts").over(w))
         .filter(F.col("prev").isNotNull())
-        .select("grp", (F.col("ts") - F.col("prev")).alias("gap"))
+        .select(
+            F.col("grp").alias(group_col),
+            (F.col("ts") - F.col("prev")).alias("gap"),
+        )
     )
     return interarrival_from_gaps(gaps, group_col, round_digits)
 
@@ -3964,14 +3988,16 @@ def interarrival_from_gaps(
     round_digits: int = 4,
 ) -> DataFrame:
     """The finisher half of :func:`interarrival_stats` over a PREBUILT
-    (grp, gap) table — e.g. the append stream of gaps
+    (group_col, gap) table — e.g. the append stream of gaps
     ``streaming/interarrival.gap_stream`` extracts with per-stream
     last-ts state (gap rows are immutable facts, so the streaming twin
     is append-mode, not a re-aggregated sketch)."""
     wr = Window.partitionBy("grp").orderBy("gap")
-    ranked = gaps.select(
-        "grp", "gap", F.row_number().over(wr).alias("rn")
-    ).localCheckpoint(eager=False)
+    ranked = (
+        gaps.select(F.col(group_col).alias("grp"), "gap")
+        .withColumn("rn", F.row_number().over(wr))
+        .localCheckpoint(eager=False)
+    )
     counts = ranked.groupBy("grp").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("gap").cast("long").alias("s"),
@@ -4191,7 +4217,7 @@ def holt_from_daily(
 ) -> DataFrame:
     """The finisher half of :func:`holt_smooth` over a PREBUILT
     (grp, day, y) daily-total table — the SAME table
-    ``streaming/daily.daily_totals_stream`` maintains."""
+    :func:`daily_totals` maintains on a stream."""
     a = F.lit(float(alpha))
     b = F.lit(float(beta))
     one = F.lit(1.0)
@@ -4385,10 +4411,9 @@ def ap_from_cells(
 ) -> DataFrame:
     """Finisher half of :func:`average_precision_report` over a
     PREBUILT (s, pos, tot) threshold-cell table — also serves the
-    calibration sketch's streaming AP report
-    (``streaming/calibration.finalize_ap``), where ``s`` is the
-    probability bucket: AP of the BUCKET-QUANTIZED ranking, exact
-    for 4dp scores binned at their own resolution (the
+    calibration sketch's AP report (:func:`finalize_ap`), where ``s``
+    is the probability bucket: AP of the BUCKET-QUANTIZED ranking,
+    exact for 4dp scores binned at their own resolution (the
     kendall_tau_binned quantization-is-the-contract discipline)."""
     wd = Window.orderBy(F.col("s").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -4427,6 +4452,21 @@ def ap_from_cells(
         F.round(
             F.when(F.col("r_tot") > 0, ap), round_digits
         ).alias("ap"),
+    )
+
+
+def finalize_ap(cells: DataFrame, round_digits: int = 4) -> DataFrame:
+    """Average precision of the BUCKET-QUANTIZED ranking from a
+    :func:`calibration_cells` table — the third report off that sketch
+    (after :func:`ece_from_cells` and :func:`brier_from_cells`): the
+    live "is the gate's ranking power drifting?" readout next to ECE's
+    "are its probabilities still honest?".  The bucket index is the
+    score."""
+    return ap_from_cells(
+        cells.select(
+            F.col("bucket").alias("s"), "pos", F.col("n").alias("tot")
+        ),
+        round_digits=round_digits,
     )
 
 
@@ -4559,8 +4599,9 @@ def calibration_cells(
     via the monotone double→decimal cast — the quantization IS the
     contract (the kendall_tau_binned discipline): sums are exact
     whatever the partial-aggregation order, so the cells are MONOTONE
-    and merge by ADDITION — this aggregate is also the streaming sketch
-    (``streaming/calibration.py``).  Feed already-rounded scores (the
+    and merge by ADDITION — on a streaming DataFrame this aggregate is
+    the live calibration sketch, its state one row per occupied bin,
+    bounded by ``n_buckets``.  Feed already-rounded scores (the
     repo's classifiers emit 4dp) and the quantization is the identity.
 
     Scale: one map-side-combined aggregate; ≤ ``n_buckets`` output
@@ -4771,7 +4812,7 @@ def hill_tail_by_group(
     cumulative window is a per-group sort of that table, bounded by
     VALUE CARDINALITY, never rows; quantize unbounded doubles upstream
     if needed).  Also the value-cell streaming sketch's 10th report
-    (``streaming/rankstats.finalize_hill``).
+    (:func:`hill_from_cells` over a streaming :func:`value_cells`).
     """
     return hill_from_cells(
         value_cells(df, group_col, value_col),
@@ -4788,7 +4829,7 @@ def hill_from_cells(
     round_digits: int = 4,
 ) -> DataFrame:
     """Finisher half of :func:`hill_tail_by_group` over a prebuilt
-    (grp, v, c) cell table (the rankstats streaming sketch); the
+    (grp, v, c) cell table (the value-cell streaming sketch); the
     positivity filter runs HERE."""
     # positive cells fan into the threshold/count/term branches — the
     # chi2_from_cells checkpoint rationale applies verbatim
@@ -4988,7 +5029,7 @@ def bootstrap_replicates(
     Both columns are exact (integer/decimal) and merge by ADDITION —
     disjoint row batches' sketches sum to the whole-corpus sketch,
     because every weight is a pure function of (salt, replicate, id).
-    That makes this the streaming state (streaming/bootstrap.py) and
+    That makes it, on a streaming DataFrame, the live sketch, and
     :func:`bootstrap_ci_from_replicates` the shared finisher — the
     *_from_cells split applied to resampling.  State bound: one row
     per (group, replicate), |groups| × (b + 1), never stream length.

@@ -234,7 +234,11 @@ def hll_registers(
     """Per-group HLL register table: (group..., bucket, r) with
     ``r = max(rho)`` — at most ``2^b`` rows per group whatever the input
     size, so registers are always mergeable/broadcastable.  NULL values
-    are skipped (COUNT DISTINCT semantics)."""
+    are skipped (COUNT DISTINCT semantics).  On a streaming DataFrame
+    this aggregate is the live distinct-count sketch: register maxima
+    are monotone, so a latest-wins sink converges under replay with no
+    watermark, and state stays at most ``2^b`` registers per group
+    whatever the stream length."""
     bucket, rho = hll_bucket_rho(F.col(value_col), b, salt)
     return (
         df.filter(F.col(value_col).isNotNull())
@@ -252,7 +256,8 @@ def hll_estimate_from_registers(
     """Fold a register table (group..., bucket, r) into per-group
     estimates (group..., hll_estimate) — the finisher shared by
     :func:`hll_distinct` and the streaming register aggregate
-    (streaming/cardinality.py), so batch and stream cannot drift.
+    (:func:`hll_registers` on a stream), so batch and stream cannot
+    drift.
 
     The harmonic sum folds over the bucket-SORTED register array (left
     fold, 0.0 init) so float rounding is order-pinned on both engines;

@@ -940,11 +940,13 @@ def token_cells(
     """Shared (g, tk, c) token-count table for the text-drift family
     (KL, pairwise JSD, Kendall profile matrix, RBO matrix, OOV rates):
     null-group-filtered exact BIGINT counts over whitespace tokens.
-    Counts are MONOTONE and merge by ADDITION, so this aggregate is
-    also the streaming sketch for those statistics
-    (``streaming/tokens.py``) — the value_cells discipline applied to
-    the token family.  The finishers localCheckpoint it where they fan
-    it into multiple branches.
+    Counts are MONOTONE and merge by ADDITION, so on a streaming
+    DataFrame this aggregate is the live sketch for those statistics,
+    its state one count per occupied (group, token) cell, bounded by
+    groups × vocabulary (shingle/df-cut open vocabularies upstream) —
+    the value_cells discipline applied to the token family.  The
+    finishers localCheckpoint it where they fan it into multiple
+    branches.
 
     The input is ``spread`` first (no-op on multi-partition inputs): a
     single-file corpus would run the tokenize+explode+partial-agg
@@ -1789,8 +1791,8 @@ def burrows_delta_pairs(
     Scale: one (group, token) count, a groups × k spine, in-row pair
     enumeration per token (``pairs_from_sorted_groups``) — groups² · k
     bounded, corpus-size-independent after the first count.  Also the
-    token streaming sketch's 6th report
-    (``streaming/tokens.finalize_burrows``).
+    token streaming sketch's 6th report (:func:`burrows_from_cells`
+    over a streaming :func:`token_cells`).
     """
     return burrows_from_cells(
         token_cells(df, group_col, text_col),

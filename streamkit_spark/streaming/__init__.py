@@ -3,9 +3,7 @@ from streamkit_spark.streaming.anomaly import (
     subscribe_anomalies,
 )
 from streamkit_spark.streaming.cardinality import (
-    finalize_hll,
     finalize_kmv_overlap,
-    hll_register_stream,
     kmv_sketch_stream,
 )
 from streamkit_spark.streaming.heavyhitters import (
@@ -47,8 +45,6 @@ __all__ = [
     "rollup_aggregate",
     "ewma_anomalies_stream",
     "subscribe_anomalies",
-    "hll_register_stream",
-    "finalize_hll",
     "kmv_sketch_stream",
     "finalize_kmv_overlap",
 ]

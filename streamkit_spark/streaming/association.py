@@ -11,8 +11,8 @@ only ever grows, an observed pair never disappears.  So the twin
 maintains exactly that relation with the built-in streaming
 ``dropDuplicates`` — append output mode, no tombstones, no custom
 stateful op — and the rules themselves are computed at read time by
-the ONE shared finisher (``analytics.rules_from_baskets``), so batch
-and stream cannot drift.
+the batch operator itself (``analytics.association_rules`` over the
+sink table), so batch and stream cannot drift.
 
 * ``basket_items_stream`` — streaming distinct over
   (basket key columns..., item).  Each first observation of a pair
@@ -22,9 +22,10 @@ and stream cannot drift.
   operator's basket table holds, i.e. at most baskets × item
   vocabulary, independent of stream length.  No watermark: an
   association relation has no event-time expiry; pairs are facts.
-* ``finalize_association`` — groups the maintained relation back to
-  sorted-distinct basket arrays and delegates to
-  ``analytics.rules_from_baskets``.
+* the report is ``analytics.association_rules(pairs, basket_cols,
+  item_col)`` over the maintained relation: it groups the pairs back to
+  sorted-distinct basket arrays (its NULL-item filter is a no-op there,
+  the relation holds no NULL items).
 
 At 100 TB the maintained relation is the natural materialization: it
 is the smallest state from which support/confidence/lift are exactly
@@ -38,9 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streamkit_spark.functions.analytics import rules_from_baskets
-
-__all__ = ["basket_items_stream", "finalize_association"]
+__all__ = ["basket_items_stream"]
 
 
 def basket_items_stream(
@@ -61,17 +60,3 @@ def basket_items_stream(
         .dropDuplicates(cols)
     )
 
-
-def finalize_association(
-    pairs: DataFrame,
-    basket_cols: list[str] | tuple[str, ...],
-    item_col: str,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Association rules from the maintained (basket, item) relation —
-    identical output to ``analytics.association_rules`` over the same
-    observations (the parity test pins them)."""
-    b_items = pairs.groupBy(*basket_cols).agg(
-        F.array_sort(F.collect_set(F.col(item_col))).alias("items")
-    )
-    return rules_from_baskets(b_items, round_digits=round_digits)

@@ -1,28 +1,15 @@
-"""Streaming distinct-count estimation — the stream twin of
-``sketch.hll_distinct``.
+"""Streaming KMV set-overlap sketch — the stream twin of
+``sketch.kmv_overlap``.
 
-The batch estimator splits across the stream/batch boundary exactly like
-``streaming/accumulation.py``:
+HLL distinct counts need no module here: ``sketch.hll_registers`` run on
+a streaming DataFrame IS the live register sketch (at most ``2^b``
+monotone maxima per group), and ``sketch.hll_estimate_from_registers``
+finishes the sink table.  KMV does need real streaming state:
 
-* ``hll_register_stream`` — a streaming ``max(rho)`` aggregate per
-  (group, bucket).  State is at most ``2^b`` integers per group whatever
-  the stream length — the textbook bounded-state sketch.  ``update``
-  output mode: register maxima are MONOTONE, so a latest-wins sink
-  (subscribe.py semantics) converges to the exact batch register table
-  even under at-least-once replay; no watermark is needed because a
-  register never shrinks and never expires.
-* ``finalize_hll`` — the batch finisher over the ≤ ``2^b``-rows-per-group
-  register table.  Delegates to the ONE shared definition
-  (``sketch.hll_estimate_from_registers``) so batch and stream cannot
-  drift — the parity test pins them together.
-
-At 100 TB / unbounded streams this is the reason HLL exists: cardinality
-tracking with O(groups · 2^b) state and no (group, value) shuffle ever.
-
-The KMV pair (``kmv_sketch_stream`` + ``finalize_kmv_overlap``) does the
-same for SET OVERLAP: ≤ k hash strings of state per group, whole-sketch
-rows for atomic latest-wins replacement, and the batch pair estimator
-consumed unchanged.
+* ``kmv_sketch_stream`` keeps ≤ k hash strings per group and emits
+  whole-sketch rows for atomic latest-wins replacement;
+* ``finalize_kmv_overlap`` explodes the latest sketch rows and runs the
+  batch pair estimator unchanged.
 """
 
 from __future__ import annotations
@@ -30,45 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "hll_register_stream",
-    "finalize_hll",
-    "kmv_sketch_stream",
-    "finalize_kmv_overlap",
-]
-
-
-def hll_register_stream(
-    events: DataFrame,
-    value_col: str,
-    group_cols: list[str] | tuple[str, ...] = (),
-    b: int = 8,
-    salt: str = "hll",
-) -> DataFrame:
-    """Streaming HLL register aggregate: (group..., bucket, r).
-
-    Works unchanged on a batch DataFrame (same plan, one-shot): the
-    register aggregate IS ``sketch.hll_registers`` — pure DataFrame ops
-    that Structured Streaming runs as a stateful agg — delegated so the
-    two paths cannot drift."""
-    from streamkit_spark.functions.sketch import hll_registers
-
-    return hll_registers(events, value_col, group_cols, b, salt)
-
-
-def finalize_hll(
-    registers: DataFrame,
-    group_cols: list[str] | tuple[str, ...] = (),
-    b: int = 8,
-) -> DataFrame:
-    """Batch finisher: fold a (group..., bucket, r) register table into
-    (group..., hll_estimate).  Register tables from different streams /
-    partitions / days can be unioned and max-merged first — registers
-    are associative, which is what makes the sketch mergeable across
-    checkpoints."""
-    from streamkit_spark.functions.sketch import hll_estimate_from_registers
-
-    return hll_estimate_from_registers(registers, group_cols, b)
+__all__ = ["kmv_sketch_stream", "finalize_kmv_overlap"]
 
 
 def kmv_sketch_stream(

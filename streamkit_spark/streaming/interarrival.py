@@ -1,11 +1,11 @@
 """Streaming inter-arrival gap extraction — the stream twin of
 ``analytics.interarrival_stats``.
 
-Unlike the sketch twins (``streaming/quantiles.py``, ``rankstats.py``,
-``daily.py``), gaps are not a re-aggregated table: each gap is an
-IMMUTABLE FACT (two consecutive events in one stream) emitted exactly
-once, so the twin is an APPEND stream of gap rows plus per-stream
-last-ts state:
+Unlike the cell sketches (``analytics.histogram_buckets``,
+``value_cells``, ``daily_totals`` run on a streaming DataFrame), gaps are
+not a re-aggregated table: each gap is an IMMUTABLE FACT (two
+consecutive events in one stream) emitted exactly once, so the twin is
+an APPEND stream of gap rows plus per-stream last-ts state:
 
 * ``gap_stream`` — ``applyInPandasWithState`` keyed by (group, key);
   state is ONE long (the stream's last timestamp) regardless of stream
@@ -13,10 +13,9 @@ last-ts state:
   (arrow chunks arrive unordered — the r3 sharp edge) and emits one gap
   per consecutive pair, including the boundary gap against the stored
   last ts.
-* ``finalize_interarrival`` — the batch finisher over the accumulated
-  gap rows, delegated to the ONE shared definition
-  (``analytics.interarrival_from_gaps``) so batch and stream cannot
-  drift; the parity test pins them together.
+* the report is ``analytics.interarrival_from_gaps(gaps, group_col)``
+  over the accumulated gap rows — the batch finisher itself, so batch
+  and stream cannot drift; the parity test pins them together.
 
 Ordering contract: gaps are computed in ARRIVAL-within-batch order
 against monotone state — correct when each (group, key) stream arrives
@@ -30,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["gap_stream", "finalize_interarrival"]
+__all__ = ["gap_stream"]
 
 
 def gap_stream(
@@ -99,22 +98,3 @@ def gap_stream(
         )
     )
 
-
-def finalize_interarrival(
-    gaps: DataFrame,
-    group_col: str,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Inter-arrival report from the accumulated (group, gap) rows —
-    the shared batch finisher (``analytics.interarrival_from_gaps``
-    expects the internal ``grp`` name; rename here so sink consumers
-    keep the public column)."""
-    from pyspark.sql import functions as F
-
-    from streamkit_spark.functions.analytics import interarrival_from_gaps
-
-    return interarrival_from_gaps(
-        gaps.select(F.col(group_col).alias("grp"), "gap"),
-        group_col,
-        round_digits,
-    )

@@ -9,8 +9,9 @@ disappears, and first-seen days / daily distinct counts / cumulative
 totals are all exactly recomputable from it.  So the twin maintains
 exactly that relation with the built-in streaming ``dropDuplicates``
 (append mode, no tombstones, no custom stateful op) and the report is
-computed at read time by the ONE shared finisher
-(``analytics.user_novelty``), so batch and stream cannot drift.
+computed at read time by the batch operator itself
+(``analytics.user_novelty`` over the sink table), so batch and stream
+cannot drift.
 
 * ``activity_pairs_stream`` — streaming distinct over (actor, day).
   Each first observation of a pair emits one append row; replays emit
@@ -18,9 +19,9 @@ computed at read time by the ONE shared finisher
   one entry per DISTINCT (actor, day) pair — exactly the relation the
   batch operator reduces over, independent of stream length.  No
   watermark: activity facts have no event-time expiry.
-* ``finalize_novelty`` — delegates to ``analytics.user_novelty`` over
-  the maintained relation (the operator is duplicate-idempotent, so
-  the finisher IS the batch definition).
+* the report is ``analytics.user_novelty(pairs, key_col, day_col)``
+  over the maintained relation (the operator is duplicate-idempotent,
+  so the batch definition IS the finisher).
 
 At 100 TB the maintained relation is the natural materialization: it
 shards by actor with no cross-actor shuffle during maintenance; the
@@ -32,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["activity_pairs_stream", "finalize_novelty"]
+__all__ = ["activity_pairs_stream"]
 
 
 def activity_pairs_stream(
@@ -51,15 +52,3 @@ def activity_pairs_stream(
         .dropDuplicates([key_col, day_col])
     )
 
-
-def finalize_novelty(
-    pairs: DataFrame,
-    key_col: str,
-    day_col: str,
-) -> DataFrame:
-    """Daily new/returning/cumulative report from the maintained
-    (actor, day) relation — the shared batch finisher
-    (``analytics.user_novelty``)."""
-    from streamkit_spark.functions.analytics import user_novelty
-
-    return user_novelty(pairs, key_col, day_col)

@@ -87,7 +87,7 @@ def compare_query(spark, duck, spark_df, sql):
 # `pytest tests/` completes (VERDICT r11 item #3); every test stays
 # runnable via `-m ""` / `-m slow`.  When a test here gets fast, or a new
 # multi-second test lands, update the list — an entry that no longer
-# exists is reported at collection time by the sanity check below.
+# exists is reported at collection time by `stale_slow_tests` below.
 SLOW_TESTS = {
     "tests/test_ab_labelprop.py::test_ab_report_matches_python_welch",
     "tests/test_ab_labelprop.py::test_labelprop_chain_propagates_by_depth",
@@ -142,6 +142,21 @@ SLOW_TESTS = {
 }
 
 
+def stale_slow_tests(slow, matched, collected_files, root):
+    """SLOW_TESTS entries that must fail the session: those whose file
+    was collected but that matched no item (a renamed or removed test),
+    and those whose file no longer exists under ``root`` (a renamed or
+    deleted file).  Entries of an existing file that was not collected
+    (``--ignore``, a collection error, a file-scoped run) are fine."""
+    unmatched = set(slow) - set(matched)
+    return sorted(
+        n
+        for n in unmatched
+        if n.split("::")[0] in collected_files
+        or not (root / n.split("::")[0]).is_file()
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     matched = set()
     collected_files = set()
@@ -150,20 +165,12 @@ def pytest_collection_modifyitems(config, items):
         if item.nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             matched.add(item.nodeid)
-    # Stale entries (renamed/removed tests) must fail loudly, not silently
-    # shrink the slow tier — but never break a narrowed selection.  Skip
-    # the check entirely when the items were narrowed below file level
-    # (a -k expression, or any `file::test` nodeid argument: a
-    # single-test selection collects one item and every other slow entry
-    # in its file would read as stale).  On a whole-suite collection
-    # (many files) check EVERY entry, so a renamed/deleted FILE still
-    # fails loudly; on a file-scoped selection check only entries whose
-    # file was actually collected.
-    if config.getoption("keyword", default=""):
-        return
+    # A `file::test` nodeid argument collects a subset of a file's items,
+    # so every other slow entry in that file would read as stale (-k and
+    # --deselect filter later, after this hook has seen every item).
     if any("::" in str(a) for a in config.args):
         return
-    stale = SLOW_TESTS - matched
-    if len(collected_files) < 30:  # file-scoped run, not the whole suite
-        stale = {n for n in stale if n.split("::")[0] in collected_files}
-    assert not stale, f"SLOW_TESTS entries no longer collected: {sorted(stale)[:5]}"
+    stale = stale_slow_tests(
+        SLOW_TESTS, matched, collected_files, config.rootpath
+    )
+    assert not stale, f"SLOW_TESTS entries no longer collected: {stale[:5]}"

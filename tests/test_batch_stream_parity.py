@@ -175,11 +175,12 @@ def test_normalize_events_invariant_to_parquet_timestamp_unit(spark, tmp_path):
 
 def test_user_accumulation_parity(spark, fixture_stream):
     """Streaming first-seen aggregate + batch finisher equals the batch
-    analytics.user_accumulation exactly (streaming/accumulation.py)."""
-    from streamkit_spark.functions.analytics import user_accumulation
-    from streamkit_spark.streaming.accumulation import (
-        finalize_accumulation,
-        first_seen_stream,
+    analytics.user_accumulation exactly: first_seen_days on the stream,
+    accumulate_first_days on its sink."""
+    from streamkit_spark.functions.analytics import (
+        accumulate_first_days,
+        first_seen_days,
+        user_accumulation,
     )
 
     batch = tables.load(spark, SF_DIR, "events").select(
@@ -193,7 +194,7 @@ def test_user_accumulation_parity(spark, fixture_stream):
     # table (update mode would need a latest-wins upsert sink; min-agg
     # values are identical either way)
     q = (
-        first_seen_stream(fixture_stream)
+        first_seen_days(fixture_stream, "user_id", F.expr("ts div 1000000"))
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_first_seen")
@@ -204,7 +205,7 @@ def test_user_accumulation_parity(spark, fixture_stream):
         first_seen = spark.sql("SELECT * FROM parity_first_seen")
         got = [
             (r["day"], r["new_users"], r["cum_users"])
-            for r in finalize_accumulation(first_seen).collect()
+            for r in accumulate_first_days(first_seen).collect()
         ]
         assert got == expected
     finally:
@@ -213,12 +214,13 @@ def test_user_accumulation_parity(spark, fixture_stream):
 
 def test_hll_cardinality_parity(spark, fixture_stream):
     """Streaming HLL register aggregate + shared finisher equals the
-    batch sketch.hll_distinct exactly (streaming/cardinality.py), and
-    the streaming state is register-bounded: ≤ 2^b rows per group."""
-    from streamkit_spark.functions.sketch import hll_distinct
-    from streamkit_spark.streaming.cardinality import (
-        finalize_hll,
-        hll_register_stream,
+    batch sketch.hll_distinct exactly (sketch.hll_registers on the
+    stream, hll_estimate_from_registers on its sink), and the streaming
+    state is register-bounded: ≤ 2^b rows per group."""
+    from streamkit_spark.functions.sketch import (
+        hll_distinct,
+        hll_estimate_from_registers,
+        hll_registers,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -227,7 +229,7 @@ def test_hll_cardinality_parity(spark, fixture_stream):
         for r in hll_distinct(batch, "user_id", ["event_type"]).collect()
     }
     q = (
-        hll_register_stream(fixture_stream, "user_id", ["event_type"])
+        hll_registers(fixture_stream, "user_id", ["event_type"])
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_hll_regs")
@@ -240,7 +242,9 @@ def test_hll_cardinality_parity(spark, fixture_stream):
         assert all(r["count"] <= 256 for r in per_group)
         got = {
             (r["event_type"], r["hll_estimate"])
-            for r in finalize_hll(regs, ["event_type"]).collect()
+            for r in hll_estimate_from_registers(
+                regs, ["event_type"]
+            ).collect()
         }
         assert got == expected
     finally:
@@ -304,12 +308,13 @@ def test_kmv_sketch_stream_parity(spark, fixture_stream):
 
 def test_histogram_quantile_stream_parity(spark, fixture_stream):
     """Streaming bucket-count aggregate + shared finisher equals the
-    batch analytics.histogram_quantiles exactly (streaming/quantiles.py),
-    and streaming state is bucket-bounded, not stream-length-bounded."""
-    from streamkit_spark.functions.analytics import histogram_quantiles
-    from streamkit_spark.streaming.quantiles import (
-        finalize_quantiles,
-        histogram_bucket_stream,
+    batch analytics.histogram_quantiles exactly (histogram_buckets on the
+    stream, quantiles_from_histogram on its sink), and streaming state
+    is bucket-bounded, not stream-length-bounded."""
+    from streamkit_spark.functions.analytics import (
+        histogram_buckets,
+        histogram_quantiles,
+        quantiles_from_histogram,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -318,7 +323,7 @@ def test_histogram_quantile_stream_parity(spark, fixture_stream):
         for r in histogram_quantiles(batch, "event_type", "value").collect()
     }
     q = (
-        histogram_bucket_stream(fixture_stream, "event_type", "value")
+        histogram_buckets(fixture_stream, "event_type", "value")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_hist_buckets")
@@ -334,7 +339,9 @@ def test_histogram_quantile_stream_parity(spark, fixture_stream):
         assert all(r["count"] < n_rows / 10 for r in per_group)
         got = {
             tuple(r)
-            for r in finalize_quantiles(buckets, "event_type").collect()
+            for r in quantiles_from_histogram(
+                buckets, "event_type"
+            ).collect()
         }
         assert got == expected
     finally:
@@ -344,10 +351,10 @@ def test_histogram_quantile_stream_parity(spark, fixture_stream):
 def test_psi_stream_parity(spark, fixture_stream):
     """The SAME streaming bucket table feeds the PSI finisher: live
     drift monitoring equals the batch analytics.psi_profile exactly."""
-    from streamkit_spark.functions.analytics import psi_profile
-    from streamkit_spark.streaming.quantiles import (
-        finalize_psi,
-        histogram_bucket_stream,
+    from streamkit_spark.functions.analytics import (
+        histogram_buckets,
+        psi_from_histogram,
+        psi_profile,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -356,7 +363,7 @@ def test_psi_stream_parity(spark, fixture_stream):
         for r in psi_profile(batch, "event_type", "value").collect()
     }
     q = (
-        histogram_bucket_stream(fixture_stream, "event_type", "value")
+        histogram_buckets(fixture_stream, "event_type", "value")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_psi_buckets")
@@ -367,7 +374,7 @@ def test_psi_stream_parity(spark, fixture_stream):
         buckets = spark.sql("SELECT * FROM parity_psi_buckets")
         got = {
             tuple(r)
-            for r in finalize_psi(buckets, "event_type").collect()
+            for r in psi_from_histogram(buckets, "event_type").collect()
         }
         assert got == expected
     finally:
@@ -378,22 +385,20 @@ def test_rankstats_stream_parity(spark, fixture_stream):
     """The SAME streaming (grp, v, c) cell table feeds ALL FIVE
     rank/value-stat finishers: live Mann-Whitney, KS, Cliff's delta,
     Gini, and winsorized-mean reports equal the batch analytics
-    operators exactly (streaming/rankstats.py), and state is
-    cell-bounded."""
+    operators exactly (value_cells on the stream, the *_from_cells
+    finishers on its sink), and state is cell-bounded."""
     from streamkit_spark.functions.analytics import (
         cliffs_delta_by_group,
+        cliffs_from_cells,
         gini_by_group,
+        gini_from_cells,
         ks_by_group,
+        ks_from_cells,
         ranksum_by_group,
+        ranksum_from_cells,
+        value_cells,
+        winsorized_from_cells,
         winsorized_stats,
-    )
-    from streamkit_spark.streaming.rankstats import (
-        finalize_cliffs,
-        finalize_gini,
-        finalize_ks,
-        finalize_ranksum,
-        finalize_winsorized,
-        value_cells_stream,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -415,7 +420,7 @@ def test_rankstats_stream_parity(spark, fixture_stream):
         for r in winsorized_stats(batch, "event_type", "value").collect()
     }
     q = (
-        value_cells_stream(fixture_stream, "event_type", "value")
+        value_cells(fixture_stream, "event_type", "value")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_value_cells")
@@ -436,30 +441,31 @@ def test_rankstats_stream_parity(spark, fixture_stream):
         )
         assert cells.count() == want_cells < batch.count()
         got_u = {
-            tuple(r) for r in finalize_ranksum(cells, "event_type").collect()
+            tuple(r) for r in ranksum_from_cells(cells, "event_type").collect()
         }
-        got_ks = {tuple(r) for r in finalize_ks(cells, "event_type").collect()}
+        got_ks = {
+            tuple(r) for r in ks_from_cells(cells, "event_type").collect()
+        }
         assert got_u == want_u and len(got_u) > 0
         assert got_ks == want_ks and len(got_ks) > 0
         got_cliffs = {
-            tuple(r) for r in finalize_cliffs(cells, "event_type").collect()
+            tuple(r) for r in cliffs_from_cells(cells, "event_type").collect()
         }
         assert got_cliffs == want_cliffs and len(got_cliffs) > 0
         got_gini = {
-            tuple(r) for r in finalize_gini(cells, "event_type").collect()
+            tuple(r) for r in gini_from_cells(cells, "event_type").collect()
         }
         assert got_gini == want_gini and len(got_gini) > 0
         got_wins = {
-            tuple(r) for r in finalize_winsorized(cells, "event_type").collect()
+            tuple(r)
+            for r in winsorized_from_cells(cells, "event_type").collect()
         }
         assert got_wins == want_wins and len(got_wins) > 0
         from streamkit_spark.functions.analytics import (
             ad_by_group,
+            ad_from_cells,
             theil_by_group,
-        )
-        from streamkit_spark.streaming.rankstats import (
-            finalize_ad,
-            finalize_theil,
+            theil_from_cells,
         )
 
         want_theil = {
@@ -467,7 +473,7 @@ def test_rankstats_stream_parity(spark, fixture_stream):
             for r in theil_by_group(batch, "event_type", "value").collect()
         }
         got_theil = {
-            tuple(r) for r in finalize_theil(cells, "event_type").collect()
+            tuple(r) for r in theil_from_cells(cells, "event_type").collect()
         }
         assert got_theil == want_theil and len(got_theil) > 0
         want_ad = {
@@ -475,36 +481,43 @@ def test_rankstats_stream_parity(spark, fixture_stream):
             for r in ad_by_group(batch, "event_type", "value").collect()
         }
         got_ad = {
-            tuple(r) for r in finalize_ad(cells, "event_type").collect()
+            tuple(r) for r in ad_from_cells(cells, "event_type").collect()
         }
         assert got_ad == want_ad and len(got_ad) > 0
-        from streamkit_spark.functions.analytics import cvm_by_group
-        from streamkit_spark.streaming.rankstats import finalize_cvm
+        from streamkit_spark.functions.analytics import (
+            cvm_by_group,
+            cvm_from_cells,
+        )
 
         want_cvm = {
             tuple(r)
             for r in cvm_by_group(batch, "event_type", "value").collect()
         }
         got_cvm = {
-            tuple(r) for r in finalize_cvm(cells, "event_type").collect()
+            tuple(r) for r in cvm_from_cells(cells, "event_type").collect()
         }
         assert got_cvm == want_cvm and len(got_cvm) > 0
-        from streamkit_spark.functions.analytics import benford_by_group
-        from streamkit_spark.streaming.rankstats import finalize_benford
+        from streamkit_spark.functions.analytics import (
+            benford_by_group,
+            benford_from_cells,
+        )
 
         want_ben = {
             tuple(r)
             for r in benford_by_group(batch, "event_type", "value").collect()
         }
         got_ben = {
-            tuple(r) for r in finalize_benford(cells, "event_type").collect()
+            tuple(r)
+            for r in benford_from_cells(cells, "event_type").collect()
         }
         assert got_ben == want_ben and len(got_ben) > 0
         # 11th report: Jonckheere-Terpstra trend across the (sorted)
         # group keys — the ordering is arbitrary here, but parity is
         # what's pinned, and both sides use the same list
-        from streamkit_spark.functions.analytics import jt_trend_by_group
-        from streamkit_spark.streaming.rankstats import finalize_jt
+        from streamkit_spark.functions.analytics import (
+            jt_from_cells,
+            jt_trend_by_group,
+        )
 
         gl = sorted(
             r["event_type"]
@@ -517,7 +530,7 @@ def test_rankstats_stream_parity(spark, fixture_stream):
                 batch, "event_type", "value", gl
             ).collect()
         ]
-        got_jt = [tuple(r) for r in finalize_jt(cells, gl).collect()]
+        got_jt = [tuple(r) for r in jt_from_cells(cells, gl).collect()]
         assert got_jt == want_jt and len(got_jt) == 1
     finally:
         q.stop()
@@ -527,17 +540,16 @@ def test_contingency_stream_parity(spark, fixture_stream):
     """The SAME streaming (r, c, o) contingency table feeds all three
     categorical-association finishers: live chi2, Cramér's V, and
     mutual-information reports equal the batch analytics operators
-    exactly (streaming/contingency.py), and state is cell-bounded."""
+    exactly (contingency_cells on the stream, the *_from_cells finishers
+    on its sink), and state is cell-bounded."""
     from streamkit_spark.functions.analytics import (
+        chi2_from_cells,
         chi2_independence,
+        contingency_cells,
+        cramers_from_cells,
         cramers_v,
+        mi_from_cells,
         mutual_information,
-    )
-    from streamkit_spark.streaming.contingency import (
-        contingency_stream,
-        finalize_chi2,
-        finalize_cramers,
-        finalize_mi,
     )
 
     wd = F.expr("(ts div 86400000000000 + 4) % 7").cast("long").alias("weekday")
@@ -555,7 +567,7 @@ def test_contingency_stream_parity(spark, fixture_stream):
     }
     stream = fixture_stream.select("event_type", wd)
     q = (
-        contingency_stream(stream, "event_type", "weekday")
+        contingency_cells(stream, "event_type", "weekday")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_contingency")
@@ -571,9 +583,11 @@ def test_contingency_stream_parity(spark, fixture_stream):
             F.col("event_type").isNotNull() & F.col("weekday").isNotNull()
         ).distinct().count()
         assert cells.count() == want_cells < batch.count()
-        assert {tuple(r) for r in finalize_chi2(cells).collect()} == want_chi2
-        assert {tuple(r) for r in finalize_cramers(cells).collect()} == want_v
-        got_mi = {tuple(r) for r in finalize_mi(cells).collect()}
+        got_chi2 = {tuple(r) for r in chi2_from_cells(cells).collect()}
+        assert got_chi2 == want_chi2
+        got_v = {tuple(r) for r in cramers_from_cells(cells).collect()}
+        assert got_v == want_v
+        got_mi = {tuple(r) for r in mi_from_cells(cells).collect()}
         assert got_mi == want_mi and len(got_mi) == 1
     finally:
         q.stop()
@@ -583,15 +597,14 @@ def test_calibration_stream_parity(spark, fixture_stream):
     """The SAME streaming (bucket, n, pos, psum) calibration-cell table
     feeds BOTH calibration finishers: live ECE/MCE and Brier-
     decomposition reports equal the batch analytics operators exactly
-    (streaming/calibration.py), and state is bucket-bounded."""
+    (calibration_cells on the stream, ece_from_cells / brier_from_cells
+    on its sink), and state is bucket-bounded."""
     from streamkit_spark.functions.analytics import (
         brier_decomposition,
+        brier_from_cells,
+        calibration_cells,
+        ece_from_cells,
         expected_calibration_error,
-    )
-    from streamkit_spark.streaming.calibration import (
-        calibration_stream,
-        finalize_brier,
-        finalize_ece,
     )
 
     # a deterministic probability/outcome pair from the fixture: the
@@ -611,7 +624,7 @@ def test_calibration_stream_parity(spark, fixture_stream):
     }
     stream = fixture_stream.select(prob, label)
     q = (
-        calibration_stream(stream, "prob", "y")
+        calibration_cells(stream, "prob", "y")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_calibration")
@@ -622,17 +635,16 @@ def test_calibration_stream_parity(spark, fixture_stream):
         cells = spark.sql("SELECT * FROM parity_calibration")
         # state bound: occupied fixed-width bins only, never row count
         assert 0 < cells.count() <= 10
-        got_ece = {tuple(r) for r in finalize_ece(cells).collect()}
+        got_ece = {tuple(r) for r in ece_from_cells(cells).collect()}
         assert got_ece == want_ece and len(got_ece) == 1
-        got_brier = {tuple(r) for r in finalize_brier(cells).collect()}
+        got_brier = {tuple(r) for r in brier_from_cells(cells).collect()}
         assert got_brier == want_brier and len(got_brier) == 1
         # third report: AP of the bucket-quantized ranking — the live
         # finisher must equal ap_from_cells over the batch cell table
         from streamkit_spark.functions.analytics import (
             ap_from_cells,
-            calibration_cells,
+            finalize_ap,
         )
-        from streamkit_spark.streaming.calibration import finalize_ap
 
         bc = calibration_cells(batch, "prob", "y").select(
             F.col("bucket").alias("s"), "pos", F.col("n").alias("tot")
@@ -659,21 +671,20 @@ def test_token_cells_stream_parity(spark, docs_stream):
     """The SAME streaming (g, tk, c) token-cell table feeds ALL FIVE
     text-drift finishers: live KL, pairwise JSD, Kendall profile, RBO,
     and OOV reports equal the batch text operators exactly
-    (streaming/tokens.py), and state is (group, token)-bounded."""
+    (token_cells on the stream, the *_from_cells finishers on its sink),
+    and state is (group, token)-bounded."""
     from streamkit_spark.functions.text import (
         jsd_by_group_pairs,
+        jsd_from_cells,
+        kendall_profile_from_cells,
         kendall_profile_pairs,
         kl_by_group,
+        kl_from_cells,
         oov_by_group,
+        oov_from_cells,
+        rbo_from_cells,
         rbo_pairs,
-    )
-    from streamkit_spark.streaming.tokens import (
-        finalize_jsd,
-        finalize_kendall_profile,
-        finalize_kl,
-        finalize_oov,
-        finalize_rbo,
-        token_cells_stream,
+        token_cells,
     )
 
     batch = tables.load(spark, SF_DIR, "documents")
@@ -683,7 +694,7 @@ def test_token_cells_stream_parity(spark, docs_stream):
     want_rbo = {tuple(r) for r in rbo_pairs(batch, k=10).collect()}
     want_oov = {tuple(r) for r in oov_by_group(batch, vocab_k=10).collect()}
     q = (
-        token_cells_stream(docs_stream)
+        token_cells(docs_stream)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_token_cells")
@@ -693,55 +704,55 @@ def test_token_cells_stream_parity(spark, docs_stream):
         q.processAllAvailable()
         cells = spark.sql("SELECT * FROM parity_token_cells")
         # state bound: occupied (group, token) cells, never rows × tokens
-        from streamkit_spark.functions.text import token_cells
-
         want_cells = token_cells(batch).count()
         assert cells.count() == want_cells
-        assert {tuple(r) for r in finalize_kl(cells).collect()} == want_kl
-        assert {tuple(r) for r in finalize_jsd(cells).collect()} == want_jsd
+        assert {tuple(r) for r in kl_from_cells(cells).collect()} == want_kl
+        assert {tuple(r) for r in jsd_from_cells(cells).collect()} == want_jsd
         got_tau = {
-            tuple(r) for r in finalize_kendall_profile(cells).collect()
+            tuple(r) for r in kendall_profile_from_cells(cells).collect()
         }
         assert got_tau == want_tau and len(got_tau) > 0
-        got_rbo = {tuple(r) for r in finalize_rbo(cells, k=10).collect()}
+        got_rbo = {tuple(r) for r in rbo_from_cells(cells, k=10).collect()}
         assert got_rbo == want_rbo and len(got_rbo) > 0
         got_oov = {
-            tuple(r) for r in finalize_oov(cells, vocab_k=10).collect()
+            tuple(r) for r in oov_from_cells(cells, vocab_k=10).collect()
         }
         assert got_oov == want_oov and len(got_oov) > 0
-        from streamkit_spark.functions.text import burrows_delta_pairs
-        from streamkit_spark.streaming.tokens import finalize_burrows
+        from streamkit_spark.functions.text import (
+            burrows_delta_pairs,
+            burrows_from_cells,
+        )
 
         want_bd = {
             tuple(r) for r in burrows_delta_pairs(batch, vocab_k=10).collect()
         }
         got_bd = {
-            tuple(r) for r in finalize_burrows(cells, vocab_k=10).collect()
+            tuple(r) for r in burrows_from_cells(cells, vocab_k=10).collect()
         }
         assert got_bd == want_bd and len(got_bd) > 0
-        from streamkit_spark.functions.text import coverage_by_group
-        from streamkit_spark.streaming.tokens import finalize_coverage
+        from streamkit_spark.functions.text import (
+            coverage_by_group,
+            coverage_from_cells,
+        )
 
         want_cov = {tuple(r) for r in coverage_by_group(batch).collect()}
-        got_cov = {tuple(r) for r in finalize_coverage(cells).collect()}
+        got_cov = {tuple(r) for r in coverage_from_cells(cells).collect()}
         assert got_cov == want_cov and len(got_cov) > 0
         # 8th + 9th reports: Monroe log-odds top-k and Hill diversity
         from streamkit_spark.functions.text import (
+            diversity_from_cells,
             log_odds_by_group,
+            log_odds_from_cells,
             token_diversity_by_group,
-        )
-        from streamkit_spark.streaming.tokens import (
-            finalize_diversity,
-            finalize_log_odds,
         )
 
         want_lo = {tuple(r) for r in log_odds_by_group(batch).collect()}
-        got_lo = {tuple(r) for r in finalize_log_odds(cells).collect()}
+        got_lo = {tuple(r) for r in log_odds_from_cells(cells).collect()}
         assert got_lo == want_lo and len(got_lo) > 0
         want_td = {
             tuple(r) for r in token_diversity_by_group(batch).collect()
         }
-        got_td = {tuple(r) for r in finalize_diversity(cells).collect()}
+        got_td = {tuple(r) for r in diversity_from_cells(cells).collect()}
         assert got_td == want_td and len(got_td) > 0
     finally:
         q.stop()
@@ -750,13 +761,11 @@ def test_token_cells_stream_parity(spark, docs_stream):
 def test_novelty_stream_parity(spark, fixture_stream):
     """The maintained distinct (actor, day) relation feeds the novelty
     finisher: the live new/returning/cumulative report equals the batch
-    analytics.user_novelty exactly (streaming/novelty.py), and state is
-    bounded by the distinct activity-pair count, never rows."""
+    analytics.user_novelty exactly (streaming/novelty.py maintains the
+    relation, user_novelty reads its sink), and state is bounded by the
+    distinct activity-pair count, never rows."""
     from streamkit_spark.functions.analytics import user_novelty
-    from streamkit_spark.streaming.novelty import (
-        activity_pairs_stream,
-        finalize_novelty,
-    )
+    from streamkit_spark.streaming.novelty import activity_pairs_stream
 
     day = F.expr("ts div 86400000000000").alias("day")
     batch = tables.load(spark, SF_DIR, "events").select("user_id", day)
@@ -782,7 +791,7 @@ def test_novelty_stream_parity(spark, fixture_stream):
         assert pairs.count() == want_pairs < batch.count()
         got = {
             tuple(r)
-            for r in finalize_novelty(pairs, "user_id", "day").collect()
+            for r in user_novelty(pairs, "user_id", "day").collect()
         }
         assert got == want and len(got) > 0
     finally:
@@ -794,17 +803,16 @@ def test_daily_series_stream_parity(spark, fixture_stream):
     three daily-series finishers: live seasonal-strength, ACF, and
     cross-group correlation reports equal the batch
     analytics.seasonal_strength / acf_by_group / xcorr_daily exactly
-    (streaming/daily.py), and state is (group, day)-bounded."""
+    (daily_totals on the stream, the *_from_daily finishers on its
+    sink), and state is (group, day)-bounded."""
     from streamkit_spark.functions.analytics import (
         acf_by_group,
+        acf_from_daily,
+        daily_totals,
+        seasonal_from_daily,
         seasonal_strength,
         xcorr_daily,
-    )
-    from streamkit_spark.streaming.daily import (
-        daily_totals_stream,
-        finalize_acf,
-        finalize_seasonal,
-        finalize_xcorr,
+        xcorr_from_daily,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -828,7 +836,7 @@ def test_daily_series_stream_parity(spark, fixture_stream):
         for r in xcorr_daily(sel(batch), "event_type", "day", "value").collect()
     }
     q = (
-        daily_totals_stream(sel(fixture_stream), "event_type", "day", "value")
+        daily_totals(sel(fixture_stream), "event_type", "day", "value")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_daily_totals")
@@ -851,22 +859,21 @@ def test_daily_series_stream_parity(spark, fixture_stream):
         )
         assert daily.count() == want_cells < batch.count()
         got_seasonal = {
-            tuple(r) for r in finalize_seasonal(daily, "event_type").collect()
+            tuple(r)
+            for r in seasonal_from_daily(daily, "event_type").collect()
         }
         got_acf = {
             tuple(r)
-            for r in finalize_acf(daily, "event_type", max_lag=3).collect()
+            for r in acf_from_daily(daily, "event_type", max_lag=3).collect()
         }
-        got_xcorr = {tuple(r) for r in finalize_xcorr(daily).collect()}
+        got_xcorr = {tuple(r) for r in xcorr_from_daily(daily).collect()}
         assert got_seasonal == want_seasonal and len(got_seasonal) > 0
         assert got_acf == want_acf and len(got_acf) > 0
         assert got_xcorr == want_xcorr and len(got_xcorr) > 0
         # sixth report off the same sketch: weekday-adjusted anomalies
         from streamkit_spark.functions.analytics import (
             weekday_adjusted_outliers,
-        )
-        from streamkit_spark.streaming.daily import (
-            finalize_weekday_outliers,
+            weekday_outliers_from_daily,
         )
 
         want_anom = {
@@ -877,7 +884,9 @@ def test_daily_series_stream_parity(spark, fixture_stream):
         }
         got_anom = {
             tuple(r)
-            for r in finalize_weekday_outliers(daily, "event_type").collect()
+            for r in weekday_outliers_from_daily(
+                daily, "event_type"
+            ).collect()
         }
         # non-vacuity: the sf0.01 fixture produces real flagged days
         # (22 at last count) — {} == {} must not pass as parity
@@ -891,11 +900,11 @@ def test_interarrival_stream_parity(spark, fixture_stream):
     last-ts state per stream) + shared finisher equals the batch
     analytics.interarrival_stats exactly, and the emitted gap multiset
     equals the batch lag-window gaps."""
-    from streamkit_spark.functions.analytics import interarrival_stats
-    from streamkit_spark.streaming.interarrival import (
-        finalize_interarrival,
-        gap_stream,
+    from streamkit_spark.functions.analytics import (
+        interarrival_from_gaps,
+        interarrival_stats,
     )
+    from streamkit_spark.streaming.interarrival import gap_stream
 
     sel = lambda df: df.select(  # noqa: E731
         "event_type",
@@ -946,7 +955,7 @@ def test_interarrival_stream_parity(spark, fixture_stream):
         assert gaps.count() == n_rows - n_streams
         got = {
             tuple(r)
-            for r in finalize_interarrival(gaps, "event_type").collect()
+            for r in interarrival_from_gaps(gaps, "event_type").collect()
         }
         assert got == expected and len(got) > 0
     finally:
@@ -1046,14 +1055,15 @@ def test_gap_stream_preserves_numeric_group_type(spark, tmp_path):
 
 
 def test_cusum_finisher_on_streaming_daily_table(spark, fixture_stream):
-    """The streaming daily-total table's FIFTH report: finalize_cusum
-    equals the batch analytics.cusum_changepoint exactly (the finisher
-    is decimal-width agnostic — (18,2) sketch sums vs the batch path's
-    un-narrowed (28,2) sums carry identical values)."""
-    from streamkit_spark.functions.analytics import cusum_changepoint
-    from streamkit_spark.streaming.daily import (
-        daily_totals_stream,
-        finalize_cusum,
+    """The streaming daily-total table's FIFTH report: cusum_from_daily
+    over the daily_totals sink equals the batch
+    analytics.cusum_changepoint exactly (the finisher is decimal-width
+    agnostic — (18,2) sketch sums vs the batch path's un-narrowed
+    (28,2) sums carry identical values)."""
+    from streamkit_spark.functions.analytics import (
+        cusum_changepoint,
+        cusum_from_daily,
+        daily_totals,
     )
 
     batch = tables.load(spark, SF_DIR, "events")
@@ -1067,7 +1077,7 @@ def test_cusum_finisher_on_streaming_daily_table(spark, fixture_stream):
         ).collect()
     }
     q = (
-        daily_totals_stream(sel(fixture_stream), "event_type", "day", "value")
+        daily_totals(sel(fixture_stream), "event_type", "day", "value")
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_daily_cusum")
@@ -1077,7 +1087,7 @@ def test_cusum_finisher_on_streaming_daily_table(spark, fixture_stream):
         q.processAllAvailable()
         daily = spark.sql("SELECT * FROM parity_daily_cusum")
         got = {
-            tuple(r) for r in finalize_cusum(daily, "event_type").collect()
+            tuple(r) for r in cusum_from_daily(daily, "event_type").collect()
         }
         assert got == expected and len(got) > 0
     finally:
@@ -1085,14 +1095,12 @@ def test_cusum_finisher_on_streaming_daily_table(spark, fixture_stream):
 
 
 def test_association_stream_parity_fixture(spark, fixture_stream):
-    """Streaming (basket, item) distinct maintenance + shared finisher
-    equals batch analytics.association_rules exactly over the fixture
-    (baskets = user-days, items = event types)."""
+    """Streaming (basket, item) distinct maintenance + the batch
+    operator over its sink equals batch analytics.association_rules
+    exactly over the fixture (baskets = user-days, items = event
+    types)."""
     from streamkit_spark.functions.analytics import association_rules
-    from streamkit_spark.streaming.association import (
-        basket_items_stream,
-        finalize_association,
-    )
+    from streamkit_spark.streaming.association import basket_items_stream
 
     day = F.expr("ts div 86400000000000").alias("day")
     batch = tables.load(spark, SF_DIR, "events").select(
@@ -1121,7 +1129,7 @@ def test_association_stream_parity_fixture(spark, fixture_stream):
         ).count()
         got = {
             tuple(r)
-            for r in finalize_association(
+            for r in association_rules(
                 pairs, ["user_id", "day"], "event_type"
             ).collect()
         }
@@ -1137,10 +1145,7 @@ def test_association_stream_retroactive_pairs_across_batches(spark, tmp_path):
     double-count.  Per-batch pair-count summation gets BOTH wrong; the
     maintained distinct relation gets both right."""
     from streamkit_spark.functions.analytics import association_rules
-    from streamkit_spark.streaming.association import (
-        basket_items_stream,
-        finalize_association,
-    )
+    from streamkit_spark.streaming.association import basket_items_stream
 
     schema = "basket string, item string"
     rows_a = [("b1", "A"), ("b1", "B"), ("b2", "A"), ("b2", "C")]
@@ -1186,7 +1191,7 @@ def test_association_stream_retroactive_pairs_across_batches(spark, tmp_path):
             tuple(r)
             for r in association_rules(batch_all, ["basket"], "item").collect()
         }
-        got_rules = finalize_association(pairs, ["basket"], "item")
+        got_rules = association_rules(pairs, ["basket"], "item")
         got = {tuple(r) for r in got_rules.collect()}
         assert got == expected
         by_pair = {
@@ -1201,19 +1206,20 @@ def test_association_stream_retroactive_pairs_across_batches(spark, tmp_path):
 
 def test_bootstrap_stream_parity(spark, docs_stream):
     """The streaming (group, replicate, n_b, s_b) bootstrap sketch
-    (streaming/bootstrap.py) converges to the batch replicate table —
+    (bootstrap_replicates on the stream) converges to the batch replicate
+    table —
     weights are pure functions of (salt, replicate, id), so micro-batch
     sketches merge by addition — and the shared finisher reproduces
     analytics.poisson_bootstrap_ci exactly.  State is
     |groups| x (b + 1)-bounded, never row count."""
     from pyspark.sql import functions as F
 
-    from streamkit_spark.functions.analytics import poisson_bootstrap_ci
-    from streamkit_spark.functions.text import token_count
-    from streamkit_spark.streaming.bootstrap import (
-        bootstrap_stream,
-        finalize_bootstrap_ci,
+    from streamkit_spark.functions.analytics import (
+        bootstrap_ci_from_replicates,
+        bootstrap_replicates,
+        poisson_bootstrap_ci,
     )
+    from streamkit_spark.functions.text import token_count
 
     val = token_count("text").cast("long").alias("ntok")
     batch = (
@@ -1228,7 +1234,7 @@ def test_bootstrap_stream_parity(spark, docs_stream):
     }
     stream = docs_stream.select("doc_id", "source", val)
     q = (
-        bootstrap_stream(stream, "source", "ntok", id_col="doc_id", b=50)
+        bootstrap_replicates(stream, "source", "ntok", id_col="doc_id", b=50)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_bootstrap")
@@ -1245,7 +1251,7 @@ def test_bootstrap_stream_parity(spark, docs_stream):
         assert rep.count() == n_groups * 51
         got = {
             tuple(r)
-            for r in finalize_bootstrap_ci(rep, "source").collect()
+            for r in bootstrap_ci_from_replicates(rep, "source").collect()
         }
         assert got == want and len(got) == n_groups
     finally:

@@ -1,6 +1,6 @@
 """Hill tail-index (value-cell sketch report #10) + daily user-novelty
-profile: hand-computed fixed points, degenerate edges, a Pareto sanity
-band, and finisher delegation."""
+profile: hand-computed fixed points, degenerate edges, and a Pareto
+sanity band."""
 
 from __future__ import annotations
 
@@ -77,18 +77,6 @@ def test_hill_from_cells_prebuilt_and_groups_independent(spark):
     assert rows["a"]["alpha"] is not None
     # group b: 5 tied copies -> threshold 9, degenerate tail
     assert rows["b"]["threshold"] == 9.0 and rows["b"]["alpha"] is None
-
-
-def test_finalize_hill_delegates_to_shared_finisher(spark):
-    from streamkit_spark.streaming.rankstats import finalize_hill
-
-    cells = spark.createDataFrame(
-        [("a", 4.0, 1), ("a", 2.0, 1), ("a", 1.0, 1)],
-        "grp string, v double, c long",
-    )
-    got = {tuple(r) for r in finalize_hill(cells, "grp", k=2).collect()}
-    want = {tuple(r) for r in hill_from_cells(cells, "grp", k=2).collect()}
-    assert got == want and len(got) == 1
 
 
 def test_user_novelty_hand_computed(spark):

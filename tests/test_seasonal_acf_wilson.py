@@ -261,15 +261,18 @@ def test_holt_single_day_and_gap_fill(spark):
 
 
 def test_holt_streaming_finisher_delegates(spark):
-    from streamkit_spark.functions.analytics import daily_totals, holt_smooth
-    from streamkit_spark.streaming.daily import finalize_holt
+    from streamkit_spark.functions.analytics import (
+        daily_totals,
+        holt_from_daily,
+        holt_smooth,
+    )
 
     rows = [("a", d, float(d * d)) for d in range(8)]
     df = _daily_frame(spark, rows)
     want = {tuple(r) for r in holt_smooth(df, "g", "day", "value").collect()}
     got = {
         tuple(r)
-        for r in finalize_holt(
+        for r in holt_from_daily(
             daily_totals(df, "g", "day", "value"), "g"
         ).collect()
     }
