@@ -4,9 +4,11 @@
 * Store (durable events table, produce/publish),
 * SpaceWatermarks (read-visibility fence; every read is clamped like
   clampConsumeSegmentArgs/clampConsumeSpaceArgs, node.go:565-587),
-* a maintained ``segment_status`` table (the O(1) peek/status path — the
-  columnar analog of the reference's stored status row + LAST_ENTRY
-  pointer, pebblekit/store.go:294,351-366) with recompute fallback,
+* a maintained ``segment_status`` table with recompute fallback.  Its
+  row is the reference's stored status row + LAST_ENTRY pointer
+  (pebblekit/store.go:219-228,294,351-366): ``peek`` and a one-segment
+  ``get_segment_status`` are answered on the driver from that row and the
+  tail row it pins, as Arrow-backed frames that start no Spark job,
 * subscriptions (snapshot → live).
 
 The reference's manager keeps one node per store with idle eviction
@@ -153,13 +155,13 @@ class StreamkitEngine:
     ) -> DataFrame:
         """Watermark-clamped peek (node.go:259-298).
 
-        Fast path: the maintained status row pins the last sequence
-        (driver-side point read), so the events read is an equality filter
-        ``sequence == last`` — parquet stats prune every file but the tail
-        one — instead of a whole-segment sort-scan.  Falls back to the
-        scan peek when the segment's tail is above the watermark (the
-        result must then be the latest *visible* entry) or when no status
-        row exists."""
+        Fast path: the maintained status row pins the last sequence, and
+        :meth:`Store.entry` reads that one row on the driver (pyarrow, the
+        space's files only, row groups skipped by their min/max stats) —
+        zero Spark jobs, like the reference's LAST_ENTRY point read.  Falls
+        back to the scan peek when the segment's tail is above the
+        watermark (the result must then be the latest *visible* entry) or
+        when no status row exists."""
         now = now_ms if now_ms is not None else _now_ms()
         safe = self.watermarks.safe_max_timestamp(space, now)
         store = self.store(store_id)
@@ -169,22 +171,16 @@ class StreamkitEngine:
             and st["last_ts"] is not None
             and st["last_ts"] <= safe
         ):
-            return (
-                store.events()
-                .filter(
-                    (F.col("space") == space)
-                    & (F.col("segment") == str(segment))
-                    & (F.col("sequence") == int(st["last_sequence"]))
-                )
-                .limit(1)
-            )
+            return store.entry(space, segment, st["last_sequence"])
         return _peek(store.events(), space, segment, max_ts=safe)
 
     def get_segment_status(
         self, store_id: str, space: str, segment: str | None = None
     ) -> DataFrame:
         """Stored-status fast path with recompute fallback (J2 —
-        pebblekit/store.go:151-157,368-409)."""
+        pebblekit/store.go:151-157,368-409).  One segment's status is the
+        stored row read on the driver (zero Spark jobs); the space-wide
+        listing and the recompute run on Spark."""
         if os.path.isdir(self._status_path(store_id)):
             return self.store(store_id).statuses(space, segment)
         return segment_status(

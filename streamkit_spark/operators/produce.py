@@ -37,12 +37,15 @@ import urllib.parse
 import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from streamkit_spark.errors import SequenceMismatchError, ValidationError
 from streamkit_spark.schema import (
+    EVENTS_READ_SCHEMA,
     EVENTS_SCHEMA,
     PRODUCE_CHUNK_SIZE,
     SEGMENT_STATUS_SCHEMA,
@@ -103,6 +106,32 @@ _WRITE_OPTIONS = dict(
 )
 
 
+# a produce file's columns as the driver reads them back: the read layout
+# minus the ``space`` partition column, which the file's directory carries
+_FILE_READ_SCHEMA = pa.schema(
+    [f for f in to_arrow_schema(EVENTS_READ_SCHEMA) if f.name != "space"]
+)
+
+
+def _local_frame(spark: SparkSession, schema, rows: list[dict]) -> DataFrame:
+    """``rows`` as an Arrow-backed LocalRelation of ``schema`` (keys outside
+    it are ignored): building and collecting it start no Spark job, where
+    ``createDataFrame([], schema)`` starts one on collect."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def _reread(read):
+    """``read()``, again whenever a file it listed vanished before it was
+    opened — a produce rollback or a status swap removed it after the
+    listing, so the next listing sees the files that replaced it."""
+    while True:
+        try:
+            return read()
+        except FileNotFoundError:
+            continue
+
+
 def _status_aggs() -> list:
     """A segment's status fields recomputed from its events, in
     ``_write_status_row`` argument order — the one recompute rule of
@@ -161,9 +190,37 @@ class Store:
     # ------------------------------------------------------------- read
 
     def events(self) -> DataFrame:
+        """The events table in the EVENTS_READ_SCHEMA layout (an empty store
+        reads as an empty Arrow-backed frame, no Spark job)."""
         if not self._exists():
-            return self.spark.createDataFrame([], EVENTS_SCHEMA)
+            return _local_frame(self.spark, EVENTS_READ_SCHEMA, [])
         return self.spark.read.schema(EVENTS_SCHEMA).parquet(self.events_path)
+
+    def entry(self, space: str, segment: str, sequence: int) -> DataFrame:
+        """The entry at ``sequence`` of one segment (zero or one row), read
+        on the driver with pyarrow — no Spark job.  Only the space's files
+        are opened, and the ``segment``/``sequence`` filter skips every row
+        group but the entry's by its min/max stats, so the cost is one
+        footer read per file of the space.  A column a file lacks reads as
+        NULL, as in Spark's schema'd read.  The store flock is held SHARED,
+        as in :meth:`_space_files`, so compact cannot swap the directory
+        mid-read."""
+        part = os.path.join(self.events_path, self._space_dir(space))
+        key = (ds.field("segment") == str(segment)) & (
+            ds.field("sequence") == int(sequence)
+        )
+        with _flock(self._store_lock_path, exclusive=False):
+            rows = _reread(
+                lambda: ds.dataset(
+                    _parquet_paths(part), schema=_FILE_READ_SCHEMA, format="parquet"
+                )
+                .to_table(filter=key)
+                .slice(0, 1)
+                .to_pylist()
+            )
+        return _local_frame(
+            self.spark, EVENTS_READ_SCHEMA, [{**r, "space": space} for r in rows]
+        )
 
     def _exists(self) -> bool:
         # cheap local check; on object stores this is a catalog lookup
@@ -178,22 +235,28 @@ class Store:
     ) -> DataFrame:
         """The maintained segment_status table (A1, incrementally updated
         at write time — reference: pebblekit/store.go:289-302), optionally
-        scoped to one space / segment: one row per segment, ordered by
-        (space, segment).
+        scoped to one space, in SEGMENT_STATUS_SCHEMA column order: one row
+        per segment, ordered by (space, segment).
 
-        A status swap (:meth:`_write_status_row`) lands the new row file
-        before it removes the old one, so for an instant a partition holds
-        two row versions; as in :meth:`last_status`, the max-last_sequence
-        version wins.  The window runs on the sort's range partitioning
-        (no second shuffle); one segment's partition holds one or two tiny
-        files, so that lookup reads in a single task with no shuffle."""
+        One segment's row (``space`` and ``segment`` given) is
+        :meth:`last_status` as an Arrow-backed frame: a driver-side point
+        read, no Spark job.  A listing reads the table with Spark; a status
+        swap (:meth:`_write_status_row`) lands the new row file before it
+        removes the old one, so for an instant a partition holds two row
+        versions, and as in :meth:`last_status` the max-last_sequence
+        version wins.  The window runs on the sort's range partitioning (no
+        second shuffle)."""
+        if segment is not None:
+            if space is None:
+                raise ValueError("a segment's status needs its space")
+            st = self.last_status(space, segment)
+            rows = [{**st, "space": space, "segment": str(segment)}] if st else []
+            return _local_frame(self.spark, SEGMENT_STATUS_SCHEMA, rows)
         if not os.path.isdir(self.status_path):
-            return self.spark.createDataFrame([], SEGMENT_STATUS_SCHEMA)
+            return _local_frame(self.spark, SEGMENT_STATUS_SCHEMA, [])
         df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(self.status_path)
         if space is not None:
             df = df.filter(F.col("space") == space)
-        if segment is not None:
-            df = df.filter(F.col("segment") == segment).coalesce(1)
         versions = Window.partitionBy("space", "segment").orderBy(
             F.desc("last_sequence")
         )
@@ -201,7 +264,7 @@ class Store:
             df.orderBy("space", "segment")
             .withColumn("_version", F.row_number().over(versions))
             .filter(F.col("_version") == 1)
-            .drop("_version")
+            .select(*SEGMENT_STATUS_SCHEMA.names)
         )
 
     def last_status(self, space: str, segment: str) -> dict | None:
@@ -212,19 +275,19 @@ class Store:
 
         During a concurrent status swap two row versions may coexist for an
         instant; the max-last_sequence row wins (monotone by construction).
+        A swap's dot-prefixed temp file is not a row version, and a version
+        removed after the listing sends the read back to a new listing.
         """
         part = os.path.join(self.status_path, _part_dir(space, segment))
-        if not os.path.isdir(part):
-            return None
-        best = None
-        for f in os.listdir(part):
-            if not f.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(part, f))
-            for row in t.to_pylist():
-                if best is None or (row["last_sequence"] or 0) > (best["last_sequence"] or 0):
-                    best = row
-        return best
+        rows = _reread(
+            lambda: [
+                row
+                for f in (os.listdir(part) if os.path.isdir(part) else ())
+                if f.endswith(".parquet") and not f.startswith(".")
+                for row in pq.read_table(os.path.join(part, f)).to_pylist()
+            ]
+        )
+        return max(rows, key=lambda r: r["last_sequence"] or 0, default=None)
 
     def _write_status_row(
         self,
@@ -723,28 +786,31 @@ class Store:
                 out.append((urllib.parse.unquote(entry.split("=", 1)[1]), files))
         return out
 
+    def _space_dir(self, space: str) -> str:
+        """The events table's ``space=`` directory, named by Spark's own
+        escaping, so it is exactly what ``partitionBy("space")`` writes."""
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+        return f"space={utils.ExternalCatalogUtils.escapePathName(space)}"
+
     def _append_file(self, space: str, table: pa.Table) -> str:
         """Concurrent-safe append of one produce as ONE parquet file: write
         it into a produce-private staging dir, then rename it into the
         table under a unique name.  Returns the destination path (so a
         failed post-append verification can roll this exact write back).
 
-        The ``space=`` directory is named by Spark's own escaping, so the
-        layout is exactly what ``partitionBy("space")`` writes.  A crash
-        before the rename leaves only the staging dir, which
-        :meth:`recover` sweeps.  Writers of different segments never share
-        a staging path, so they run in parallel — the reference's model
-        (per-segment serialization only, docs/production.md:85-91)."""
+        The file lands in :meth:`_space_dir`.  A crash before the rename
+        leaves only the staging dir, which :meth:`recover` sweeps.  Writers
+        of different segments never share a staging path, so they run in
+        parallel — the reference's model (per-segment serialization only,
+        docs/production.md:85-91)."""
         import shutil
 
-        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
-        space_dir = f"space={utils.ExternalCatalogUtils.escapePathName(space)}"
         staging = os.path.join(self.root, f".staging-{uuid.uuid4()}")
         os.makedirs(staging)
         try:
             tmp = os.path.join(staging, "part.parquet")
             pq.write_table(table, tmp, **_WRITE_OPTIONS)
-            dest_dir = os.path.join(self.events_path, space_dir)
+            dest_dir = os.path.join(self.events_path, self._space_dir(space))
             os.makedirs(dest_dir, exist_ok=True)
             dest = os.path.join(dest_dir, f"{uuid.uuid4()}.parquet")
             os.rename(tmp, dest)

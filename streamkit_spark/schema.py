@@ -47,6 +47,19 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
+# The events table as a read of the store returns it: Spark's partitioned
+# file read appends the ``space`` partition column and reports every column
+# nullable.  The Spark scan, the empty store and the driver-side tail read
+# all emit this one layout.
+EVENTS_READ_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in EVENTS_SCHEMA.fields
+        if f.name != "space"
+    ]
+    + [T.StructField("space", T.StringType(), True)]
+)
+
 SEGMENT_STATUS_SCHEMA = T.StructType(
     [
         T.StructField("space", T.StringType(), False),

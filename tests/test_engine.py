@@ -116,3 +116,82 @@ def test_inventory(engine):
     engine.produce(STORE, "beta", "g1", recs(1, 1), now_ms=20)
     assert [r["space"] for r in engine.get_spaces(STORE).collect()] == ["alpha", "beta"]
     assert [r["segment"] for r in engine.get_segments(STORE, "beta").collect()] == ["g1"]
+
+
+def _jobs_of(spark, action) -> int:
+    """Spark jobs ``action`` starts, counted by job group once the
+    listener bus has delivered them."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lookup-{uuid.uuid4()}"
+    sc.setJobGroup(group, "point-lookup job-count pin")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_lookups_start_no_spark_job(engine, spark):
+    """Peek and one-segment status are answered on the driver from the
+    status row and the tail row: build plus collect start 0 jobs, also
+    for the zero-row answers of an unknown segment."""
+    engine.produce(STORE, "s0", "g0", recs(1, 3), now_ms=100)
+    engine.produce(STORE, "s0", "g0", recs(4, 2), now_ms=200)
+    got = {}
+
+    def lookups():
+        got["peek"] = engine.peek(STORE, "s0", "g0", now_ms=300).collect()
+        got["status"] = engine.get_segment_status(STORE, "s0", "g0").collect()
+        got["status_unknown"] = engine.get_segment_status(STORE, "s0", "nope").collect()
+
+    assert _jobs_of(spark, lookups) == 0
+    assert [r["sequence"] for r in got["peek"]] == [5]
+    assert [(r["first_sequence"], r["last_sequence"], r["last_ts"]) for r in got["status"]] == [
+        (1, 5, 200)
+    ]
+    assert got["status_unknown"] == []
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_point_lookups_equal_spark_scan_and_recompute(engine, seed):
+    """Over random produce sequences (an escaped space name; null, empty
+    and non-empty metadata), the driver-side peek equals the Spark scan
+    peek and the one-segment status equals the recompute, in rows and
+    column names, order and types — on produce-written files and again on
+    the Spark-written files of a compaction."""
+    import random
+
+    from streamkit_spark.operators.consume import peek
+    from streamkit_spark.operators.status import segment_status
+
+    rng = random.Random(seed)
+    keys = [(sp, seg) for sp in ("sp0", "a/b:c d%") for seg in ("g0", "g1")]
+    tail = dict.fromkeys(keys, 0)
+    for step in range(8):
+        key = rng.choice(keys)
+        n = rng.randint(1, 4)
+        batch = [
+            (tail[key] + i, f"p{tail[key] + i}".encode(), rng.choice([None, {}, {"k": str(i)}]))
+            for i in range(1, n + 1)
+        ]
+        engine.produce(STORE, *key, batch, now_ms=10 * (step + 1))
+        tail[key] += n
+
+    def typed(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    store = engine.store(STORE)
+    for _ in ("produced", "compacted"):
+        events = store.events()
+        for sp, seg in keys + [("sp0", "unknown")]:
+            fast, scan = engine.peek(STORE, sp, seg), peek(events, sp, seg)
+            assert fast.schema == scan.schema
+            assert fast.collect() == scan.collect()
+            fast = engine.get_segment_status(STORE, sp, seg)
+            recomputed = segment_status(events, space=sp, segment=seg)
+            assert typed(fast) == typed(recomputed)
+            assert fast.collect() == recomputed.collect()
+        store.compact()

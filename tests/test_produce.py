@@ -14,7 +14,13 @@ from streamkit_spark.operators import invariants
 from streamkit_spark.operators.consume import ConsumeBounds, consume_segment, peek
 from streamkit_spark.operators.produce import Store
 from streamkit_spark.operators.status import get_segments, get_spaces, segment_status
-from streamkit_spark.schema import ENVELOPE_BINDING, EVENTS_SCHEMA, PRODUCE_CHUNK_SIZE
+from streamkit_spark.schema import (
+    ENVELOPE_BINDING,
+    EVENTS_READ_SCHEMA,
+    EVENTS_SCHEMA,
+    PRODUCE_CHUNK_SIZE,
+    SEGMENT_STATUS_SCHEMA,
+)
 
 
 @pytest.fixture()
@@ -437,3 +443,74 @@ def test_compact_target_bytes_range_layout(store):
     spans.sort()
     for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert hi1 < lo2, (hi1, lo2)
+
+
+def test_reads_keep_one_column_layout_from_empty_to_filled(store, spark):
+    """An empty store reads in the layout of a filled one (EVENTS_READ_SCHEMA,
+    ``space`` last), and every status path emits SEGMENT_STATUS_SCHEMA's
+    column order: no status table yet, one stored row, the Spark listing
+    and the recompute fallback."""
+    import shutil
+
+    from streamkit_spark.engine import StreamkitEngine
+
+    def typed(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    want = typed(spark.createDataFrame([], SEGMENT_STATUS_SCHEMA))
+    assert store.events().schema == EVENTS_READ_SCHEMA
+    assert store.events().collect() == []
+    assert typed(store.statuses()) == want
+    store.produce("s0", "g0", recs(1, 2), now_ms=5)
+    assert store.events().schema == EVENTS_READ_SCHEMA
+    assert typed(store.statuses("s0", "g0")) == typed(store.statuses()) == want
+
+    engine = StreamkitEngine(spark, os.path.dirname(store.root))
+    store_id = os.path.basename(store.root)
+    assert typed(engine.get_segment_status(store_id, "s0", "g0")) == want
+    shutil.rmtree(store.status_path)  # no status table: the recompute answers
+    fallback = engine.get_segment_status(store_id, "s0", "g0")
+    assert typed(fallback) == want
+    assert [(r["first_sequence"], r["last_sequence"]) for r in fallback.collect()] == [(1, 2)]
+
+
+def test_last_status_never_misses_a_row_mid_swap(store):
+    """A reader racing status swaps (new row file renamed in, old one
+    removed, temp file written beside them) always finds the row, and its
+    last_sequence never goes back."""
+    import sys
+    import threading
+    import time
+
+    store._write_status_row("s0", "g0", 1, 1, 1, 1, 1)
+    stop = threading.Event()
+    seen, errors = [], []
+
+    def read():
+        try:
+            while not stop.is_set():
+                st = store.last_status("s0", "g0")
+                seen.append(None if st is None else st["last_sequence"])
+        except Exception as e:  # surfaced by the assertions below
+            errors.append(e)
+
+    readers = [threading.Thread(target=read) for _ in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers:
+            t.start()
+        deadline = time.monotonic() + 3
+        k = 1
+        while time.monotonic() < deadline and k < 400:
+            k += 1
+            store._write_status_row("s0", "g0", 1, 1, k, k, k)
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=30)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers)
+    assert errors == []
+    assert None not in seen and seen
+    assert store.last_status("s0", "g0")["last_sequence"] == k
