@@ -6,10 +6,19 @@
   clampConsumeSegmentArgs/clampConsumeSpaceArgs, node.go:565-587),
 * a maintained ``segment_status`` table with recompute fallback.  Its
   row is the reference's stored status row + LAST_ENTRY pointer
-  (pebblekit/store.go:219-228,294,351-366): ``peek`` and a one-segment
-  ``get_segment_status`` are answered on the driver from that row and the
-  tail row it pins, as Arrow-backed frames that start no Spark job,
-* subscriptions (snapshot → live).
+  (pebblekit/store.go:219-228,294,351-366): ``peek``, the status lookups
+  and the inventory are answered on the driver from those rows and the
+  tail row they pin,
+* bounded reads: a consume with ``limit > 0`` is a page, read on the
+  driver by :meth:`Store.scan` with the predicates of
+  ``operators/consume.py`` — the reference's bounded range scan, every
+  wire call carrying a limit (node.go:100).  ``limit == 0`` is an
+  unbounded read and runs the Spark operators,
+* subscriptions (snapshot → live), the one continuous Spark query.
+
+The request/response paths return Arrow-backed frames that start no Spark
+job; only unbounded reads, fallbacks and the subscription's micro-batches
+run on Spark.
 
 The reference's manager keeps one node per store with idle eviction
 (manager.go); here ``StreamkitEngine.store(store_id)`` memoizes Store
@@ -22,7 +31,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from streamkit_spark.operators.consume import (
     ConsumeBounds,
@@ -30,11 +38,14 @@ from streamkit_spark.operators.consume import (
     consume as _consume,
     consume_segment as _consume_segment,
     consume_space as _consume_space,
+    merge_page,
     peek as _peek,
+    segment_page,
+    space_page,
 )
 from streamkit_spark.operators.produce import Store
 from streamkit_spark.operators.status import get_segments, get_spaces, segment_status
-from streamkit_spark.schema import SEGMENT_STATUS_SCHEMA
+from streamkit_spark.schema import local_frame
 from streamkit_spark.streaming.subscribe import subscribe_segment_status
 from streamkit_spark.streaming.watermark import SpaceWatermarks
 
@@ -58,9 +69,6 @@ class StreamkitEngine:
                 self.spark, os.path.join(self.root, store_id), store_id
             )
         return self._stores[store_id]
-
-    def _status_path(self, store_id: str) -> str:
-        return os.path.join(self.root, store_id, "segment_status")
 
     # ------------------------------------------------------------- write
 
@@ -92,15 +100,21 @@ class StreamkitEngine:
 
     # -------------------------------------------------------------- read
 
-    def _clamp(self, space: str, bounds: ConsumeBounds, now_ms: int | None) -> ConsumeBounds:
+    def _clamp(
+        self, spaces, bounds: ConsumeBounds, now_ms: int | None
+    ) -> ConsumeBounds:
+        """``bounds`` with ``max_ts`` (0: unbounded) clamped to the lowest
+        read fence of ``spaces`` — one rule for every read kind."""
         now = now_ms if now_ms is not None else _now_ms()
-        safe = self.watermarks.safe_max_timestamp(space, now)
-        max_ts = bounds.max_ts if bounds.max_ts not in (0,) else safe
+        safe = min(
+            (self.watermarks.safe_max_timestamp(sp, now) for sp in spaces),
+            default=now,
+        )
         return ConsumeBounds(
             bounds.min_sequence,
             bounds.max_sequence,
             bounds.min_ts,
-            min(max_ts, safe),
+            min(bounds.max_ts or safe, safe),
             bounds.limit,
         )
 
@@ -112,10 +126,11 @@ class StreamkitEngine:
         bounds: ConsumeBounds = ConsumeBounds(),
         now_ms: int | None = None,
     ) -> DataFrame:
-        return _consume_segment(
-            self.store(store_id).events(), space, segment,
-            self._clamp(space, bounds, now_ms),
-        )
+        clamped = self._clamp([space], bounds, now_ms)
+        store = self.store(store_id)
+        if clamped.limit > 0:
+            return store.scan(*segment_page(space, segment, clamped))
+        return _consume_segment(store.events(), space, segment, clamped)
 
     def consume_space(
         self,
@@ -125,10 +140,11 @@ class StreamkitEngine:
         cursor: SpaceCursor | None = None,
         now_ms: int | None = None,
     ) -> DataFrame:
-        return _consume_space(
-            self.store(store_id).events(), space,
-            self._clamp(space, bounds, now_ms), cursor,
-        )
+        clamped = self._clamp([space], bounds, now_ms)
+        store = self.store(store_id)
+        if clamped.limit > 0:
+            return store.scan(*space_page(space, clamped, cursor))
+        return _consume_space(store.events(), space, clamped, cursor)
 
     def consume(
         self,
@@ -137,18 +153,11 @@ class StreamkitEngine:
         bounds: ConsumeBounds = ConsumeBounds(),
         now_ms: int | None = None,
     ) -> DataFrame:
-        now = now_ms if now_ms is not None else _now_ms()
-        safe = min(
-            (self.watermarks.safe_max_timestamp(sp, now) for sp in offsets),
-            default=now,
-        )
-        clamped = ConsumeBounds(
-            bounds.min_sequence, bounds.max_sequence, bounds.min_ts,
-            min(bounds.max_ts or safe, safe), bounds.limit,
-        )
-        return _consume(
-            self.store(store_id).events(), offsets, clamped
-        )
+        clamped = self._clamp(offsets, bounds, now_ms)
+        store = self.store(store_id)
+        if clamped.limit > 0:
+            return store.scan(*merge_page(offsets, clamped))
+        return _consume(store.events(), offsets, clamped)
 
     def peek(
         self, store_id: str, space: str, segment: str, now_ms: int | None = None
@@ -178,36 +187,30 @@ class StreamkitEngine:
         self, store_id: str, space: str, segment: str | None = None
     ) -> DataFrame:
         """Stored-status fast path with recompute fallback (J2 —
-        pebblekit/store.go:151-157,368-409).  One segment's status is the
-        stored row read on the driver (zero Spark jobs); the space-wide
-        listing and the recompute run on Spark."""
-        if os.path.isdir(self._status_path(store_id)):
-            return self.store(store_id).statuses(space, segment)
-        return segment_status(
-            self.store(store_id).events(), space=space, segment=segment
-        )
+        pebblekit/store.go:151-157,368-409).  The stored rows, of one
+        segment or of the whole space, are read on the driver (zero Spark
+        jobs); the recompute from events runs on Spark."""
+        store = self.store(store_id)
+        if os.path.isdir(store.status_path):
+            return store.statuses(space, segment)
+        return segment_status(store.events(), space=space, segment=segment)
 
     def get_spaces(self, store_id: str) -> DataFrame:
-        """Inventory fast path: distinct over the (tiny) status table when
-        maintained — the reference's INV rows (pebblekit/store.go:332-349);
-        fallback scans events."""
-        path = self._status_path(store_id)
-        if os.path.isdir(path):
-            df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(path)
-            return df.select("space").distinct().orderBy("space")
-        return get_spaces(self.store(store_id).events())
+        """Inventory fast path: the spaces of the (tiny) status table, read
+        on the driver when maintained — the reference's INV rows
+        (pebblekit/store.go:332-349); fallback scans events."""
+        store = self.store(store_id)
+        if os.path.isdir(store.status_path):
+            spaces = sorted({r["space"] for r in store.status_rows()})
+            return local_frame(self.spark, "space string", [{"space": sp} for sp in spaces])
+        return get_spaces(store.events())
 
     def get_segments(self, store_id: str, space: str) -> DataFrame:
-        path = self._status_path(store_id)
-        if os.path.isdir(path):
-            df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(path)
-            return (
-                df.filter(F.col("space") == space)
-                .select("segment")
-                .distinct()
-                .orderBy("segment")
-            )
-        return get_segments(self.store(store_id).events(), space)
+        store = self.store(store_id)
+        if os.path.isdir(store.status_path):
+            rows = [{"segment": r["segment"]} for r in store.status_rows(space)]
+            return local_frame(self.spark, "segment string", rows)
+        return get_segments(store.events(), space)
 
     # --------------------------------------------------------- subscribe
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from streamkit_spark.schema import local_frame
+
 __all__ = [
     "event_transitions",
     "retention_cohorts",
@@ -656,8 +658,7 @@ def event_pagerank(
     states = sorted({r["prev_type"] for r in edges} | {r["next_type"] for r in edges})
     n_states = len(states)
     if not n_states:
-        spark = df.sparkSession
-        return spark.createDataFrame([], "state string, rank double")
+        return local_frame(df.sparkSession, "state string, rank double", [])
     out_tot: dict[str, int] = {}
     for r in edges:
         out_tot[r["prev_type"]] = out_tot.get(r["prev_type"], 0) + r["n"]

@@ -17,19 +17,30 @@ Semantics are exact parity with the reference:
   (docs/concepts.md:73-81).
 * limits clamp to 10,000,000 (pkg/server/node.go:100).
 
-Everything is a declarative DataFrame build: Catalyst pushes the
-space/segment equality and the sequence/ts ranges into the parquet scan
-(PushedFilters + partition pruning when the table is partitioned by space),
-and the final ORDER BY is a range-partitioned sort only when the caller
-actually needs global order — at 100 TB the common pattern is
-``sortWithinPartitions`` after repartitioning by segment, which this module
-exposes via ``ordered=False``.
+The predicates are written once, over column objects, and render to either
+engine:
+
+* the Spark operators below are declarative DataFrame builds: Catalyst
+  pushes the space/segment equality and the sequence/ts ranges into the
+  parquet scan (PushedFilters + partition pruning when the table is
+  partitioned by space), and the final ORDER BY is a range-partitioned sort
+  only when the caller actually needs global order — at 100 TB the common
+  pattern is ``sortWithinPartitions`` after repartitioning by segment, which
+  this module exposes via ``ordered=False``.  They serve unbounded reads and
+  catalog queries over any bound DataFrame;
+* :func:`segment_page`, :func:`space_page` and :func:`merge_page` render the
+  same predicates as pyarrow ``ds.field`` expressions for an engine store's
+  bounded page, which :meth:`Store.scan` reads on the driver with no Spark
+  job (the reference's bounded range scan, pebblekit/store.go:431-488).
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -75,19 +86,34 @@ class ConsumeBounds:
         return ConsumeBounds(min_seq, max_seq, min_ts, max_ts, limit)
 
 
-def _bounds_predicate(binding: EventsBinding, b: ConsumeBounds) -> Column:
-    seq = F.col(binding.sequence)
-    ts = ts_ms_col(binding)
-    pred = F.lit(True)
-    if b.min_sequence > 0:
-        pred = pred & (seq >= F.lit(b.min_sequence))
-    if b.max_sequence < MAX_SEQUENCE:
-        pred = pred & (seq <= F.lit(b.max_sequence))
-    if b.min_ts > 0:
-        pred = pred & (ts > F.lit(b.min_ts))  # exclusive min
-    if b.max_ts < MAX_SEQUENCE:
-        pred = pred & (ts <= F.lit(b.max_ts))  # inclusive max
-    return pred
+def _all(*preds):
+    """AND of the predicates that are not None (None when none is)."""
+    preds = [p for p in preds if p is not None]
+    return functools.reduce(operator.and_, preds) if preds else None
+
+
+def _bounds_predicate(seq, ts, b: ConsumeBounds):
+    """Normalized bounds over a sequence and an epoch-ms ts column — Spark
+    Columns or pyarrow ``ds.field`` expressions alike (None: unbounded)."""
+    return _all(
+        seq >= b.min_sequence if b.min_sequence > 0 else None,
+        seq <= b.max_sequence if b.max_sequence < MAX_SEQUENCE else None,
+        ts > b.min_ts if b.min_ts > 0 else None,  # exclusive min
+        ts <= b.max_ts if b.max_ts < MAX_SEQUENCE else None,  # inclusive max
+    )
+
+
+def _spark_cols(binding: EventsBinding) -> tuple[Column, Column, Column]:
+    """(segment as string, sequence, epoch-ms ts) of a bound DataFrame."""
+    return (
+        F.col(binding.segment).cast("string"),
+        F.col(binding.sequence),
+        ts_ms_col(binding),
+    )
+
+
+# the same three columns of an engine store's files, for the driver page
+_FILE_COLS = (ds.field("segment"), ds.field("sequence"), ds.field("ts"))
 
 
 def consume_segment(
@@ -104,10 +130,9 @@ def consume_segment(
     Reference: pebblekit/store.go:431-488, api/messages.go:159-169.
     """
     b = bounds.normalized(now_ms)
+    seg, seq, ts = _spark_cols(binding)
     out = df.filter(
-        (F.col(binding.space) == F.lit(space))
-        & (F.col(binding.segment).cast("string") == F.lit(str(segment)))
-        & _bounds_predicate(binding, b)
+        _all(F.col(binding.space) == space, seg == str(segment), _bounds_predicate(seq, ts, b))
     )
     if ordered:
         out = out.orderBy(binding.sequence)
@@ -116,21 +141,33 @@ def consume_segment(
     return out
 
 
+def segment_page(space: str, segment: str, bounds: ConsumeBounds):
+    """S1's bounded page as the ``(filters, order, limit)`` of
+    :meth:`Store.scan`."""
+    b = bounds.normalized()
+    seg, seq, ts = _FILE_COLS
+    return (
+        {space: _all(seg == str(segment), _bounds_predicate(seq, ts, b))},
+        ("sequence",),
+        b.limit,
+    )
+
+
 SpaceCursor = tuple[int, str, int]  # (ts_ms, segment, sequence) — strictly-after
 
 
-def _cursor_predicate(binding: EventsBinding, cursor: SpaceCursor) -> Column:
+def _cursor_predicate(seg, seq, ts, cursor: SpaceCursor | None):
     """Strictly-after tuple predicate — the lex-key cursor of the space index
     (Entry.GetSpaceOffset, api/messages.go:112-115) translated to a row
-    comparison Catalyst can push partially into the scan (ts >= c_ts)."""
+    comparison Catalyst can push partially into the scan (ts >= c_ts), over
+    the columns of :func:`_bounds_predicate` (None: no cursor)."""
+    if cursor is None:
+        return None
     c_ts, c_seg, c_seq = cursor
-    ts = ts_ms_col(binding)
-    seg = F.col(binding.segment).cast("string")
-    seq = F.col(binding.sequence)
     return (
-        (ts > F.lit(c_ts))
-        | ((ts == F.lit(c_ts)) & (seg > F.lit(str(c_seg))))
-        | ((ts == F.lit(c_ts)) & (seg == F.lit(str(c_seg))) & (seq > F.lit(c_seq)))
+        (ts > c_ts)
+        | ((ts == c_ts) & (seg > str(c_seg)))
+        | ((ts == c_ts) & (seg == str(c_seg)) & (seq > c_seq))
     )
 
 
@@ -149,20 +186,31 @@ def consume_space(
     layout (SURVEY §1.3).  Reference: pebblekit/store.go:159-196.
     """
     b = bounds.normalized(now_ms)
+    seg, seq, ts = _spark_cols(binding)
     out = df.filter(
-        (F.col(binding.space) == F.lit(space)) & _bounds_predicate(binding, b)
-    )
-    if cursor is not None:
-        out = out.filter(_cursor_predicate(binding, cursor))
-    if ordered:
-        out = out.orderBy(
-            ts_ms_col(binding).alias("__ts_ms"),
-            F.col(binding.segment).cast("string"),
-            F.col(binding.sequence),
+        _all(
+            F.col(binding.space) == space,
+            _bounds_predicate(seq, ts, b),
+            _cursor_predicate(seg, seq, ts, cursor),
         )
+    )
+    if ordered:
+        out = out.orderBy(ts.alias("__ts_ms"), seg, seq)
     if b.limit < MAX_CONSUME_ENTRIES or bounds.limit > 0:
         out = out.limit(b.limit)
     return out
+
+
+def space_page(space: str, bounds: ConsumeBounds, cursor: SpaceCursor | None = None):
+    """S2's bounded page as the ``(filters, order, limit)`` of
+    :meth:`Store.scan`."""
+    b = bounds.normalized()
+    seg, seq, ts = _FILE_COLS
+    return (
+        {space: _all(_bounds_predicate(seq, ts, b), _cursor_predicate(seg, seq, ts, cursor))},
+        ("ts", "segment", "sequence"),
+        b.limit,
+    )
 
 
 def consume(
@@ -182,25 +230,35 @@ def consume(
     times), and the deterministic tiebreak (ts, space, segment, sequence).
     """
     b = bounds.normalized(now_ms)
-    spaces = sorted(offsets.keys())
-    per_space = None
-    for sp in spaces:
-        p = F.col(binding.space) == F.lit(sp)
-        cur = offsets[sp]
-        if cur is not None:
-            p = p & _cursor_predicate(binding, cur)
-        per_space = p if per_space is None else (per_space | p)
-    out = df.filter(per_space & _bounds_predicate(binding, b))
+    seg, seq, ts = _spark_cols(binding)
+    per_space = functools.reduce(
+        operator.or_,
+        [
+            _all(F.col(binding.space) == sp, _cursor_predicate(seg, seq, ts, offsets[sp]))
+            for sp in sorted(offsets)
+        ],
+    )
+    out = df.filter(_all(per_space, _bounds_predicate(seq, ts, b)))
     if ordered:
-        out = out.orderBy(
-            ts_ms_col(binding).alias("__ts_ms"),
-            F.col(binding.space),
-            F.col(binding.segment).cast("string"),
-            F.col(binding.sequence),
-        )
+        out = out.orderBy(ts.alias("__ts_ms"), F.col(binding.space), seg, seq)
     if b.limit < MAX_CONSUME_ENTRIES or bounds.limit > 0:
         out = out.limit(b.limit)
     return out
+
+
+def merge_page(offsets: dict[str, SpaceCursor | None], bounds: ConsumeBounds):
+    """S3's bounded page as the ``(filters, order, limit)`` of
+    :meth:`Store.scan`: one filter per space, merged by the same tiebreak."""
+    b = bounds.normalized()
+    seg, seq, ts = _FILE_COLS
+    return (
+        {
+            sp: _all(_bounds_predicate(seq, ts, b), _cursor_predicate(seg, seq, ts, offsets[sp]))
+            for sp in sorted(offsets)
+        },
+        ("ts", "space", "segment", "sequence"),
+        b.limit,
+    )
 
 
 def peek(

@@ -23,13 +23,16 @@ renamed in, repairs the status row, and raises SequenceMismatchError — the
 reference's error-not-lock contract for racers (docs/limitations.md:57-60).
 A produce is the client's batch, already in driver memory: it is validated
 and stamped on the driver and committed as ONE pyarrow-written parquet file;
-the tail verification is its one Spark job.  Bulk DataFrame loads go
-through ``streaming/ingest.ingest_batch`` (one produce per segment group).
+its tail verification reads the segment back through :meth:`Store.scan`'s
+driver reader, the one paged consumers read through, so a produce starts
+no Spark job.  Bulk DataFrame loads go through
+``streaming/ingest.ingest_batch`` (one produce per segment group).
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import threading
 import time
@@ -37,9 +40,10 @@ import urllib.parse
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -49,6 +53,7 @@ from streamkit_spark.schema import (
     EVENTS_SCHEMA,
     PRODUCE_CHUNK_SIZE,
     SEGMENT_STATUS_SCHEMA,
+    local_frame,
 )
 
 try:  # POSIX file locks for cross-process writer coordination
@@ -86,11 +91,24 @@ def _parquet_paths(root: str) -> list[str]:
     return out
 
 
+def _quote(value: str) -> str:
+    """A status partition value, %-escaped as UTF-8 bytes (Spark's partition
+    discovery decodes each escape as one char, so it misreads non-ASCII
+    values; the driver reads unquote them)."""
+    return urllib.parse.quote(str(value), safe="")
+
+
 def _part_dir(space: str, segment: str) -> str:
-    """Spark-compatible partition directory for one (space, segment):
-    values %-escaped exactly as Spark unescapes them on read."""
-    q = lambda v: urllib.parse.quote(str(v), safe="")
-    return f"space={q(space)}/segment={q(segment)}"
+    """The status partition directory of one (space, segment)."""
+    return f"space={_quote(space)}/segment={_quote(segment)}"
+
+
+def _values(path: str, column: str) -> list[str]:
+    """The unescaped values of the ``column=`` status partitions in ``path``."""
+    names = os.listdir(path) if os.path.isdir(path) else ()
+    return [
+        urllib.parse.unquote(n.split("=", 1)[1]) for n in names if n.startswith(column + "=")
+    ]
 
 # one produce's parquet file: zstd like the session's Spark writer; dictionary
 # encoding only for the envelope columns repeated on every row; min/max stats
@@ -106,19 +124,11 @@ _WRITE_OPTIONS = dict(
 )
 
 
-# a produce file's columns as the driver reads them back: the read layout
-# minus the ``space`` partition column, which the file's directory carries
-_FILE_READ_SCHEMA = pa.schema(
-    [f for f in to_arrow_schema(EVENTS_READ_SCHEMA) if f.name != "space"]
-)
-
-
-def _local_frame(spark: SparkSession, schema, rows: list[dict]) -> DataFrame:
-    """``rows`` as an Arrow-backed LocalRelation of ``schema`` (keys outside
-    it are ignored): building and collecting it start no Spark job, where
-    ``createDataFrame([], schema)`` starts one on collect."""
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+# the read layout in Arrow, and a produce file's columns as the driver reads
+# them back: the read layout minus the ``space`` partition column, which the
+# file's directory carries
+_READ_ARROW_SCHEMA = to_arrow_schema(EVENTS_READ_SCHEMA)
+_FILE_READ_SCHEMA = pa.schema([f for f in _READ_ARROW_SCHEMA if f.name != "space"])
 
 
 def _reread(read):
@@ -193,34 +203,71 @@ class Store:
         """The events table in the EVENTS_READ_SCHEMA layout (an empty store
         reads as an empty Arrow-backed frame, no Spark job)."""
         if not self._exists():
-            return _local_frame(self.spark, EVENTS_READ_SCHEMA, [])
+            return local_frame(self.spark, EVENTS_READ_SCHEMA, [])
         return self.spark.read.schema(EVENTS_SCHEMA).parquet(self.events_path)
 
-    def entry(self, space: str, segment: str, sequence: int) -> DataFrame:
-        """The entry at ``sequence`` of one segment (zero or one row), read
-        on the driver with pyarrow — no Spark job.  Only the space's files
-        are opened, and the ``segment``/``sequence`` filter skips every row
-        group but the entry's by its min/max stats, so the cost is one
-        footer read per file of the space.  A column a file lacks reads as
-        NULL, as in Spark's schema'd read.  The store flock is held SHARED,
-        as in :meth:`_space_files`, so compact cannot swap the directory
-        mid-read."""
+    def _read_space(self, space: str, filter, columns=None, reduce=None):
+        """``reduce`` of one pyarrow scanner over the space's files
+        (``events/space=<escapePathName>/``), by default all the rows it
+        yields as one table — the driver reader, no Spark job.  Only the
+        space's files are opened, and ``filter`` (a pyarrow expression, or
+        None) skips row groups by their min/max stats.  A column a file
+        lacks reads as NULL, as in Spark's schema'd read.  The store flock
+        is held SHARED, as in :meth:`_space_files`, so compact cannot swap
+        the directory mid-read; a file that vanished before it was opened
+        sends the read, ``reduce`` included, back to a new listing."""
         part = os.path.join(self.events_path, self._space_dir(space))
-        key = (ds.field("segment") == str(segment)) & (
-            ds.field("sequence") == int(sequence)
-        )
-        with _flock(self._store_lock_path, exclusive=False):
-            rows = _reread(
-                lambda: ds.dataset(
-                    _parquet_paths(part), schema=_FILE_READ_SCHEMA, format="parquet"
-                )
-                .to_table(filter=key)
-                .slice(0, 1)
-                .to_pylist()
+
+        def read():
+            files = ds.dataset(
+                _parquet_paths(part), schema=_FILE_READ_SCHEMA, format="parquet"
             )
-        return _local_frame(
-            self.spark, EVENTS_READ_SCHEMA, [{**r, "space": space} for r in rows]
-        )
+            scanner = files.scanner(columns=columns, filter=filter)
+            return reduce(scanner) if reduce else scanner.to_table()
+
+        with _flock(self._store_lock_path, exclusive=False):
+            return _reread(read)
+
+    def scan(self, filters: dict, order: tuple[str, ...], limit: int) -> DataFrame:
+        """The first ``limit`` rows by ``order`` (ascending column names of
+        the read layout, a unique key) of every space's rows matching its
+        filter (``{space: pyarrow expression or None}``), as an Arrow-backed
+        frame in EVENTS_READ_SCHEMA: a bounded page read on the driver, no
+        Spark job.  The spaces are read one after another through
+        :meth:`_read_space`, keeping a running top-``limit`` over the
+        scanner's record batches, so the page holds at most ``limit`` rows
+        plus one record batch however large the spaces are (beside the
+        scanner's fixed readahead); I/O is the footers and the row groups
+        their stats cannot rule out."""
+        keys = [(k, "ascending") for k in order]
+
+        def top(table):
+            return table.take(
+                pc.sort_indices(table, keys, null_placement="at_start")[:limit]
+            )
+
+        def keep(acc, space, scanner):
+            for batch in scanner.to_batches():
+                if batch.num_rows:
+                    rows = pa.Table.from_batches([batch]).append_column(
+                        _READ_ARROW_SCHEMA.field("space"),
+                        pa.repeat(space, batch.num_rows),
+                    )
+                    acc = pa.concat_tables([acc, rows])
+                    acc = top(acc) if acc.num_rows > limit else acc
+            return acc
+
+        acc = _READ_ARROW_SCHEMA.empty_table()
+        for space, filter in filters.items():
+            acc = self._read_space(space, filter, reduce=functools.partial(keep, acc, space))
+        return local_frame(self.spark, EVENTS_READ_SCHEMA, top(acc))
+
+    def entry(self, space: str, segment: str, sequence: int) -> DataFrame:
+        """The entry at ``sequence`` of one segment (zero or one row): a
+        :meth:`scan` of limit 1, whose filter skips every row group but the
+        entry's, so the cost is one footer read per file of the space."""
+        key = (ds.field("segment") == str(segment)) & (ds.field("sequence") == int(sequence))
+        return self.scan({space: key}, ("sequence",), 1)
 
     def _exists(self) -> bool:
         # cheap local check; on object stores this is a catalog lookup
@@ -234,38 +281,39 @@ class Store:
         self, space: str | None = None, segment: str | None = None
     ) -> DataFrame:
         """The maintained segment_status table (A1, incrementally updated
-        at write time — reference: pebblekit/store.go:289-302), optionally
-        scoped to one space, in SEGMENT_STATUS_SCHEMA column order: one row
-        per segment, ordered by (space, segment).
+        at write time — reference: pebblekit/store.go:289-302) as an
+        Arrow-backed frame in SEGMENT_STATUS_SCHEMA: :meth:`status_rows`,
+        read on the driver, no Spark job."""
+        return local_frame(
+            self.spark, SEGMENT_STATUS_SCHEMA, self.status_rows(space, segment)
+        )
 
-        One segment's row (``space`` and ``segment`` given) is
-        :meth:`last_status` as an Arrow-backed frame: a driver-side point
-        read, no Spark job.  A listing reads the table with Spark; a status
-        swap (:meth:`_write_status_row`) lands the new row file before it
-        removes the old one, so for an instant a partition holds two row
-        versions, and as in :meth:`last_status` the max-last_sequence
-        version wins.  The window runs on the sort's range partitioning (no
-        second shuffle)."""
+    def status_rows(
+        self, space: str | None = None, segment: str | None = None
+    ) -> list[dict]:
+        """The stored status rows, optionally scoped to one space or to one
+        (space, segment): one dict per segment, ordered by (space, segment).
+        A walk of the ``segment_status/space=*/segment=*`` directories,
+        each row read through :meth:`last_status` — the one place that
+        resolves a status swap."""
         if segment is not None:
             if space is None:
                 raise ValueError("a segment's status needs its space")
-            st = self.last_status(space, segment)
-            rows = [{**st, "space": space, "segment": str(segment)}] if st else []
-            return _local_frame(self.spark, SEGMENT_STATUS_SCHEMA, rows)
-        if not os.path.isdir(self.status_path):
-            return _local_frame(self.spark, SEGMENT_STATUS_SCHEMA, [])
-        df = self.spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(self.status_path)
-        if space is not None:
-            df = df.filter(F.col("space") == space)
-        versions = Window.partitionBy("space", "segment").orderBy(
-            F.desc("last_sequence")
-        )
-        return (
-            df.orderBy("space", "segment")
-            .withColumn("_version", F.row_number().over(versions))
-            .filter(F.col("_version") == 1)
-            .select(*SEGMENT_STATUS_SCHEMA.names)
-        )
+            keys = [(space, str(segment))]
+        else:
+            spaces = [space] if space is not None else _values(self.status_path, "space")
+            keys = sorted(
+                (sp, seg)
+                for sp in spaces
+                for seg in _values(
+                    os.path.join(self.status_path, f"space={_quote(sp)}"), "segment"
+                )
+            )
+        return [
+            {**st, "space": sp, "segment": seg}
+            for sp, seg in keys
+            if (st := self.last_status(sp, seg)) is not None
+        ]
 
     def last_status(self, space: str, segment: str) -> dict | None:
         """O(1) stored-status lookup: reads the one tiny parquet partition
@@ -355,18 +403,20 @@ class Store:
         return self._last_state_scan(space, segment)
 
     def _last_state_scan(self, space: str, segment: str) -> tuple[int, int]:
-        if not self._exists():
-            return 0, 0
-        row = (
-            self.events()
-            .filter((F.col("space") == space) & (F.col("segment") == segment))
-            .agg(
-                F.max("sequence").alias("s"),
-                F.max("trx_number").alias("t"),
-            )
-            .first()
+        """(max sequence, max trx_number) of the segment's events, folded
+        over the driver reader's record batches (bounded memory)."""
+
+        def maxima(scanner) -> tuple[int, int]:
+            seq = trx = 0
+            for batch in scanner.to_batches():
+                if batch.num_rows:
+                    seq = max(seq, pc.max(batch["sequence"]).as_py() or 0)
+                    trx = max(trx, pc.max(batch["trx_number"]).as_py() or 0)
+            return seq, trx
+
+        return self._read_space(
+            space, ds.field("segment") == str(segment), ["sequence", "trx_number"], maxima
         )
-        return (row["s"] or 0, row["t"] or 0)
 
     # ------------------------------------------------------------ write
 
@@ -459,20 +509,13 @@ class Store:
         # the locks — and rolls the just-renamed file back so the
         # violation is surfaced as an error, not silent duplicate
         # sequences (I1/I2 stay invariant for either racer).  The read
-        # goes through events(), the reader consumers use, as ONE job;
+        # goes through the driver reader paged consumers read through;
         # `sequence > last_seq` prunes every file whose max sequence stat
         # is below the new tail.
         appended = self._append_file(space, table)
+        new_rows = (ds.field("segment") == segment) & (ds.field("sequence") > last_seq)
         tail = sorted(
-            r[0]
-            for r in self.events()
-            .filter(
-                (F.col("space") == space)
-                & (F.col("segment") == segment)
-                & (F.col("sequence") > last_seq)
-            )
-            .select("sequence")
-            .collect()
+            self._read_space(space, new_rows, ["sequence"])["sequence"].to_pylist()
         )
         if tail != list(range(last_seq + 1, max_seq + 1)):
             with contextlib.suppress(FileNotFoundError):

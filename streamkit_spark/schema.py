@@ -16,9 +16,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Sequences are unsigned 64-bit in the reference; it clamps to MaxInt64
 # itself (/root/reference/pkg/client/client.go:1712-1717), so LongType with a
@@ -70,6 +72,21 @@ SEGMENT_STATUS_SCHEMA = T.StructType(
         T.StructField("last_ts", T.LongType(), True),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, schema: T.StructType | str, rows: list[dict] | pa.Table
+) -> DataFrame:
+    """``rows`` (dicts, whose keys outside ``schema`` are ignored, or an
+    Arrow table already in its column order) as an Arrow-backed
+    LocalRelation of ``schema`` (a StructType or a DDL string): building
+    and collecting it start no Spark job, where ``createDataFrame([],
+    schema)`` starts one on collect."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        rows = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(rows, schema)
 
 
 @dataclass(frozen=True)

@@ -41,6 +41,7 @@ from streamkit_spark.functions.dedup import (
     minhash_signature,
     sig_jaccard_estimate,
 )
+from streamkit_spark.schema import local_frame
 
 _SIG_SCHEMA = "doc_id long, sig array<bigint>"
 _BAND_SCHEMA = "doc_id long, band int, bucket long"
@@ -81,7 +82,7 @@ class NearDupIndex:
     def _read(self, path: str, schema: str) -> DataFrame:
         if os.path.exists(path):
             return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, schema, [])
 
     def sigs(self) -> DataFrame:
         return self._read(self.sig_path, _SIG_SCHEMA)
@@ -245,7 +246,7 @@ class EmbeddingDupIndex:
     def _read(self, path: str, schema: str) -> DataFrame:
         if os.path.exists(path):
             return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, schema, [])
 
     def vecs(self) -> DataFrame:
         return self._read(self.vec_path, _VEC_SCHEMA)

@@ -33,6 +33,27 @@ def spark(tmp_path_factory):
     yield s
 
 
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(action)``: the Spark jobs ``action()`` starts, counted by
+    job group once the listener bus has delivered them."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(action) -> int:
+        group = f"pin-{uuid.uuid4()}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -152,3 +152,26 @@ def test_r8_ops_on_empty_inputs(spark, empty_docs, empty_events, empty_vecs):
     assert containment_pairs(empty_docs).count() == 0
     emb = empty_vecs.withColumn("label", F.lit(0))
     assert embedding_drift(emb).count() == 0
+
+
+def test_empty_answers_collect_without_a_spark_job(spark, empty_events, tmp_path, jobs_of):
+    """The empty answers of event_pagerank and of a fresh near-dup index's
+    state tables are Arrow-backed frames: collecting them starts 0 jobs
+    (``createDataFrame([], schema)`` starts one)."""
+    from streamkit_spark.functions.analytics import event_pagerank
+    from streamkit_spark.streaming.neardup import EmbeddingDupIndex, NearDupIndex
+
+    text_index = NearDupIndex(spark, str(tmp_path / "text"))
+    vec_index = EmbeddingDupIndex(spark, str(tmp_path / "vec"), dim=4)
+    frames = {
+        "event_pagerank": event_pagerank(empty_events),
+        "neardup.sigs": text_index.sigs(),
+        "neardup.band_rows": text_index.band_rows(),
+        "embedding.vecs": vec_index.vecs(),
+        "embedding.band_rows": vec_index.band_rows(),
+    }
+    for name, df in frames.items():
+        rows = []
+        assert jobs_of(lambda: rows.extend(df.collect())) == 0, name
+        assert rows == [], name
+    assert frames["event_pagerank"].columns == ["state", "rank"]

@@ -5,7 +5,6 @@ test/consume_boundaries_integration_test.go semantics)."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 
@@ -71,19 +70,16 @@ def test_should_reject_invalid_records(store):
     assert not os.path.exists(store.events_path)  # rejected before any write
 
 
-def test_produce_starts_exactly_one_spark_job(store, spark):
-    """A produce commits the batch from the driver; its one Spark job is
-    the post-append tail verification read."""
-    sc = spark.sparkContext
-    for start in (1, 301):  # first produce of a segment, then a follow-up
-        group = f"produce-{uuid.uuid4()}"
-        sc.setJobGroup(group, "produce job-count pin")
-        try:
-            store.produce("s0", "g0", recs(start, 300), now_ms=start)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert store.events().count() == 600
+def test_produce_starts_no_spark_job(store, jobs_of):
+    """A produce commits the batch and reads its tail back on the driver:
+    0 Spark jobs for the first produce of an empty store, a follow-up, and
+    a first produce into a new segment or space of a non-empty store (no
+    status row, so the pre-produce peek scans the segment's files)."""
+    produces = [("s0", "g0", 1), ("s0", "g0", 301), ("s0", "g1", 1), ("s1", "g0", 1)]
+    for space, segment, start in produces:
+        assert jobs_of(lambda: store.produce(space, segment, recs(start, 300), now_ms=start)) == 0
+    assert store.events().count() == 1200
+    assert store._last_state_scan("s0", "g0") == (600, 2)
 
 
 def test_produce_layout_matches_spark_partition_writer(store, spark, tmp_path):
@@ -304,7 +300,7 @@ def test_stale_status_is_detected_rolled_back_and_repaired(store, spark):
 
 def test_statuses_resolve_overlapping_row_versions(store):
     """Mid status swap a partition holds the new row file AND the old one;
-    the Spark-side status table resolves them like last_status does (the
+    the status listing resolves them through last_status (the
     max-last_sequence version wins), one row per segment."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -448,8 +444,8 @@ def test_compact_target_bytes_range_layout(store):
 def test_reads_keep_one_column_layout_from_empty_to_filled(store, spark):
     """An empty store reads in the layout of a filled one (EVENTS_READ_SCHEMA,
     ``space`` last), and every status path emits SEGMENT_STATUS_SCHEMA's
-    column order: no status table yet, one stored row, the Spark listing
-    and the recompute fallback."""
+    column order: no status table yet, one stored row, the listing and the
+    recompute fallback."""
     import shutil
 
     from streamkit_spark.engine import StreamkitEngine
@@ -514,3 +510,52 @@ def test_last_status_never_misses_a_row_mid_swap(store):
     assert errors == []
     assert None not in seen and seen
     assert store.last_status("s0", "g0")["last_sequence"] == k
+
+
+def test_driver_reads_survive_a_file_vanishing_mid_read(store):
+    """A driver read racing a file that is renamed into the space and out
+    again (what a produce rollback does to its file) starts over from a new
+    listing: it never fails and always returns the committed rows."""
+    import sys
+    import threading
+    import time
+
+    import pyarrow.dataset as ds
+
+    store.produce("s0", "g0", recs(1, 50), now_ms=1)
+    space_dir = os.path.join(store.events_path, store._space_dir("s0"))
+    before = set(os.listdir(space_dir))
+    store.produce("s0", "ghost", recs(1, 5), now_ms=2)
+    (ghost,) = set(os.listdir(space_dir)) - before
+    ghost, held = os.path.join(space_dir, ghost), os.path.join(store.root, "held.parquet")
+    os.rename(ghost, held)
+    g0 = ds.field("segment") == "g0"
+    stop = threading.Event()
+    seen, errors = [], []
+
+    def read():
+        try:
+            while not stop.is_set():
+                table = store._read_space("s0", g0, ["sequence"])
+                seen.append(sorted(table["sequence"].to_pylist()))
+        except Exception as e:  # surfaced by the assertions below
+            errors.append(e)
+
+    readers = [threading.Thread(target=read) for _ in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers:
+            t.start()
+        deadline = time.monotonic() + 2
+        while time.monotonic() < deadline:
+            os.rename(held, ghost)
+            os.rename(ghost, held)
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=30)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers)
+    assert errors == []
+    assert seen and all(s == list(range(1, 51)) for s in seen)
