@@ -3626,11 +3626,9 @@ def q_ivf_recall(spark, sf_dir):
     top-5 neighbors the IVF probe set recovers.
     ``(query_id, n_brute, n_hit, recall)``.  Both paths are
     deterministic ((cos DESC, neighbor_id) tie-break) and the oracle
-    replays each bit-for-bit, so the report is hash-stable.  Caveat on
-    interpretation: IVF scores with float products while brute scores
-    in double (the r5 zip_with class, ~1e-8/cosine), so a near-tie AT
-    the k boundary can read as ±1 hit — part of the measured system,
-    not a probe miss; counts are integers and recall one double
+    replays each bit-for-bit, so the report is hash-stable.  Both paths
+    score by the same exact double cosine, so a missed neighbor is a
+    genuine probe miss; counts are integers and recall one double
     division."""
     emb = tables.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -3649,14 +3647,10 @@ def q_lsh_recall(spark, sf_dir):
     Per query vector: ``(query_id, n_brute, n_hit, recall)``.  Both
     paths are deterministic (seeded hyperplanes, (cos DESC,
     neighbor_id) tie-break) and the oracle composes the two existing
-    ANN oracle strings verbatim, so the report is hash-stable.  Unlike
-    ivf_recall there is no float/double near-tie caveat: lsh_topk
-    pre-casts candidate vectors to double (r10 — raw float arrays
-    would multiply in FLOAT, the r5 zip_with class, while its oracle
-    scores in double), so both paths score in exact double and a
-    missed neighbor is a genuine bucket miss — the measured
-    counterpart of the analytic recall 1-(1-p^bits)^T documented on
-    lsh_topk."""
+    ANN oracle strings verbatim, so the report is hash-stable.  Both
+    paths score by the same exact double cosine, so a missed neighbor
+    is a genuine bucket miss — the measured counterpart of the
+    analytic recall 1-(1-p^bits)^T documented on lsh_topk."""
     emb = tables.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     brute = SIM.brute_force_topk(emb, queries, k=5, round_digits=4)

@@ -11,6 +11,13 @@
   multi-probe (hamming-adjacent buckets).
 * ``ivf_topk`` — IVF-style coarse quantization: assign vectors to nearest
   of C centroids (a tiny broadcast table), probe the nprobe nearest lists.
+
+Every exact-cosine path (brute, LSH, IVF, the kNN graph, the embedding
+near-dup operators and the streaming ``EmbeddingDupIndex``) scores one
+way: a side table of double vectors and norms (``_vec_table``) and one
+cosine expression over it (``_cosine_of``), equal to ``cosine`` bit for
+bit.  Per-query ranking is ``util.topk_per_key``; the LSH planes and
+bucket rows are ``_bucket_map``.
 """
 
 from __future__ import annotations
@@ -18,25 +25,15 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from streamkit_spark.functions.util import pairs_from_sorted_groups
+from streamkit_spark.functions.util import pairs_from_sorted_groups, topk_per_key
+from streamkit_spark.functions.util import spread as _spread
 
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Fan a (possibly single-file) input across the cluster before
-    expression-heavy per-row work — interpreted-HOF bucket/score passes on
-    a one-partition parquet would serialize on a single core.  At real
-    scale inputs arrive in many partitions and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def lit_vec(vals) -> Column:
@@ -95,6 +92,55 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _vec_table(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, vec: str, norm: str,
+    *extra: Column,
+) -> DataFrame:
+    """``(out_id, vec, norm)``: every vector cast to double and its L2 norm,
+    once per vector — the one side table of every exact-cosine verify.  A
+    pair then costs one dot fold and one divide (:func:`_cosine_of`).
+    Casting here matters: ``zip_with`` over two ``array<float>`` columns
+    multiplies in FLOAT.  ``extra`` columns ride in the same projection."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(out_id),
+        _as_double(v).alias(vec),
+        l2_norm(v).alias(norm),
+        *extra,
+    )
+
+
+def _cosine_of(
+    va: str = "__va", na: str = "__na", vb: str = "__vb", nb: str = "__nb",
+    round_digits: int | None = None,
+) -> Column:
+    """The exact cosine of two :func:`_vec_table` rows, rounded to
+    ``round_digits`` when set.  Operation for operation it is
+    :func:`cosine` (double products, left fold, the norms' product, one
+    divide), so every verify path scores bit-identically to it and to the
+    oracles' double arithmetic."""
+    sim = _dot_raw(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb))
+    return sim if round_digits is None else F.round(sim, round_digits)
+
+
+def _scored_pairs(
+    cand: DataFrame, a_src: DataFrame, b_src: DataFrame, a: str, b: str,
+    id_col: str, vec_col: str, round_digits: int | None,
+    broadcast_a: bool = False,
+) -> DataFrame:
+    """``cand``'s columns plus ``cos``: the id pairs in columns ``a`` and
+    ``b`` joined to the :func:`_vec_table` of ``a_src`` and of ``b_src``
+    and scored by :func:`_cosine_of`.  Vectors never ride the candidate
+    pipeline; they join back onto the deduplicated pairs."""
+    va = _vec_table(a_src, id_col, vec_col, a, "__va", "__na")
+    vb = _vec_table(b_src, id_col, vec_col, b, "__vb", "__nb")
+    return (
+        cand.join(F.broadcast(va) if broadcast_a else va, a)
+        .join(vb, b)
+        .select(*cand.columns, _cosine_of(round_digits=round_digits).alias("cos"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -108,35 +154,22 @@ def brute_force_topk(
 
     The query side is broadcast (it is small by construction); the corpus
     is never shuffled — the only exchange is the per-query top-k, which
-    AQE handles with a TakeOrdered per group.  ``round_digits`` rounds the
+    AQE handles with a TakeOrdered per group.  Both sides carry their
+    double vector and norm (:func:`_vec_table`), so a pair costs one dot
+    fold, not two casts and three folds.  ``round_digits`` rounds the
     similarity *before* ranking so rankings are reproducible across
     summation orders/engines (ties then break by neighbor id).
     """
-    qid = query_id_col or id_col
-    q = queries.select(
-        F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
+    q = _vec_table(queries, query_id_col or id_col, vec_col, "query_id", "__va", "__na")
     # _spread: the corpus side carries the |corpus|×|queries| cosine
     # work after the broadcast join — a single-file parquet input would
     # run all of it on ONE core (measured 78s -> ~8s at sf0.1 for the
     # 5000-query knn_graph case).
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    )
-    sim = cosine(F.col("__qvec"), F.col("__cvec"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-        .orderBy("query_id", "rank")
-    )
+    c = _vec_table(_spread(corpus), id_col, vec_col, "neighbor_id", "__vb", "__nb")
+    scored = c.join(
+        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", _cosine_of(round_digits=round_digits).alias("cos"))
+    return topk_per_key(scored, "query_id", "neighbor_id", "cos", k)
 
 
 def random_hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
@@ -159,8 +192,9 @@ def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
 def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
     """Sign-bit bucket id (long) from literal hyperplanes — all JVM math.
 
-    ``vec`` may be float or double; elements widen exactly inside the
-    zip_with multiply, so no per-plane cast pass is issued.
+    ``vec`` may be float or double: each element meets a DOUBLE plane
+    literal, so it widens exactly before the multiply and no per-plane
+    cast pass is issued.
 
     Built as ONE fold over a single 2-D plane literal rather than
     ``bits`` separate shiftleft terms: the per-plane formulation issued
@@ -199,6 +233,33 @@ def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
     )
 
 
+def _bucket_map(dim: int, bits: int, n_tables: int, seed: int):
+    """The multi-table hyperplane-LSH bucket map, shared by :func:`lsh_topk`,
+    :func:`embedding_near_dup_pairs` and the streaming ``EmbeddingDupIndex``
+    so their buckets agree for one (dim, bits, seed).  Table ``t`` draws
+    its planes with seed ``seed + 1000 * t``.  Returns
+    ``rows(df, id_col, vec_col, out_id)``: the slim ``(out_id, tbl, bkt)``
+    rows, one per (vector, table) — vectors do NOT ride along, so a band
+    join never shuffles a vector T times."""
+    planes = [random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(n_tables)]
+
+    def rows(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
+        buckets = F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("tbl"),
+                    hyperplane_bucket(F.col(vec_col), p).alias("bkt"),
+                )
+                for t, p in enumerate(planes)
+            ]
+        )
+        return df.select(
+            F.col(id_col).alias(out_id), F.explode(buckets).alias("__b")
+        ).select(out_id, "__b.tbl", "__b.bkt")
+
+    return rows
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -225,70 +286,20 @@ def lsh_topk(
     volume ≈ corpus × T / 2^bits.  At 100 TB the (table, bucket) pair is
     the ingest clustering key so probes prune files.
     """
-    dim = _infer_dim(corpus, vec_col, dim)
-    all_planes = [
-        random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(n_tables)
-    ]
-
-    def bucketed(df: DataFrame, idc: str, out_id: str) -> DataFrame:
-        """Slim (id, tbl, bkt) band rows — vectors do NOT ride along, so the
-        candidate join never shuffles a vector T times."""
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    hyperplane_bucket(F.col(vec_col), all_planes[t]).alias("bkt"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-        return df.select(
-            F.col(idc).alias(out_id), F.explode(buckets).alias("__b")
-        ).select(out_id, "__b.tbl", "__b.bkt")
-
+    rows = _bucket_map(_infer_dim(corpus, vec_col, dim), bits, n_tables, seed)
     spread = _spread(corpus)
-    c = bucketed(spread, id_col, "neighbor_id")
-    q = bucketed(queries, id_col, "query_id")
     cand = (
-        c.join(F.broadcast(q), on=["tbl", "bkt"])
+        rows(spread, id_col, vec_col, "neighbor_id")
+        .join(F.broadcast(rows(queries, id_col, vec_col, "query_id")), on=["tbl", "bkt"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    # join the vectors back with their norms precomputed ONCE per vector
-    # (the exchange materializes them); per-pair verify is then a single
-    # dot fold + one divide — bit-identical to inline cosine.  Vectors
-    # are cast to DOUBLE here, once per vector, honoring _dot_raw's
-    # caller-holds-doubles contract: raw float arrays would multiply in
-    # FLOAT (the r5 zip_with class) while the oracle scores in double —
-    # a latent ±1e-8 near-tie divergence at the 4dp rounding (r10
-    # review finding; this also makes the recall audit's "a miss is a
-    # genuine bucket miss" claim actually true).
-    cvecs = spread.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+    scored = _scored_pairs(
+        cand, queries, spread, "query_id", "neighbor_id", id_col, vec_col,
+        round_digits, broadcast_a=True,
     )
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    sim = _dot_raw(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = (
-        cand.join(F.broadcast(qvecs), "query_id")
-        .join(cvecs, "neighbor_id")
-        .select("query_id", "neighbor_id", sim.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return topk_per_key(scored, "query_id", "neighbor_id", "cos", k)
 
 
 def _coarse_centroids(corpus, n_centroids, id_col, vec_col) -> list[list[float]]:
@@ -363,40 +374,27 @@ def ivf_topk(
     (row × centroid) interpreted-HOF work to one fold — the assignment
     pass IS the map cost of IVF at scale.  ‖c‖ is pre-computed driver-side
     with the same left-fold order the oracle's ``sqrt(list_sum(...))``
-    uses, so scores stay bit-identical across engines."""
+    uses, so scores stay bit-identical across engines.  Candidates are
+    scored by the exact cosine of :func:`brute_force_topk`, so probing
+    every list reproduces its rows and scores exactly."""
     nearest_lists = _coarse_quantizer(corpus, n_centroids, id_col, vec_col)
-
-    # raw float arrays go straight into _dot_raw: zip_with widens each
-    # element exactly inside the multiply, so no cast pass exists for
-    # Catalyst's projection collapse to re-evaluate per centroid; vector
-    # norms are computed once per row here, not once per candidate pair
-    c = _spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+    # the list ids are computed from the raw vectors (each element widens
+    # against the double centroid literals); the side table's double cast
+    # and norm are once per row, not once per candidate pair
+    c = _vec_table(
+        _spread(corpus), id_col, vec_col, "neighbor_id", "__vb", "__nb",
         nearest_lists(F.col(vec_col), 1)[0].alias("__list"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+    q = _vec_table(
+        queries, id_col, vec_col, "query_id", "__va", "__na",
         F.explode(nearest_lists(F.col(vec_col), nprobe)).alias("__list"),
     )
-    sim = _dot_raw(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
     scored = (
         c.join(F.broadcast(q), on="__list")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cos"))
+        .select("query_id", "neighbor_id", _cosine_of(round_digits=round_digits).alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return topk_per_key(scored, "query_id", "neighbor_id", "cos", k)
 
 
 def embedding_near_dup_pairs(
@@ -420,65 +418,21 @@ def embedding_near_dup_pairs(
     ``n_tables`` > 1: candidates are OR'd across T independent tables
     (recall 1 − (1 − p^bits)^T) at the cost of T bucket rows per vector.
     The verify step makes precision exact either way."""
-    dim = _infer_dim(df, vec_col, dim)
-    all_planes = [
-        random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(n_tables)
-    ]
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                hyperplane_bucket(F.col(vec_col), all_planes[t]).alias("bkt"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    # bucket rows carry only (id, tbl, bkt); vectors stay in a slim side
-    # table joined back onto the deduped candidate pairs — the band
-    # self-join never shuffles the vector payload T times.
+    rows = _bucket_map(_infer_dim(df, vec_col, dim), bits, n_tables, seed)
     spread = _spread(df)
-    t = spread.select(
-        F.col(id_col).alias("id"), F.explode(buckets).alias("__b")
-    ).select("id", "__b.tbl", "__b.bkt")
     # Group-and-enumerate same-bucket pairs rather than a t⋈t self-join:
     # the self-join plans the bucket pipeline (interpreted hyperplane dot
     # folds × bits × tables — the expensive part) once per branch; the
     # aggregate computes it exactly once, and bucket groups are
     # near-dup-cluster-sized so in-row enumeration is bounded.
     cand = pairs_from_sorted_groups(
-        t.groupBy("tbl", "bkt")
+        rows(spread, id_col, vec_col, "id")
+        .groupBy("tbl", "bkt")
         .agg(F.array_sort(F.collect_list("id")).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    # norms land once per vector (materialized by the join exchange), so
-    # the per-pair verify is one dot fold + one divide — bit-identical to
-    # the inline cosine (same sqrt/multiply/divide order)
-    vecs = spread.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(F.col(vec_col)).alias("__n"),
-    )
-    sim = _dot_raw(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
     return (
-        cand.join(
-            vecs.select(
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("__va"),
-                F.col("__n").alias("__na"),
-            ),
-            "id_a",
-        )
-        .join(
-            vecs.select(
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("__vb"),
-                F.col("__n").alias("__nb"),
-            ),
-            "id_b",
-        )
-        .select("id_a", "id_b", sim.alias("cos"))
+        _scored_pairs(cand, spread, spread, "id_a", "id_b", id_col, vec_col, round_digits)
         .filter(F.col("cos") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
@@ -508,7 +462,7 @@ def semantic_dedup_pairs(
 
     Plan: broadcast centroid literals → map-only assignment →
     group-and-enumerate in-cluster id pairs (ONE assignment pipeline — no
-    self-join) → slim pair list broadcast back onto the vector+norm table
+    self-join) → the pair list joined back onto the vector+norm table
     for the exact-cosine verify."""
     nearest = _coarse_quantizer(df, n_clusters, id_col, vec_col)
     spread = _spread(df)
@@ -525,32 +479,9 @@ def semantic_dedup_pairs(
         carry=("cluster",),
         distinct=False,
     )
-    vecs = spread.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(F.col(vec_col)).alias("__n"),
-    )
-    sim = _dot_raw(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
     return (
-        cand.join(
-            vecs.select(
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("__va"),
-                F.col("__n").alias("__na"),
-            ),
-            "id_a",
-        )
-        .join(
-            vecs.select(
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("__vb"),
-                F.col("__n").alias("__nb"),
-            ),
-            "id_b",
-        )
-        .select("id_a", "id_b", "cluster", sim.alias("cos"))
+        _scored_pairs(cand, spread, spread, "id_a", "id_b", id_col, vec_col, round_digits)
+        .select("id_a", "id_b", "cluster", "cos")
         .filter(F.col("cos") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
@@ -1143,15 +1074,7 @@ def pq_topk(
     scored = joined.select(
         "query_id", "neighbor_id", F.round(score, round_digits).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return topk_per_key(scored, "query_id", "neighbor_id", "score", k)
 
 
 def _adc_score(
@@ -1217,15 +1140,7 @@ def ivf_pq_topk(
             .alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return topk_per_key(scored, "query_id", "neighbor_id", "score", k)
 
 
 # ------------------------------------------------------------ random projection
@@ -1313,8 +1228,9 @@ def knn_graph(
     if method != "ivf":
         raise ValueError(f"unknown method {method!r} (brute|ivf)")
     nearest_lists = _coarse_quantizer(df, n_centroids, id_col, vec_col)
+    spread = _spread(df)
     assign = (
-        _spread(df)
+        spread
         .select(
             F.col(id_col).alias("vid"),
             F.posexplode(nearest_lists(F.col(vec_col), nprobe)),
@@ -1332,34 +1248,10 @@ def knn_graph(
         .select("src", "dst")
         .distinct()
     )
-    # cast to double HERE: zip_with on two float arrays multiplies in
-    # FLOAT (measured ~1e-7 error — enough to flip a 4dp rounding), while
-    # the brute path's cosine() runs double products; the IVF verify must
-    # score identically or full-probe equality breaks
-    vecs = _spread(df).select(
-        F.col(id_col).alias("__id"),
-        _as_double(F.col(vec_col)).alias("__v"),
-        l2_norm(F.col(vec_col)).alias("__n"),
-    )
-    va = vecs.select(
-        F.col("__id").alias("src"), F.col("__v").alias("__va"), F.col("__n").alias("__na")
-    )
-    vb = vecs.select(
-        F.col("__id").alias("dst"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
-    )
-    sim = _dot_raw(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = (
-        cand.join(va, "src").join(vb, "dst").select("src", "dst", sim.alias("cos"))
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", "cos", "rank")
-        .orderBy("src", "rank")
-    )
+    # scored by the exact cosine of the brute path, so full-probe IVF
+    # reproduces its edges and scores exactly
+    scored = _scored_pairs(cand, spread, spread, "src", "dst", id_col, vec_col, round_digits)
+    return topk_per_key(scored, "src", "dst", "cos", k)
 
 
 def mutual_knn_pairs(edges: DataFrame) -> DataFrame:
@@ -1874,15 +1766,7 @@ def ivfadc_topk(
             F.round(score, round_digits).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return topk_per_key(scored, "query_id", "neighbor_id", "score", k)
 
 
 def embedding_drift(

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from streamkit_spark.functions.util import topk_per_key
+
 # Small multilingual stopword lists for the n-gram/stopword language
 # heuristic.  Deterministic, dependency-free; precision is secondary to
 # having a fully-declarative scoring pipeline.
@@ -186,8 +188,6 @@ def tf_idf_top_terms(
     (smoothed).  Three aggregations, all partial-aggregable; the doc-count
     N is a broadcast scalar.  Output: (doc_id, term, tfidf, rank).
     """
-    from pyspark.sql import DataFrame, Window
-
     tok = df.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
     )
@@ -209,13 +209,7 @@ def tf_idf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("doc_id", "term", "tfidf", "rank")
-        .orderBy("doc_id", "rank")
-    )
+    return topk_per_key(scored, "doc_id", "term", "tfidf", top_k)
 
 
 def _term_doc_stats(
@@ -1039,14 +1033,7 @@ def log_odds_from_cells(
         F.col("tk").alias("token"),
         (F.round(z, round_digits) + F.lit(0.0)).alias("z"),
     )
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("z").desc(), F.col("token")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .orderBy(group_col, "rank")
-    )
+    return topk_per_key(scored, group_col, "token", "z", top_k)
 
 
 def token_diversity_by_group(

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Row limit under which an id-list (one long per row) is safely
@@ -59,6 +59,23 @@ def spread(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(target)
 
+
+def topk_per_key(
+    scored: DataFrame, key: str, tiebreak: str, score: str, k: int
+) -> DataFrame:
+    """The ``k`` best rows of every ``key``: ``rank`` is the row_number
+    over (``score`` desc, ``tiebreak`` asc), rows with ``rank`` ≤ ``k``
+    survive, and the output ``(key, tiebreak, score, rank)`` is ordered by
+    (key, rank).  The one per-key top-k of the search and text operators;
+    a caller that wants reproducible ranks rounds ``score`` first, so ties
+    break by ``tiebreak``."""
+    w = Window.partitionBy(key).orderBy(F.col(score).desc(), F.col(tiebreak))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(key, tiebreak, score, "rank")
+        .orderBy(key, "rank")
+    )
 
 
 def pairs_from_sorted_groups(

@@ -34,9 +34,9 @@ from __future__ import annotations
 import contextlib
 import functools
 import os
+import re
 import threading
 import time
-import urllib.parse
 import uuid
 
 import pyarrow as pa
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from streamkit_spark.errors import SequenceMismatchError, ValidationError
+from streamkit_spark.operators.status import status_aggs
 from streamkit_spark.schema import (
     EVENTS_READ_SCHEMA,
     EVENTS_SCHEMA,
@@ -91,24 +92,34 @@ def _parquet_paths(root: str) -> list[str]:
     return out
 
 
-def _quote(value: str) -> str:
-    """A status partition value, %-escaped as UTF-8 bytes (Spark's partition
-    discovery decodes each escape as one char, so it misreads non-ASCII
-    values; the driver reads unquote them)."""
-    return urllib.parse.quote(str(value), safe="")
+# the characters Spark's ExternalCatalogUtils.escapePathName %-escapes in a
+# partition value (its non-Windows set); every other character, non-ASCII
+# included, is written as is
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+
+
+def _escape(value: str) -> str:
+    """A partition value as Spark's ``partitionBy`` names its directory."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in str(value))
+
+
+def _unescape(name: str) -> str:
+    """Spark's ``unescapePathName``: every ``%XX`` becomes the one character
+    with that code."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), name)
 
 
 def _part_dir(space: str, segment: str) -> str:
     """The status partition directory of one (space, segment)."""
-    return f"space={_quote(space)}/segment={_quote(segment)}"
+    return f"space={_escape(space)}/segment={_escape(segment)}"
 
 
 def _values(path: str, column: str) -> list[str]:
     """The unescaped values of the ``column=`` status partitions in ``path``."""
     names = os.listdir(path) if os.path.isdir(path) else ()
-    return [
-        urllib.parse.unquote(n.split("=", 1)[1]) for n in names if n.startswith(column + "=")
-    ]
+    return [_unescape(n.split("=", 1)[1]) for n in names if n.startswith(column + "=")]
 
 # one produce's parquet file: zstd like the session's Spark writer; dictionary
 # encoding only for the envelope columns repeated on every row; min/max stats
@@ -146,13 +157,9 @@ def _status_aggs() -> list:
     """A segment's status fields recomputed from its events, in
     ``_write_status_row`` argument order — the one recompute rule of
     :meth:`Store._repair_status` and :meth:`Store.recover`."""
-    seq = F.col("sequence")
     return [
-        F.min(seq).alias("fs"),
-        F.min_by("ts", seq).alias("fts"),
-        F.max(seq).alias("ls"),
-        F.max_by("ts", seq).alias("lts"),
-        F.max("trx_number").alias("lt"),
+        *status_aggs(F.col("sequence"), F.col("ts")),
+        F.max("trx_number").alias("last_trx_number"),
     ]
 
 
@@ -190,8 +197,8 @@ class Store:
             return self._seg_locks.setdefault((space, str(segment)), threading.Lock())
 
     def _seg_flock_path(self, space: str, segment: str) -> str:
-        key = urllib.parse.quote(f"{space}__{segment}", safe="")
-        return os.path.join(self._locks_dir, f"seg-{key}.lock")
+        # "=" is escaped inside both names, so no two segments share a lock
+        return os.path.join(self._locks_dir, f"seg-{_escape(space)}={_escape(segment)}.lock")
 
     @property
     def _store_lock_path(self) -> str:
@@ -302,13 +309,15 @@ class Store:
             keys = [(space, str(segment))]
         else:
             spaces = [space] if space is not None else _values(self.status_path, "space")
-            keys = sorted(
+            # a set: two dirs can unescape to one name (a dir %-escaped by
+            # an older writer beside the one named by Spark's escaping)
+            keys = sorted({
                 (sp, seg)
                 for sp in spaces
                 for seg in _values(
-                    os.path.join(self.status_path, f"space={_quote(sp)}"), "segment"
+                    os.path.join(self.status_path, f"space={_escape(sp)}"), "segment"
                 )
-            )
+            })
         return [
             {**st, "space": sp, "segment": seg}
             for sp, seg in keys
@@ -383,7 +392,7 @@ class Store:
             .agg(*_status_aggs())
             .first()
         )
-        if row["ls"] is not None:
+        if row["last_sequence"] is not None:
             self._write_status_row(space, segment, *row)
 
     def _last_state(self, space: str, segment: str) -> tuple[int, int]:
@@ -796,9 +805,9 @@ class Store:
                     st = self.last_status(row["space"], row["segment"])
                     if (
                         st is None
-                        or st["last_sequence"] != row["ls"]
-                        or st["last_trx_number"] != row["lt"]
-                        or st["first_sequence"] != row["fs"]
+                        or st["last_sequence"] != row["last_sequence"]
+                        or st["last_trx_number"] != row["last_trx_number"]
+                        or st["first_sequence"] != row["first_sequence"]
                     ):
                         self._write_status_row(*row)
                         report["status_repaired"] += 1
@@ -826,14 +835,13 @@ class Store:
                         files.append((p, os.path.getsize(p)))
                     except OSError:
                         continue  # rolled back / renamed between walk+stat
-                out.append((urllib.parse.unquote(entry.split("=", 1)[1]), files))
+                out.append((_unescape(entry.split("=", 1)[1]), files))
         return out
 
     def _space_dir(self, space: str) -> str:
-        """The events table's ``space=`` directory, named by Spark's own
-        escaping, so it is exactly what ``partitionBy("space")`` writes."""
-        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
-        return f"space={utils.ExternalCatalogUtils.escapePathName(space)}"
+        """The events table's ``space=`` directory, exactly what
+        ``partitionBy("space")`` writes."""
+        return f"space={_escape(space)}"
 
     def _append_file(self, space: str, table: pa.Table) -> str:
         """Concurrent-safe append of one produce as ONE parquet file: write

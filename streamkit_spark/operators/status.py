@@ -9,10 +9,23 @@ shuffle of one small row per (space, segment), which is the scalable shape
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from streamkit_spark.schema import EventsBinding, ts_ms_col
+
+
+def status_aggs(seq: Column, ts: Column) -> list[Column]:
+    """The SegmentStatus columns of one group of events: first/last
+    sequence and the timestamps AT them — the one definition behind
+    :func:`segment_status`, the live ``status_stream``, the store's status
+    recompute and the ``segment_status`` SQL view."""
+    return [
+        F.min(seq).alias("first_sequence"),
+        F.min_by(ts, seq).alias("first_ts"),
+        F.max(seq).alias("last_sequence"),
+        F.max_by(ts, seq).alias("last_ts"),
+    ]
 
 
 def segment_status(
@@ -34,19 +47,12 @@ def segment_status(
         out = out.filter(F.col(binding.space) == F.lit(space))
     if segment is not None:
         out = out.filter(F.col(binding.segment).cast("string") == F.lit(str(segment)))
-    seq = F.col(binding.sequence)
-    ts = ts_ms_col(binding)
     return (
         out.groupBy(
             F.col(binding.space).alias("space"),
             F.col(binding.segment).cast("string").alias("segment"),
         )
-        .agg(
-            F.min(seq).alias("first_sequence"),
-            F.min_by(ts, seq).alias("first_ts"),
-            F.max(seq).alias("last_sequence"),
-            F.max_by(ts, seq).alias("last_ts"),
-        )
+        .agg(*status_aggs(F.col(binding.sequence), ts_ms_col(binding)))
         .orderBy("space", "segment")
     )
 

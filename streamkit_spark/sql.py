@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from streamkit_spark import tables
 from streamkit_spark.operators.produce import Store
+from streamkit_spark.operators.status import segment_status
 
 
 def register_fixture_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -39,17 +40,7 @@ def register_store_views(
     p = prefix
     ev = store.events()
     ev.createOrReplaceTempView(f"{p}events")
-    spark.sql(
-        f"""
-        CREATE OR REPLACE TEMP VIEW {p}segment_status AS
-        SELECT space, segment,
-               min(sequence) AS first_sequence,
-               min_by(ts, sequence) AS first_ts,
-               max(sequence) AS last_sequence,
-               max_by(ts, sequence) AS last_ts
-        FROM {p}events GROUP BY space, segment
-        """
-    )
+    segment_status(ev).createOrReplaceTempView(f"{p}segment_status")
     spark.sql(
         f"CREATE OR REPLACE TEMP VIEW {p}spaces AS "
         f"SELECT DISTINCT space FROM {p}events"

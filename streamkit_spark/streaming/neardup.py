@@ -41,6 +41,7 @@ from streamkit_spark.functions.dedup import (
     minhash_signature,
     sig_jaccard_estimate,
 )
+from streamkit_spark.functions.similarity import _bucket_map, _cosine_of, _vec_table
 from streamkit_spark.schema import local_frame
 
 _SIG_SCHEMA = "doc_id long, sig array<bigint>"
@@ -229,17 +230,14 @@ class EmbeddingDupIndex:
         n_tables: int = 4,
         seed: int = 42,
     ) -> None:
-        from streamkit_spark.functions.similarity import random_hyperplanes
-
         self.spark = spark
         self.path = path
         self.dim = dim
         self.threshold = threshold
         self.bits = bits
         self.n_tables = n_tables
-        self.planes = [
-            random_hyperplanes(dim, bits, seed + 1000 * t) for t in range(n_tables)
-        ]
+        # the bucket map of similarity.lsh_topk / embedding_near_dup_pairs
+        self._bucket_rows = _bucket_map(dim, bits, n_tables, seed)
         self.vec_path = os.path.join(path, "vecs")
         self.band_path = os.path.join(path, "vbands")
 
@@ -259,30 +257,10 @@ class EmbeddingDupIndex:
     ) -> DataFrame:
         """Annotate ``batch`` with (dup_of, cos) vs the index + earlier
         batch rows; register novel vectors idempotently."""
-        from streamkit_spark.functions.similarity import (
-            _dot_raw,
-            hyperplane_bucket,
-            l2_norm,
-        )
-
-        vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        prepared = batch.select(
-            F.col(id_col).alias("vec_id"),
-            vd.alias("vec"),
-            l2_norm(vd).alias("norm"),
+        prepared = _vec_table(
+            batch, id_col, vec_col, "vec_id", "vec", "norm"
         ).localCheckpoint(eager=True)
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    hyperplane_bucket(F.col("vec"), self.planes[t]).alias("bkt"),
-                )
-                for t in range(self.n_tables)
-            ]
-        )
-        bands_new = prepared.select(
-            "vec_id", F.explode(buckets).alias("b")
-        ).select("vec_id", "b.tbl", "b.bkt")
+        bands_new = self._bucket_rows(prepared, "vec_id", "vec", "vec_id")
 
         cand_idx = (
             bands_new.alias("n")
@@ -307,9 +285,7 @@ class EmbeddingDupIndex:
         cand = cand_idx.unionByName(cand_self).distinct()
 
         all_vecs = self.vecs().unionByName(prepared)
-        cos = _dot_raw(F.col("vn.vec"), F.col("vo.vec")) / (
-            F.col("vn.norm") * F.col("vo.norm")
-        )
+        cos = _cosine_of("vn.vec", "vn.norm", "vo.vec", "vo.norm")
         verified = (
             cand.join(prepared.alias("vn"), cand["id"] == F.col("vn.vec_id"))
             .join(all_vecs.alias("vo"), cand["prior"] == F.col("vo.vec_id"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streamkit_spark.operators.status import status_aggs
 from streamkit_spark.schema import EVENTS_SCHEMA
 
 
@@ -50,10 +51,7 @@ def status_stream(stream: DataFrame, space: str | None = None, segment: str | No
     if segment is not None and segment != "*":
         out = out.filter(F.col("segment") == segment)
     return out.groupBy("space", "segment").agg(
-        F.min("sequence").alias("first_sequence"),
-        F.min_by("ts", F.col("sequence")).alias("first_ts"),
-        F.max("sequence").alias("last_sequence"),
-        F.max_by("ts", F.col("sequence")).alias("last_ts"),
+        *status_aggs(F.col("sequence"), F.col("ts"))
     )
 
 

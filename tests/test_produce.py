@@ -559,3 +559,62 @@ def test_driver_reads_survive_a_file_vanishing_mid_read(store):
     assert not any(t.is_alive() for t in readers)
     assert errors == []
     assert seen and all(s == list(range(1, 51)) for s in seen)
+
+
+ESCAPED_NAMES = ["é", "日本", "a/b", "x=y", "50%", "a b"]
+
+
+def test_spark_reads_status_table_as_status_rows(store, spark):
+    """Status partitions are named by Spark's own escaping, so a Spark read
+    of ``segment_status`` equals ``Store.status_rows()`` for names Spark
+    escapes, non-ASCII names and names with a space."""
+    for i, name in enumerate(ESCAPED_NAMES):
+        store.produce(name, "g0", recs(1, i + 1), now_ms=10)
+        store.produce("s0", name, recs(1, i + 1), now_ms=20)
+    cols = SEGMENT_STATUS_SCHEMA.names
+    ours = [tuple(r[c] for c in cols) for r in store.status_rows()]
+    read = spark.read.schema(SEGMENT_STATUS_SCHEMA).parquet(store.status_path)
+    theirs = sorted(tuple(r) for r in read.select(*cols).collect())
+    assert ours == theirs
+    assert {r[0] for r in ours} == {*ESCAPED_NAMES, "s0"}
+    assert sorted(r["space"] for r in store.file_stats()) == sorted({*ESCAPED_NAMES, "s0"})
+
+
+def test_partition_name_codec_equals_spark(spark):
+    """The Python escaper and unescaper equal Spark's
+    ``ExternalCatalogUtils`` over a character sweep, and every escaped
+    name unescapes to itself."""
+    from streamkit_spark.operators.produce import _escape, _unescape
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    sweep = [chr(c) for c in range(1, 0x300)] + list("日本語😀 ﻿")
+    for c in sweep:
+        name = f"a{c}b"
+        escaped = utils.escapePathName(name)
+        assert _escape(name) == escaped, repr(c)
+        assert _unescape(escaped) == utils.unescapePathName(escaped) == name, repr(c)
+    for name in ("%", "%4", "%zz", "a%41", "%%41", "%e9x", "50%2"):
+        assert _unescape(name) == utils.unescapePathName(name), name
+
+
+def test_segment_lock_names_do_not_collide(store):
+    """Lock files are named by the escaped (space, segment) pair, so two
+    segments never share a lock."""
+    pairs = [("a__b", "c"), ("a", "b__c"), ("a=b", "c"), ("a", "b=c"), ("a/b", "c")]
+    paths = {store._seg_flock_path(sp, seg) for sp, seg in pairs}
+    assert len(paths) == len(pairs)
+    assert all(os.path.dirname(p) == store._locks_dir for p in paths)
+
+
+def test_status_listing_names_a_segment_once_beside_an_old_escaped_dir(store):
+    """A status dir %-escaped by an older writer ("a%20b") unescapes to the
+    name Spark's escaping writes as is ("a b"); the listing names that
+    segment once."""
+    import shutil
+
+    store.produce("a b", "g0", recs(1, 2), now_ms=10)
+    shutil.copytree(
+        os.path.join(store.status_path, "space=a b"),
+        os.path.join(store.status_path, "space=a%20b"),
+    )
+    assert [(r["space"], r["segment"]) for r in store.status_rows()] == [("a b", "g0")]

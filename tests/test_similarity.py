@@ -3,6 +3,7 @@ force, hyperplane bucket determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from streamkit_spark import tables
@@ -460,32 +461,71 @@ def test_ivf_pq_scores_agree_with_full_adc(spark):
 
 def test_ivf_full_probe_recall_is_exact(spark):
     """nprobe == n_centroids probes every cell, so IVF must reproduce
-    the brute-force top-k (the ivf_recall audit's fixed point) — except
-    where the two paths' scoring precisions (IVF float products, brute
-    double products: the r5 zip_with class, ~1e-8/cosine) meet a
-    NEAR-TIE at the k boundary; the driver regenerates fixtures, so the
-    assert exempts only queries whose rank-5/rank-6 margin is below the
-    float-product error band."""
+    the brute-force top-k (the ivf_recall audit's fixed point) row for
+    row, scores included: both paths score by the one exact cosine."""
     emb = tables.load(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    brute6 = SIM.brute_force_topk(emb, queries, k=6).collect()
-    margins = {}
-    for r in brute6:
-        margins.setdefault(r["query_id"], {})[r["rank"]] = r["cos"]
-    full = {
-        (r["query_id"], r["neighbor_id"])
-        for r in SIM.ivf_topk(
-            emb, queries, k=5, n_centroids=8, nprobe=8
-        ).collect()
-    }
-    brute = {
-        (r["query_id"], r["neighbor_id"]) for r in brute6 if r["rank"] <= 5
-    }
-    assert len(full) == len(brute) == 25
-    for q, n in full ^ brute:
-        m = margins[q]
-        assert m[5] - m[6] < 1e-6, (
-            f"full-probe IVF diverged from brute for query {q} with a "
-            f"clear rank-5/6 margin {m[5] - m[6]} — a real probe bug, "
-            "not a float near-tie"
+    brute = SIM.brute_force_topk(emb, queries, k=5).collect()
+    full = SIM.ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=8).collect()
+    assert len(brute) == 25
+    assert full == brute
+
+
+def _cosine_pairs(spark, tmp_path, op):
+    """(id_a, id_b, cos) rows of one exact-cosine operator, unrounded, on
+    the embeddings fixture."""
+    from streamkit_spark.streaming.neardup import EmbeddingDupIndex
+
+    emb = tables.load(spark, SF_DIR, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 20)
+    pair = ("query_id", "neighbor_id")
+    if op == "brute_force_topk":
+        out = SIM.brute_force_topk(emb, queries, k=5)
+    elif op == "lsh_topk":
+        out = SIM.lsh_topk(emb, queries, k=5, bits=3, n_tables=2)
+    elif op == "ivf_topk":
+        out = SIM.ivf_topk(emb, queries, k=5, n_centroids=4, nprobe=2)
+    elif op == "knn_graph_ivf":
+        out, pair = SIM.knn_graph(
+            emb.filter(F.col("vec_id") < 200), k=3, method="ivf",
+            n_centroids=4, nprobe=2, round_digits=None,
+        ), ("src", "dst")
+    elif op == "embedding_near_dup_pairs":
+        out, pair = SIM.embedding_near_dup_pairs(emb, threshold=-1.0, bits=4), ("id_a", "id_b")
+    elif op == "semantic_dedup_pairs":
+        out, pair = SIM.semantic_dedup_pairs(emb, n_clusters=8, threshold=-1.0), ("id_a", "id_b")
+    else:
+        dim = len(emb.first()["embedding"])
+        index = EmbeddingDupIndex(spark, str(tmp_path / "idx"), dim, threshold=-1.0, bits=2)
+        out, pair = index.process_batch(emb.filter(F.col("vec_id") < 200)), ("vec_id", "dup_of")
+        out = out.filter(F.col("dup_of").isNotNull())
+    return out.select(F.col(pair[0]).alias("a"), F.col(pair[1]).alias("b"), "cos")
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "brute_force_topk", "lsh_topk", "ivf_topk", "knn_graph_ivf",
+        "embedding_near_dup_pairs", "semantic_dedup_pairs", "EmbeddingDupIndex",
+    ],
+)
+def test_unrounded_score_is_cosine_bit_for_bit(spark, tmp_path, op):
+    """Every exact-cosine operator's unrounded score equals
+    ``similarity.cosine`` of the same two vectors exactly — one scoring
+    rule in double, never a float-product copy of it."""
+    emb = tables.load(spark, SF_DIR, "embeddings")
+    pairs = _cosine_pairs(spark, tmp_path, op)
+    ref = cosine(F.col("va.embedding"), F.col("vb.embedding"))
+    got = (
+        pairs.join(emb.alias("va"), F.col("a") == F.col("va.vec_id"))
+        .join(emb.alias("vb"), F.col("b") == F.col("vb.vec_id"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum((F.col("cos") != ref).cast("int")).alias("off"),
+            F.max(F.abs(F.col("cos") - ref)).alias("gap"),
         )
+        .first()
+    )
+    assert got["n"] > 0
+    assert got["n"] == pairs.count()
+    assert got["off"] == 0, f"{got['off']} of {got['n']} scores off by up to {got['gap']}"

@@ -43,6 +43,26 @@ def test_store_views_match_dataframe_api(spark, tmp_path):
     assert [r["sequence"] for r in rows] == [2, 3]
 
 
+def test_segment_status_view_is_the_operator(spark, tmp_path):
+    """The ``segment_status`` view and the operator are one aggregate: equal
+    rows both ways, equal schema (names, types, nullability), equal order."""
+    store = Store(spark, str(tmp_path / "store"))
+    store.produce("s0", "g0", [(i, b"x", None) for i in range(1, 4)], now_ms=10)
+    store.produce("s0", "g0", [(4, b"x", None)], now_ms=30)
+    store.produce("s1", "é", [(1, b"y", None), (2, b"y", None)], now_ms=20)
+    register_store_views(spark, store, prefix="sv_")
+
+    view = spark.table("sv_segment_status")
+    op = segment_status(store.events())
+    assert view.schema == op.schema
+    assert view.exceptAll(op).count() == 0
+    assert op.exceptAll(view).count() == 0
+    assert view.collect() == op.collect()
+    assert [tuple(r)[:4] for r in op.collect()] == [
+        ("s0", "g0", 1, 10), ("s1", "é", 1, 20)
+    ]
+
+
 def test_fixture_views_register(spark):
     from tests.conftest import SF_DIR
 

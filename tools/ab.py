@@ -1,17 +1,33 @@
-"""Interleaved A/B of two commits on perfbench, the repository's benchmark.
+"""Interleaved A/B of two commits on perfbench, the repository's benchmark,
+or on declared queries.
 
     python tools/ab.py --base HEAD~1 --change HEAD \
         --workload segment_log --seeds 1 2 3 4 5 6 7 8 9 10 --seconds 20
 
-Each arm is a git worktree of its commit in a temporary directory, and
-``perfbench/run.py`` runs unchanged in each (``--trace 0``), one process
-per run.  The arms alternate and their order flips every seed, so load
-that drifts during the session hits both alike.  Printed per workload and
-end-to-end metric: each arm's median and q1-q3, in how many pairs the
-change was better, and how the median gap compares with the base's q1-q3
-spread; then the calm median of each op kind, and per run its correctness
-and the machine's CPU steal share.  ``--out`` writes every run's result
-line and detail record as JSON.
+    python tools/ab.py --base HEAD~1 --change . \
+        --queries knn_graph semantic_dedup --sf-dir /path/to/sf0.1 --reps 5
+
+Each arm is its commit exported with ``git archive`` into a temporary
+directory, or an existing directory (``.`` is the working tree).
+
+Workloads: ``perfbench/run.py`` runs unchanged in each arm (``--trace 0``),
+one process per run.  The arms alternate and their order flips every
+seed, so load that drifts during the session hits both alike.  Printed
+per workload and end-to-end metric: each arm's median and q1-q3, in how
+many pairs the change was better, and how the median gap compares with
+the base's q1-q3 spread; then the calm median of each op kind, and per
+run its correctness and the machine's CPU steal share.
+
+Queries: one worker process per arm imports the arm's
+``__spark_entry__`` and, per rep, builds and collects each named entry of
+``queries()``; the arms alternate per query and their order flips every
+rep.  The first rep's rows are written as parquet (``--rows`` keeps
+them).  Printed per query: schema equality, the exceptAll counts in both
+directions, and each arm's median and q1-q3 seconds (build + collect).
+The first rep of the first query also pays each Spark session's warm-up, so
+read the medians of several reps.
+
+``--out`` writes every run as JSON.
 """
 
 from __future__ import annotations
@@ -23,15 +39,25 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
+import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARMS = ("base", "change")
+MARK = "@ab "  # prefixes a worker's answer lines; anything else on stdout is noise
 
 
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", "-C", REPO, *args], capture_output=True, text=True, check=True
-    ).stdout.strip()
+def _tree(rev: str, dest: str) -> str:
+    """The arm's source tree: ``rev`` itself if it is a directory, else the
+    commit exported into ``dest``."""
+    if os.path.isdir(rev):
+        return os.path.abspath(rev)
+    os.makedirs(dest)
+    archive = subprocess.run(
+        ["git", "-C", REPO, "archive", rev], capture_output=True, check=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+    return dest
 
 
 def _run(tree: str, workload: str, seed: int, seconds: float) -> tuple[dict, dict]:
@@ -94,41 +120,174 @@ def _report(runs: dict, better: dict) -> None:
                 )
 
 
+def _worker(sf_dir: str) -> None:
+    """One arm's query server (cwd = the arm's tree): per stdin line a JSON
+    command, per command one ``MARK`` + JSON answer line on stdout.
+    ``run`` builds and collects one ``queries()`` entry, timed, and writes
+    its rows when asked; ``check`` counts exceptAll rows both ways between
+    two written results."""
+    sys.path.insert(0, os.getcwd())
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import MapType
+
+    from streamkit_spark.session import get_spark
+
+    spark = get_spark(app_name="ab-queries")
+    queries = entry.queries()
+
+    def comparable(df):  # set operations cannot take map columns
+        return df.select(*[
+            F.array_sort(F.map_entries(f.name)).alias(f.name)
+            if isinstance(f.dataType, MapType) else F.col(f.name)
+            for f in df.schema
+        ])
+
+    for line in sys.stdin:
+        cmd = json.loads(line)
+        try:
+            if cmd["op"] == "run":
+                t0 = time.perf_counter()
+                df = queries[cmd["name"]](spark, sf_dir)
+                n = len(df.collect())
+                out = {"secs": time.perf_counter() - t0, "rows": n, "schema": df.schema.json()}
+                if cmd.get("write"):
+                    df.write.mode("overwrite").parquet(cmd["write"])
+            else:
+                a, b = (comparable(spark.read.parquet(cmd[k])) for k in ("a", "b"))
+                out = {"a_minus_b": a.exceptAll(b).count(), "b_minus_a": b.exceptAll(a).count()}
+        except Exception:  # reported per query, the worker keeps serving
+            out = {"error": traceback.format_exc()[-2000:]}
+        print(MARK + json.dumps(out), flush=True)
+
+
+def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str) -> dict:
+    """Interleaved runs of ``names`` in both arms, then the identity checks."""
+    procs = {
+        a: subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "--worker", "--sf-dir", sf_dir],
+            cwd=trees[a], stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        )
+        for a in ARMS
+    }
+
+    def ask(arm: str, cmd: dict) -> dict:
+        proc = procs[arm]
+        proc.stdin.write(json.dumps(cmd) + "\n")
+        proc.stdin.flush()
+        for line in proc.stdout:
+            if line.startswith(MARK):
+                return json.loads(line[len(MARK):])
+        raise SystemExit(f"the {arm} worker exited")
+
+    runs = {n: {a: [] for a in ARMS} for n in names}
+    try:
+        for rep in range(reps):
+            for n in names:
+                for arm in ARMS if rep % 2 == 0 else ARMS[::-1]:
+                    cmd = {"op": "run", "name": n}
+                    if rep == 0:
+                        cmd["write"] = os.path.join(rows_dir, arm, n)
+                    runs[n][arm].append(ask(arm, cmd))
+                    last = runs[n][arm][-1]
+                    print(f"rep {rep} {n} {arm}: {last.get('secs', last.get('error'))}", file=sys.stderr)
+        checks = {}
+        for n in names:
+            first = {a: runs[n][a][0] for a in ARMS}
+            if any("error" in r for r in first.values()):
+                checks[n] = {"error": "a run failed"}
+                continue
+            checks[n] = ask("change", {
+                "op": "check",
+                "a": os.path.join(rows_dir, "base", n),
+                "b": os.path.join(rows_dir, "change", n),
+            })
+            checks[n]["schema_equal"] = first["base"]["schema"] == first["change"]["schema"]
+    finally:
+        for proc in procs.values():
+            proc.stdin.close()
+            proc.wait()
+    return {"runs": runs, "checks": checks}
+
+
+def _report_queries(result: dict) -> bool:
+    """Prints the per-query table; True when every query is identical."""
+    same = True
+    print("query: schema, base-change / change-base rows; seconds median (q1-q3) base -> change")
+    for n, arms in result["runs"].items():
+        chk = result["checks"][n]
+        if "error" in chk or any("error" in r for a in ARMS for r in arms[a]):
+            errs = {r["error"] for a in ARMS for r in arms[a] if "error" in r}
+            print(f"  {n}: FAILED {chk.get('error', '')} {sorted(errs)}")
+            same = False
+            continue
+        ok = chk["schema_equal"] and chk["a_minus_b"] == chk["b_minus_a"] == 0
+        same &= ok
+        q = {a: _quartiles([r["secs"] for r in arms[a]]) for a in ARMS}
+        print(
+            f"  {n}: {'identical' if ok else 'DIFFERENT'} "
+            f"(schema {'equal' if chk['schema_equal'] else 'differs'}, "
+            f"{chk['a_minus_b']} / {chk['b_minus_a']}, {arms['base'][0]['rows']} rows); "
+            f"{q['base'][1]:.3f} ({q['base'][0]:.3f}-{q['base'][2]:.3f}) -> "
+            f"{q['change'][1]:.3f} ({q['change'][0]:.3f}-{q['change'][2]:.3f})"
+        )
+    return same
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--base", required=True, help="git revision of the base arm")
-    ap.add_argument("--change", required=True, help="git revision of the change arm")
-    ap.add_argument("--workload", action="append", required=True)
-    ap.add_argument("--seeds", type=int, nargs="+", required=True)
+    ap.add_argument("--base", help="git revision or directory of the base arm")
+    ap.add_argument("--change", help="git revision or directory of the change arm")
+    ap.add_argument("--workload", action="append")
+    ap.add_argument("--seeds", type=int, nargs="+")
     ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--queries", nargs="+", help="declared query names")
+    ap.add_argument("--sf-dir", help="fixture directory the queries read")
+    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--rows", help="write the queries' rows here (default: a temporary directory)")
     ap.add_argument("--out", help="write every run as JSON here")
+    ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
+    if args.worker:
+        _worker(args.sf_dir)
+        return
+    if not (args.base and args.change):
+        ap.error("--base and --change are required")
+    if bool(args.queries) == bool(args.workload):
+        ap.error("give either --workload (with --seeds) or --queries (with --sf-dir)")
+    if args.workload and not args.seeds or args.queries and not args.sf_dir:
+        ap.error("--workload needs --seeds; --queries needs --sf-dir")
 
-    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-    runs = {w: {a: [] for a in ARMS} for w in args.workload}
     with tempfile.TemporaryDirectory(prefix="ab-") as tmp:
-        trees = {}
-        try:
-            for arm, rev in zip(ARMS, (args.base, args.change)):
-                trees[arm] = os.path.join(tmp, arm)
-                _git("worktree", "add", "--detach", trees[arm], rev)
-            for i, seed in enumerate(args.seeds):
-                for workload in args.workload:
-                    for arm in ARMS if i % 2 == 0 else ARMS[::-1]:
-                        result, detail = _run(trees[arm], workload, seed, args.seconds)
-                        runs[workload][arm].append({
-                            "seed": seed,
-                            "result": result,
-                            "steal": detail["stamp"].get("cpu_steal_share"),
-                            "calm_ms": detail.get("calm_ms", {}),
-                            "detail": detail,
-                        })
-                        values = {k: round(v["value"], 4) for k, v in result["metrics"].items()}
-                        print(f"{workload} seed {seed} {arm}: {values}", file=sys.stderr)
-        finally:
-            for tree in trees.values():
-                subprocess.run(["git", "-C", REPO, "worktree", "remove", "--force", tree])
+        trees = {
+            arm: _tree(rev, os.path.join(tmp, arm))
+            for arm, rev in zip(ARMS, (args.base, args.change))
+        }
+        if args.queries:
+            rows_dir = os.path.abspath(args.rows or os.path.join(tmp, "rows"))
+            result = _run_queries(
+                trees, args.queries, os.path.abspath(args.sf_dir), args.reps, rows_dir
+            )
+            if args.out:
+                with open(args.out, "w") as f:
+                    json.dump(result, f, indent=1)
+            sys.exit(0 if _report_queries(result) else 1)
+        with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+            better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        runs = {w: {a: [] for a in ARMS} for w in args.workload}
+        for i, seed in enumerate(args.seeds):
+            for workload in args.workload:
+                for arm in ARMS if i % 2 == 0 else ARMS[::-1]:
+                    result, detail = _run(trees[arm], workload, seed, args.seconds)
+                    runs[workload][arm].append({
+                        "seed": seed,
+                        "result": result,
+                        "steal": detail["stamp"].get("cpu_steal_share"),
+                        "calm_ms": detail.get("calm_ms", {}),
+                        "detail": detail,
+                    })
+                    values = {k: round(v["value"], 4) for k, v in result["metrics"].items()}
+                    print(f"{workload} seed {seed} {arm}: {values}", file=sys.stderr)
     if args.out:
         with open(args.out, "w") as f:
             json.dump(runs, f, indent=1, default=str)
