@@ -17,9 +17,16 @@ Strategies, cheapest first:
 * **embedding cosine** — near-dup by embedding similarity; random-hyperplane
   LSH buckets then exact cosine verify (see similarity.py).
 
-Every function returns a DataFrame builder; nothing collects.  Builders
-that localCheckpoint eagerly (the exact prefix-filter detectors, via
-:func:`shingle_ranks`) say so in their docstrings.
+The pair detectors share three pieces: candidates come from one in-row
+pair enumerator (``util.in_row_pairs``) over grouped rows, never a
+self-join; candidates meet their per-doc data through one verify join
+(:func:`_verify_join`); and set scores — Jaccard, overlap, containment —
+are ratios of one set-overlap projection (:func:`_set_overlap`).
+
+Every function returns a DataFrame builder.  Builders that run Spark jobs
+at construction — the exact prefix-filter detectors localCheckpoint
+:func:`shingle_ranks` eagerly, :func:`duplicate_clusters` collects a
+small pair graph — say so in their docstrings.
 """
 
 from __future__ import annotations
@@ -27,11 +34,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from streamkit_spark import schema
 from streamkit_spark.functions.text import normalized_text, tokens, word_ngrams
 from streamkit_spark.functions.util import (
     BROADCAST_ROW_LIMIT,
+    in_row_pairs,
     maybe_broadcast,
     pairs_from_sorted_groups,
+    spread as _spread,
 )
 
 
@@ -39,12 +49,6 @@ def _lc(text_col: str) -> Column:
     """Dedup operates case-insensitively: shingles come from lowercased
     text (the oracle SQL mirrors with lower(text))."""
     return F.lower(F.col(text_col))
-
-
-from streamkit_spark.functions.util import spread as _spread  # noqa: E402
-# (hoisted to functions/util.py in r8 so zorder_stats and future
-# expression-heavy folds share ONE definition; dedup call sites keep
-# the historical _spread name)
 
 
 # ---------------------------------------------------------------- exact
@@ -168,7 +172,8 @@ def _rational(threshold: float) -> tuple[int, int]:
     """threshold as t_num/t_den so every bound is exact integer
     arithmetic — a float ceil an ulp high would shorten a prefix and
     silently lose pairs."""
-    return int(round(threshold * 1_000_000)), 1_000_000
+    t_den = 1_000_000
+    return int(round(threshold * t_den)), t_den
 
 
 def _prefix(ranks: DataFrame, t_num: int, t_den: int) -> DataFrame:
@@ -184,52 +189,66 @@ def _prefix(ranks: DataFrame, t_num: int, t_den: int) -> DataFrame:
     )
 
 
-def _verified_pair_sids(ranks: DataFrame, cand: DataFrame) -> DataFrame:
-    """Candidate ``(id_a, id_b)`` pairs joined to both docs' sid arrays,
-    ``(id_a, id_b, __sa, __sb)`` — the verify of the candidate-heavy
-    ``*_from_ranks`` operators.  cand stays un-hinted (maybe_broadcast):
-    AQE broadcasts it from its measured size."""
-    vec = ranks.groupBy("doc_id").agg(F.collect_list("sid").alias("__sv"))
-    va = vec.select(F.col("doc_id").alias("id_a"), F.col("__sv").alias("__sa"))
-    vb = vec.select(F.col("doc_id").alias("id_b"), F.col("__sv").alias("__sb"))
-    return va.join(maybe_broadcast(cand), "id_a").join(vb, "id_b")
+def _verify_join(cand: DataFrame, side: DataFrame, col: str) -> DataFrame:
+    """The one verify join of the pair detectors: candidate ``(id_a,
+    id_b)`` rows (extra columns ride along) joined to a per-doc side
+    table ``(doc_id, col)`` on both ends, adding ``{col}_a`` and
+    ``{col}_b``.  cand stays un-hinted (maybe_broadcast): its size is
+    corpus-dependent and its pipeline too expensive for a count probe,
+    so AQE broadcasts from the measured size and a pathological case
+    shuffles instead of OOMing.  PRECONDITION: ``doc_id`` unique in
+    ``side``."""
+    a = side.select(F.col("doc_id").alias("id_a"), F.col(col).alias(f"{col}_a"))
+    b = side.select(F.col("doc_id").alias("id_b"), F.col(col).alias(f"{col}_b"))
+    return a.join(maybe_broadcast(cand), "id_a").join(b, "id_b")
 
 
-def _verified_pair_arrays(
-    df: DataFrame, cand: DataFrame, text_col: str, id_col: str, n: int
+def _sid_sets(ranks: DataFrame) -> DataFrame:
+    """Per-doc shingle sets ``(doc_id, s)`` as the rank table's dense
+    sids — the verify side of the candidate-heavy ``*_from_ranks``
+    operators."""
+    return ranks.groupBy("doc_id").agg(F.collect_list("sid").alias("s"))
+
+
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """Same contract as :func:`_verified_pair_sids`, but the arrays are
-    the distinct shingle STRINGS recomputed map-only from the docs scan.
-    It serves SMALL candidate sets (LSH banding, signature fidelity),
-    where building a rank table costs more than it saves (r12
-    interleaved A/B on ids: minhash_lsh 2.15 → 3.06 s, fidelity
-    1.42 → 2.70 s), and the lazy ``verify="arrays"`` jaccard path.
-
-    cand stays un-hinted (maybe_broadcast): its size is corpus-dependent
-    and its pipeline too expensive for a count probe, so AQE broadcasts
-    from the measured size and a pathological case shuffles instead of
-    OOMing.  PRECONDITION: ``id_col`` unique per doc."""
-    arrays = _spread(df).select(
-        F.col(id_col).alias("doc_id"), word_ngrams(_lc(text_col), n).alias("sh")
+    """Per-doc shingle sets ``(doc_id, s)`` as the distinct shingle
+    STRINGS, recomputed map-only from the docs scan.  They serve SMALL
+    candidate sets (LSH banding, signature fidelity), where building a
+    rank table costs more than it saves (r12 interleaved A/B on ids:
+    minhash_lsh 2.15 → 3.06 s, fidelity 1.42 → 2.70 s).  PRECONDITION:
+    ``id_col`` unique per doc."""
+    return _spread(df).select(
+        F.col(id_col).alias("doc_id"), word_ngrams(_lc(text_col), n).alias("s")
     )
-    va = arrays.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("__sa"))
-    vb = arrays.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("__sb"))
-    return va.join(maybe_broadcast(cand), "id_a").join(vb, "id_b")
 
 
-def _jaccard_verified(verified: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b, jaccard ≥ threshold) from verify-joined arrays.
-    |A∪B| = |A| + |B| − |A∩B| (the arrays are distinct sets), so the
-    union array is never materialized."""
-    inter = F.size(F.array_intersect("__sa", "__sb"))
+def _set_overlap(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """The one set-overlap projection: candidate pairs verify-joined to
+    a per-doc set table (distinct elements) give ``(id_a, id_b, inter,
+    na, nb)`` = (|A∩B|, |A|, |B|), exact integers.  Jaccard, overlap and
+    containment are ratios of these; |A∪B| = na + nb − inter, so no
+    union array is materialized."""
+    return _verify_join(cand, sets, "s").select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("s_a", "s_b")).alias("inter"),
+        F.size("s_a").alias("na"),
+        F.size("s_b").alias("nb"),
+    )
+
+
+def _jaccard() -> Column:
+    """|A∩B| / |A∪B| over :func:`_set_overlap`'s columns."""
+    inter = F.col("inter")
+    return inter.cast("double") / (F.col("na") + F.col("nb") - inter)
+
+
+def _jaccard_pairs(overlap: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) from :func:`_set_overlap`."""
     return (
-        verified.select(
-            "id_a",
-            "id_b",
-            (
-                inter.cast("double") / (F.size("__sa") + F.size("__sb") - inter)
-            ).alias("jaccard"),
-        )
+        overlap.select("id_a", "id_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
@@ -247,17 +266,7 @@ def _jaccard_candidates(ranks: DataFrame, threshold: float) -> DataFrame:
         F.collect_list(F.struct("doc_id", "nsh", "rk")).alias("ds")
     )
     pair = grouped.filter(F.size("ds") > 1).select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ds",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ds"), i + 2, F.size("ds")),
-                        lambda y: F.struct(x.alias("x"), y.alias("y")),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(in_row_pairs("ds")).alias("p")
     )
     xa, ya = F.col("p.x"), F.col("p.y")
     # positional filter: overlap requirement α = ⌈t/(1+t) · (|A|+|B|)⌉
@@ -287,10 +296,8 @@ def ngram_jaccard_pairs_from_ranks(
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs` over a prebuilt :func:`shingle_ranks`
     table."""
-    return _jaccard_verified(
-        _verified_pair_sids(ranks, _jaccard_candidates(ranks, threshold)),
-        threshold,
-    )
+    cand = _jaccard_candidates(ranks, threshold)
+    return _jaccard_pairs(_set_overlap(cand, _sid_sets(ranks)), threshold)
 
 
 def ngram_jaccard_pairs(
@@ -299,7 +306,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    verify: str = "ids",
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via prefix filtering (the AllPairs /
     PPJoin family).  Output: (id_a, id_b, jaccard) with id_a < id_b and
@@ -311,22 +317,12 @@ def ngram_jaccard_pairs(
     verified with exact Jaccard (recall argument on
     :func:`shingle_ranks`).
 
-    ``verify``: ``"ids"`` (default) builds the :func:`shingle_ranks`
-    table — an EAGER localCheckpoint at plan-construction time — and
-    verifies on its dense ids.  ``"arrays"`` runs the same rank plan
-    without the checkpoint and verifies on shingle-string arrays, so it
-    starts no Spark job until an action (the SQL view registry needs
-    that).  Both return identical rows (the id map is a bijection).
+    Builds one eager :func:`shingle_ranks` table (Spark jobs run at
+    plan construction) and verifies on its dense ids; pass a shared
+    table to :func:`ngram_jaccard_pairs_from_ranks` instead.
     """
-    if verify == "ids":
-        return ngram_jaccard_pairs_from_ranks(
-            shingle_ranks(df, text_col, id_col, n), threshold
-        )
-    if verify != "arrays":
-        raise ValueError(f"unknown verify mode: {verify!r} (ids|arrays)")
-    cand = _jaccard_candidates(_rank_plan(df, text_col, id_col, n), threshold)
-    return _jaccard_verified(
-        _verified_pair_arrays(df, cand, text_col, id_col, n), threshold
+    return ngram_jaccard_pairs_from_ranks(
+        shingle_ranks(df, text_col, id_col, n), threshold
     )
 
 
@@ -340,11 +336,10 @@ def overlap_coefficient_pairs_from_ranks(
         .groupBy("sid")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
     )
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    denom = F.least(F.size("__sa"), F.size("__sb"))  # arrays are distinct
+    overlap = F.col("inter").cast("double") / F.least("na", "nb")
     return (
-        _verified_pair_sids(ranks, cand)
-        .select("id_a", "id_b", (inter / denom).alias("overlap"))
+        _set_overlap(cand, _sid_sets(ranks))
+        .select("id_a", "id_b", overlap.alias("overlap"))
         .filter(F.col("overlap") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
@@ -504,8 +499,8 @@ def minhash_lsh_pairs(
         .filter(F.size("ds") > 1)
     )
     # exact-Jaccard verify on the (small) candidate set
-    return _jaccard_verified(
-        _verified_pair_arrays(df, cand, text_col, id_col, ngram), threshold
+    return _jaccard_pairs(
+        _set_overlap(cand, _shingle_sets(df, text_col, id_col, ngram)), threshold
     )
 
 
@@ -565,27 +560,20 @@ def minhash_fidelity(
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sa"))
-    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sb"))
-    # the exact side rides the ONE shared verify join (r8 extraction —
-    # a tokenization tweak cannot fork from the other detectors)
-    verified = _verified_pair_arrays(df, cand, text_col, id_col, ngram)
+    # exact Jaccard from the shingle sets, the estimate from the
+    # signatures: both meet the candidates through the one verify join
+    verified = _verify_join(
+        _set_overlap(cand, _shingle_sets(df, text_col, id_col, ngram)), sig, "sig"
+    )
     agree = F.aggregate(
-        F.zip_with("sa", "sb", lambda a, b: (a == b).cast("int")),
+        F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
     )
     j_est = agree.cast("double") / F.lit(num_hashes)
-    # |A∪B| = |A| + |B| − |A∩B| over distinct shingle arrays (no union
-    # array materialized; identical exact integers → identical double)
-    _fid_inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-    j_exact = _fid_inter.cast("double") / (
-        F.size(F.col("__sa")) + F.size(F.col("__sb")) - _fid_inter
-    )
+    j_exact = _jaccard()
     return (
-        verified.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
+        verified.select(
             "id_a",
             "id_b",
             agree.cast("long").alias("agree_n"),
@@ -688,7 +676,7 @@ def simhash_pairs(
     # pipeline once per branch (the minhash/jaccard lesson — AQE exchange
     # reuse is not guaranteed).  Grouping keeps exactly ONE simhash
     # computation; each group carries (doc_id, simhash) structs so the
-    # hamming verify happens in-row, no join back.  array_sort on the
+    # hamming verify needs no join back.  array_sort on the
     # struct orders by doc_id (first field), giving id_a < id_b.
     cand = (
         chunks.groupBy("ci", "cv")
@@ -698,28 +686,14 @@ def simhash_pairs(
             ).alias("ds")
         )
         .filter(F.size("ds") > 1)
+        .select(F.explode(in_row_pairs("ds")).alias("p"))
         .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ds"), i + 2, F.size("ds")),
-                            lambda y: F.struct(
-                                x.getField("doc_id").alias("id_a"),
-                                y.getField("doc_id").alias("id_b"),
-                                F.bit_count(
-                                    x.getField("simhash").bitwiseXOR(
-                                        y.getField("simhash")
-                                    )
-                                ).alias("hamming"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
+            F.col("p.x.doc_id").alias("id_a"),
+            F.col("p.y.doc_id").alias("id_b"),
+            F.bit_count(
+                F.col("p.x.simhash").bitwiseXOR(F.col("p.y.simhash"))
+            ).alias("hamming"),
         )
-        .select("p.id_a", "p.id_b", "p.hamming")
         .distinct()
     )
     return (
@@ -868,10 +842,14 @@ def duplicate_clusters(
     least one pair, where cluster_id = min(doc_id) of its component —
     i.e. the canonical representative every member should dedup to.
 
-    Algorithm: below ``small_graph_threshold`` edges, a driver-side
-    union-find (the edge list of a near-dup graph is tiny next to its
-    corpus; a bounded collect beats distributed-round overhead).  Above
-    it, hash-to-min label propagation with pointer-jumping shortcuts
+    Algorithm: when ``pairs`` holds at most ``small_graph_threshold``
+    rows (input pairs as given, before symmetrizing or dedup), a
+    driver-side union-find (the edge list of a near-dup graph is tiny
+    next to its corpus; a bounded collect beats distributed-round
+    overhead): one ``limit(small_graph_threshold + 1)`` collect decides
+    the path and feeds the union-find, and the answer is an Arrow-backed
+    local frame whose collect starts no job.  Above it, hash-to-min
+    label propagation with pointer-jumping shortcuts
     (the MapReduce CC family of Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14).  Each round:
 
@@ -897,25 +875,21 @@ def duplicate_clusters(
     edges = pairs.select(
         F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
     )
-    # checkpoint BEFORE the symmetrize union: its two branches are two
-    # references to the pair table, and an un-checkpointed expensive pair
-    # pipeline (exact-jaccard, containment) executes once PER BRANCH
-    # inside the eager job below (the derived-table self-join hazard,
-    # union edition — measured 15.4 -> ~8.5s on effective_tokens at
-    # sf0.1).  |pairs| rows of two longs — the materialization is free.
+    # checkpoint BEFORE the probe and the symmetrize union: an
+    # un-checkpointed expensive pair pipeline (exact-jaccard,
+    # containment) would execute once for the probe and once PER BRANCH
+    # of the union (the derived-table self-join hazard, union edition —
+    # measured 15.4 -> ~8.5s on effective_tokens at sf0.1).  |pairs|
+    # rows of two longs — the materialization is free.
     edges = edges.localCheckpoint(eager=False)
-    edges = (
-        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     # Hybrid (the GraphFrames/GraphX practice): a near-dup pair graph is
     # tiny next to its corpus (|edges| ≪ |docs| after LSH) — below the
     # threshold the edge list fits trivially on the driver and a
     # union-find beats 3-4 distributed rounds of fixed job overhead.
-    # The distributed loop below is the ≥threshold path (and is covered
-    # by tests passing small_graph_threshold=0).
-    if edges.count() <= small_graph_threshold:
+    # The distributed loop below is the above-threshold path (and is
+    # covered by tests passing small_graph_threshold=0).
+    head = edges.limit(small_graph_threshold + 1).collect()
+    if len(head) <= small_graph_threshold:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -924,8 +898,7 @@ def duplicate_clusters(
                 x = parent[x]
             return x
 
-        for r in edges.collect():  # bounded by small_graph_threshold
-            a, b = r["src"], r["dst"]
+        for a, b in head:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -935,10 +908,19 @@ def duplicate_clusters(
         for v in parent:
             r = find(v)
             comp_min[r] = min(comp_min.get(r, v), v)
-        rows = [(v, comp_min[find(v)]) for v in sorted(parent)]
-        return pairs.sparkSession.createDataFrame(
-            rows, "doc_id long, cluster_id long"
+        return schema.local_frame(
+            pairs.sparkSession,
+            "doc_id long, cluster_id long",
+            [
+                {"doc_id": v, "cluster_id": comp_min[find(v)]}
+                for v in sorted(parent)
+            ],
         )
+    edges = (
+        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1125,25 +1107,9 @@ def substring_dup_pairs(
     sized = grouped.filter(F.size("ds") > 1)
     if max_df is not None:
         sized = sized.filter(F.size("ds") <= max_df)
-    pairs = sized.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ds",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ds"), i + 2, F.size("ds")),
-                        lambda y: F.struct(
-                            x.alias("doc_a"), y.alias("doc_b")
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
     return (
-        pairs.groupBy(
-            F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
-        )
+        pairs_from_sorted_groups(sized, distinct=False)
+        .groupBy(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .agg(F.count("*").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
@@ -1255,15 +1221,11 @@ def tfidf_cosine_pairs(
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "uw"))).alias("ps"))
         .where(F.size("ps") >= 2)
     )
-    # in-row pair enumeration (two-param HOF lambda is (element, index))
-    pair_expr = F.expr(
-        "flatten(transform(ps, (x, i) ->"
-        " transform(slice(ps, i + 2, size(ps)),"
-        " y -> struct(x.doc_id AS a, y.doc_id AS b,"
-        "             x.uw * y.uw AS prod))))"
-    )
-    pairs = cand.select("term", F.explode(pair_expr).alias("p")).select(
-        "term", "p.a", "p.b", "p.prod"
+    pairs = cand.select("term", F.explode(in_row_pairs("ps")).alias("p")).select(
+        "term",
+        F.col("p.x.doc_id").alias("a"),
+        F.col("p.y.doc_id").alias("b"),
+        (F.col("p.x.uw") * F.col("p.y.uw")).alias("prod"),
     )
     dot = (
         pairs.groupBy("a", "b")
@@ -1340,7 +1302,7 @@ def editdist_pairs(
 
     Output: (id_a, id_b, editsim) with id_a < id_b, editsim rounded 4dp.
     """
-    t_num, t_den = int(round(threshold * 1_000_000)), 1_000_000
+    t_num, t_den = _rational(threshold)
     # r12 measured-and-rejected a localCheckpoint here (two consumers:
     # df aggregate + join probe): old med 5.36 s with fast 2.65/3.12 s
     # runs when AQE exchange reuse fired vs new tight-at-5.5 s — the
@@ -1371,18 +1333,15 @@ def editdist_pairs(
     )
     texts = _spread(df).select(
         F.col(id_col).alias("doc_id"),
-        F.substring(_lc(text_col), 1, prefix_chars).alias("__t"),
+        F.substring(_lc(text_col), 1, prefix_chars).alias("t"),
     )
-    ta = texts.select(F.col("doc_id").alias("id_a"), F.col("__t").alias("__ta"))
-    tb = texts.select(F.col("doc_id").alias("id_b"), F.col("__t").alias("__tb"))
-    la, lb = F.length("__ta"), F.length("__tb")
+    la, lb = F.length("t_a"), F.length("t_b")
     big, small = F.greatest(la, lb), F.least(la, lb)
     bound = int((t_den - t_num) * prefix_chars // t_den)
-    lev = F.levenshtein("__ta", "__tb", bound)
+    lev = F.levenshtein("t_a", "t_b", bound)
     sim = F.lit(1.0) - lev.cast("double") / big.cast("double")
     return (
-        ta.join(maybe_broadcast(cand), "id_a")
-        .join(tb, "id_b")
+        _verify_join(cand, texts, "t")
         # length prefilter: (L - l) / L > (1 - t) already fails on the
         # |len| lower bound of lev — integer form, no float comparison
         # BIGINT products (the plen bug class): length() is INT32 and a
@@ -1545,14 +1504,14 @@ def containment_pairs_from_ranks(
     table."""
     cand = containment_candidates_from_ranks(ranks, threshold, max_df)
     t_num, t_den = _rational(threshold)
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
-    mins = F.least(F.size("__sa"), F.size("__sb")).cast("long")
+    inter = F.col("inter").cast("long")
+    mins = F.least("na", "nb").cast("long")
     # equal sizes tie to id_b, the jaccard convention
-    contained = F.when(
-        F.size("__sa") < F.size("__sb"), F.col("id_a")
-    ).otherwise(F.col("id_b"))
+    contained = F.when(F.col("na") < F.col("nb"), F.col("id_a")).otherwise(
+        F.col("id_b")
+    )
     return (
-        _verified_pair_sids(ranks, cand)
+        _set_overlap(cand, _sid_sets(ranks))
         .select(
             "id_a",
             "id_b",

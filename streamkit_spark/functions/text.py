@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from streamkit_spark.functions.util import topk_per_key
+from streamkit_spark.functions.util import pairs_from_sorted_groups, topk_per_key
 
 # Small multilingual stopword lists for the n-gram/stopword language
 # heuristic.  Deterministic, dependency-free; precision is secondary to
@@ -619,20 +619,11 @@ def _doc_cooccurrence_tables(
     d = df.select(F.col(id_col).alias("doc_id"), toks.alias("t")).filter(
         F.size("t") >= 2
     )
-    pairs = d.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "t",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("t"), i + 2, F.size("t")),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-    pc = pairs.groupBy("a", "b").agg(F.count("*").alias("n_ab"))
+    pc = (
+        pairs_from_sorted_groups(d, "t", distinct=False)
+        .groupBy(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .agg(F.count("*").alias("n_ab"))
+    )
     tokc = d.select(F.explode("t").alias("w")).groupBy("w").agg(
         F.count("*").alias("n_w")
     )
@@ -1252,7 +1243,6 @@ def jsd_from_cells(
 ) -> DataFrame:
     """Finisher half of :func:`jsd_by_group_pairs` over a prebuilt
     (g, tk, c) token-count table (the token streaming sketch)."""
-    from streamkit_spark.functions.util import pairs_from_sorted_groups
 
     # fans into the totals and the per-token pair stage
     cells = cells.localCheckpoint(eager=False)
@@ -1363,7 +1353,6 @@ def kendall_profile_from_cells(
     """Finisher half of :func:`kendall_profile_pairs` over a prebuilt
     (g, tk, c) token-count table (the token streaming sketch)."""
     from streamkit_spark.functions.analytics import kendall_tau_binned
-    from streamkit_spark.functions.util import pairs_from_sorted_groups
 
     # fans into groups/vocab/the join
     cells = cells.localCheckpoint(eager=False)
@@ -1530,7 +1519,6 @@ def rbo_from_cells(
     """Finisher half of :func:`rbo_pairs` over a prebuilt (g, tk, c)
     token-count table (the token streaming sketch); single consumer
     chain, so no checkpoint needed."""
-    from streamkit_spark.functions.util import pairs_from_sorted_groups
 
     # eager validation (the quantiles_from_histogram discipline):
     # k = 0 would build sequence(1, 0) — which runs DESCENDING — and
@@ -1797,7 +1785,6 @@ def burrows_from_cells(
 ) -> DataFrame:
     """Finisher half of :func:`burrows_delta_pairs` over a prebuilt
     (g, tk, c) token-count table (the token streaming sketch)."""
-    from streamkit_spark.functions.util import pairs_from_sorted_groups
 
     # fans into vocab / totals / the spine join
     cells = cells.localCheckpoint(eager=False)

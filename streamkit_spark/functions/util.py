@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Row limit under which an id-list (one long per row) is safely
@@ -78,35 +78,41 @@ def topk_per_key(
     )
 
 
+def in_row_pairs(arr: str) -> Column:
+    """``array<struct<x, y>>`` of every element pair ``(arr[i], arr[j])``
+    with i < j of the array column ``arr``, in (i, j) order — the one
+    in-row pair enumeration of the package.  Explode it over a grouped
+    table to enumerate in-group pairs instead of self-joining a derived
+    table (ONE candidate pipeline in the plan, no AQE exchange-reuse
+    gamble; the self-join shape measured bimodal 3s/24s runtimes on the
+    jaccard operator).  The two-param HOF lambda is (element, index),
+    which is exactly what the tail-slice offset needs."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(F.col(arr), i + 2, F.size(arr)),
+                lambda y: F.struct(x.alias("x"), y.alias("y")),
+            ),
+        )
+    )
+
+
 def pairs_from_sorted_groups(
     grouped: DataFrame,
     ids_col: str = "ds",
     carry: tuple[str, ...] = (),
     distinct: bool = True,
 ) -> DataFrame:
-    """Distinct (id_a, id_b) pairs enumerated IN-ROW from each group's
-    ascending-sorted id array — the group-and-enumerate alternative to a
-    derived-table self-join (ONE candidate pipeline in the plan, no AQE
-    exchange-reuse gamble; the self-join shape measured bimodal 3s/24s
-    runtimes on the jaccard operator).  Ascending input + tail-slice
-    pairing guarantees id_a < id_b.  The two-param HOF lambda is
-    (element, index), which is exactly what the slice offset needs.
+    """Distinct (id_a, id_b) pairs of each group's ascending-sorted id
+    array, by :func:`in_row_pairs`; ascending input guarantees
+    id_a < id_b.
 
     ``carry`` propagates extra group columns onto every pair row;
     ``distinct=False`` skips the final dedup when groups are disjoint by
-    construction (e.g. single-assignment clusters)."""
+    construction (e.g. single-assignment clusters) or when the caller
+    counts pair multiplicity."""
     out = grouped.select(
-        *carry,
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ids_col,
-                    lambda x, i: F.transform(
-                        F.slice(F.col(ids_col), i + 2, F.size(ids_col)),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).select(*carry, "p.id_a", "p.id_b")
+        *carry, F.explode(in_row_pairs(ids_col)).alias("p")
+    ).select(*carry, F.col("p.x").alias("id_a"), F.col("p.y").alias("id_b"))
     return out.distinct() if distinct else out

@@ -330,11 +330,10 @@ def register_diagnostics_views(
         # NOTE: no effective_tokens view — its duplicate_clusters step
         # runs eager driver-side work (edge count + union-find collect)
         # per registration; use curation.effective_token_report directly.
-        # verify="arrays": the default verify builds the shingle_ranks
-        # table with an EAGER localCheckpoint; the lazy path adds no
-        # job of its own at registration.
+        # ngram_jaccard_pairs builds its shingle_ranks table with an
+        # EAGER localCheckpoint, so this view starts jobs at registration
         views[f"{p}source_dup_matrix"] = D.pair_source_matrix(
-            D.ngram_jaccard_pairs(documents, threshold=0.6, verify="arrays"),
+            D.ngram_jaccard_pairs(documents, threshold=0.6),
             documents,
         )
     for name, df in views.items():

@@ -121,7 +121,7 @@ SLOW_TESTS = {
     "tests/test_batch_stream_parity.py::test_token_cells_stream_parity",
     "tests/test_curation.py::test_llr_matches_python_2x2_reference",
     "tests/test_curation.py::test_split_leakage_report_zero_by_construction",
-    "tests/test_dedup.py::test_duplicate_clusters_matches_union_find_model",
+    "tests/test_dedup.py::test_duplicate_clusters_matches_union_find_model[0]",
     "tests/test_heavyhitters.py::test_evicted_counter_emits_tombstone",
     "tests/test_heavyhitters.py::test_stream_carries_state_across_batches",
     "tests/test_ingest.py::test_ingest_batch_sequences_per_segment",

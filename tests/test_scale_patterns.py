@@ -335,11 +335,10 @@ def test_r12_prefix_window_shapes(spark):
     a document's shingle count is O(doc length), the same order the
     in-row shingle array expressions elsewhere already hold per row.
     The window must read the SPREAD shingle table (never a 1-partition
-    single-file scan).  The lazy verify="arrays" path runs the same
-    rank plan without the checkpoint, so the window and the spread's
-    repartition are visible there; the default path reads the
-    checkpointed table (Scan ExistingRDD), and so does the containment
-    candidate stage."""
+    single-file scan).  The window and the spread's repartition are
+    visible in the rank plan shingle_ranks checkpoints; the jaccard
+    path reads the checkpointed table (Scan ExistingRDD), and so does
+    the containment candidate stage."""
     import inspect
 
     from streamkit_spark.functions import dedup as D
@@ -348,12 +347,9 @@ def test_r12_prefix_window_shapes(spark):
     # the shingle table spreads its input before the explode
     assert "_spread(" in inspect.getsource(shingle_table)
     docs = tables.load(spark, SF_DIR, "documents")
-    pj = plans.explain_str(
-        D.ngram_jaccard_pairs(docs, threshold=0.6, verify="arrays"), "extended"
-    )
+    pj = plans.explain_str(D._rank_plan(docs, "text", "doc_id", 3), "extended")
     assert "row_number" in pj
     assert "RoundRobinPartitioning" in pj
-    assert "CartesianProduct" not in pj
     pj = plans.explain_str(D.ngram_jaccard_pairs(docs, threshold=0.6), "extended")
     assert "Scan ExistingRDD" in pj
     assert "CartesianProduct" not in pj

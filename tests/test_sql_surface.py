@@ -292,14 +292,12 @@ def test_timeseries_views_queryable_from_sql(spark):
     assert 0.0 <= row["max_jsd"] <= 0.6931471805599453 + 1e-9
 
 
-def test_curation_and_analytics_registries_start_no_jobs(spark):
+def test_curation_and_analytics_registries_start_no_jobs(spark, jobs_of):
     """Registering the curation and analytics views builds logical plans
     only: zero Spark jobs.  (The diagnostics, sketch and timeseries
     registries do start jobs — their views contain
     localCheckpoint(eager=False), which under AQE runs the plan's
     shuffle stages when the DataFrame is built.)"""
-    import uuid
-
     from streamkit_spark import tables
     from streamkit_spark.sql import (
         register_analytics_views,
@@ -310,52 +308,32 @@ def test_curation_and_analytics_registries_start_no_jobs(spark):
     docs = tables.load(spark, SF_DIR, "documents")
     ev = tables.load(spark, SF_DIR, "events")
     docs.count(), ev.count()  # settle any load-time probes
-    sc = spark.sparkContext
     for register, frame in (
         (register_curation_views, docs),
         (register_analytics_views, ev),
     ):
-        group = f"views-{uuid.uuid4()}"
-        sc.setJobGroup(group, "view registration job-count pin")
-        try:
-            register(spark, frame)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, (
-            register.__name__
-        )
+        assert jobs_of(lambda: register(spark, frame)) == 0, register.__name__
 
 
-def test_jaccard_verify_modes_lazy_vs_eager(spark):
-    """The dense-id verify builds the shingle_ranks table with an EAGER
-    localCheckpoint at plan-construction time; verify="arrays" must
-    stay fully lazy (the SQL view registry routes through it).  Both
-    modes must return identical rows."""
+def test_jaccard_builds_eagerly_and_equals_from_ranks(spark, jobs_of):
+    """``ngram_jaccard_pairs`` has one verify: it builds the
+    shingle_ranks table with an EAGER localCheckpoint at plan
+    construction and returns the rows of
+    ``ngram_jaccard_pairs_from_ranks(shingle_ranks(...))``."""
     import inspect
 
-    from streamkit_spark import sql as SQ
     from streamkit_spark import tables
     from streamkit_spark.functions import dedup as D
     from tests.conftest import SF_DIR
 
+    assert "verify" not in inspect.signature(D.ngram_jaccard_pairs).parameters
     docs = tables.load(spark, SF_DIR, "documents")
-    docs.count()  # settle any load-time probes before sampling jobs
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    lazy_df = D.ngram_jaccard_pairs(docs, threshold=0.6, verify="arrays")
-    after_lazy = tracker.getJobIdsForGroup(None)
-    assert list(before) == list(after_lazy), (
-        "verify='arrays' construction executed Spark jobs"
-    )
-    eager_df = D.ngram_jaccard_pairs(docs, threshold=0.6, verify="ids")
-    after_eager = tracker.getJobIdsForGroup(None)
-    assert list(after_eager) != list(after_lazy), (
-        "expected the ids verify to materialize its rank table eagerly"
-    )
-    # identical output across modes (the id map is a bijection)
-    assert lazy_df.exceptAll(eager_df).count() == 0
-    assert eager_df.exceptAll(lazy_df).count() == 0
-    # the registry routes its pair view through the lazy mode
-    assert 'verify="arrays"' in inspect.getsource(
-        SQ.register_diagnostics_views
-    )
+    docs.count()  # settle any load-time probes before counting jobs
+    built = []
+    assert jobs_of(
+        lambda: built.append(D.ngram_jaccard_pairs(docs, threshold=0.6))
+    ) > 0
+    ranked = D.ngram_jaccard_pairs_from_ranks(D.shingle_ranks(docs), 0.6)
+    assert built[0].count() > 0
+    assert built[0].exceptAll(ranked).count() == 0
+    assert ranked.exceptAll(built[0]).count() == 0

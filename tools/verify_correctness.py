@@ -8,6 +8,9 @@ and compares row count, column names, and exact values.
 Usage:
     python tools/verify_correctness.py [--sf-dir DIR] [--only q1,q2,...]
 
+The session is a bare ``local[$SPARK_GRAFT_CPUS]`` (32 when unset) with
+as many shuffle partitions and no engine config, like the driver's.
+
 Exit code 0 iff every checked query matches (rows-only queries must at
 least run and return a stable row count).
 """
@@ -16,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -85,10 +89,11 @@ def main() -> int:
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("verify_correctness")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
