@@ -23,9 +23,7 @@ Two hash paths, same pattern as dedup.winnow_fingerprints:
 Everything is expressed as DataFrame ops: the bit-set is a ≤``m``-row
 distinct-positions table (broadcast), membership is ``h`` chained
 broadcast SEMI-joins fused into one map stage — no driver-side bit
-array, no UDF.  Callers running several filters against one bit-set
-should materialize it first (``bloom_report`` localCheckpoints it);
-each join branch otherwise re-plans the build pipeline.
+array, no UDF.
 """
 
 from __future__ import annotations
@@ -158,24 +156,36 @@ def bloom_report(
     (bloom_pass, exact_pass, false_pos).  ``false_pos`` is deterministic
     given the hash path — the md5 path hash-matches a DuckDB twin.
 
-    The bit-set is materialized once (localCheckpoint — it is ≤ m rows
-    by construction): the h semi-joins and the accounting otherwise each
-    re-plan the keys-side scan+explode+distinct pipeline, and AQE
-    exchange reuse across those branches is not guaranteed (the repo's
-    derived-table-self-join lesson)."""
-    bloom = bloom_build(keys, key_col, m, h, salt, hash_fn).localCheckpoint()
-    passed = bloom_filter(big, probe_col, bloom, m, h, salt, hash_fn)
-    exact = big.join(
-        keys.select(F.col(key_col).alias(probe_col)).distinct(), probe_col, "semi"
+    Each input is read once: the bit-set is built from the distinct
+    non-NULL keys the exact check also reads (a NULL key sets no bit and
+    matches nothing), and both pass counts come from one aggregate over
+    ``big``, whose h + 1 left joins probe distinct tables, so no row
+    multiplies."""
+    dk = keys.filter(F.col(key_col).isNotNull()).select(
+        F.col(key_col).alias("__k")
+    ).distinct()
+    bloom = bloom_build(dk, "__k", m, h, salt, hash_fn)
+    probes = bloom_positions(F.col("__k"), m, h, salt, hash_fn)
+    flagged = big.select(F.col(probe_col).alias("__k")).join(
+        dk.withColumn("__exact", F.lit(True)), "__k", "left"
     )
-    return (
-        passed.agg(F.count("*").alias("bloom_pass"))
-        .crossJoin(F.broadcast(exact.agg(F.count("*").alias("exact_pass"))))
-        .select(
-            "bloom_pass",
-            "exact_pass",
-            (F.col("bloom_pass") - F.col("exact_pass")).alias("false_pos"),
+    for i in range(h):
+        pcol = f"__bf_pos{i}"
+        flagged = flagged.withColumn(pcol, probes.getItem(i)).join(
+            bloom.select(F.col("pos").alias(pcol), F.lit(True).alias(f"__bf{i}")),
+            pcol,
+            "left",
         )
+    passes = F.lit(True)
+    for i in range(h):
+        passes = passes & F.col(f"__bf{i}")
+    return flagged.agg(
+        F.count_if(passes).alias("bloom_pass"),
+        F.count_if(F.col("__exact")).alias("exact_pass"),
+    ).select(
+        "bloom_pass",
+        "exact_pass",
+        (F.col("bloom_pass") - F.col("exact_pass")).alias("false_pos"),
     )
 
 
@@ -422,12 +432,8 @@ def kmv_overlap(
 
     Scale shape: the corpus is scanned ONCE (the sketch build); the pair
     stage touches only sketch rows — G·(G−1)·k rows for G groups — so
-    it never rescans data.  The sketch is localCheckpoint'ed (it feeds
-    the group list and both join branches — the derived-table self-join
-    lesson).  Outputs rounded 4dp."""
-    sk = kmv_sketch(df, value_col, [group_col], k, salt).localCheckpoint(
-        eager=False
-    )
+    it never rescans data.  Outputs rounded 4dp."""
+    sk = kmv_sketch(df, value_col, [group_col], k, salt)
     return kmv_overlap_from_sketches(sk, group_col, k)
 
 
@@ -437,9 +443,7 @@ def kmv_overlap_from_sketches(
     """The pair stage of :func:`kmv_overlap` over a PREBUILT sketch
     table (group_col, h, u) — e.g. one maintained incrementally by
     ``streaming/cardinality.kmv_sketch_stream`` — so streaming sketches
-    feed the identical estimator (the shared-finisher discipline).  The
-    input should be materialized (checkpointed / collected from a sink):
-    it feeds the group list and both join branches."""
+    feed the identical estimator (the shared-finisher discipline)."""
     gl = sk.select(F.col(group_col).alias("g")).distinct()
     pairs = (
         gl.select(F.col("g").alias("g_a"))

@@ -40,6 +40,15 @@ def maybe_broadcast(df: DataFrame, limit: int | None = None) -> DataFrame:
     return df
 
 
+def fresh_ids(df: DataFrame) -> DataFrame:
+    """``df`` behind one aliasing projection.  A finisher that joins two
+    branches of its input calls this first: when the input reads a leaf
+    Spark cannot re-instance (a memory-sink view), the analyzer can then
+    give one join side new column ids instead of failing on conflicting
+    attributes.  The plan and its exchange reuse are unchanged."""
+    return df.select(*[F.col(c).alias(c) for c in df.columns])
+
+
 def spread(df: DataFrame) -> DataFrame:
     """Fan a (possibly single-file) input across the cluster before
     expression-heavy per-row work.  A small parquet lands in one

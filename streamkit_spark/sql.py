@@ -4,11 +4,12 @@ __spark_entry__.py is the DataFrame twin of this surface).
 
 The reference has no SQL; this is the engine's native query language on
 top of the same semantics.  Views are logical plans and inherit all
-pushdown.  Registering the curation and analytics views starts no Spark
-job.  The sketch, diagnostics and timeseries registries do: some of
-their views contain ``localCheckpoint(eager=False)``, and under AQE that
-runs the plan's shuffle stages when the DataFrame is built, not when the
-view is first queried.
+pushdown.  Registering the curation, analytics and sketch views starts
+no Spark job.  The timeseries and diagnostics registries start only the
+jobs of the views whose operator documents that it builds eagerly: the
+checkpointed cell tables of ``tsr_jsd``, ``dg_mi_weekday`` and
+``dg_gate_kappa``, and the shingle rank table of ``dg_source_dup_matrix``
+(``dedup.shingle_ranks``).
 """
 
 from __future__ import annotations
@@ -146,10 +147,8 @@ def register_sketch_views(
     ``{p}distinct_users`` includes the exact-count audit columns (it
     pays the distinct the pure estimator avoids — use
     ``sketch.hll_distinct(include_exact=False)`` for the cheap path),
-    and ``{p}user_overlap`` localCheckpoints its ≤ G·k-row sketch for
-    the session's lifetime — at registration, since under AQE the
-    checkpoint's shuffle stages run when the view's DataFrame is
-    built."""
+    and ``{p}user_overlap`` builds its ≤ G·k-row sketch per query.
+    Registration starts no Spark job."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import sketch as S
@@ -224,9 +223,12 @@ def register_diagnostics_views(
       ``{p}source_dup_matrix`` (cross-source near-dup pair counts)
 
     Each view inherits the underlying scan's pushdown.  Registration
-    starts Spark jobs: the views' ``localCheckpoint(eager=False)`` calls
-    run their shuffle stages under AQE when the DataFrames are built.
-    The events frame must be normalized (``tables.load``)."""
+    starts only the jobs of the views that build eagerly:
+    ``{p}mi_weekday`` (its checkpointed contingency table) and, with
+    ``documents``, ``{p}gate_kappa`` (likewise) and
+    ``{p}source_dup_matrix`` (the shingle rank table of
+    ``dedup.ngram_jaccard_pairs``).  The events frame must be
+    normalized (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A
@@ -362,9 +364,9 @@ def register_timeseries_views(
       divergence between source unigram distributions
 
     Each view inherits the underlying scan's pushdown.  Registration
-    starts Spark jobs: the views' ``localCheckpoint(eager=False)`` calls
-    run their shuffle stages under AQE when the DataFrames are built.
-    The events frame must be normalized (``tables.load``)."""
+    starts no Spark job without ``documents``; with them, only the jobs
+    of ``{p}jsd``'s checkpointed token cells.  The events frame must be
+    normalized (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A

@@ -54,6 +54,25 @@ def jobs_of(spark):
     return count
 
 
+def final_plan_scans(df) -> dict[str, int]:
+    """FileScan count per parquet table in ``df``'s adaptive FINAL plan
+    (call after an action).  The initial plan a final plan prints next to
+    it, and the plans of reused exchanges, are not counted."""
+    import re
+
+    counts: dict[str, int] = {}
+    skip = None  # indentation of the "== Initial Plan ==" being skipped
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        ind = len(line) - len(line.lstrip(" :|+-"))
+        if skip is not None and ind >= skip:
+            continue
+        skip = ind if "== Initial Plan ==" in line else None
+        m = re.search(r"FileScan .*?/(\w+)\.parquet", line)
+        if skip is None and m:
+            counts[m.group(1)] = counts.get(m.group(1), 0) + 1
+    return counts
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

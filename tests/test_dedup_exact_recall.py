@@ -146,3 +146,94 @@ def test_shingle_set_detectors_equal_brute_force(spark, seed):
         assert got == want, f"overlap max_df={max_df}"
     # the cut bites: the triplicated text shares only df ≥ 3 shingles
     assert found[2] < found[None]
+
+
+# The planted tf-idf triples (one per term unit): Q's four terms all
+# have df 2 and tf 1, so they share one weight w, and P holds just Q's
+# first term.  P's unit weight is exactly 1 (sqrt(w²) = w), and Q's is
+# exactly 1/2 once the fold of four w² is exact (then sqrt(4w²) = 2w), so
+# P·Q = 0.5 sits exactly on the threshold.  R gives Q's other terms df 2.
+TFIDF_T = 0.5
+PLANTED = (
+    ("p1 p2 p3 p4", "p1", "p2 p3 p4"),
+    ("q1 q2 q3 q4 q5 q6", "q1 q2 q3", "q2 q3 q4 q5 q6"),
+)
+
+
+def _with_planted_tfidf(base):
+    """``base`` plus the planted triples and as many NULL-text docs as
+    make the fold of four ln(n/2)² exact (NULL docs count in n only)."""
+    import math
+
+    rows = list(base)
+    for triple in PLANTED:
+        rows += [(len(rows) + k, t) for k, t in enumerate(triple, 1)]
+    while True:
+        w = math.log(len(rows) / 2)
+        s = 0.0
+        for _ in range(4):
+            s += w * w
+        if s == 4 * (w * w):
+            return rows
+        rows.append((len(rows) + 1, None))
+
+
+def _tfidf_pairs(rows, ngram: int, max_df: int) -> dict:
+    """All-pairs tf·idf cosine over the df-pruned vocabulary, in the
+    operator's float order: ln(n/df) weights, per-doc norm and pair dot
+    both folded left to right in ascending term order."""
+    import math
+    from collections import Counter
+
+    vecs = {}
+    for i, t in rows:
+        toks = (t or "").lower().split()
+        if ngram == 1:
+            vecs[i] = Counter(toks)
+        else:
+            grams = range(len(toks) - ngram + 1)
+            vecs[i] = Counter({" ".join(toks[k : k + ngram]) for k in grams})
+    df = Counter(term for v in vecs.values() for term in v)
+    unit = {}
+    for i, v in vecs.items():
+        w = {
+            term: tf * math.log(len(rows) / df[term])
+            for term, tf in sorted(v.items())
+            if df[term] <= max_df
+        }
+        sq = 0.0
+        for x in w.values():
+            sq += x * x
+        if sq > 0:
+            unit[i] = {term: x / math.sqrt(sq) for term, x in w.items()}
+    out = {}
+    for a, b in combinations(sorted(unit), 2):
+        shared = sorted(unit[a].keys() & unit[b].keys())
+        dot = 0.0
+        for term in shared:
+            dot += unit[a][term] * unit[b][term]
+        if shared and dot >= TFIDF_T:
+            out[(a, b)] = (len(shared), dot)
+    return out
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_tfidf_cosine_equals_brute_force(spark, seed):
+    base = _corpus(seed)
+    rows = _with_planted_tfidf(base)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    q_id = len(base) + 1  # the first planted doc, Q
+    for ngram in (1, 3):
+        for max_df in (len(rows), 2):
+            want = _tfidf_pairs(rows, ngram, max_df)
+            planted = (q_id, q_id + 1) if ngram == 1 else (q_id + 3, q_id + 4)
+            assert want[planted][1] == TFIDF_T  # the pair on the boundary
+            got = {
+                (r["doc_a"], r["doc_b"]): (r["n_shared"], r["cosine"])
+                for r in D.tfidf_cosine_pairs(
+                    docs, threshold=TFIDF_T, max_df=max_df, ngram=ngram
+                ).collect()
+            }
+            assert got.keys() == want.keys(), f"ngram={ngram} max_df={max_df}"
+            for p, (n, c) in want.items():
+                assert got[p][0] == n and abs(got[p][1] - c) <= 5e-5 + 1e-12, p

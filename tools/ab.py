@@ -21,11 +21,11 @@ run its correctness and the machine's CPU steal share.
 Queries: one worker process per arm imports the arm's
 ``__spark_entry__`` and, per rep, builds and collects each named entry of
 ``queries()``; the arms alternate per query and their order flips every
-rep.  The first rep's rows are written as parquet (``--rows`` keeps
-them).  Printed per query: schema equality, the exceptAll counts in both
-directions, and each arm's median and q1-q3 seconds (build + collect).
-The first rep of the first query also pays each Spark session's warm-up, so
-read the medians of several reps.
+rep.  Before rep 0 each worker builds and collects every named query
+once, untimed, so no timed rep pays the Spark session's warm-up.  The
+first rep's rows are written as parquet (``--rows`` keeps them).  Printed
+per query: schema equality, the exceptAll counts in both directions, and
+each arm's median and q1-q3 seconds (build + collect).
 
 ``--out`` writes every run as JSON.
 """
@@ -182,6 +182,9 @@ def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str
 
     runs = {n: {a: [] for a in ARMS} for n in names}
     try:
+        for n in names:  # warm-up, untimed; a failure shows again in rep 0
+            for arm in ARMS:
+                ask(arm, {"op": "run", "name": n})
         for rep in range(reps):
             for n in names:
                 for arm in ARMS if rep % 2 == 0 else ARMS[::-1]:
