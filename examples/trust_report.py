@@ -69,11 +69,15 @@ def main(sf_dir: str) -> None:
     ).show(truncate=False)
 
     print("== 3. Near-dup detector agreement matrix ==")
-    ranks = D.shingle_ranks(docs, n=3)  # one table for both exact detectors
+    # one pair pass (one candidate set, one verify) for both exact
+    # detectors, checkpointed so both sets read one verify
+    near = D.near_dup_pairs_from_ranks(
+        D.shingle_ranks(docs, n=3), 0.6, 0.6
+    ).localCheckpoint(eager=False)
     D.detector_agreement(
         {
-            "jaccard": D.ngram_jaccard_pairs_from_ranks(ranks, threshold=0.6),
-            "containment": D.containment_pairs_from_ranks(ranks, threshold=0.6),
+            "jaccard": near.filter("jaccard_hit"),
+            "containment": near.filter(F.col("contained_id").isNotNull()),
             "substring": D.substring_dup_pairs(
                 docs, k=16, w=8, min_shared=2
             ).select(

@@ -40,12 +40,11 @@ class CurationConfig:
     # (|A∩B|/min(|A|,|B|) >= containment_threshold) as near-dup edges —
     # the asymmetric quote-inclusion duplication Jaccard misses when
     # sizes differ (dedup.containment_pairs; Broder SEQUENCES'97).
-    # Edges union into the SAME pair graph (dedup.union_pair_edges), so
-    # with cluster_dedup the whole mixed component collapses to one
-    # representative and cluster_safe_split keys see containment links
-    # too.  None disables.  containment_max_df is the documented
-    # boilerplate-shingle candidate cut (recall trade, see
-    # containment_pairs).
+    # Both detectors run as ONE pair pass (dedup.near_dup_pairs_from_ranks)
+    # whose pairs form ONE pair graph, so with cluster_dedup the whole
+    # mixed component collapses to one representative.  None disables.
+    # containment_max_df is the documented boilerplate-shingle candidate
+    # cut (recall trade, see containment_pairs).
     containment_threshold: float | None = None
     containment_max_df: int | None = None
     # additionally drop docs sharing long verbatim substrings (winnowing
@@ -76,7 +75,9 @@ def curate(docs: DataFrame, cfg: CurationConfig = CurationConfig()) -> DataFrame
     Keep rules (all deterministic, min-doc_id wins):
       1. drop exact duplicates (normalized-text md5, keep min id);
       2. drop near-duplicates (jaccard ≥ threshold, keep the smaller id of
-         each pair — i.e. drop any doc that appears as id_b);
+         each pair — i.e. drop any doc that appears as id_b; with
+         ``containment_threshold``, a containment-only pair drops its
+         contained side);
       3. drop low-quality docs (quality < min_quality or too few tokens).
     """
     return _curate_stages(docs, cfg)[-1][1]
@@ -126,65 +127,21 @@ def _curate_stages(
     stages = [("input", docs)]
     exact = _stage(D.dedup_exact(docs))
     stages.append(("exact_dedup", exact))
-    # ONE ranked-shingle table serves both exact detectors
-    ranks = None
-    if not cfg.use_lsh or cfg.containment_threshold is not None:
-        ranks = D.shingle_ranks(exact, n=cfg.ngram)
-    if cfg.use_lsh:
-        near_pairs = D.minhash_lsh_pairs(
-            exact, ngram=cfg.ngram, threshold=cfg.jaccard_threshold
-        )
-    else:
-        near_pairs = D.ngram_jaccard_pairs_from_ranks(
-            ranks, threshold=cfg.jaccard_threshold
-        )
-    cont_pairs = None
-    if cfg.containment_threshold is not None:
-        cont_pairs = D.containment_pairs_from_ranks(
-            ranks,
-            threshold=cfg.containment_threshold,
-            max_df=cfg.containment_max_df,
-        )
+    pairs = _near_dup_pairs(exact, cfg)
     if cfg.cluster_dedup:
-        edges = (
-            near_pairs
-            if cont_pairs is None
-            else D.union_pair_edges(near_pairs, cont_pairs)
-        )
-        clusters = D.duplicate_clusters(edges)
-        kept = D.dedup_keep_canonical(exact, clusters)
+        clusters = D.duplicate_clusters(pairs)
+        # no losers count probe (2 jobs): AQE sizes the anti-join
+        kept = D.dedup_keep_canonical(exact, clusters, broadcast_limit=None)
     else:
-        if cont_pairs is not None:
-            # near_pairs is referenced twice below (the id_b drop AND the
-            # anti-join) — checkpoint the slim projection so the LSH/pair
-            # pipeline plans once (the derived-table hazard)
-            np_slim = near_pairs.select("id_a", "id_b").localCheckpoint(
-                eager=False
-            )
-            drop_ids = np_slim.select(F.col("id_b").alias("doc_id")).distinct()
-            # drop the CONTAINED side, not id_b: containment pairs are
-            # size-asymmetric — the larger endpoint may hold unique
-            # content beyond the quoted subset, and id order says
-            # nothing about which side that is.  (cluster_dedup keeps
-            # the min-id representative regardless — the Lee et al.
-            # 2022 canonical-doc semantics.)
-            # Containment-ONLY pairs contribute that drop: C_max ≥ J, so
-            # every jaccard-qualifying pair reappears here, the jaccard
-            # policy already dropped its id_b, and adding contained_id
-            # (= id_a whenever id_a has the smaller shingle set) would
-            # delete BOTH endpoints with no surviving representative.
-            # Both pair tables normalize id_a < id_b, so the anti-join
-            # key is exact.
-            cont_only = cont_pairs.join(
-                np_slim, ["id_a", "id_b"], "left_anti"
-            )
-            drop_ids = drop_ids.union(
-                cont_only.select(F.col("contained_id").alias("doc_id"))
-            ).distinct()
-        else:
-            drop_ids = near_pairs.select(
-                F.col("id_b").alias("doc_id")
-            ).distinct()
+        # one drop rule: a Jaccard pair drops id_b, a containment-only
+        # pair its CONTAINED side — the larger endpoint may hold unique
+        # content beyond the quoted subset, whatever the id order.  A
+        # pair under both drops id_b only, so one endpoint survives.
+        drop_ids = pairs.select(
+            F.when(F.col("jaccard_hit"), F.col("id_b"))
+            .otherwise(F.col("contained_id"))
+            .alias("doc_id")
+        ).distinct()
         kept = exact.join(drop_ids, "doc_id", "left_anti")
     kept = _stage(kept)
     stages.append(("near_dedup", kept))
@@ -224,6 +181,26 @@ def _curate_stages(
         out = _stage(out.join(keep, "doc_id"))
         stages.append(("classifier", out))
     return stages
+
+
+def _near_dup_pairs(exact: DataFrame, cfg: CurationConfig) -> DataFrame:
+    """The near-dup stage's pairs in :func:`dedup.near_dup_pairs_from_ranks`'
+    columns, one row per pair; ``(id_a, id_b)`` are the cluster edges.
+    Exact mode is that one pass; LSH mode with containment full-outer-
+    joins the LSH pairs to a containment-only pass."""
+    t_c, max_df = cfg.containment_threshold, cfg.containment_max_df
+    if not cfg.use_lsh:
+        ranks = D.shingle_ranks(exact, n=cfg.ngram)
+        return D.near_dup_pairs_from_ranks(ranks, cfg.jaccard_threshold, t_c, max_df)
+    lsh = D.minhash_lsh_pairs(exact, ngram=cfg.ngram, threshold=cfg.jaccard_threshold)
+    if t_c is None:
+        lsh = lsh.withColumn("contained_id", F.lit(None))
+    else:
+        ranks = D.shingle_ranks(exact, n=cfg.ngram)
+        cont = D.near_dup_pairs_from_ranks(ranks, None, t_c, max_df)
+        cont = cont.select("id_a", "id_b", "contained_id")
+        lsh = lsh.join(cont, ["id_a", "id_b"], "full")
+    return lsh.withColumn("jaccard_hit", F.col("jaccard").isNotNull())
 
 
 def curation_funnel(

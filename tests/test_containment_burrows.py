@@ -147,26 +147,6 @@ def test_burrows_vocab_cut_limits_tokens(spark):
     assert row["delta"] == 0.0
 
 
-def test_union_pair_edges_dedups_and_normalizes(spark):
-    from streamkit_spark.functions.dedup import union_pair_edges
-
-    ja = _docs(
-        spark,
-        [(1, 2), (3, 4)],
-        "id_a long, id_b long",
-    )
-    # same (3,4) edge reversed, plus a containment-only pair
-    co = _docs(
-        spark,
-        [(4, 3), (2, 5)],
-        "id_a long, id_b long",
-    )
-    got = sorted(
-        (r["id_a"], r["id_b"]) for r in union_pair_edges(ja, co).collect()
-    )
-    assert got == [(1, 2), (2, 5), (3, 4)]
-
-
 def test_containment_edges_make_the_split_leakage_safe(spark):
     """The VERDICT r8 #6 composition: a quote-inclusion pair (containment
     1.0, jaccard below threshold) must share a split_key once containment
@@ -174,20 +154,24 @@ def test_containment_edges_make_the_split_leakage_safe(spark):
     jaccard-only graph."""
     from streamkit_spark.functions.curation import cluster_safe_split
     from streamkit_spark.functions.dedup import (
-        ngram_jaccard_pairs,
-        union_pair_edges,
+        near_dup_pairs_from_ranks,
+        ngram_jaccard_pairs_from_ranks,
+        shingle_ranks,
     )
 
     short = "alpha beta gamma delta epsilon"
     long = short + " zeta eta theta iota kappa lam mu nu xi omicron pi rho"
     df = _docs(spark, [(1, short), (2, long), (3, "unrelated text entirely here")])
-    jac = ngram_jaccard_pairs(df, threshold=0.9)
-    cont = containment_pairs(df, threshold=0.9)
-    assert jac.count() == 0 and cont.count() == 1
+    ranks = shingle_ranks(df)
+    jac = ngram_jaccard_pairs_from_ranks(ranks, threshold=0.9)
+    near = near_dup_pairs_from_ranks(ranks, 0.9, 0.9)
+    assert jac.count() == 0
+    rows = near.select("id_a", "id_b", "jaccard_hit", "contained_id").collect()
+    assert [tuple(r) for r in rows] == [(1, 2, False, 1)]
 
     keys_union = {
         r["doc_id"]: r["split_key"]
-        for r in cluster_safe_split(df, union_pair_edges(jac, cont)).collect()
+        for r in cluster_safe_split(df, near).collect()
     }
     # the pair collapses onto the min-id representative; the bystander
     # keeps its own id

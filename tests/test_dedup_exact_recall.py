@@ -1,22 +1,28 @@
 """Exact recall of the shingle-set detectors against a brute force.
 
-``ngram_jaccard_pairs``, ``overlap_coefficient_pairs`` and
-``containment_pairs`` run on small seeded corpora and must return exactly
-the pairs (and scores) an all-pairs Python computation over the same word
-3-gram sets returns.  The corpora carry near-duplicate variants, exact and
-case-only duplicate texts, empty, blank and NULL text, docs shorter than
-3 tokens, and planted pairs whose score sits exactly on the threshold
-(3/4 and 3/5).  With a ``max_df`` cut the contract is: a qualifying pair
-is found iff one of its common shingles has df ≤ max_df."""
+``ngram_jaccard_pairs``, ``overlap_coefficient_pairs``,
+``containment_pairs`` and the combined ``near_dup_pairs_from_ranks`` run
+on small seeded corpora and must return exactly the pairs (and scores) an
+all-pairs Python computation over the same word 3-gram sets returns.  The
+corpora carry near-duplicate variants, exact and case-only duplicate
+texts, empty, blank and NULL text, docs shorter than 3 tokens, and
+planted pairs whose score sits exactly on the threshold (3/4 and 3/5;
+the combined pass adds 4/5 for Jaccard and 3/5, 4/5 for containment).
+With a ``max_df`` cut the contract is: a qualifying pair is found iff
+one of its common shingles has df ≤ max_df.  Curate's near-dup stage is
+checked against a Python model of its drop rule."""
 
 from __future__ import annotations
 
 import random
+from functools import reduce
 from itertools import combinations
 
 import pytest
+from pyspark.sql import functions as F
 
 from streamkit_spark.functions import dedup as D
+from streamkit_spark.pipeline import CurationConfig, _curate_stages
 
 N = 3
 T_DEN = 1_000_000
@@ -146,6 +152,115 @@ def test_shingle_set_detectors_equal_brute_force(spark, seed):
         assert got == want, f"overlap max_df={max_df}"
     # the cut bites: the triplicated text shares only df ≥ 3 shingles
     assert found[2] < found[None]
+
+
+def _with_planted_thresholds(base):
+    """``base`` plus pairs on the combined pass's thresholds, over words
+    no other doc uses: J = 4/5 (a 4-shingle doc inside a 5-shingle one),
+    and C = 4/5 and C = 3/5 (5 shingles quoted into a long doc), whose
+    Jaccard stays far below 0.6."""
+    tail = " ".join(f"t{k}" for k in range(20))
+    planted = [
+        "z1 z2 z3 z4 z5 z6 z7",
+        "z1 z2 z3 z4 z5 z6",
+        "q1 q2 q3 q4 q5 q6 q7",
+        "q1 q2 q3 q4 q5 q6 " + tail,
+        "r1 r2 r3 r4 r5 r6 r7",
+        "r1 r2 r3 r4 r5 " + tail.replace("t", "u"),
+    ]
+    return list(base) + [(len(base) + k, t) for k, t in enumerate(planted, 1)]
+
+
+def _near_dup_model(ov, t_j: float, t_c: float, cut: int) -> dict:
+    """(id_a, id_b) -> (jaccard_hit, contained_id) by brute force: the
+    Jaccard double compare, and the containment integer compare on pairs
+    with a common shingle of df ≤ cut."""
+    t_num = round(t_c * T_DEN)
+    out = {}
+    for (a, b), (i, na, nb, mdf) in ov.items():
+        j_hit = i / (na + nb - i) >= t_j
+        c_hit = i * T_DEN >= min(na, nb) * t_num and mdf <= cut
+        if j_hit or c_hit:
+            out[(a, b)] = (j_hit, (a if na < nb else b) if c_hit else None)
+    return out
+
+
+PASS_THRESHOLDS = ((0.8, 0.6), (0.6, 0.6), (0.6, 0.8))
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_near_dup_pass_equals_brute_force(spark, seed):
+    """One ``near_dup_pairs_from_ranks`` per (t_J, t_C, max_df) — the
+    containment-candidate set alone, and both unions with the Jaccard
+    candidates — all collected in one action."""
+    rows = _with_planted_thresholds(_corpus(seed))
+    ranks = D.shingle_ranks(spark.createDataFrame(rows, "doc_id long, text string"))
+    ov = _overlaps(rows)
+    cfgs = [(tj, tc, m) for tj, tc in PASS_THRESHOLDS for m in (None, 2)]
+    got = {c: {} for c in cfgs}
+    tagged = [
+        D.near_dup_pairs_from_ranks(ranks, tj, tc, m).withColumn("cfg", F.lit(k))
+        for k, (tj, tc, m) in enumerate(cfgs)
+    ]
+    for r in reduce(lambda a, b: a.unionByName(b), tagged).collect():
+        got[cfgs[r["cfg"]]][(r["id_a"], r["id_b"])] = (
+            r["jaccard_hit"],
+            r["contained_id"],
+        )
+    for tj, tc, m in cfgs:
+        want = _near_dup_model(ov, tj, tc, m or len(rows))
+        # a pair on each boundary
+        assert any(i / (na + nb - i) == tj for i, na, nb, _ in ov.values())
+        assert any(
+            i * T_DEN == min(na, nb) * round(tc * T_DEN)
+            for i, na, nb, _ in ov.values()
+        )
+        assert got[(tj, tc, m)] == want, f"t_J={tj} t_C={tc} max_df={m}"
+    for tj, tc in PASS_THRESHOLDS:
+        # the cut drops containment hits only, never a Jaccard hit
+        cut, full = got[(tj, tc, 2)], got[(tj, tc, None)]
+        assert {p for p, (j, _) in cut.items() if j} == {
+            p for p, (j, _) in full.items() if j
+        }
+        assert {p for p, (_, c) in cut.items() if c} < {
+            p for p, (_, c) in full.items() if c
+        }
+
+
+def test_curate_drop_set_equals_drop_rule_model(spark):
+    """Curate's near-dup stage (cluster mode off) drops exactly what the
+    rule says over brute-force pairs of the exact-dedup survivors: a
+    Jaccard pair drops id_b, a containment-only pair its contained
+    side."""
+    rows = _with_planted_thresholds(_corpus(0))
+    text = dict(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cfgs = [(0.8, 0.6, None), (0.6, 0.8, 2)]
+    frames = []
+    for k, (tj, tc, m) in enumerate(cfgs):
+        cfg = CurationConfig(
+            use_lsh=False,
+            jaccard_threshold=tj,
+            containment_threshold=tc,
+            containment_max_df=m,
+        )
+        stages = dict(_curate_stages(docs, cfg))
+        for name in ("exact_dedup", "near_dedup"):
+            frames.append(
+                stages[name].select(
+                    F.lit(k).alias("cfg"), F.lit(name).alias("stage"), "doc_id"
+                )
+            )
+    ids = {}
+    for r in reduce(lambda a, b: a.unionByName(b), frames).collect():
+        ids.setdefault((r["cfg"], r["stage"]), set()).add(r["doc_id"])
+    for k, (tj, tc, m) in enumerate(cfgs):
+        survivors = ids[(k, "exact_dedup")]
+        ov = _overlaps([(i, text[i]) for i in sorted(survivors)])
+        model = _near_dup_model(ov, tj, tc, m or len(survivors))
+        want = {b if j else c for (_, b), (j, c) in model.items()}
+        assert want, f"config {k} drops nothing"
+        assert survivors - ids[(k, "near_dedup")] == want, f"config {k}"
 
 
 # The planted tf-idf triples (one per term unit): Q's four terms all

@@ -24,8 +24,12 @@ Queries: one worker process per arm imports the arm's
 rep.  Before rep 0 each worker builds and collects every named query
 once, untimed, so no timed rep pays the Spark session's warm-up.  The
 first rep's rows are written as parquet (``--rows`` keeps them).  Printed
-per query: schema equality, the exceptAll counts in both directions, and
-each arm's median and q1-q3 seconds (build + collect).
+per query: schema equality, the exceptAll counts in both directions,
+each arm's median and q1-q3 seconds (build + collect), and in how many
+reps the change was faster.  Unless ``SPARK_GRAFT_DRIVER_MEM`` is set,
+each worker's driver heap is a quarter of the machine's memory, so both
+arms fit beside each other.  A worker whose JVM is gone exits non-zero,
+and the A/B stops there, naming the arm.
 
 ``--out`` writes every run as JSON.
 """
@@ -33,6 +37,7 @@ each arm's median and q1-q3 seconds (build + collect).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import statistics
@@ -120,6 +125,25 @@ def _report(runs: dict, better: dict) -> None:
                 )
 
 
+def _worker_env() -> dict:
+    """The workers' environment: a driver heap of a quarter of MemTotal
+    unless ``SPARK_GRAFT_DRIVER_MEM`` is set (the session's default is
+    sized for one process on a large machine, not two)."""
+    env = dict(os.environ)
+    if "SPARK_GRAFT_DRIVER_MEM" not in env:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+        env["SPARK_GRAFT_DRIVER_MEM"] = f"{max(kib // 4 // 1024, 512)}m"
+    return env
+
+
+def _jvm_alive(spark) -> bool:
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # py4j cannot reach the JVM
+        return False
+
+
 def _worker(sf_dir: str) -> None:
     """One arm's query server (cwd = the arm's tree): per stdin line a JSON
     command, per command one ``MARK`` + JSON answer line on stdout.
@@ -157,6 +181,9 @@ def _worker(sf_dir: str) -> None:
                 a, b = (comparable(spark.read.parquet(cmd[k])) for k in ("a", "b"))
                 out = {"a_minus_b": a.exceptAll(b).count(), "b_minus_a": b.exceptAll(a).count()}
         except Exception:  # reported per query, the worker keeps serving
+            if not _jvm_alive(spark):
+                print(traceback.format_exc()[-2000:], file=sys.stderr)
+                sys.exit(3)
             out = {"error": traceback.format_exc()[-2000:]}
         print(MARK + json.dumps(out), flush=True)
 
@@ -167,18 +194,23 @@ def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str
         a: subprocess.Popen(
             [sys.executable, os.path.abspath(__file__), "--worker", "--sf-dir", sf_dir],
             cwd=trees[a], stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+            env=_worker_env(),
         )
         for a in ARMS
     }
 
     def ask(arm: str, cmd: dict) -> dict:
         proc = procs[arm]
-        proc.stdin.write(json.dumps(cmd) + "\n")
-        proc.stdin.flush()
-        for line in proc.stdout:
-            if line.startswith(MARK):
-                return json.loads(line[len(MARK):])
-        raise SystemExit(f"the {arm} worker exited")
+        with contextlib.suppress(BrokenPipeError):
+            proc.stdin.write(json.dumps(cmd) + "\n")
+            proc.stdin.flush()
+            for line in proc.stdout:
+                if line.startswith(MARK):
+                    return json.loads(line[len(MARK):])
+        raise SystemExit(
+            f"the {arm} worker exited with code {proc.wait()} on {cmd['op']} "
+            f"{cmd.get('name', '')}"
+        )
 
     runs = {n: {a: [] for a in ARMS} for n in names}
     try:
@@ -208,7 +240,8 @@ def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str
             checks[n]["schema_equal"] = first["base"]["schema"] == first["change"]["schema"]
     finally:
         for proc in procs.values():
-            proc.stdin.close()
+            with contextlib.suppress(BrokenPipeError):
+                proc.stdin.close()
             proc.wait()
     return {"runs": runs, "checks": checks}
 
@@ -216,7 +249,10 @@ def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str
 def _report_queries(result: dict) -> bool:
     """Prints the per-query table; True when every query is identical."""
     same = True
-    print("query: schema, base-change / change-base rows; seconds median (q1-q3) base -> change")
+    print(
+        "query: schema, base-change / change-base rows; seconds median (q1-q3) "
+        "base -> change; reps the change was faster"
+    )
     for n, arms in result["runs"].items():
         chk = result["checks"][n]
         if "error" in chk or any("error" in r for a in ARMS for r in arms[a]):
@@ -226,13 +262,16 @@ def _report_queries(result: dict) -> bool:
             continue
         ok = chk["schema_equal"] and chk["a_minus_b"] == chk["b_minus_a"] == 0
         same &= ok
-        q = {a: _quartiles([r["secs"] for r in arms[a]]) for a in ARMS}
+        secs = {a: [r["secs"] for r in arms[a]] for a in ARMS}
+        q = {a: _quartiles(secs[a]) for a in ARMS}
+        won = sum(c < b for b, c in zip(secs["base"], secs["change"]))
         print(
             f"  {n}: {'identical' if ok else 'DIFFERENT'} "
             f"(schema {'equal' if chk['schema_equal'] else 'differs'}, "
             f"{chk['a_minus_b']} / {chk['b_minus_a']}, {arms['base'][0]['rows']} rows); "
             f"{q['base'][1]:.3f} ({q['base'][0]:.3f}-{q['base'][2]:.3f}) -> "
-            f"{q['change'][1]:.3f} ({q['change'][0]:.3f}-{q['change'][2]:.3f})"
+            f"{q['change'][1]:.3f} ({q['change'][0]:.3f}-{q['change'][2]:.3f}); "
+            f"change faster in {won}/{len(secs['base'])} reps"
         )
     return same
 
