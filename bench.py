@@ -4,8 +4,10 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 
 Each query is built fresh and fully executed (count of the final plan —
 no driver-side collect of bulk rows, mirroring a write-to-sink terminal
-op).  A small warm-up query first so JVM/codegen startup isn't billed to
-the first headline query.
+op).  A small warm-up query first so JVM startup isn't billed to the
+first headline query.  Code generation is warm for an entry from its
+second run on: its classes stay in the session's generated-class cache
+(2000 entries, ``session.get_spark``), which holds the suite's ~940.
 """
 
 from __future__ import annotations
@@ -276,13 +278,16 @@ def run_suite(
     bimodal triple like [6.1, 6.3, 74.3] is the contention signature;
     three tight runs certify the median)."""
     queries = entry.queries()
-    # warm-up: touch each input table so FS cache + codegen are warm
+    # warm-up: touch each input table so the FS cache and file listings
+    # are warm.  It warms only its own classes: each entry compiles its
+    # own on its first run, and they stay cached while the working set
+    # fits the generated-class cache (session.get_spark).
     from streamkit_spark import tables
 
     for t in tables.TABLE_NAMES:
         tables.load(spark, sf_dir, t).count()
-    # one sort+shuffle warm-up so executor/codegen ramp isn't billed to the
-    # first headline query
+    # one sort+shuffle warm-up so the executor and shuffle ramp isn't
+    # billed to the first headline query
     tables.load(spark, sf_dir, "events").orderBy("event_id").limit(10).count()
 
     timings: dict[str, float] = {}

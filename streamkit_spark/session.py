@@ -4,7 +4,8 @@ Defaults are tuned for the local[32] test rig but every setting scales to a
 real cluster: AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized to cores locally (on a cluster this
 is overridden to ~2-3x total cores), UTC session timezone so results are
-oracle-comparable, Arrow enabled for the Pandas-UDF slow path.
+oracle-comparable, Arrow enabled for the Pandas-UDF slow path, and a
+generated-class cache that holds the engine's working set (below).
 
 The engine treats event time as integer epoch units end-to-end (the
 reference does the same — int64 ms,
@@ -46,6 +47,17 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Compiled whole-stage classes are cached per JVM, LRU, keyed by
+        # their source text; Spark keeps 100.  The engine's working set
+        # is larger: one perfbench corpus_catalog pass makes 238 distinct
+        # classes (65 in curate, ~170 in the 11 catalog queries), and one
+        # pass of bench.py's 73-entry suite at sf0.1 makes 940.  At 100
+        # the LRU evicts every class before its reuse, so each warm call
+        # recompiles all of its classes (5-28 per catalog query).  2000
+        # holds both sets twice over; holding bench's 940 costs the
+        # driver ~30 MB of heap and ~9 MB of metaspace (docs/SCALE.md).
+        # A static conf: read once, when the JVM compiles its first class.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

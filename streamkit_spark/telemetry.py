@@ -16,8 +16,12 @@ carries the hard part — per-query execution metrics — natively):
   span survives the exception and carries its class name).
 - **Streaming** — :class:`StreamProgressListener` (public
   ``StreamingQueryListener`` API) keeps a BOUNDED deque of
-  QueryProgressEvent summaries: rows/sec, batch duration, state rows —
-  the backpressure signals meter.go's queue gauges watch on the wire.
+  QueryProgressEvent summaries: rows/sec, batch duration and its
+  ``durationMs`` phases, state rows and state-store commit time — the
+  backpressure signals meter.go's queue gauges watch on the wire.
+- **Codegen** — :func:`codegen_compiles` reads how many classes the
+  driver JVM's Janino compiler has built, and in how many ms, so a
+  timing can be split into compilation and the rest.
 
 Scale: everything here is driver-side bookkeeping of per-JOB scalars —
 an Observation costs one extra aggregate riding the existing job; the
@@ -36,7 +40,21 @@ from typing import Any, Iterator
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["Telemetry", "StreamProgressListener"]
+__all__ = ["Telemetry", "StreamProgressListener", "codegen_compiles"]
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by the JVM's generated-code compiler
+    since the JVM started: Spark's ``CodegenMetrics`` compilation count
+    and ``CodeGenerator.compileTime``.  A hit in the generated-class
+    cache (``spark.sql.codegen.cache.maxEntries``) counts neither, so the
+    difference of two readings around an action is the compile work that
+    action paid.  The readings are JVM-wide: in local mode they include
+    the executors' compiles, and concurrent actions blur the split."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e6
 
 
 class Telemetry:
@@ -204,9 +222,8 @@ class StreamProgressListener:
 
             def onQueryProgress(self, event):
                 p = event.progress
-                state_rows = sum(
-                    (s.numRowsTotal or 0) for s in (p.stateOperators or [])
-                )
+                ops = p.stateOperators or []
+                duration = dict(p.durationMs or {})
                 outer._events.append(
                     {
                         "kind": "progress",
@@ -214,8 +231,14 @@ class StreamProgressListener:
                         "batch_id": p.batchId,
                         "num_input_rows": p.numInputRows,
                         "rows_per_sec": p.processedRowsPerSecond,
-                        "batch_ms": (p.durationMs or {}).get("triggerExecution"),
-                        "state_rows": state_rows,
+                        "batch_ms": duration.get("triggerExecution"),
+                        # the whole breakdown: addBatch, latestOffset,
+                        # walCommit, commitOffsets, ... per batch
+                        "duration_ms": duration,
+                        "state_rows": sum((s.numRowsTotal or 0) for s in ops),
+                        # one entry per state operator, summed over its
+                        # state-store instances
+                        "state_commit_ms": [s.commitTimeMs or 0 for s in ops],
                     }
                 )
 
@@ -242,15 +265,27 @@ class StreamProgressListener:
 
     def summary(self) -> dict[str, Any]:
         """Aggregate view: batches seen, total input rows, max state
-        rows, mean batch ms — the health scrape."""
+        rows, mean batch ms, the mean of each ``durationMs`` phase over
+        the batches that report it, and the mean state-store commit ms
+        per batch (all state operators) — the health scrape.  Its size
+        is fixed by Spark's phase names, not by the batch count."""
         prog = self.progress()
         if not prog:
             return {"batches": 0, "input_rows": 0, "max_state_rows": 0,
-                    "mean_batch_ms": None}
-        ms = [p["batch_ms"] for p in prog if p["batch_ms"] is not None]
+                    "mean_batch_ms": None, "mean_duration_ms": {},
+                    "mean_state_commit_ms": None}
+        mean = lambda xs: (sum(xs) / len(xs)) if xs else None
+        phases = sorted({k for p in prog for k in p["duration_ms"]})
         return {
             "batches": len(prog),
             "input_rows": sum(p["num_input_rows"] for p in prog),
             "max_state_rows": max(p["state_rows"] for p in prog),
-            "mean_batch_ms": (sum(ms) / len(ms)) if ms else None,
+            "mean_batch_ms": mean([p["batch_ms"] for p in prog if p["batch_ms"] is not None]),
+            "mean_duration_ms": {
+                k: mean([p["duration_ms"][k] for p in prog if k in p["duration_ms"]])
+                for k in phases
+            },
+            "mean_state_commit_ms": mean(
+                [sum(p["state_commit_ms"]) for p in prog if p["state_commit_ms"]]
+            ),
         }

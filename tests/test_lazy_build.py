@@ -37,11 +37,12 @@ source_ngram_overlap
 """.split()
 
 # Rescans that no operator here causes.  curation.classifier_gate_table
-# spreads documents through a RoundRobin repartition, and its score, rule
-# and bigram branches each push their own filter below it, so the three
-# repartitions differ and each scans documents.
+# spreads documents through a RoundRobin repartition; its rule and bigram
+# branches share that exchange, but these consumers drop NULL scores, and
+# that `isnotnull(score)` filter is pushed below the repartition of the
+# score branch alone, so that branch scans documents a second time.
 RESCANS = {
-    q: {"documents": 3}
+    q: {"documents": 2}
     for q in ("calibration_ece", "calibration_brier", "classifier_auc")
 }
 

@@ -1,6 +1,7 @@
 """Telemetry surface tests: Observation-backed in-job metrics, driver
 counters, nested spans with error capture, the flat report DataFrame,
-and the bounded streaming progress listener."""
+the bounded streaming progress listener, and the generated-class cache
+that ``get_spark`` sizes (read through ``codegen_compiles``)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamkit_spark import tables
-from streamkit_spark.telemetry import StreamProgressListener, Telemetry
+from streamkit_spark.telemetry import StreamProgressListener, Telemetry, codegen_compiles
 from tests.conftest import SF_DIR
 
 
@@ -180,3 +181,99 @@ class TestStreamListener:
         assert s["batches"] >= 1
         assert s["input_rows"] == n_src
         assert s["max_state_rows"] >= 1
+
+    def test_batch_breakdown_and_state_commit_kept(self, spark, tmp_path):
+        src = tmp_path / "parts"
+        for i in range(3):  # one file per micro-batch
+            spark.range(i * 10, i * 10 + 10).selectExpr("id % 3 AS k").coalesce(
+                1
+            ).write.parquet(str(src / f"p{i}"))
+        files = tmp_path / "stream"
+        files.mkdir()
+        for i in range(3):
+            for f in (src / f"p{i}").glob("*.parquet"):
+                shutil.copy(f, files / f"p{i}-{f.name}")
+
+        lst = StreamProgressListener(maxlen=2)
+        spark.streams.addListener(lst.listener)
+        q = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(files))
+            .groupBy("k")
+            .count()
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("tel_breakdown")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            batches = len(q.recentProgress)
+        finally:
+            q.stop()
+            spark.streams.removeListener(lst.listener)
+        import time
+
+        deadline = time.time() + 15
+        while time.time() < deadline and not any(
+            e["kind"] == "terminated" for e in lst.events()
+        ):
+            time.sleep(0.2)
+        assert batches >= 3
+        prog = lst.progress()
+        assert prog and len(lst.events()) <= 2  # maxlen holds
+        for p in prog:
+            assert {"triggerExecution", "addBatch", "walCommit"} <= set(p["duration_ms"])
+            assert p["batch_ms"] == p["duration_ms"]["triggerExecution"]
+            assert len(p["state_commit_ms"]) == 1  # one stateful aggregate
+            assert p["state_commit_ms"][0] >= 0
+        s = lst.summary()
+        assert set(s["mean_duration_ms"]) == set().union(*(p["duration_ms"] for p in prog))
+        assert s["mean_state_commit_ms"] is not None
+        assert s["mean_duration_ms"]["addBatch"] >= 0
+
+
+# perfbench corpus_catalog's eleven catalog queries.  hll_distinct stays
+# out: its final plan changes between warm calls inside Spark (AQE picks
+# the broadcast side, and numbers the codegen stages, by which of its two
+# sibling branches finishes first), so a warm call can compile new
+# classes however large the cache is.
+CATALOG = (
+    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
+    "tpch_q5_region_revenue", "monthly_revenue", "topk_orders_per_customer",
+    "cube_revenue", "quantile_report", "value_trend", "doc_token_stats",
+    "ann_topk_bruteforce",
+)
+
+
+class TestCodegenCache:
+    def test_get_spark_sizes_the_cache(self, spark):
+        assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+    def test_warm_catalog_pass_compiles_nothing(self, spark):
+        """Two passes over the catalog: the second compiles no class.  With
+        Spark's 100-entry cache one pass makes more classes than the cache
+        holds, and the second pass recompiles them all."""
+        import __spark_entry__
+
+        queries = __spark_entry__.queries()
+
+        def one_pass() -> dict[str, int]:
+            out = {}
+            for name in CATALOG:
+                before = codegen_compiles(spark)[0]
+                queries[name](spark, SF_DIR).collect()
+                out[name] = codegen_compiles(spark)[0] - before
+            return out
+
+        one_pass()
+        assert one_pass() == {name: 0 for name in CATALOG}
+
+    def test_codegen_compiles_counts_a_new_class(self, spark):
+        """The pin above reads zero deltas; this shows the reading moves."""
+        n0, ms0 = codegen_compiles(spark)
+        # a literal no earlier plan holds: new source text, one compile at least
+        spark.range(7).selectExpr(f"id * {n0 + 7919} AS x").collect()
+        n1, ms1 = codegen_compiles(spark)
+        assert n1 > n0 and ms1 > ms0

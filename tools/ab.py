@@ -25,9 +25,12 @@ rep.  Before rep 0 each worker builds and collects every named query
 once, untimed, so no timed rep pays the Spark session's warm-up.  The
 first rep's rows are written as parquet (``--rows`` keeps them).  Printed
 per query: schema equality, the exceptAll counts in both directions,
-each arm's median and q1-q3 seconds (build + collect), and in how many
-reps the change was faster.  Unless ``SPARK_GRAFT_DRIVER_MEM`` is set,
-each worker's driver heap is a quarter of the machine's memory, so both
+each arm's median and q1-q3 seconds (build + collect), in how many
+reps the change was faster, and each arm's median count of classes its
+JVM compiled per rep with their compile ms (Spark's ``CodegenMetrics``
+count and ``CodeGenerator.compileTime``), so a gap can be laid to code
+generation or not.  Unless ``SPARK_GRAFT_DRIVER_MEM`` is set, each
+worker's driver heap is a quarter of the machine's memory, so both
 arms fit beside each other.  A worker whose JVM is gone exits non-zero,
 and the A/B stops there, naming the arm.
 
@@ -144,6 +147,14 @@ def _jvm_alive(spark) -> bool:
         return False
 
 
+def _compiles(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM.  Read here, not
+    through ``telemetry.codegen_compiles``: the arm's tree may predate it."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    return count, jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime() / 1e6
+
+
 def _worker(sf_dir: str) -> None:
     """One arm's query server (cwd = the arm's tree): per stdin line a JSON
     command, per command one ``MARK`` + JSON answer line on stdout.
@@ -171,10 +182,16 @@ def _worker(sf_dir: str) -> None:
         cmd = json.loads(line)
         try:
             if cmd["op"] == "run":
+                c0 = _compiles(spark)
                 t0 = time.perf_counter()
                 df = queries[cmd["name"]](spark, sf_dir)
                 n = len(df.collect())
-                out = {"secs": time.perf_counter() - t0, "rows": n, "schema": df.schema.json()}
+                secs = time.perf_counter() - t0
+                c1 = _compiles(spark)
+                out = {
+                    "secs": secs, "rows": n, "schema": df.schema.json(),
+                    "compiles": c1[0] - c0[0], "compile_ms": c1[1] - c0[1],
+                }
                 if cmd.get("write"):
                     df.write.mode("overwrite").parquet(cmd["write"])
             else:
@@ -251,7 +268,8 @@ def _report_queries(result: dict) -> bool:
     same = True
     print(
         "query: schema, base-change / change-base rows; seconds median (q1-q3) "
-        "base -> change; reps the change was faster"
+        "base -> change; reps the change was faster; median classes compiled "
+        "(compile ms) per rep, base -> change"
     )
     for n, arms in result["runs"].items():
         chk = result["checks"][n]
@@ -265,13 +283,20 @@ def _report_queries(result: dict) -> bool:
         secs = {a: [r["secs"] for r in arms[a]] for a in ARMS}
         q = {a: _quartiles(secs[a]) for a in ARMS}
         won = sum(c < b for b, c in zip(secs["base"], secs["change"]))
+        cg = {
+            a: (statistics.median(r["compiles"] for r in arms[a]),
+                statistics.median(r["compile_ms"] for r in arms[a]))
+            for a in ARMS
+        }
         print(
             f"  {n}: {'identical' if ok else 'DIFFERENT'} "
             f"(schema {'equal' if chk['schema_equal'] else 'differs'}, "
             f"{chk['a_minus_b']} / {chk['b_minus_a']}, {arms['base'][0]['rows']} rows); "
             f"{q['base'][1]:.3f} ({q['base'][0]:.3f}-{q['base'][2]:.3f}) -> "
             f"{q['change'][1]:.3f} ({q['change'][0]:.3f}-{q['change'][2]:.3f}); "
-            f"change faster in {won}/{len(secs['base'])} reps"
+            f"change faster in {won}/{len(secs['base'])} reps; compiled "
+            f"{cg['base'][0]:g} ({cg['base'][1]:.0f} ms) -> "
+            f"{cg['change'][0]:g} ({cg['change'][1]:.0f} ms)"
         )
     return same
 
