@@ -249,12 +249,25 @@ def hll_registers(
     are monotone, so a latest-wins sink converges under replay with no
     watermark, and state stays at most ``2^b`` registers per group
     whatever the stream length."""
+    return _hll_register_agg(df, value_col, group_cols, b, salt)
+
+
+def _hll_register_agg(
+    df: DataFrame,
+    value_col: str,
+    group_cols: list[str] | tuple[str, ...],
+    b: int,
+    salt: str,
+    *aggs: Column,
+) -> DataFrame:
+    """:func:`hll_registers`' (group..., bucket) aggregate, with ``aggs``
+    computed beside ``r`` in the same pass."""
     bucket, rho = hll_bucket_rho(F.col(value_col), b, salt)
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(*group_cols, bucket.alias("bucket"), rho.alias("rho"))
         .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("r"))
+        .agg(F.max("rho").alias("r"), *aggs)
     )
 
 
@@ -267,7 +280,9 @@ def hll_estimate_from_registers(
     estimates (group..., hll_estimate) — the finisher shared by
     :func:`hll_distinct` and the streaming register aggregate
     (:func:`hll_registers` on a stream), so batch and stream cannot
-    drift.
+    drift.  A register table that also carries ``n``, the count of
+    distinct values in each register, folds into (group...,
+    exact_distinct, hll_estimate): the exact count is their sum.
 
     The harmonic sum folds over the bucket-SORTED register array (left
     fold, 0.0 init) so float rounding is order-pinned on both engines;
@@ -275,6 +290,8 @@ def hll_estimate_from_registers(
     m = 1 << b
     alpha = _hll_alpha(m)
     gcols = list(group_cols)
+    # coalesce keeps the sum non-nullable, as a count is
+    exact = ["exact_distinct"] if "n" in regs.columns else []
     folded = regs.groupBy(*gcols).agg(
         F.count("*").alias("__present"),
         F.aggregate(
@@ -283,6 +300,7 @@ def hll_estimate_from_registers(
             lambda acc, x: acc
             + F.pow(F.lit(2.0), -x.getField("r").cast("double")),
         ).alias("__s_present"),
+        *[F.coalesce(F.sum("n"), F.lit(0)).alias(c) for c in exact],
     )
     s = F.col("__s_present") + (F.lit(m) - F.col("__present")).cast("double")
     raw = F.lit(alpha) * F.lit(float(m * m)) / s
@@ -291,7 +309,7 @@ def hll_estimate_from_registers(
         (raw <= F.lit(2.5 * m)) & (v > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")),
     ).otherwise(raw)
-    return folded.select(*gcols, F.round(est, 4).alias("hll_estimate"))
+    return folded.select(*gcols, *exact, F.round(est, 4).alias("hll_estimate"))
 
 
 def hll_distinct(
@@ -320,36 +338,28 @@ def hll_distinct(
     accuracy reporting (that path DOES pay the distinct — report/testing
     only).
 
-    Output: (group..., hll_estimate[, exact_distinct, rel_err]) — 4dp.
+    Output: (group...[, exact_distinct], hll_estimate[, rel_err]) — 4dp.
     """
     gcols = list(group_cols)
-    src = df
     if include_exact:
-        src = (
-            df.filter(F.col(value_col).isNotNull())
-            .select(*gcols, value_col)
-            .distinct()
+        # one pass over the distinct values: each register also counts
+        # its values and the fold sums them, so the exact count needs no
+        # second aggregate of the input and no join
+        regs = _hll_register_agg(
+            df.select(*gcols, value_col).distinct(), value_col, gcols, b, salt,
+            F.count("*").alias("n"),
         )
-    regs = hll_registers(src, value_col, gcols, b, salt)
+    else:
+        regs = hll_registers(df, value_col, gcols, b, salt)
     out = hll_estimate_from_registers(regs, gcols, b)
     if include_exact:
-        exact = src.groupBy(*gcols).agg(
-            F.count("*").alias("exact_distinct")
-        )
-        join_on = gcols if gcols else None
-        if join_on:
-            out = out.join(exact, join_on)
-        else:
-            out = out.crossJoin(F.broadcast(exact))
-        out = out.select(
-            *gcols,
-            "exact_distinct",
-            "hll_estimate",
+        out = out.withColumn(
+            "rel_err",
             F.round(
                 F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
                 / F.col("exact_distinct"),
                 4,
-            ).alias("rel_err"),
+            ),
         )
     return out.orderBy(*gcols) if gcols else out
 

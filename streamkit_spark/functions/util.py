@@ -55,8 +55,17 @@ def spread(df: DataFrame) -> DataFrame:
     partition, which would serialize shingling/hashing/bit-fold work on
     one core; the repartition cost (shuffling the projected rows once)
     is tiny next to the per-row compute it parallelizes.  At real scale
-    inputs arrive in many partitions and the guard makes this a no-op —
-    never an extra shuffle.
+    a scan input arrives in many partitions and the guard makes this a
+    no-op — never an extra shuffle.
+
+    Planning never executes the input.  An input that holds a shuffle
+    (AQE wraps a plan only when it holds an exchange or a subquery, which
+    ``executedPlan`` tells without running a job) is repartitioned
+    without a partition-count probe: ``df.rdd`` on an adaptive plan runs
+    every shuffle stage below it (curate's exact-dedup shuffle: one
+    70-150 ms job at build time, its result thrown away).  Nor is such an
+    input left to AQE, which coalesces a small post-shuffle input to one
+    partition (curate at sf0.1: 3.7 → 5.0 s with shingling on one core).
 
     Streaming inputs pass through untouched: ``df.rdd`` is illegal on a
     streaming plan, and micro-batches are already distributed by the
@@ -64,7 +73,8 @@ def spread(df: DataFrame) -> DataFrame:
     if df.isStreaming:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    shuffled = df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
+    if not shuffled and df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

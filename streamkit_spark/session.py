@@ -4,8 +4,9 @@ Defaults are tuned for the local[32] test rig but every setting scales to a
 real cluster: AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), shuffle partitions sized to cores locally (on a cluster this
 is overridden to ~2-3x total cores), UTC session timezone so results are
-oracle-comparable, Arrow enabled for the Pandas-UDF slow path, and a
-generated-class cache that holds the engine's working set (below).
+oracle-comparable, Arrow enabled for the Pandas-UDF slow path, a
+generated-class cache that holds the engine's working set, and no
+per-call Python call-site capture (both below).
 
 The engine treats event time as integer epoch units end-to-end (the
 reference does the same — int64 ms,
@@ -58,6 +59,17 @@ def get_spark(
         # driver ~30 MB of heap and ~9 MB of metaspace (docs/SCALE.md).
         # A static conf: read once, when the JVM compiles its first class.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # PySpark 4 wraps every Column and `functions` call to record its
+        # Python call site in the JVM: each call looks up the active
+        # session, reflects PySparkCurrentOrigin, reads
+        # spark.sql.stackTracesInDataFrameContext, then sets and clears
+        # the origin — about 7 py4j round trips per call.  Off, a warm
+        # build of tpch_q1_pricing_summary sends 168 py4j commands instead
+        # of 538, and value_trend 248 instead of 1028.  Lost: an ANSI
+        # runtime error no longer names the Python line that built the
+        # failing expression.  PySpark reads this once per Python process,
+        # at the first wrapped call (docs/SCALE.md).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -219,6 +219,20 @@ def test_brute_knn_corpus_is_spread(spark):
     assert "RoundRobinPartitioning" in p or "Exchange" in p
 
 
+def test_spread_runs_no_job(spark, jobs_of):
+    """``spread`` plans without executing its input.  A single-file scan
+    is fanned out after a job-free partition count; a shuffled input (the
+    exact-dedup aggregate curate spreads) is repartitioned without a
+    count, which on an adaptive plan would run the shuffle below it."""
+    from streamkit_spark.functions import dedup as D
+    from streamkit_spark.functions.util import spread
+
+    docs = tables.load(spark, SF_DIR, "documents")
+    for df in (docs, D.dedup_exact(docs)):
+        assert jobs_of(lambda: spread(df)) == 0
+        assert "RoundRobinPartitioning" in plans.explain_str(spread(df), "extended")
+
+
 def test_r6_diagnostics_plan_shapes(spark):
     """Plan contracts for the round-6 operators: no cartesian products
     anywhere (scalar crossJoins must be broadcast 1-row sides), and the

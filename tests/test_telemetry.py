@@ -1,7 +1,9 @@
 """Telemetry surface tests: Observation-backed in-job metrics, driver
 counters, nested spans with error capture, the flat report DataFrame,
-the bounded streaming progress listener, and the generated-class cache
-that ``get_spark`` sizes (read through ``codegen_compiles``)."""
+the bounded streaming progress listener, the generated-class cache
+that ``get_spark`` sizes (read through ``codegen_compiles``), and the
+py4j cost of building plans once ``get_spark`` turns off PySpark's
+call-site capture."""
 
 from __future__ import annotations
 
@@ -234,16 +236,12 @@ class TestStreamListener:
         assert s["mean_duration_ms"]["addBatch"] >= 0
 
 
-# perfbench corpus_catalog's eleven catalog queries.  hll_distinct stays
-# out: its final plan changes between warm calls inside Spark (AQE picks
-# the broadcast side, and numbers the codegen stages, by which of its two
-# sibling branches finishes first), so a warm call can compile new
-# classes however large the cache is.
+# perfbench corpus_catalog's eleven catalog queries.
 CATALOG = (
     "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
     "tpch_q5_region_revenue", "monthly_revenue", "topk_orders_per_customer",
-    "cube_revenue", "quantile_report", "value_trend", "doc_token_stats",
-    "ann_topk_bruteforce",
+    "cube_revenue", "quantile_report", "value_trend", "hll_distinct",
+    "doc_token_stats", "ann_topk_bruteforce",
 )
 
 
@@ -277,3 +275,38 @@ class TestCodegenCache:
         spark.range(7).selectExpr(f"id * {n0 + 7919} AS x").collect()
         n1, ms1 = codegen_compiles(spark)
         assert n1 > n0 and ms1 > ms0
+
+
+class TestBuildCost:
+    def test_get_spark_turns_off_call_site_capture(self, spark):
+        from pyspark.errors.utils import is_debugging_enabled
+
+        assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+        assert is_debugging_enabled() is False
+
+    def test_catalog_build_py4j_commands(self, spark, monkeypatch):
+        """Building (not collecting) the eleven catalog queries sends
+        2000-2300 py4j commands; with PySpark's call-site capture on,
+        every Column and ``functions`` call adds about 7, and the same
+        builds send 5300-6300.  The count includes the deletes py4j sends
+        as Python drops JVM object handles, which vary with the garbage
+        collector, hence the margin.  PySpark reads the setting once per
+        process, at the first Column call, so this pin reads whichever
+        session was active then."""
+        import __spark_entry__
+        from py4j.clientserver import ClientServerConnection
+
+        queries = __spark_entry__.queries()
+        for name in CATALOG:  # table loads and their caches, untimed
+            queries[name](spark, SF_DIR)
+        sent = [0]
+        send = ClientServerConnection.send_command
+
+        def counted(self, command):
+            sent[0] += 1
+            return send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        for name in CATALOG:
+            queries[name](spark, SF_DIR)
+        assert 0 < sent[0] < 3000

@@ -29,10 +29,14 @@ each arm's median and q1-q3 seconds (build + collect), in how many
 reps the change was faster, and each arm's median count of classes its
 JVM compiled per rep with their compile ms (Spark's ``CodegenMetrics``
 count and ``CodeGenerator.compileTime``), so a gap can be laid to code
-generation or not.  Unless ``SPARK_GRAFT_DRIVER_MEM`` is set, each
-worker's driver heap is a quarter of the machine's memory, so both
-arms fit beside each other.  A worker whose JVM is gone exits non-zero,
-and the A/B stops there, naming the arm.
+generation or not.  Then each arm's median build ms (the ``queries()``
+call: DataFrame construction and any job it runs eagerly), collect ms,
+and py4j commands sent during the build, so a gap can be laid to plan
+construction or to execution.  Unless ``SPARK_GRAFT_DRIVER_MEM`` is
+set, each worker's driver heap is a quarter of the machine's memory, so
+both arms fit beside each other; unless ``SPARK_GRAFT_CPUS`` is set,
+each worker runs ``local[nproc]``, as perfbench does.  A worker whose
+JVM is gone exits non-zero, and the A/B stops there, naming the arm.
 
 ``--out`` writes every run as JSON.
 """
@@ -131,8 +135,11 @@ def _report(runs: dict, better: dict) -> None:
 def _worker_env() -> dict:
     """The workers' environment: a driver heap of a quarter of MemTotal
     unless ``SPARK_GRAFT_DRIVER_MEM`` is set (the session's default is
-    sized for one process on a large machine, not two)."""
+    sized for one process on a large machine, not two), and the cores this
+    process may use unless ``SPARK_GRAFT_CPUS`` is set (the session's
+    default of 32 oversubscribes a small box)."""
     env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if "SPARK_GRAFT_DRIVER_MEM" not in env:
         with open("/proc/meminfo") as f:
             kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
@@ -163,6 +170,7 @@ def _worker(sf_dir: str) -> None:
     two written results."""
     sys.path.insert(0, os.getcwd())
     import __spark_entry__ as entry
+    from py4j.clientserver import ClientServerConnection
     from pyspark.sql import functions as F
     from pyspark.sql.types import MapType
 
@@ -170,6 +178,14 @@ def _worker(sf_dir: str) -> None:
 
     spark = get_spark(app_name="ab-queries")
     queries = entry.queries()
+    sent = [0]  # py4j commands this process has sent to the JVM
+    send = ClientServerConnection.send_command
+
+    def counted_send(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted_send
 
     def comparable(df):  # set operations cannot take map columns
         return df.select(*[
@@ -183,13 +199,16 @@ def _worker(sf_dir: str) -> None:
         try:
             if cmd["op"] == "run":
                 c0 = _compiles(spark)
-                t0 = time.perf_counter()
+                s0, t0 = sent[0], time.perf_counter()
                 df = queries[cmd["name"]](spark, sf_dir)
+                s1, t1 = sent[0], time.perf_counter()
                 n = len(df.collect())
-                secs = time.perf_counter() - t0
+                t2 = time.perf_counter()
                 c1 = _compiles(spark)
                 out = {
-                    "secs": secs, "rows": n, "schema": df.schema.json(),
+                    "secs": t2 - t0, "build_ms": (t1 - t0) * 1e3,
+                    "collect_ms": (t2 - t1) * 1e3, "py4j": s1 - s0,
+                    "rows": n, "schema": df.schema.json(),
                     "compiles": c1[0] - c0[0], "compile_ms": c1[1] - c0[1],
                 }
                 if cmd.get("write"):
@@ -269,7 +288,8 @@ def _report_queries(result: dict) -> bool:
     print(
         "query: schema, base-change / change-base rows; seconds median (q1-q3) "
         "base -> change; reps the change was faster; median classes compiled "
-        "(compile ms) per rep, base -> change"
+        "(compile ms) per rep, base -> change; then median build ms, collect "
+        "ms and py4j commands per build, base -> change"
     )
     for n, arms in result["runs"].items():
         chk = result["checks"][n]
@@ -297,6 +317,15 @@ def _report_queries(result: dict) -> bool:
             f"change faster in {won}/{len(secs['base'])} reps; compiled "
             f"{cg['base'][0]:g} ({cg['base'][1]:.0f} ms) -> "
             f"{cg['change'][0]:g} ({cg['change'][1]:.0f} ms)"
+        )
+        med = {
+            k: {a: statistics.median(r[k] for r in arms[a]) for a in ARMS}
+            for k in ("build_ms", "collect_ms", "py4j")
+        }
+        print(
+            f"    build {med['build_ms']['base']:.1f} -> {med['build_ms']['change']:.1f} ms; "
+            f"collect {med['collect_ms']['base']:.1f} -> {med['collect_ms']['change']:.1f} ms; "
+            f"py4j {med['py4j']['base']:g} -> {med['py4j']['change']:g} commands"
         )
     return same
 
