@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from streamkit_spark.functions.util import fresh_ids
+from streamkit_spark.functions.util import fresh_ids, sum_fold
 from streamkit_spark.schema import local_frame
 
 __all__ = [
@@ -711,26 +711,38 @@ def rank_buckets(
 
     Rows with NULL score keep a NULL bucket (left join).  The top bucket
     caps at ``n_buckets - 1``."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     sc = df.groupBy(F.col(score_col).alias("__s")).agg(
         F.count("*").cast("long").alias("__c")
     ).where(F.col("__s").isNotNull())
-    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
-    wg = Window.partitionBy()  # global scalars over the tiny distinct table
-    bmap = sc.select(
-        "__s",
-        F.coalesce(F.sum("__c").over(w), F.lit(0)).alias("__cb"),
-        F.sum("__c").over(wg).alias("__n"),
-    ).select(
-        "__s",
-        F.least(
-            F.expr(f"({n_buckets} * __cb) div __n"), F.lit(n_buckets - 1)
-        ).cast("long").alias(out_col),
-    )
+    bmap = _score_buckets(sc, n_buckets, out_col).drop("__c")
     return df.join(
         bmap, df[score_col] == bmap["__s"], "left"
     ).drop("__s")
+
+
+def _score_buckets(sc: DataFrame, n_buckets: int, out_col: str) -> DataFrame:
+    """``sc``, a distinct-score count table ``(__s, __c, ...)``, with each
+    score's rank bucket ``out_col`` = (n_buckets · rows below) div N,
+    capped at ``n_buckets - 1`` — :func:`rank_buckets`' arithmetic, from
+    a cumulative window over the distinct scores."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
+    wg = Window.partitionBy()  # global scalars over the tiny distinct table
+    bucket = F.least(
+        F.expr(f"({n_buckets} * __cb) div __n"), F.lit(n_buckets - 1)
+    ).cast("long")
+    return sc.select(
+        "*",
+        F.coalesce(F.sum("__c").over(w), F.lit(0)).alias("__cb"),
+        F.sum("__c").over(wg).alias("__n"),
+    ).select(
+        *sc.columns,
+        # every __c >= 1, so __n > 0 on every row: the when changes no
+        # value, it keeps the bucket nullable, as rank_buckets'
+        # left-joined bucket is, in calibration_report's schema
+        F.when(F.col("__n") > 0, bucket).alias(out_col),
+    )
 
 
 def user_accumulation(
@@ -1085,46 +1097,21 @@ def contingency_cells(
 def chi2_from_cells(cells: DataFrame, round_digits: int = 4) -> DataFrame:
     """Finisher half of :func:`chi2_independence` over a prebuilt
     (r, c, o) contingency table (the contingency streaming sketch)."""
-    cells = fresh_ids(cells)
-    rt = cells.groupBy("r").agg(F.sum("o").cast("long").alias("rt"))
-    ct = cells.groupBy("c").agg(F.sum("o").cast("long").alias("ct"))
-    tot = cells.agg(F.sum("o").cast("long").alias("tn"))
-    e = (
-        F.col("rt").cast("double")
-        * F.col("ct").cast("double")
-        / F.col("tn").cast("double")
-    )
-    term = (
-        (F.col("o").cast("double") - e) * (F.col("o").cast("double") - e) / e
-    )
-    j = (
-        cells.join(F.broadcast(rt), "r")
-        .join(F.broadcast(ct), "c")
-        .crossJoin(F.broadcast(tot))
-        .select("r", "c", "o", term.alias("t"), e.alias("e"))
-    )
-    g = j.agg(
-        F.sum("o").cast("long").alias("n"),
-        F.countDistinct("r").cast("long").alias("n_rows"),
-        F.countDistinct("c").cast("long").alias("n_cols"),
-        (
-            (F.countDistinct("r") - 1) * (F.countDistinct("c") - 1)
-        ).cast("long").alias("dof"),
-        F.count("*").alias("__n_cells"),
-        F.array_sort(F.collect_list(F.struct("r", "c", "t", "e"))).alias(
-            "__arr"
-        ),
-    )
-    fold = lambda field: F.aggregate(  # noqa: E731 — two same-shape folds
-        "__arr",
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.getField(field),
-    )
+    g = _contingency_row(cells)
+    tnd = F.col("n").cast("double")
+
+    def e(x: Column) -> Column:
+        return x["rt"].cast("double") * x["ct"].cast("double") / tnd
+
+    def t(x: Column) -> Column:
+        od = x["o"].cast("double")
+        return (od - e(x)) * (od - e(x)) / e(x)
+
     return g.select(
         "n",
         "n_rows",
         "n_cols",
-        "dof",
+        ((F.col("n_rows") - 1) * (F.col("n_cols") - 1)).cast("long").alias("dof"),
         # NULL (not 0.0) on zero cells: the SQL mirror's list() over an
         # empty input is NULL, and the empty test has no statistic.
         # Structural-zero (r, c) combinations contribute (0−e)²/e = e
@@ -1135,12 +1122,54 @@ def chi2_from_cells(cells: DataFrame, round_digits: int = 4) -> DataFrame:
         # sum understated chi2 by exactly that mass — engine, oracle,
         # and the test reference had shared the omission.)
         F.when(
-            F.col("__n_cells") > 0,
+            F.col("n_cells") > 0,
             F.round(
-                fold("t") + (F.col("n").cast("double") - fold("e")),
+                sum_fold("__cells", t) + (tnd - sum_fold("__cells", e)),
                 round_digits,
             ),
         ).alias("chi2"),
+    )
+
+
+def _contingency_row(cells: DataFrame) -> DataFrame:
+    """The one chain behind the contingency finishers (chi2, MI, kappa):
+    each (r, c, o) cell carries its row and column marginals ``rt`` and
+    ``ct`` from windows on the same rows, then one global aggregate
+    collects the (r, c)-sorted cells as ``__cells``.  Beside it: ``n``
+    (Σo, NULL on an empty table), ``n_cells``, ``__rows`` / ``__cols`` —
+    the (r, rt) and (c, ct) marginals, sorted by category — and their
+    sizes ``n_rows`` / ``n_cols``.  The finishers fold in-row; no branch
+    re-reads the table.  Nothing here compares an r with a c, so chi2
+    and MI accept raters of unrelated types."""
+    marg = cells.select(
+        "r",
+        "c",
+        "o",
+        F.sum("o").over(Window.partitionBy("r")).cast("long").alias("rt"),
+        F.sum("o").over(Window.partitionBy("c")).cast("long").alias("ct"),
+    )
+    g = marg.agg(
+        F.sum("o").cast("long").alias("n"),
+        F.count("*").cast("long").alias("n_cells"),
+        F.array_sort(F.collect_list(F.struct("r", "c", "o", "rt", "ct"))).alias(
+            "__cells"
+        ),
+    )
+
+    def marginal(k: str, m: str) -> Column:
+        return F.array_distinct(
+            F.transform("__cells", lambda x: F.struct(x[k].alias(k), x[m].alias(m)))
+        )
+
+    # the cells are (r, c)-sorted, so the distinct (r, rt) run in r order
+    return g.select(
+        "*",
+        marginal("r", "rt").alias("__rows"),
+        F.array_sort(marginal("c", "ct")).alias("__cols"),
+    ).select(
+        "*",
+        F.size("__rows").cast("long").alias("n_rows"),
+        F.size("__cols").cast("long").alias("n_cols"),
     )
 
 
@@ -1178,80 +1207,43 @@ def mutual_information(
 
 def mi_from_cells(cells: DataFrame, round_digits: int = 4) -> DataFrame:
     """Finisher half of :func:`mutual_information` over a prebuilt
-    (r, c, o) contingency table (the contingency streaming sketch).
-
-    Builds eagerly: the cell table is localCheckpoint'ed."""
-    # kept: measured faster than four lazy branches over the cell table
-    # (mi_weekday at sf0.1: 0.67 s with this, 0.79 s without)
-    cells = cells.localCheckpoint(eager=False)
-    rt = cells.groupBy("r").agg(F.sum("o").cast("long").alias("rt"))
-    ct = cells.groupBy("c").agg(F.sum("o").cast("long").alias("ct"))
-    tot = cells.agg(F.sum("o").cast("long").alias("tn"))
-    od = F.col("o").cast("double")
-    tnd = F.col("tn").cast("double")
-    term = (od / tnd) * F.log(
-        od * tnd / (F.col("rt").cast("double") * F.col("ct").cast("double"))
-    )
-    j = (
-        cells.join(F.broadcast(rt), "r")
-        .join(F.broadcast(ct), "c")
-        .crossJoin(F.broadcast(tot))
-        .select("r", "c", "o", "tn", term.alias("t"))
-    )
-
-    def _fold(items: Column) -> Column:
-        return F.aggregate(
-            items, F.lit(0.0).cast("double"), lambda acc, x: acc + x["t"]
-        )
-
-    # GLOBAL aggregates (never groupBy) + count>0 guards on every fold:
-    # an empty input must yield ONE row of NULL statistics exactly like
-    # chi2_from_cells and the SQL oracle's bare aggregates — a zero-row
-    # report is the r5 chi2 empty-input divergence class, and a
+    (r, c, o) contingency table (the contingency streaming sketch)."""
+    # one global row (never a groupBy) and an n_cells > 0 guard on every
+    # fold: an empty input must yield ONE row of NULL statistics exactly
+    # like chi2_from_cells and the SQL oracle's bare aggregates — a
+    # zero-row report is the r5 chi2 empty-input divergence class, and a
     # streaming dashboard's MI view must read NULL, not vanish.
-    mi_row = j.agg(
-        F.max("tn").alias("tn"),
-        F.countDistinct("r").cast("long").alias("n_rows"),
-        F.countDistinct("c").cast("long").alias("n_cols"),
-        F.when(
-            F.count("*") > 0,
-            _fold(F.array_sort(F.collect_list(F.struct("r", "c", "t")))),
-        ).alias("mi_raw"),
-    )
-    ent = lambda tcol, n: (  # noqa: E731
-        -(F.col(tcol).cast("double") / n)
-        * F.log(F.col(tcol).cast("double") / n)
-    )
-    hr = (
-        rt.crossJoin(F.broadcast(tot))
-        .select("r", ent("rt", F.col("tn").cast("double")).alias("t"))
-        .agg(
-            F.when(
-                F.count("*") > 0,
-                _fold(F.array_sort(F.collect_list(F.struct("r", "t")))),
-            ).alias("h")
+    g = _contingency_row(cells)
+    tnd = F.col("n").cast("double")
+
+    def t(x: Column) -> Column:
+        od = x["o"].cast("double")
+        return (od / tnd) * F.log(
+            od * tnd / (x["rt"].cast("double") * x["ct"].cast("double"))
         )
-    )
-    hc = (
-        ct.crossJoin(F.broadcast(tot))
-        .select("c", ent("ct", F.col("tn").cast("double")).alias("t"))
-        .agg(
-            F.when(
-                F.count("*") > 0,
-                _fold(F.array_sort(F.collect_list(F.struct("c", "t")))),
-            ).alias("h")
+
+    def ent(m: str):
+        return lambda x: -(x[m].cast("double") / tnd) * F.log(
+            x[m].cast("double") / tnd
         )
-    )
-    out = (
-        mi_row.crossJoin(F.broadcast(hr.select(F.col("h").alias("h_r"))))
-        .crossJoin(F.broadcast(hc.select(F.col("h").alias("h_c"))))
+
+    def folded(arr: str, term) -> Column:
+        return F.when(F.col("n_cells") > 0, sum_fold(arr, term))
+
+    out = g.select(
+        "n",
+        "n_rows",
+        "n_cols",
+        folded("__cells", t).alias("mi_raw"),
+        folded("__rows", ent("rt")).alias("h_r"),
+        folded("__cols", ent("ct")).alias("h_c"),
     )
     nmi = F.when(
         (F.col("h_r") > 0) & (F.col("h_c") > 0),
         F.col("mi_raw") / F.sqrt(F.col("h_r") * F.col("h_c")),
     )
     return out.select(
-        F.col("tn").alias("n"),
+        "n",
         "n_rows",
         "n_cols",
         (F.round(F.col("mi_raw"), round_digits) + F.lit(0.0)).alias("mi"),
@@ -3023,58 +3015,53 @@ def winsorized_from_cells(
     """Finisher half of :func:`winsorized_stats` over a prebuilt
     (grp, v, c) cell table (the value-cell streaming sketch).
 
-    Builds eagerly: the cell table is localCheckpoint'ed."""
-    # kept: measured faster than lazy window and total branches over the
-    # cell table (winsorized_value at sf0.1: 0.98 s with this, 1.05 s
-    # without)
-    cells = cells.localCheckpoint(eager=False)
-    wc = (
-        Window.partitionBy("grp")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    One chain: the cumulative and total counts are windows over each
+    group's v-sorted cells, then one aggregate.  The clamped sum needs
+    no second pass: cum is monotone in v, so a cell lies below lo iff
+    cum < lo_rank and above hi iff cum − c ≥ hi_rank, and Σc·clamp(x) =
+    lo·(count below) + Σ_between c·x + hi·(count above), exact in
+    DECIMAL."""
+    wv = Window.partitionBy("grp").orderBy("v")
     ranked = cells.select(
         "grp",
         F.col("v").cast("decimal(18,2)").alias("x"),
         "c",
-        F.sum("c").over(wc).cast("long").alias("cum"),
-        F.sum("c").over(Window.partitionBy("grp")).cast("long").alias("nn"),
+        F.sum("c")
+        .over(wv.rowsBetween(Window.unboundedPreceding, 0))
+        .cast("long")
+        .alias("cum"),
+        F.sum("c")
+        .over(wv.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .cast("long")
+        .alias("nn"),
     )
     lo_rank = F.greatest(
         F.lit(1).cast("long"),
         F.expr(f"({lo_pct} * nn + 99) div 100"),
     )
     hi_rank = F.expr(f"({hi_pct} * nn + 99) div 100")
-    # the rank-r row value = smallest cell value whose cum count >= r
-    bounds = ranked.groupBy("grp").agg(
-        F.min(F.when(F.col("cum") >= lo_rank, F.col("x"))).alias("lo"),
-        F.min(F.when(F.col("cum") >= hi_rank, F.col("x"))).alias("hi"),
-    )
+    above = F.col("cum") - F.col("c") >= hi_rank
+    below = ~above & (F.col("cum") < lo_rank)
     cdec = F.col("c").cast("decimal(18,0)")
-    clamped = (
-        cells.select("grp", F.col("v").cast("decimal(18,2)").alias("x"), "c")
-        .join(F.broadcast(bounds), "grp")
-        .select(
-            "grp",
-            "c",
-            "lo",
-            "hi",
-            F.col("x"),
-            F.least(F.greatest(F.col("x"), F.col("lo")), F.col("hi")).alias(
-                "w"
-            ),
-        )
+    # the rank-r row value = smallest cell value whose cum count >= r
+    g = ranked.groupBy("grp").agg(
+        F.sum("c").cast("long").alias("n"),
+        F.min(F.when(F.col("cum") >= lo_rank, F.col("x"))).alias("lo_d"),
+        F.min(F.when(F.col("cum") >= hi_rank, F.col("x"))).alias("hi_d"),
+        F.sum(F.col("x") * cdec).alias("sx"),
+        F.sum(F.when(below, F.col("c")).otherwise(0)).alias("n_lo"),
+        F.sum(F.when(~above & ~below, F.col("x") * cdec)).alias("s_mid"),
+        F.sum(F.when(above, F.col("c")).otherwise(0)).alias("n_hi"),
+    )
+    # least(lo, hi): with lo > hi (lo_pct > hi_pct) every value clamps to
+    # hi; the counts are exact longs, each product exact in DECIMAL
+    sw = (
+        F.least(F.col("lo_d"), F.col("hi_d")) * F.col("n_lo").cast("decimal(19,0)")
+        + F.coalesce(F.col("s_mid"), F.lit(0).cast("decimal(18,2)"))
+        + F.col("hi_d") * F.col("n_hi").cast("decimal(19,0)")
     )
     return (
-        clamped.groupBy("grp")
-        .agg(
-            F.sum("c").cast("long").alias("n"),
-            F.first("lo").alias("lo_d"),
-            F.first("hi").alias("hi_d"),
-            F.sum(F.col("x") * cdec).alias("sx"),
-            F.sum(F.col("w") * cdec).alias("sw"),
-        )
-        .select(
+        g.select(
             F.col("grp").alias(group_col),
             "n",
             F.col("lo_d").cast("double").alias("lo"),
@@ -3084,8 +3071,7 @@ def winsorized_from_cells(
                 round_digits,
             ).alias("mean"),
             F.round(
-                F.col("sw").cast("double") / F.col("n").cast("double"),
-                round_digits,
+                sw.cast("double") / F.col("n").cast("double"), round_digits
             ).alias("wins_mean"),
         )
         .orderBy(group_col)
@@ -3114,15 +3100,17 @@ def kendall_tau_binned(
     only the final ratio is floating point, one expression shape on
     both engines.
 
-    Scale: quantization IS the contract — the cell self-join is
+    Scale: quantization IS the contract — the concordance count is
     O(cells²) per group, so feed bucketed columns (value div width,
     hour-of-day, deciles), never raw identifiers.  This trades the
     O(n log n) merge-sort inversion count (impossible to express
-    declaratively) for exactness on the quantized statistic.
-
-    Builds eagerly: the cell table is localCheckpoint'ed, and under AQE
-    that runs its shuffle stages when the DataFrame is built.
+    declaratively) for exactness on the quantized statistic.  One chain:
+    one per-group aggregate collects the cells, two explodes of that
+    list make the group's ordered cell pairs, a per-cell aggregate sums
+    each cell's partner counts, and a per-group one sums C, D and both
+    tie terms — no self-join, no marginal branch.
     """
+    dec = "decimal(38,0)"
     cells = (
         df.filter(
             F.col(group_col).isNotNull()
@@ -3135,71 +3123,55 @@ def kendall_tau_binned(
             F.col(y_col).cast("long").alias("y"),
         )
         .agg(F.count("*").cast("long").alias("c"))
-        # kept: measured faster than a lazy self-join and three marginals
-        # over the cell table (kendall_matrix at sf0.1: 1.81 s with this,
-        # 2.17 s without)
-        .localCheckpoint(eager=False)
     )
-    dec = "decimal(38,0)"
-    a = cells.select(
-        "grp",
-        F.col("x").alias("x1"),
-        F.col("y").alias("y1"),
-        F.col("c").alias("c1"),
+    # every ORDERED cell pair (u, v), self pairs included, from two
+    # explodes of the group's cell list.  Per cell u, long sums of the
+    # partner counts (each ≤ n): v above-right / below-right of u (C and
+    # D take x < x', so each unordered cross-x pair once; x-tied pairs
+    # never contribute) and v in u's column / row, where Σ_u c·tx = Σ_x
+    # tx², so the x tie term n1 = Σ_x tx(tx−1)/2 is (Σ_u c·tx − n)/2.
+    # Then one DECIMAL sum per statistic over the cells.
+    g = cells.groupBy("grp").agg(
+        F.sum("c").cast("long").alias("n"),
+        F.collect_list(F.struct("x", "y", "c")).alias("__cells"),
     )
-    b = cells.select(
-        "grp",
-        F.col("x").alias("x2"),
-        F.col("y").alias("y2"),
-        F.col("c").alias("c2"),
-    )
-    # each unordered cross-x cell pair exactly once; x-tied pairs never
-    # contribute to C or D (they are counted in the n1 tie term).
-    cross = a.join(b, "grp").filter(F.col("x1") < F.col("x2"))
-    cd = cross.groupBy("grp").agg(
-        F.sum(
-            F.when(
-                F.col("y1") < F.col("y2"),
-                F.col("c1").cast(dec) * F.col("c2").cast(dec),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("cc"),
-        F.sum(
-            F.when(
-                F.col("y1") > F.col("y2"),
-                F.col("c1").cast(dec) * F.col("c2").cast(dec),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("dd"),
-    )
-    xm = cells.groupBy("grp", "x").agg(F.sum("c").alias("tx"))
-    ym = cells.groupBy("grp", "y").agg(F.sum("c").alias("ty"))
-    n1 = xm.groupBy("grp").agg(
-        (
-            F.sum(F.col("tx").cast(dec) * (F.col("tx") - 1).cast(dec))
-            / 2
-        ).cast(dec).alias("n1")
-    )
-    n2 = ym.groupBy("grp").agg(
-        (
-            F.sum(F.col("ty").cast(dec) * (F.col("ty") - 1).cast(dec))
-            / 2
-        ).cast(dec).alias("n2")
-    )
-    nn = cells.groupBy("grp").agg(F.sum("c").cast("long").alias("n"))
-    j = (
-        nn.join(F.broadcast(cd), "grp", "left")
-        .join(F.broadcast(n1), "grp")
-        .join(F.broadcast(n2), "grp")
-        .select(
-            "grp",
-            "n",
-            F.coalesce(F.col("cc"), F.lit(0).cast(dec)).alias("cc"),
-            F.coalesce(F.col("dd"), F.lit(0).cast(dec)).alias("dd"),
-            (
-                (F.col("n").cast(dec) * (F.col("n") - 1).cast(dec)) / 2
-            ).cast(dec).alias("n0"),
-            "n1",
-            "n2",
+    u, v = F.col("u"), F.col("v")
+
+    def partners(cond: Column) -> Column:
+        return F.sum(F.when(cond, v["c"]).otherwise(F.lit(0))).cast("long")
+
+    per_cell = (
+        g.select("grp", "n", "__cells", F.explode("__cells").alias("u"))
+        .select("grp", "n", "u", F.explode("__cells").alias("v"))
+        .groupBy("grp", "n", "u")
+        .agg(
+            partners((u["x"] < v["x"]) & (u["y"] < v["y"])).alias("up"),
+            partners((u["x"] < v["x"]) & (u["y"] > v["y"])).alias("down"),
+            partners(u["x"] == v["x"]).alias("tx"),
+            partners(u["y"] == v["y"]).alias("ty"),
         )
+    )
+
+    def total(m: str) -> Column:
+        return F.sum(u["c"].cast(dec) * F.col(m).cast(dec)).cast(dec)
+
+    def ties(m: str) -> Column:
+        return ((total(m) - F.col("n").cast(dec)) / 2).cast(dec)
+
+    j = per_cell.groupBy("grp", "n").agg(
+        total("up").alias("cc"),
+        total("down").alias("dd"),
+        ties("tx").alias("n1"),
+        ties("ty").alias("n2"),
+    ).select(
+        "grp",
+        "n",
+        "cc",
+        "dd",
+        ((F.col("n").cast(dec) * (F.col("n") - 1).cast(dec)) / 2)
+        .cast(dec).alias("n0"),
+        "n1",
+        "n2",
     )
     d1 = (F.col("n0") - F.col("n1")).cast("double")
     d2 = (F.col("n0") - F.col("n2")).cast("double")
@@ -3747,7 +3719,6 @@ def wilson_by_group(
     Scale: one map-side-combined count aggregate; group-count-sized
     output.
     """
-    zd = F.lit(float(z))
     agg = (
         df.filter(
             F.col(group_col).isNotNull() & F.col(success_col).isNotNull()
@@ -3760,6 +3731,15 @@ def wilson_by_group(
             ).cast("long").alias("s"),
         )
     )
+    return _wilson_select(agg, group_col, z, round_digits).orderBy(group_col)
+
+
+def _wilson_select(
+    agg: DataFrame, group_col: str, z: float, round_digits: int, *carry: str
+) -> DataFrame:
+    """:func:`wilson_by_group`'s report from its (grp, n, s) count table;
+    ``carry`` columns ride along after ``hi``."""
+    zd = F.lit(float(z))
     n_d = F.col("n").cast("double")
     p = F.col("s").cast("double") / n_d
     z2 = zd * zd
@@ -3773,16 +3753,14 @@ def wilson_by_group(
         )
         / denom
     )
-    return (
-        agg.select(
-            F.col("grp").alias(group_col),
-            "n",
-            F.col("s").alias("successes"),
-            F.round(p, round_digits).alias("rate"),
-            (F.round(center - half, round_digits) + F.lit(0.0)).alias("lo"),
-            F.round(center + half, round_digits).alias("hi"),
-        )
-        .orderBy(group_col)
+    return agg.select(
+        F.col("grp").alias(group_col),
+        "n",
+        F.col("s").alias("successes"),
+        F.round(p, round_digits).alias("rate"),
+        (F.round(center - half, round_digits) + F.lit(0.0)).alias("lo"),
+        F.round(center + half, round_digits).alias("hi"),
+        *carry,
     )
 
 
@@ -4256,31 +4234,35 @@ def calibration_report(
     statistics.  Pure composition — every guarantee inherits from the
     two building blocks.
 
-    Scale: one distinct-score aggregate + one broadcast bucket-map
-    join + one group-count-sized aggregate; nothing sorts the corpus.
-
-    Builds eagerly: the bucketed table is localCheckpoint'ed.
+    Scale: one chain — a distinct-score count with the label's positive
+    count beside it, the bucket window over that table, then one
+    bucket-sized aggregate; nothing sorts the corpus.
     """
-    base = df.filter(
-        F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-    ).select(score_col, label_col)
-    # kept: measured faster than lazy Wilson and range branches over the
-    # bucketing (score_calibration at sf0.1: 2.52 s with this, 2.99 s
-    # without)
-    b = rank_buckets(base, score_col, n_buckets).localCheckpoint(eager=False)
-    w = wilson_by_group(b, "bucket", label_col, z, round_digits)
-    rng = b.groupBy("bucket").agg(
-        F.min(score_col).alias("min_score"),
-        F.max(score_col).alias("max_score"),
-    )
-    return (
-        w.join(F.broadcast(rng), "bucket")
-        .select(
-            "bucket", "n", "successes", "rate", "lo", "hi",
-            "min_score", "max_score",
+    per_score = (
+        df.filter(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
+        .groupBy(F.col(score_col).alias("__s"))
+        .agg(
+            F.count("*").cast("long").alias("__c"),
+            F.sum(F.when(F.col(label_col), F.lit(1)).otherwise(F.lit(0)))
+            .cast("long")
+            .alias("__p"),
         )
-        .orderBy("bucket")
     )
+    agg = (
+        _score_buckets(per_score, n_buckets, "grp")
+        .groupBy("grp")
+        .agg(
+            # a sum over a non-empty bucket is never NULL; the coalesce
+            # keeps n non-nullable, as wilson_by_group's count(*) is
+            F.coalesce(F.sum("__c"), F.lit(0)).cast("long").alias("n"),
+            F.sum("__p").cast("long").alias("s"),
+            F.min("__s").alias("min_score"),
+            F.max("__s").alias("max_score"),
+        )
+    )
+    return _wilson_select(
+        agg, "bucket", z, round_digits, "min_score", "max_score"
+    ).orderBy("bucket")
 
 
 def auc_report(
@@ -4478,44 +4460,38 @@ def cohen_kappa(
 def kappa_from_cells(cells: DataFrame, round_digits: int = 4) -> DataFrame:
     """Finisher half of :func:`cohen_kappa` over a prebuilt (r, c, o)
     contingency table (the contingency streaming sketch — kappa is the
-    sketch's agreement report next to chi2/V/MI's association ones).
-
-    Builds eagerly: the cell table is localCheckpoint'ed."""
-    # kept: measured faster than three lazy branches over the cell table
-    # (gate_kappa at sf0.1: 2.49 s with this, 2.66 s without)
-    cells = cells.localCheckpoint(eager=False)
-    rt = cells.groupBy("r").agg(F.sum("o").cast("long").alias("rt"))
-    ct = cells.groupBy("c").agg(F.sum("o").cast("long").alias("ct"))
+    sketch's agreement report next to chi2/V/MI's association ones)."""
+    g = _contingency_row(cells)
     # chance mass Σ_k rt_k·ct_k over SHARED categories — a category one
     # rater never uses contributes 0 (its missing margin is 0), so the
-    # inner join is exact; disjoint domains ⇒ empty join ⇒ p_e = 0,
-    # which the coalesce below restores (sum over empty is NULL)
-    d19 = "decimal(19,0)"
-    pe_row = (
-        rt.join(ct, rt["r"] == ct["c"])
-        .agg(
-            F.sum(
-                F.col("rt").cast(d19) * F.col("ct").cast(d19)
-            ).alias("pe_num")
-        )
-    )
-    g = cells.agg(
-        F.coalesce(F.sum("o"), F.lit(0)).cast("long").alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("r") == F.col("c"), F.col("o")).otherwise(0)),
-            F.lit(0),
-        ).cast("long").alias("agree"),
-        F.countDistinct("r").cast("long").alias("n_rows"),
-        F.countDistinct("c").cast("long").alias("n_cols"),
-    )
-    j = g.crossJoin(F.broadcast(pe_row)).select(
-        "n",
-        "agree",
-        "n_rows",
-        "n_cols",
-        F.coalesce(F.col("pe_num"), F.lit(0).cast("decimal(38,0)")).alias(
-            "pe_num"
+    # sum runs over matching (row, column) marginal pairs only;
+    # disjoint domains ⇒ p_e = 0
+    d19, d38 = "decimal(19,0)", "decimal(38,0)"
+    zero = F.lit(0).cast(d38)
+    pe_num = F.aggregate(
+        "__rows",
+        zero,
+        lambda a, x: a
+        + F.aggregate(
+            "__cols",
+            zero,
+            lambda b, y: (
+                b
+                + F.when(
+                    x["r"] == y["c"], x["rt"].cast(d19) * y["ct"].cast(d19)
+                ).otherwise(zero)
+            ).cast(d38),
         ),
+    ).cast(d38)
+    # the diagonal mass, an exact in-row sum over the cells
+    agree = F.aggregate(
+        "__cells",
+        F.lit(0).cast("long"),
+        lambda a, x: a + F.when(x["r"] == x["c"], x["o"]).otherwise(0),
+    )
+    n = F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n")
+    j = g.select(
+        n, agree.alias("agree"), "n_rows", "n_cols", pe_num.alias("pe_num")
     )
     nd = F.col("n").cast("double")
     n2 = F.col("n").cast(d19) * F.col("n").cast(d19)
@@ -4674,10 +4650,7 @@ def _calibration_row(cells: DataFrame) -> DataFrame:
 def _bin_fold(term) -> Column:
     """Left fold of ``term(bin)`` over the bucket-sorted bins; NULL when
     there are none (the statistic of an empty input)."""
-    return F.when(
-        F.col("n_bins") > 0,
-        F.aggregate("__bins", F.lit(0.0).cast("double"), lambda a, x: a + term(x)),
-    )
+    return F.when(F.col("n_bins") > 0, sum_fold("__bins", term))
 
 
 def brier_decomposition(

@@ -355,9 +355,13 @@ def hll_distinct(
     if include_exact:
         out = out.withColumn(
             "rel_err",
+            # NULL, not a division by zero, on an empty input's one row
             F.round(
-                F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
-                / F.col("exact_distinct"),
+                F.when(
+                    F.col("exact_distinct") > 0,
+                    F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
+                    / F.col("exact_distinct"),
+                ),
                 4,
             ),
         )

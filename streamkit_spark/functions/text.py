@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from streamkit_spark.functions.util import (
     fresh_ids,
     pairs_from_sorted_groups,
+    sum_fold,
     topk_per_key,
 )
 
@@ -243,9 +244,21 @@ def _term_doc_stats(
         .alias(f"tf_{i}")
         for i, t in enumerate(terms)
     ]
-    # kept: measured faster than a lazy stats row and scoring join over
-    # the per-doc table (ql_search at sf0.1: 0.58 s with this, 0.70 s
-    # without)
+    # kept: measured no faster lazily, with the stats row a global
+    # aggregate over the lazy per-doc table, broadcast back (sf0.1, 40
+    # interleaved reps over three runs, reps won by the lazy plan:
+    # bm25_search 22, ql_search 19, hybrid_search 17; hybrid_search's
+    # median rose 2-12 ms in all three runs).  Lazily the AQE final
+    # plan merges the per-doc aggregate twice, and scoring waits for the
+    # stats' broadcast:
+    #   BroadcastNestedLoopJoin BuildRight, Cross
+    #     HashAggregate(keys=[doc_id], functions=[count(1), sum(..)...])
+    #       ShuffleQueryStage 3
+    #     BroadcastQueryStage 7 <- ShuffleQueryStage 6
+    #       <- HashAggregate(keys=[doc_id], functions=[count(1), ...])
+    #         ShuffleQueryStage 5  ReusedExchange hashpartitioning(doc_id)
+    # The stats as windows over the per-doc rows would read every
+    # document in one partition.
     per_doc = tok.groupBy("doc_id").agg(*aggs).localCheckpoint()
     stat_aggs = [
         F.sum("dl").cast("long").alias("sum_dl"),
@@ -1151,54 +1164,34 @@ def kl_from_cells(
     """Finisher half of :func:`kl_by_group` over a prebuilt (g, tk, c)
     token-count table (the token streaming sketch).
 
-    Builds eagerly: the cell table is localCheckpoint'ed."""
-    # kept: measured faster than three lazy branches over the cell table
-    # (kl_sources at sf0.1: 0.58 s with this, 0.64 s without)
-    cells = cells.localCheckpoint(eager=False)
-    glob = cells.groupBy("tk").agg(F.sum("c").cast("long").alias("ct"))
-    tot = cells.agg(F.sum("c").cast("long").alias("nn"))
-    joined = cells.join(glob, "tk").crossJoin(F.broadcast(tot))
-    return (
-        joined.groupBy("g")
+    Each cell carries its corpus token count ``ct`` from a window by
+    token, one per-group aggregate collects the token-sorted cells, and
+    KL folds in-row per group.  The corpus total ``nn`` is a one-row
+    aggregate over the cells, broadcast to the group rows, so every
+    group's fold stays in its own partition."""
+    per_group = (
+        cells.select(
+            "g", "tk", "c", F.sum("c").over(Window.partitionBy("tk")).alias("ct")
+        )
+        .groupBy("g")
         .agg(
             F.sum("c").cast("long").alias("n_tokens"),
             F.count("*").cast("long").alias("n_distinct"),
-            F.array_sort(
-                F.collect_list(F.struct("tk", "c", "ct", "nn"))
-            ).alias("__tc"),
+            F.array_sort(F.collect_list(F.struct("tk", "c", "ct"))).alias(
+                "__tc"
+            ),
         )
-        .select(
-            F.col("g").alias(group_col),
-            "n_tokens",
-            "n_distinct",
-            (
-                F.round(
-                    F.aggregate(
-                        "__tc",
-                        F.lit(0.0).cast("double"),
-                        lambda acc, x: acc
-                        + (
-                            x.getField("c").cast("double")
-                            / F.col("n_tokens").cast("double")
-                        )
-                        * F.log(
-                            (
-                                x.getField("c").cast("double")
-                                / F.col("n_tokens").cast("double")
-                            )
-                            / (
-                                x.getField("ct").cast("double")
-                                / x.getField("nn").cast("double")
-                            )
-                        ),
-                    ),
-                    round_digits,
-                )
-                + F.lit(0.0)
-            ).alias("kl"),
-        )
-        .orderBy(group_col)
+        .crossJoin(F.broadcast(cells.agg(F.sum("c").cast("long").alias("nn"))))
     )
+    p = lambda x: x["c"].cast("double") / F.col("n_tokens").cast("double")  # noqa: E731
+    q = lambda x: x["ct"].cast("double") / F.col("nn").cast("double")  # noqa: E731
+    kl = sum_fold("__tc", lambda x: p(x) * F.log(p(x) / q(x)))
+    return per_group.select(
+        F.col("g").alias(group_col),
+        "n_tokens",
+        "n_distinct",
+        (F.round(kl, round_digits) + F.lit(0.0)).alias("kl"),
+    ).orderBy(group_col)
 
 
 def jsd_by_group_pairs(
@@ -1248,34 +1241,26 @@ def jsd_from_cells(
     """Finisher half of :func:`jsd_by_group_pairs` over a prebuilt
     (g, tk, c) token-count table (the token streaming sketch).
 
-    Builds eagerly: the cell table is localCheckpoint'ed."""
-    # kept: measured faster than lazy totals and per-token branches over
-    # the cell table (jsd_sources at sf0.1: 0.76 s with this, 0.92 s
-    # without)
-    cells = cells.localCheckpoint(eager=False)
-    totals = cells.groupBy("g").agg(F.sum("c").cast("long").alias("n"))
-    per_tk = cells.groupBy("tk").agg(
-        F.array_sort(F.collect_list(F.struct("g", "c"))).alias("ds")
+    One chain: each cell carries its group total ``n`` from a window by
+    group, one per-token aggregate collects the group-sorted cells, their
+    in-row pairs explode, and one per-pair aggregate folds the terms."""
+    per_tk = (
+        cells.select(
+            "g", "tk", "c", F.sum("c").over(Window.partitionBy("g")).alias("n")
+        )
+        .groupBy("tk")
+        .agg(F.array_sort(F.collect_list(F.struct("g", "c", "n"))).alias("ds"))
     )
-    pr = pairs_from_sorted_groups(
+    j = pairs_from_sorted_groups(
         per_tk, "ds", carry=("tk",), distinct=False
     ).select(
         "tk",
         F.col("id_a.g").alias("a"),
         F.col("id_a.c").alias("ca"),
+        F.col("id_a.n").alias("na"),
         F.col("id_b.g").alias("b"),
         F.col("id_b.c").alias("cb"),
-    )
-    j = pr.join(
-        F.broadcast(
-            totals.select(F.col("g").alias("a"), F.col("n").alias("na"))
-        ),
-        "a",
-    ).join(
-        F.broadcast(
-            totals.select(F.col("g").alias("b"), F.col("n").alias("nb"))
-        ),
-        "b",
+        F.col("id_b.n").alias("nb"),
     )
     p = F.col("ca").cast("double") / F.col("na").cast("double")
     q = F.col("cb").cast("double") / F.col("nb").cast("double")
@@ -1294,11 +1279,7 @@ def jsd_from_cells(
             ).alias("__arr"),
         )
     )
-    fold = lambda field: F.aggregate(  # noqa: E731 — three same-shape folds
-        "__arr",
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.getField(field),
-    )
+    fold = lambda field: sum_fold("__arr", lambda x: x[field])  # noqa: E731
     jsd = F.lit(0.5) * fold("t") + F.lit(0.5) * F.log(F.lit(2.0)) * (
         (F.lit(1.0) - fold("p")) + (F.lit(1.0) - fold("q"))
     )
@@ -1342,8 +1323,6 @@ def kendall_profile_pairs(
     by vocabulary size.  For open vocabularies cut the spine with
     ``min_count`` (corpus-total df-cut) or shingle upstream; group
     cardinality bounds the pair count as in the jsd matrix.
-
-    Builds eagerly: ``kendall_tau_binned`` checkpoints its cell table.
     """
     return kendall_profile_from_cells(
         token_cells(df, group_col, text_col),
@@ -1644,8 +1623,18 @@ def oov_from_cells(
 
     Builds eagerly: the cell table is localCheckpoint'ed."""
     # kept: measured faster than lazy vocabulary and per-group branches
-    # over the cell table (oov_rates at sf0.1: 0.60 s with this, 0.71 s
-    # without)
+    # over the cell table (oov_rates at sf0.1, 10 interleaved reps:
+    # 0.192 s with this, 0.209 s without; the lazy plan won 1 of 10).
+    # Lazily the AQE final plan runs the cell table's final merge once
+    # per branch, and the join's stage waits for the vocabulary's:
+    #   HashAggregate(keys=[g, tk], functions=[count(1)])      (join side)
+    #     ShuffleQueryStage 3  Exchange hashpartitioning(g, tk)
+    #   BroadcastQueryStage 7  Window <- TakeOrderedAndProject(limit=50)
+    #     <- HashAggregate(keys=[tk], sum(c))  ShuffleQueryStage 6
+    #     <- HashAggregate(keys=[g, tk], functions=[count(1)]) (vocab side)
+    #       ShuffleQueryStage 5  ReusedExchange hashpartitioning(g, tk)
+    # A one-chain form (rank the per-token rows with their cells) sends
+    # every cell through the single-partition rank window.
     cells = cells.localCheckpoint(eager=False)
     vocab = _top_k_vocab(cells, vocab_k).select(
         "tk", F.lit(True).alias("__in_vocab")
@@ -1807,8 +1796,16 @@ def burrows_from_cells(
 
     Builds eagerly: the cell table is localCheckpoint'ed."""
     # kept: measured faster than lazy vocabulary, totals and spine-join
-    # branches over the cell table (burrows_delta at sf0.1: 1.06 s with
-    # this, 1.17 s without)
+    # branches over the cell table (burrows_delta at sf0.1, 10
+    # interleaved reps: 0.316 s with this, 0.355 s without; the lazy plan
+    # won 1 of 10).  Lazily the AQE final plan (24 stages) runs the cell
+    # table's final merge, HashAggregate(keys=[g, tk],
+    # functions=[count(1)]), three times: over the exchange in
+    # ShuffleQueryStage 7 and over its ReusedExchange in stages 9 and 11
+    # (the vocabulary, the totals and the spine join), as in
+    # oov_from_cells.  The one-chain form (one global row of groups and
+    # vocabulary) sends every cell through one task and builds the
+    # G²/2 pairs there.
     cells = cells.localCheckpoint(eager=False)
     vocab = _top_k_vocab(cells, vocab_k)
     totals = cells.groupBy("g").agg(F.sum("c").cast("long").alias("n"))

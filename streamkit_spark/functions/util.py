@@ -49,6 +49,13 @@ def fresh_ids(df: DataFrame) -> DataFrame:
     return df.select(*[F.col(c).alias(c) for c in df.columns])
 
 
+def sum_fold(arr: str, term) -> Column:
+    """Left fold of ``term(x)`` over the array column ``arr``, from 0.0 in
+    array order — a finisher's cross-element float sum, which the oracle
+    replays with ``list_sum(list(... ORDER BY))``."""
+    return F.aggregate(arr, F.lit(0.0).cast("double"), lambda a, x: a + term(x))
+
+
 def spread(df: DataFrame) -> DataFrame:
     """Fan a (possibly single-file) input across the cluster before
     expression-heavy per-row work.  A small parquet lands in one

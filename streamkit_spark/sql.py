@@ -4,12 +4,10 @@ __spark_entry__.py is the DataFrame twin of this surface).
 
 The reference has no SQL; this is the engine's native query language on
 top of the same semantics.  Views are logical plans and inherit all
-pushdown.  Registering the curation, analytics and sketch views starts
-no Spark job.  The timeseries and diagnostics registries start only the
-jobs of the views whose operator documents that it builds eagerly: the
-checkpointed cell tables of ``tsr_jsd``, ``dg_mi_weekday`` and
-``dg_gate_kappa``, and the shingle rank table of ``dg_source_dup_matrix``
-(``dedup.shingle_ranks``).
+pushdown.  Registering the curation, analytics, sketch and timeseries
+views starts no Spark job.  The diagnostics registry starts only the jobs
+of ``dg_source_dup_matrix``'s shingle rank table (``dedup.shingle_ranks``,
+which builds eagerly), and only when it is given documents.
 """
 
 from __future__ import annotations
@@ -223,12 +221,10 @@ def register_diagnostics_views(
       ``{p}source_dup_matrix`` (cross-source near-dup pair counts)
 
     Each view inherits the underlying scan's pushdown.  Registration
-    starts only the jobs of the views that build eagerly:
-    ``{p}mi_weekday`` (its checkpointed contingency table) and, with
-    ``documents``, ``{p}gate_kappa`` (likewise) and
-    ``{p}source_dup_matrix`` (the shingle rank table of
-    ``dedup.ngram_jaccard_pairs``).  The events frame must be
-    normalized (``tables.load``)."""
+    starts no Spark job without ``documents``; with them, only the jobs
+    of ``{p}source_dup_matrix``'s shingle rank table (built eagerly by
+    ``dedup.ngram_jaccard_pairs``).  The events frame must be normalized
+    (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A
@@ -364,9 +360,8 @@ def register_timeseries_views(
       divergence between source unigram distributions
 
     Each view inherits the underlying scan's pushdown.  Registration
-    starts no Spark job without ``documents``; with them, only the jobs
-    of ``{p}jsd``'s checkpointed token cells.  The events frame must be
-    normalized (``tables.load``)."""
+    starts no Spark job, with or without ``documents``.  The events frame
+    must be normalized (``tables.load``)."""
     from pyspark.sql import functions as F
 
     from streamkit_spark.functions import analytics as A

@@ -593,6 +593,45 @@ def test_contingency_stream_parity(spark, fixture_stream):
         q.stop()
 
 
+def test_kappa_stream_parity(spark, fixture_stream):
+    """Cohen's kappa is the contingency sketch's agreement report: over
+    the memory-sink cells of a streaming contingency_cells it equals the
+    batch cohen_kappa exactly.  The two raters are labelings of one type
+    (the weekday and the hour mod 7, as strings), so they share labels
+    and both the agreement and the chance mass are non-trivial."""
+    from streamkit_spark.functions.analytics import (
+        cohen_kappa,
+        contingency_cells,
+        kappa_from_cells,
+    )
+
+    raters = [
+        F.expr(f"(ts div {unit} + {shift}) % 7").cast("long").cast("string").alias(n)
+        for n, unit, shift in (
+            ("weekday", 86400000000000, 4),
+            ("hour7", 3600000000000, 0),
+        )
+    ]
+    batch = tables.load(spark, SF_DIR, "events").select(*raters)
+    want = {tuple(r) for r in cohen_kappa(batch, "weekday", "hour7").collect()}
+    q = (
+        contingency_cells(fixture_stream.select(*raters), "weekday", "hour7")
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("parity_kappa")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        cells = spark.sql("SELECT * FROM parity_kappa")
+        got = {tuple(r) for r in kappa_from_cells(cells).collect()}
+        assert got == want and len(got) == 1
+        (n, _, _, po, pe, _) = next(iter(got))
+        assert n > 0 and po > 0 and pe > 0
+    finally:
+        q.stop()
+
+
 def test_calibration_stream_parity(spark, fixture_stream):
     """The SAME streaming (bucket, n, pos, psum) calibration-cell table
     feeds BOTH calibration finishers: live ECE/MCE and Brier-
@@ -1256,3 +1295,66 @@ def test_bootstrap_stream_parity(spark, docs_stream):
         assert got == want and len(got) == n_groups
     finally:
         q.stop()
+
+
+def test_streaming_twins_state_stays_cell_bounded(spark, fixture_stream, tmp_path):
+    """The streaming twins keep one state row per occupied cell: read
+    from StreamProgressListener's state-operator rows, the state of a
+    streaming contingency_cells stays within its occupied (r, c) cells
+    (≤ r × c) and that of a streaming token_cells within its occupied
+    (group, token) cells (≤ groups × vocabulary) — never the row count."""
+    import shutil
+    import time
+
+    from streamkit_spark.functions.analytics import contingency_cells
+    from streamkit_spark.functions.text import token_cells, tokens
+    from streamkit_spark.telemetry import StreamProgressListener
+
+    wd = F.expr("(ts div 86400000000000 + 4) % 7").cast("long").alias("weekday")
+    ev = tables.load(spark, SF_DIR, "events").select("event_type", wd)
+    docs_dir = tmp_path / "docs_stream"
+    docs_dir.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", docs_dir / "documents.parquet")
+    docs_schema = spark.read.parquet(f"{SF_DIR}/documents.parquet").schema
+    docs = tables.load(spark, SF_DIR, "documents")
+
+    def bound(cells, a, b):
+        """(occupied cells, the full a × b grid) of a batch cell table."""
+        n_a, n_b = (cells.select(k).distinct().count() for k in (a, b))
+        return cells.count(), n_a * n_b
+
+    cases = {
+        "state_contingency": (
+            contingency_cells(
+                fixture_stream.select("event_type", wd), "event_type", "weekday"
+            ),
+            bound(contingency_cells(ev, "event_type", "weekday"), "r", "c"),
+            ev.count(),
+        ),
+        "state_tokens": (
+            token_cells(spark.readStream.schema(docs_schema).parquet(str(docs_dir))),
+            bound(token_cells(docs), "g", "tk"),
+            docs.select(F.explode(tokens("text"))).count(),
+        ),
+    }
+    for name, (cells, (occupied, grid), n_rows) in cases.items():
+        lst = StreamProgressListener()
+        spark.streams.addListener(lst.listener)
+        q = (
+            cells.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            assert spark.table(name).count() == occupied
+        finally:
+            q.stop()
+            spark.streams.removeListener(lst.listener)
+        deadline = time.time() + 15  # listener callbacks are async
+        while time.time() < deadline and not lst.progress():
+            time.sleep(0.2)
+        state = lst.summary()["max_state_rows"]
+        assert 0 < state <= occupied <= grid, (name, state, occupied, grid)
+        assert occupied < n_rows, name

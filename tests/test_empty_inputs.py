@@ -114,6 +114,22 @@ def test_sketches_on_empty_inputs(spark, empty_events):
     assert cms_lookup(sk, empty_events, "user_id").count() == 0
 
 
+def test_hll_distinct_exact_on_empty_input(spark):
+    """The exact count of an empty input is 0, so its relative error is
+    NULL, not a division by zero (which ANSI mode raises)."""
+    from streamkit_spark import tables
+    from streamkit_spark.functions.sketch import hll_distinct
+    from tests.conftest import SF_DIR
+
+    none = tables.load(spark, SF_DIR, "events").filter("1=0")
+    row = hll_distinct(none, "user_id", include_exact=True).first()
+    assert (row["exact_distinct"], row["hll_estimate"], row["rel_err"]) == (
+        0, 0.0, None
+    )
+    grouped = hll_distinct(none, "user_id", ["event_type"], include_exact=True)
+    assert grouped.count() == 0
+
+
 def test_graph_and_plan_ops_on_empty_inputs(spark, empty_docs, empty_events):
     from streamkit_spark.functions.curation import mixture_plan
     from streamkit_spark.functions.similarity import triangle_count

@@ -1,14 +1,21 @@
 """The materialization rule of the analytics, text and sketch operators.
 
 An operator in ``functions/analytics.py``, ``text.py`` or ``sketch.py``
-returns one lazy plan: building it starts no Spark job, and where its
-branches fan out of one derived table (a cell table, a daily series, a
-bucket histogram) they read that table's shuffle exchange, which Spark
-reuses, so the adaptive final plan after collect scans every input table
-once.  Materializing is kept only for the data-dependent loop
-(``event_pagerank``'s persisted transition matrix) and where it measured
-faster (``EAGER`` below, each with its reason; its operator's docstring
-says it builds eagerly).
+returns one lazy plan: building it starts no Spark job, and its final
+plan after collect scans every input table once.  A finisher over a
+derived table (a cell table, a daily series, a bucket histogram) is one
+chain over it where its statistics are keyed by the table's own columns:
+marginals are windows on the same rows, one aggregate collects what the
+statistic needs, and the statistic folds in-row, so no branch re-reads
+the table.  A corpus-wide scalar (a collection total, a top-k
+vocabulary) is a small aggregate broadcast back, never a window with no
+partition key over the table's rows (``test_scale_patterns`` pins that
+for the text finishers).  Such branches read the table's shuffle
+exchange, which Spark reuses.  Materializing is kept only for the
+data-dependent loop (``event_pagerank``'s persisted transition matrix)
+and where the lazy plan measured no faster (``EAGER`` below;
+its operator's docstring says it builds eagerly); a source-level pin
+holds every other operator to the rule.
 
 Three ways a branch loses the shared exchange, all checked here: column
 pruning (a ``count(*)`` or ``select(key).distinct()`` branch re-aggregates
@@ -41,27 +48,22 @@ source_ngram_overlap
 # branches share that exchange, but these consumers drop NULL scores, and
 # that `isnotnull(score)` filter is pushed below the repartition of the
 # score branch alone, so that branch scans documents a second time.
-RESCANS = {
-    q: {"documents": 2}
-    for q in ("calibration_ece", "calibration_brier", "classifier_auc")
-}
+GATE_CONSUMERS = (
+    "calibration_ece", "calibration_brier", "classifier_auc", "gate_kappa",
+    "score_calibration",
+)
+RESCANS = {q: {"documents": 2} for q in GATE_CONSUMERS}
 
 # Kept checkpoints: query -> the operator whose docstring says it builds
-# eagerly.  Each was measured slower lazily (sf0.1, 5 interleaved reps,
-# median with -> without): mi_weekday 0.67 -> 0.79 s, gate_kappa 2.49 -> 2.66,
-# score_calibration 2.52 -> 2.99, winsorized_value 0.98 -> 1.05,
-# kendall_matrix 1.81 -> 2.17, kl_sources 0.58 -> 0.64, jsd_sources
-# 0.76 -> 0.92, oov_rates 0.60 -> 0.71, ql_search 0.58 -> 0.70,
-# burrows_delta 1.06 -> 1.17.
+# eagerly.  Each needs a corpus-wide table beside every row (a global
+# top-k vocabulary beside every cell, collection stats beside every
+# document); lazily, each branch re-runs the table's final merge (the
+# plan is quoted at the checkpoint).  Measured at sf0.1, interleaved
+# reps, median with -> without: oov_rates 0.192 -> 0.209 s and
+# burrows_delta 0.316 -> 0.355 s (the lazy plan won 1 of 10 on each);
+# bm25_search, ql_search and hybrid_search no faster (the lazy plan won
+# 22, 19 and 17 of 40).
 EAGER = {
-    "mi_weekday": "analytics.mi_from_cells",
-    "gate_kappa": "analytics.kappa_from_cells",
-    "score_calibration": "analytics.calibration_report",
-    "winsorized_value": "analytics.winsorized_from_cells",
-    "kendall_value_hour": "analytics.kendall_tau_binned",
-    "kendall_matrix": "analytics.kendall_tau_binned",
-    "kl_sources": "text.kl_from_cells",
-    "jsd_sources": "text.jsd_from_cells",
     "oov_rates": "text.oov_from_cells",
     "burrows_delta": "text.burrows_from_cells",
     "bm25_search": "text.bm25_topk",
@@ -72,6 +74,15 @@ EAGER = {
 # rest): hybrid_search's vector half reads embeddings twice, the corpus
 # and its vec_id = 0 query row.
 EAGER_SCANS = {"hybrid_search": {"embeddings": 2}}
+
+# The modules under the rule, and the operators in them allowed to
+# materialize: the EAGER ones (bm25_topk's and ql_topk's checkpoint sits
+# in their shared _term_doc_stats), and event_pagerank, whose power
+# iteration re-reads its transition matrix every round.
+MODULES = ("analytics", "text", "sketch")
+MATERIALIZING = {"event_pagerank", "_term_doc_stats"} | {
+    op.split(".")[1] for op in EAGER.values()
+}
 
 
 @pytest.fixture(scope="module")
@@ -103,3 +114,28 @@ def test_builds_lazily_and_scans_each_input_once(spark, jobs_of, entry, name):
     assert build_jobs == 0
     assert scans, "no FileScan in the final plan: something materialized"
     assert scans == (RESCANS.get(name) or {t: 1 for t in scans})
+
+
+def test_only_declared_operators_materialize():
+    """Every ``localCheckpoint(`` / ``persist(`` call in the modules under
+    the rule sits in an operator allowed to materialize (an ``EAGER``
+    one, or ``event_pagerank``), so a checkpoint cannot creep back into
+    an operator outside the declared queries above."""
+    import ast
+    import importlib
+    import inspect
+
+    found = {}
+    for module in MODULES:
+        mod = importlib.import_module(f"streamkit_spark.functions.{module}")
+        tree = ast.parse(inspect.getsource(mod))
+        for top in tree.body:  # a top-level def, class or statement
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("localCheckpoint", "persist")
+                ):
+                    name = getattr(top, "name", "<module>")
+                    found.setdefault(name, []).append(f"{module}:{node.lineno}")
+    assert set(found) <= MATERIALIZING, found

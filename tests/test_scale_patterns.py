@@ -342,6 +342,42 @@ def test_r11_plan_shapes(spark):
     assert "Scan ExistingRDD" in pf
 
 
+def _unpartitioned_window_inputs(df) -> list[list[str]]:
+    """The input columns of every Window with no partition key in
+    ``df``'s optimized plan, one sorted name list per Window.  A Window
+    over a limit (a rank over the survivors of a distributed top-k) reads
+    at most that many rows and is not listed."""
+    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if (
+            node.nodeName() == "Window"
+            and node.partitionSpec().isEmpty()
+            and node.child().nodeName() != "GlobalLimit"
+        ):
+            cols = node.child().output()
+            found.append(sorted(cols.apply(i).name() for i in range(cols.size())))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_text_statistics_keep_rows_partitioned(spark):
+    """A window with no partition key moves every row it reads into one
+    task.  None sits over the documents or the token cells: bm25/ql's
+    collection stats and kl's corpus total are one-row aggregates
+    broadcast back, and oov/burrows' top-k vocabulary ranks the k
+    survivors of a distributed top-k over the distinct-token table.  A
+    checkpointed table shows as a scan here, and a window over it would
+    still show."""
+    import __spark_entry__ as E
+
+    for q in ("bm25_search", "ql_search", "kl_sources", "oov_rates",
+              "burrows_delta"):
+        df = E.queries()[q](spark, SF_DIR)
+        assert _unpartitioned_window_inputs(df) == [], q
+
+
 def test_r12_prefix_window_shapes(spark):
     """Plan contracts for the PPJoin window-prefix rank table
     (dedup.shingle_ranks): `row_number() over (partition by doc_id)`
