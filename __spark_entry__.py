@@ -1496,9 +1496,9 @@ def q_dedup_overlap(spark, sf_dir):
     """Overlap-coefficient (containment) near-dup pairs
     (dedup.overlap_coefficient_pairs): |A∩B|/min(|A|,|B|) ≥ 0.8 over
     3-gram shingles — catches short docs embedded in long ones that
-    Jaccard misses.  Candidates via the df≤64 rare-shingle cut
-    (containment admits no exact prefix filter); the oracle mirrors the
-    cut exactly."""
+    Jaccard misses.  Every such pair sharing a shingle of df ≤ 64 is
+    found (curate's prefix-filter pair pass, cut at max_df=64); the
+    oracle states the same contract as a blocking on those shingles."""
     docs = tables.load(spark, sf_dir, "documents")
     out = D.overlap_coefficient_pairs(docs, n=3, threshold=0.8, max_df=64)
     return out.select("id_a", "id_b", F.round("overlap", 4).alias("overlap"))

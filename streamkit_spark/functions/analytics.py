@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from streamkit_spark.functions.util import fresh_ids, sum_fold
 from streamkit_spark.schema import local_frame
@@ -4437,8 +4438,9 @@ def cohen_kappa(
     ``(n, n_rows, n_cols, po, pe, kappa)``; κ = 1 is perfect
     agreement, 0 is chance level, negative is systematic DISagreement.
 
-    The two rater columns must share a comparable type/domain (they are
-    compared with ``=`` for the diagonal and joined for p_e).
+    The two rater columns must share a type (their labels are compared
+    with ``=`` for the diagonal and p_e); any two numeric types pass.
+    Other mixed types raise ``ValueError`` when the plan is built.
 
     Determinism contract (the chi2_independence discipline): the
     contingency table, both marginals, the diagonal mass, and the
@@ -4461,6 +4463,12 @@ def kappa_from_cells(cells: DataFrame, round_digits: int = 4) -> DataFrame:
     """Finisher half of :func:`cohen_kappa` over a prebuilt (r, c, o)
     contingency table (the contingency streaming sketch — kappa is the
     sketch's agreement report next to chi2/V/MI's association ones)."""
+    rt, ct = (cells.schema[k].dataType for k in ("r", "c"))
+    if rt != ct and not (isinstance(rt, NumericType) and isinstance(ct, NumericType)):
+        raise ValueError(
+            "kappa compares the raters' labels, so they need one type: "
+            f"r is {rt.simpleString()}, c is {ct.simpleString()}"
+        )
     g = _contingency_row(cells)
     # chance mass Σ_k rt_k·ct_k over SHARED categories — a category one
     # rater never uses contributes 0 (its missing margin is 0), so the

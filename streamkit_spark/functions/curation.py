@@ -32,7 +32,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streamkit_spark.functions.text import STOPWORDS, tokens
-from streamkit_spark.functions.util import maybe_broadcast
 
 # ---------------------------------------------------------------------------
 # Gopher-style quality rules
@@ -281,15 +280,13 @@ def decontaminate(
     and its pipeline is too expensive for a count probe — left un-hinted
     so AQE broadcasts it from the measured runtime size, while a
     heavily-contaminated corpus degrades to a shuffle anti-join instead
-    of blowing the broadcast limit (maybe_broadcast rationale)."""
+    of blowing the broadcast limit."""
     bad = (
         contamination_report(corpus, benchmark, n, text_col, id_col)
         .filter(F.col("n_shared_ngrams") > max_shared)
         .select(F.col("doc_id").alias("__bad_id"))
     )
-    return corpus.join(
-        maybe_broadcast(bad), corpus[id_col] == F.col("__bad_id"), "left_anti"
-    )
+    return corpus.join(bad, corpus[id_col] == F.col("__bad_id"), "left_anti")
 
 
 def dsir_weights(
@@ -475,8 +472,8 @@ def bigram_logprob(
         F.count_distinct("w").alias("V")
     )
     scored = (
-        bg.join(maybe_broadcast(cab), ["a", "b"])
-        .join(maybe_broadcast(ca), "a")
+        bg.join(cab, ["a", "b"])
+        .join(ca, "a")
         .crossJoin(F.broadcast(vocab))
         .select(
             "doc_id",
@@ -577,9 +574,9 @@ def kn_bigram_logprob(
         * (F.col("n1b").cast("double") / F.col("n_bb").cast("double"))
     )
     scored = (
-        bg.join(maybe_broadcast(cab), ["a", "b"])
-        .join(maybe_broadcast(left), "a")
-        .join(maybe_broadcast(right), "b")
+        bg.join(cab, ["a", "b"])
+        .join(left, "a")
+        .join(right, "b")
         .crossJoin(F.broadcast(nbb))
         .select("doc_id", "pos", lnp.alias("__lp"))
     )

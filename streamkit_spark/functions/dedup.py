@@ -25,10 +25,12 @@ are ratios of one set-overlap projection (:func:`_set_overlap`), and exact
 Jaccard and containment share one candidate set
 (:func:`near_dup_pairs_from_ranks`).
 
-Every function returns a DataFrame builder.  Builders that run Spark jobs
-at construction — the exact prefix-filter detectors localCheckpoint
-:func:`shingle_ranks` eagerly, :func:`duplicate_clusters` collects a
-small pair graph — say so in their docstrings.
+Every function returns a lazy DataFrame builder, and a finisher over a
+pair table reads it once, in one chain.  Three materialize, and say so
+in their docstrings: :func:`shingle_ranks` (checkpointed eagerly, shared
+by the exact prefix-filter detectors), :func:`minhash_fidelity`'s
+signature table, and :func:`duplicate_clusters` (a bounded collect, then
+the iterative loop).
 """
 
 from __future__ import annotations
@@ -39,9 +41,7 @@ from pyspark.sql import functions as F
 from streamkit_spark import schema
 from streamkit_spark.functions.text import normalized_text, tokens, word_ngrams
 from streamkit_spark.functions.util import (
-    BROADCAST_ROW_LIMIT,
     in_row_pairs,
-    maybe_broadcast,
     pairs_from_sorted_groups,
     spread as _spread,
 )
@@ -195,21 +195,13 @@ def _verify_join(cand: DataFrame, side: DataFrame, col: str) -> DataFrame:
     """The one verify join of the pair detectors: candidate ``(id_a,
     id_b)`` rows (extra columns ride along) joined to a per-doc side
     table ``(doc_id, col)`` on both ends, adding ``{col}_a`` and
-    ``{col}_b``.  cand stays un-hinted (maybe_broadcast): its size is
-    corpus-dependent and its pipeline too expensive for a count probe,
+    ``{col}_b``.  cand stays un-hinted: its size is corpus-dependent,
     so AQE broadcasts from the measured size and a pathological case
     shuffles instead of OOMing.  PRECONDITION: ``doc_id`` unique in
     ``side``."""
     a = side.select(F.col("doc_id").alias("id_a"), F.col(col).alias(f"{col}_a"))
     b = side.select(F.col("doc_id").alias("id_b"), F.col(col).alias(f"{col}_b"))
-    return a.join(maybe_broadcast(cand), "id_a").join(b, "id_b")
-
-
-def _sid_sets(ranks: DataFrame) -> DataFrame:
-    """Per-doc shingle sets ``(doc_id, s)`` as the rank table's dense
-    sids — the verify side of the candidate-heavy ``*_from_ranks``
-    operators."""
-    return ranks.groupBy("doc_id").agg(F.collect_list("sid").alias("s"))
+    return a.join(cand, "id_a").join(b, "id_b")
 
 
 def _shingle_sets(
@@ -343,16 +335,16 @@ def overlap_coefficient_pairs_from_ranks(
 ) -> DataFrame:
     """:func:`overlap_coefficient_pairs` over a prebuilt
     :func:`shingle_ranks` table."""
-    cand = pairs_from_sorted_groups(
-        ranks.filter((F.col("df") > 1) & (F.col("df") <= max_df))
-        .groupBy("sid")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-    )
     overlap = F.col("inter").cast("double") / F.least("na", "nb")
     return (
-        _set_overlap(cand, _sid_sets(ranks))
-        .select("id_a", "id_b", overlap.alias("overlap"))
-        .filter(F.col("overlap") >= F.lit(threshold))
+        near_dup_pairs_from_ranks(ranks, None, threshold, max_df)
+        .select(
+            "id_a",
+            # a no-op on a pair's id that keeps id_b non-nullable in
+            # the output schema
+            F.coalesce("id_b", F.lit(0)).alias("id_b"),
+            overlap.alias("overlap"),
+        )
         .orderBy("id_a", "id_b")
     )
 
@@ -371,13 +363,15 @@ def overlap_coefficient_pairs(
     a long one (quote inclusion, page-in-site), which Jaccard misses
     because the union is dominated by the long side.
 
-    Candidate generation: group-and-enumerate docs sharing a shingle with
-    document frequency ≤ ``max_df``, then verify the exact coefficient
-    over the full shingle sets.  The df-cut is the recall contract: a
-    pair sharing ONLY boilerplate shingles (df > max_df) is missed.  That
-    is the same deliberate trade :func:`substring_dup_pairs` makes, and
-    the oracle mirrors the cut exactly; :func:`containment_pairs` is the
-    exact-recall path for the same statistic.
+    Recall contract: every pair over the threshold that shares a shingle
+    with document frequency ≤ ``max_df`` is found; a pair sharing ONLY
+    boilerplate shingles (df > max_df) is missed, the same deliberate
+    trade :func:`substring_dup_pairs` makes.  The pairs are
+    :func:`containment_pairs`' at ``max_df`` — one candidate set and one
+    verify serve Jaccard, containment and overlap: such a pair's smallest
+    common shingle has the lowest df of the shared ones, so it survives
+    the cut, and it lies in the smaller side's prefix and passes the
+    positional filter (argument on :func:`shingle_ranks`).
 
     Builds one eager :func:`shingle_ranks` table (Spark jobs run at
     plan construction); pass a shared table to
@@ -786,9 +780,8 @@ def substring_exposure(
     al. 2022's memorization analysis acts on: a doc whose spans recur
     across many partners is the one a model will regurgitate.
 
-    Scale: the pair table is the expensive part and is built once; the
-    exposure report is one union (both pair directions) + one doc-keyed
-    aggregate over |pairs| rows."""
+    One chain over the pair table: each pair fans out to its two
+    endpoints in-row, then one doc-keyed aggregate."""
     pairs = substring_dup_pairs(
         df,
         text_col=text_col,
@@ -798,14 +791,12 @@ def substring_exposure(
         min_shared=min_shared,
         max_df=max_df,
         hash_fn=hash_fn,
-    ).localCheckpoint(eager=False)  # feeds both direction branches
-    both = pairs.select(
-        F.col("doc_a").alias("doc_id"), F.col("shared_fps")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("doc_id"), F.col("shared_fps"))
     )
+    ends = pairs.select(F.inline(F.array(*[
+        F.struct(F.col(c).alias("doc_id"), "shared_fps") for c in ("doc_a", "doc_b")
+    ])))
     return (
-        both.groupBy("doc_id")
+        ends.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_partners"),
             F.sum("shared_fps").cast("long").alias("shared_fps_total"),
@@ -945,24 +936,17 @@ def dedup_keep_canonical(
     df: DataFrame,
     clusters: DataFrame,
     id_col: str = "doc_id",
-    broadcast_limit: int | None = BROADCAST_ROW_LIMIT,
 ) -> DataFrame:
     """The deduplicated corpus: drop every clustered doc except its
     canonical representative (cluster_id == doc_id); singletons (docs in
     no pair) pass through untouched.
 
-    The anti-join side is size-gated: a bounded count probe (cheap —
-    ``duplicate_clusters`` output is checkpointed or driver-built)
-    broadcast-hints the losers only when ≤ ``broadcast_limit`` rows.
-    Web-scale corpora run 20-50% duplicates, so at 100 TB the losers can
-    be billions of ids — above the limit this degrades to a shuffle
-    anti-join on the id instead of OOMing the executors."""
+    The anti-join side stays un-hinted.  Web-scale corpora run 20-50%
+    duplicates, so at 100 TB the losers can be billions of ids: AQE
+    broadcasts them from their measured size when they are small and
+    shuffles on the id otherwise, instead of OOMing the executors."""
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    return df.join(
-        maybe_broadcast(losers, broadcast_limit),
-        df[id_col] == losers["doc_id"],
-        "left_anti",
-    )
+    return df.join(losers, df[id_col] == losers["doc_id"], "left_anti")
 
 
 # ------------------------------------------------- substring (winnowing)
@@ -1351,68 +1335,62 @@ def jaccard_threshold_sweep(
 ) -> DataFrame:
     """Dedup tuning curve: pair counts and corpus impact at several
     Jaccard thresholds from ONE candidate computation —
-    ``(threshold, n_pairs, n_docs, dup_rate)`` per threshold, where
-    ``n_docs`` is how many distinct documents sit in at least one
-    qualifying pair and ``dup_rate`` = n_docs / corpus size.  This is
-    the plot a dedup engineer reads before picking a production
-    threshold: where the pair count explodes is where near-dup turns
-    into topical-similarity.
+    ``(threshold, n_pairs, n_docs, dup_rate)`` per threshold, in
+    threshold order, where ``n_docs`` is how many distinct documents sit
+    in at least one qualifying pair and ``dup_rate`` = n_docs / corpus
+    size.  This is the plot a dedup engineer reads before picking a
+    production threshold: where the pair count explodes is where
+    near-dup turns into topical-similarity.
 
-    The expensive pipeline (PPJoin-filtered pair generation +
-    verification at the LOWEST threshold) runs ONCE and is
-    localCheckpoint'ed; each threshold then filters the tiny verified
-    pair table — the UNROUNDED exact-ratio jaccard compares against the
-    threshold literal exactly as :func:`ngram_jaccard_pairs` does, so
-    the sweep at t equals an independent run at t.  Thresholds with no
-    qualifying pairs still emit (t, 0, 0, 0.0) rows.
-
-    Scale: inherits the PPJoin bounds; the sweep adds one
-    thresholds × pairs pass over a table that near-dup semantics keeps
-    small.
+    One pair pass at the LOWEST threshold, then one chain over it: each
+    pair fans out to its two endpoints in-row, a window by document
+    marks each document's best pair, and one aggregate counts per
+    threshold the pairs (by their first endpoint) and the documents
+    whose best pair qualifies.  The UNROUNDED exact-ratio jaccard
+    compares against each threshold literal exactly as
+    :func:`ngram_jaccard_pairs` does, so the sweep at t equals an
+    independent run at t.  Thresholds with no qualifying pairs still
+    emit (t, 0, 0, 0.0) rows.  Builds one eager :func:`shingle_ranks`
+    table (Spark jobs run at plan construction).
     """
     ths = sorted({float(t) for t in thresholds})
     if not ths:
         raise ValueError("thresholds must be non-empty")
-    pairs = ngram_jaccard_pairs(
-        df, n=n, threshold=ths[0], text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    tdf = spark.createDataFrame(
-        [(t,) for t in ths], "threshold double"
-    )
-    q = pairs.crossJoin(F.broadcast(tdf)).filter(
-        F.col("jaccard") >= F.col("threshold")
-    )
-    stats = q.groupBy("threshold").agg(
-        F.count("*").cast("long").alias("n_pairs")
-    )
-    docs_t = (
-        q.select(
-            "threshold",
-            F.explode(F.array("id_a", "id_b")).alias("d"),
-        )
-        .groupBy("threshold")
-        .agg(F.countDistinct("d").cast("long").alias("n_docs"))
-    )
+    pairs = near_dup_pairs_from_ranks(
+        shingle_ranks(df, text_col, id_col, n), ths[0]
+    ).select("id_a", "id_b", _jaccard().alias("j"))
+    ends = pairs.select(F.inline(F.array(*[
+        F.struct(F.col(c).alias("d"), "j", F.lit(c == "id_a").alias("lead"))
+        for c in ("id_a", "id_b")
+    ])))
+    best = F.row_number().over(Window.partitionBy("d").orderBy(F.desc("j"))) == 1
+    counts = ends.select("j", "lead", best.alias("best")).agg(*[
+        F.count(F.when((F.col("j") >= F.lit(t)) & F.col(by), 1)).alias(f"{by}{i}")
+        for i, t in enumerate(ths)
+        for by in ("lead", "best")
+    ])
     total = df.filter(F.col(id_col).isNotNull()).agg(
         F.countDistinct(id_col).cast("long").alias("n_total")
     )
-    return (
-        tdf.join(F.broadcast(stats), "threshold", "left")
-        .join(F.broadcast(docs_t), "threshold", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "threshold",
-            F.coalesce("n_pairs", F.lit(0)).cast("long").alias("n_pairs"),
-            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            F.round(
-                F.coalesce("n_docs", F.lit(0)).cast("double")
-                / F.col("n_total").cast("double"),
-                round_digits,
-            ).alias("dup_rate"),
+    per_t = counts.crossJoin(F.broadcast(total)).select(F.inline(F.array(*[
+        F.struct(
+            _nullable_lit(t).alias("threshold"),
+            F.col(f"lead{i}").alias("n_pairs"),
+            F.col(f"best{i}").alias("n_docs"),
         )
-        .orderBy("threshold")
+        for i, t in enumerate(ths)
+    ])), "n_total")
+    rate = F.col("n_docs").cast("double") / F.col("n_total").cast("double")
+    return per_t.select(
+        "threshold", "n_pairs", "n_docs", F.round(rate, round_digits).alias("dup_rate")
     )
+
+
+def _nullable_lit(value) -> Column:
+    """``value`` as a literal typed nullable: the sweep's ``threshold``
+    and the agreement's ``det_a``/``det_b`` are nullable in their output
+    schemas."""
+    return F.nullif(F.lit(value), F.lit(None))
 
 
 def containment_candidates_from_ranks(
@@ -1542,9 +1520,7 @@ def containment_pairs(
     pair's smallest common shingle survives unless all common shingles
     are cut); a pair sharing ONLY boilerplate shingles is missed (the
     :func:`substring_dup_pairs` ``max_df`` recall trade).  Verification
-    stays exact either way.  The df-cut HEURISTIC sibling of this
-    operator is :func:`overlap_coefficient_pairs` (same statistic,
-    blocking on all shingles with df ≤ max_df).
+    stays exact either way.
 
     Measured (r10, tools/probe_containment_growth.py): on the synthetic
     fixtures candidates grow ~N^2.47 — but that corpus has a CLOSED
@@ -1605,8 +1581,10 @@ def near_dup_pairs_from_ranks(
     hit = F.lit(False) if off else _jaccard() >= F.lit(jaccard_threshold)
     # equal sizes tie to id_b, the jaccard convention
     smaller = F.when(F.col("na") < F.col("nb"), F.col("id_a")).otherwise(F.col("id_b"))
+    # the verify side: each doc's shingle set as its dense sids
+    sids = ranks.groupBy("doc_id").agg(F.collect_list("sid").alias("s"))
     return (
-        _set_overlap(cand, _sid_sets(ranks))
+        _set_overlap(cand, sids)
         .withColumn("jaccard_hit", hit)
         .withColumn("contained_id", F.when(contains, smaller))
         .filter(F.col("jaccard_hit") | F.col("contained_id").isNotNull())
@@ -1631,64 +1609,46 @@ def detector_agreement(pair_tables: dict[str, DataFrame]) -> DataFrame:
     both sets are empty.  All counts exact integers; one double
     division rounded 4dp.
 
-    Scale: pair endpoints are normalized and tagged in ONE union, the
-    union is checkpointed (it feeds both the per-detector counts and
-    the per-pair grouping — the derived-table hazard), and detector
-    co-occurrence is enumerated IN-ROW per pair via
-    pairs_from_sorted_groups over the ≤|detectors| tag array — never a
-    pair-table self-join."""
+    One chain: the normalized pairs of every detector meet in one union
+    and one per-pair grouping that collects the set of detectors finding
+    the pair; one aggregate then counts, per detector and per detector
+    pair, the pairs whose set holds them — in-row, never a pair-table
+    self-join.  The detector spine is a literal array."""
     if len(pair_tables) < 2:
         raise ValueError("detector_agreement needs at least two detectors")
     names = sorted(pair_tables)
     tagged = None
-    for name, p in sorted(pair_tables.items()):
-        t = p.select(
+    for name in names:
+        t = pair_tables[name].select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
             F.lit(name).alias("det"),
-        ).distinct()
+        )
         tagged = t if tagged is None else tagged.unionByName(t)
-    tagged = tagged.localCheckpoint(eager=False)
-    per = tagged.groupBy("det").agg(F.count("*").cast("long").alias("n"))
-    ds = tagged.groupBy("id_a", "id_b").agg(
-        F.array_sort(F.collect_set("det")).alias("ds")
+    found = tagged.groupBy("id_a", "id_b").agg(F.collect_set("det").alias("ds"))
+    spine = [(i, j) for i in range(len(names)) for j in range(i + 1, len(names))]
+
+    def n_found(*dets: str) -> Column:
+        held = F.lit(True)
+        for d in dets:
+            held = held & F.array_contains("ds", d)
+        return F.count(F.when(held, 1))
+
+    counts = found.agg(
+        *[n_found(a).alias(f"n{i}") for i, a in enumerate(names)],
+        *[n_found(names[i], names[j]).alias(f"n{i}_{j}") for i, j in spine],
     )
-    both = (
-        pairs_from_sorted_groups(ds, "ds", distinct=False)
-        .groupBy(F.col("id_a").alias("det_a"), F.col("id_b").alias("det_b"))
-        .agg(F.count("*").cast("long").alias("n_both"))
-    )
-    spark = tagged.sparkSession
-    spine = spark.createDataFrame(
-        [(a, b) for i, a in enumerate(names) for b in names[i + 1:]],
-        "det_a string, det_b string",
-    )
-    na = per.select(F.col("det").alias("det_a"), F.col("n").alias("n_a"))
-    nb = per.select(F.col("det").alias("det_b"), F.col("n").alias("n_b"))
+    rows = counts.select(F.inline(F.array(*[
+        F.struct(
+            _nullable_lit(names[i]).alias("det_a"),
+            _nullable_lit(names[j]).alias("det_b"),
+            F.col(f"n{i}").alias("n_a"),
+            F.col(f"n{j}").alias("n_b"),
+            F.col(f"n{i}_{j}").alias("n_both"),
+        )
+        for i, j in spine
+    ])))
     denom = F.col("n_a") + F.col("n_b") - F.col("n_both")
-    return (
-        spine.join(maybe_broadcast(na), "det_a", "left")
-        .join(maybe_broadcast(nb), "det_b", "left")
-        .join(maybe_broadcast(both), ["det_a", "det_b"], "left")
-        .select(
-            "det_a",
-            "det_b",
-            F.coalesce("n_a", F.lit(0)).cast("long").alias("n_a"),
-            F.coalesce("n_b", F.lit(0)).cast("long").alias("n_b"),
-            F.coalesce("n_both", F.lit(0)).cast("long").alias("n_both"),
-        )
-        .select(
-            "det_a",
-            "det_b",
-            "n_a",
-            "n_b",
-            "n_both",
-            F.when(
-                denom > 0,
-                F.round(
-                    F.col("n_both").cast("double") / denom.cast("double"), 4
-                ),
-            ).alias("agreement"),
-        )
-        .orderBy("det_a", "det_b")
-    )
+    return rows.withColumn("agreement", F.when(
+        denom > 0, F.round(F.col("n_both").cast("double") / denom.cast("double"), 4)
+    ))

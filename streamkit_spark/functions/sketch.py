@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from streamkit_spark.functions.util import maybe_broadcast
 
 __all__ = [
     "bloom_positions",
@@ -137,7 +136,7 @@ def bloom_filter(
     for i in range(h):
         pcol = f"__bf_pos{i}"
         out = out.withColumn(pcol, probes.getItem(i)).join(
-            maybe_broadcast(bloom.withColumnRenamed("pos", pcol)), pcol, "semi"
+            bloom.withColumnRenamed("pos", pcol), pcol, "semi"
         )
     return out.drop(*[f"__bf_pos{i}" for i in range(h)])
 
@@ -590,9 +589,9 @@ def cms_lookup(
         .select("__v", "p.r", "p.pos")
     )
     return (
-        # explicit hint, not maybe_broadcast: the sketch is PROVABLY
-        # ≤ d·w rows by construction, and the documented "probe side
-        # never shuffles" contract must hold even with AQE off
+        # an explicit hint, not AQE's runtime choice: the sketch is
+        # PROVABLY ≤ d·w rows by construction, and the documented "probe
+        # side never shuffles" contract must hold even with AQE off
         p.join(F.broadcast(sketch), ["r", "pos"], "left")
         .groupBy("__v")
         .agg(F.min(F.coalesce(F.col("c"), F.lit(0))).alias("cms_n"))

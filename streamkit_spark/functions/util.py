@@ -5,40 +5,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Row limit under which an id-list (one long per row) is safely
-#: broadcastable: ~4M longs ≈ 32 MB serialized, well inside executor
-#: memory at default overheads while far above any realistic near-dup
-#: cluster table at test scale.
-BROADCAST_ROW_LIMIT = 4_000_000
-
-
-def maybe_broadcast(df: DataFrame, limit: int | None = None) -> DataFrame:
-    """Broadcast-hint ``df`` only when it is verifiably small.
-
-    An unconditional ``F.broadcast`` on a table whose size is bounded only
-    by corpus properties (duplicate rate, contamination rate, candidate
-    count) is a latent OOM at 100 TB: web-scale corpora run 20-50%
-    duplicates, so "the losers table" can be billions of ids.  Two safe
-    modes:
-
-    * ``limit=None`` — return ``df`` un-hinted.  AQE (on by default since
-      Spark 3.2) converts the shuffle join to a broadcast join at runtime
-      from the MEASURED size of the built side, so the normal small case
-      still broadcasts while the pathological case degrades to a shuffle
-      join instead of failing.  Use this when ``df``'s pipeline is too
-      expensive to execute twice (e.g. LSH candidate generation).
-    * ``limit=N`` — run a bounded count probe (``df.limit(N+1).count()``)
-      and hint only when the count is ≤ N.  The probe re-executes the
-      plan, so pass a limit ONLY for cheap or already-materialized inputs
-      (checkpointed cluster tables, driver-built DataFrames, dimension
-      reads).
-    """
-    if limit is None:
-        return df
-    if df.limit(limit + 1).count() <= limit:
-        return F.broadcast(df)
-    return df
-
 
 def fresh_ids(df: DataFrame) -> DataFrame:
     """``df`` behind one aliasing projection.  A finisher that joins two

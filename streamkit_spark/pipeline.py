@@ -130,8 +130,7 @@ def _curate_stages(
     pairs = _near_dup_pairs(exact, cfg)
     if cfg.cluster_dedup:
         clusters = D.duplicate_clusters(pairs)
-        # no losers count probe (2 jobs): AQE sizes the anti-join
-        kept = D.dedup_keep_canonical(exact, clusters, broadcast_limit=None)
+        kept = D.dedup_keep_canonical(exact, clusters)
     else:
         # one drop rule: a Jaccard pair drops id_b, a containment-only
         # pair its CONTAINED side — the larger endpoint may hold unique

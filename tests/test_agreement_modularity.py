@@ -46,6 +46,17 @@ def test_detector_agreement_duplicate_rows_counted_once(spark):
     )
 
 
+def test_detector_agreement_two_empty_detectors_keep_their_row(spark):
+    """The spine is literal: two empty detectors still give their row,
+    with zero counts and NULL agreement."""
+    from streamkit_spark.functions.dedup import detector_agreement
+
+    rows = detector_agreement(
+        {"x": _pairs(spark, []), "y": _pairs(spark, [])}
+    ).collect()
+    assert [tuple(r) for r in rows] == [("x", "y", 0, 0, 0, None)]
+
+
 def test_detector_agreement_needs_two(spark):
     from streamkit_spark.functions.dedup import detector_agreement
 

@@ -8,6 +8,7 @@ from streamkit_spark.functions.analytics import (
     brier_decomposition,
     calibration_cells,
     cohen_kappa,
+    contingency_cells,
     expected_calibration_error,
     kappa_from_cells,
 )
@@ -64,6 +65,26 @@ def test_kappa_empty_input_one_null_row(spark):
     r = rows[0]
     assert r["n"] == 0 and r["n_rows"] == 0 and r["n_cols"] == 0
     assert r["po"] is None and r["pe"] is None and r["kappa"] is None
+
+
+def test_kappa_mixed_rater_types_raise_at_build(spark):
+    """A string rater against a bigint one has no shared label domain: the
+    plan refuses to build, naming both types, instead of failing at
+    collect with a cast error.  Streaming cells meet the same check, and
+    two numeric raters of different widths still compare."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("1", 1), ("2", 2)], "a string, b bigint")
+    with pytest.raises(ValueError, match="r is string, c is bigint"):
+        cohen_kappa(df, "a", "b")
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").cast("string").alias("a"), F.col("value").alias("b")
+    )
+    with pytest.raises(ValueError, match="r is string, c is bigint"):
+        kappa_from_cells(contingency_cells(stream, "a", "b"))
+    widths = spark.createDataFrame([(1, 1), (2, 2)], "a int, b bigint")
+    assert cohen_kappa(widths, "a", "b").collect()[0]["kappa"] == 1.0
 
 
 def test_kappa_from_cells_prebuilt_table(spark):

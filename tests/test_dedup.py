@@ -85,26 +85,6 @@ def test_dedup_keep_canonical_drops_non_representatives(spark, docs_with_dupes):
     assert kept == [1, 3, 5]
 
 
-def test_dedup_keep_canonical_broadcast_is_size_gated(spark, docs_with_dupes):
-    """The losers anti-join broadcast must be gated on the probe count:
-    under the limit → broadcast hint; over it → a plain shuffle anti-join
-    (the 100 TB OOM guard from VERDICT r2).  Results identical both ways.
-    The clusters come from the distributed path, the only one whose
-    output can be large: the small path answers with an Arrow-backed
-    local frame of exact size, which the planner broadcasts on its own."""
-    from streamkit_spark.plans.inspect import explain_str
-
-    pairs = spark.createDataFrame([(1, 2), (1, 4)], "id_a long, id_b long")
-    clusters = D.duplicate_clusters(pairs, small_graph_threshold=0)
-    small = D.dedup_keep_canonical(docs_with_dupes, clusters, broadcast_limit=100)
-    assert "BroadcastExchange" in explain_str(small, "simple")
-    big = D.dedup_keep_canonical(docs_with_dupes, clusters, broadcast_limit=1)
-    assert "BroadcastExchange" not in explain_str(big, "simple")
-    assert sorted(r["doc_id"] for r in big.collect()) == sorted(
-        r["doc_id"] for r in small.collect()
-    )
-
-
 def test_winnowing_hash_paths_honor_guarantee(spark):
     """Winnowing's detection guarantee is hash-agnostic: every pair
     sharing an exact substring of ≥ k+w-1 chars MUST be found by both the

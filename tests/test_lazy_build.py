@@ -1,8 +1,9 @@
-"""The materialization rule of the analytics, text and sketch operators.
+"""The materialization rule of the analytics, text, sketch and dedup
+operators.
 
-An operator in ``functions/analytics.py``, ``text.py`` or ``sketch.py``
-returns one lazy plan: building it starts no Spark job, and its final
-plan after collect scans every input table once.  A finisher over a
+An operator in ``functions/analytics.py``, ``text.py``, ``sketch.py`` or
+``dedup.py`` returns one lazy plan: building it starts no Spark job, and
+its final plan after collect scans every input table once.  A finisher over a
 derived table (a cell table, a daily series, a bucket histogram) is one
 chain over it where its statistics are keyed by the table's own columns:
 marginals are windows on the same rows, one aggregate collects what the
@@ -12,10 +13,13 @@ vocabulary) is a small aggregate broadcast back, never a window with no
 partition key over the table's rows (``test_scale_patterns`` pins that
 for the text finishers).  Such branches read the table's shuffle
 exchange, which Spark reuses.  Materializing is kept only for the
-data-dependent loop (``event_pagerank``'s persisted transition matrix)
-and where the lazy plan measured no faster (``EAGER`` below;
-its operator's docstring says it builds eagerly); a source-level pin
-holds every other operator to the rule.
+data-dependent loops (``event_pagerank``'s persisted transition matrix,
+``duplicate_clusters``), for the dedup tables shared across detectors
+(``shingle_ranks``, ``minhash_fidelity``'s signatures) and where the
+lazy plan measured no faster (``EAGER`` below; its operator's docstring
+says it builds eagerly); a source-level pin holds every other operator
+to the rule.  A pair-table finisher fans each pair out in-row and runs
+one aggregate.
 
 Three ways a branch loses the shared exchange, all checked here: column
 pruning (a ``count(*)`` or ``select(key).distinct()`` branch re-aggregates
@@ -40,7 +44,7 @@ vocab_coverage acf_daily xcorr_daily jsd_sources kl_sources psi_daily
 psi_drift robust_trend kmv_overlap bloom_prefilter log_odds_tokens
 kendall_value_hour kendall_matrix interarrival event_assoc token_diversity
 oov_rates burrows_delta bm25_search classifier_auc hybrid_search ql_search
-source_ngram_overlap
+source_ngram_overlap memorization_risk
 """.split()
 
 # Rescans that no operator here causes.  curation.classifier_gate_table
@@ -77,12 +81,19 @@ EAGER_SCANS = {"hybrid_search": {"embeddings": 2}}
 
 # The modules under the rule, and the operators in them allowed to
 # materialize: the EAGER ones (bm25_topk's and ql_topk's checkpoint sits
-# in their shared _term_doc_stats), and event_pagerank, whose power
-# iteration re-reads its transition matrix every round.
-MODULES = ("analytics", "text", "sketch")
-MATERIALIZING = {"event_pagerank", "_term_doc_stats"} | {
-    op.split(".")[1] for op in EAGER.values()
-}
+# in their shared _term_doc_stats); event_pagerank, whose power
+# iteration re-reads its transition matrix every round; and in dedup
+# the rank table every exact detector shares, minhash_fidelity's
+# signature table (three references) and duplicate_clusters' collect
+# and label-propagation loop.
+MODULES = ("analytics", "text", "sketch", "dedup")
+MATERIALIZING = {
+    "event_pagerank",
+    "_term_doc_stats",
+    "shingle_ranks",
+    "minhash_fidelity",
+    "duplicate_clusters",
+} | {op.split(".")[1] for op in EAGER.values()}
 
 
 @pytest.fixture(scope="module")
@@ -118,9 +129,9 @@ def test_builds_lazily_and_scans_each_input_once(spark, jobs_of, entry, name):
 
 def test_only_declared_operators_materialize():
     """Every ``localCheckpoint(`` / ``persist(`` call in the modules under
-    the rule sits in an operator allowed to materialize (an ``EAGER``
-    one, or ``event_pagerank``), so a checkpoint cannot creep back into
-    an operator outside the declared queries above."""
+    the rule sits in an operator allowed to materialize
+    (``MATERIALIZING``), so a checkpoint cannot creep back into an
+    operator outside the declared queries above."""
     import ast
     import importlib
     import inspect
@@ -139,3 +150,17 @@ def test_only_declared_operators_materialize():
                     name = getattr(top, "name", "<module>")
                     found.setdefault(name, []).append(f"{module}:{node.lineno}")
     assert set(found) <= MATERIALIZING, found
+
+
+def test_dedup_finishers_build_only_the_rank_table(spark, jobs_of, entry):
+    """The overlap operator and the threshold sweep start no more jobs at
+    build than exact Jaccard, whose only build jobs are the eager
+    ``shingle_ranks`` table: the pair pass and the sweep's chain stay
+    lazy."""
+    jobs = {
+        name: jobs_of(lambda name=name: entry[name](spark, SF_DIR))
+        for name in ("dedup_ngram_jaccard", "dedup_overlap", "dedup_sweep")
+    }
+    assert jobs["dedup_ngram_jaccard"] > 0, jobs
+    assert jobs["dedup_overlap"] <= jobs["dedup_ngram_jaccard"], jobs
+    assert jobs["dedup_sweep"] <= jobs["dedup_ngram_jaccard"], jobs

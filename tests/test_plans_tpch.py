@@ -152,8 +152,8 @@ def test_decontaminated_broadcasts_benchmark_not_bad_ids(spark):
     """Benchmark grams are hint-broadcast into the contamination join
     (bounded by construction: the benchmark is small).  The bad-id
     anti-join side is deliberately UN-hinted — its size is bounded only
-    by the contamination rate, so the strategy is AQE's runtime call
-    (maybe_broadcast rationale): no ResolvedHint may appear on it."""
+    by the contamination rate, so the strategy is AQE's runtime call:
+    no ResolvedHint may appear on it."""
     df = E.queries()["decontaminated"](spark, SF_DIR)
     plan = explain_str(df, "simple")
     assert "BroadcastHashJoin" in plan  # the benchmark-gram join

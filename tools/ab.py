@@ -24,7 +24,8 @@ Queries: one worker process per arm imports the arm's
 rep.  Before rep 0 each worker builds and collects every named query
 once, untimed, so no timed rep pays the Spark session's warm-up.  The
 first rep's rows are written as parquet (``--rows`` keeps them).  Printed
-per query: schema equality, the exceptAll counts in both directions,
+per query: schema equality (each differing field with its name, type
+and nullable flag in both arms), the exceptAll counts in both directions,
 each arm's median and q1-q3 seconds (build + collect), in how many
 reps the change was faster, and each arm's median count of classes its
 JVM compiled per rep with their compile ms (Spark's ``CodegenMetrics``
@@ -45,6 +46,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import itertools
 import json
 import os
 import statistics
@@ -282,6 +284,24 @@ def _run_queries(trees: dict, names: list, sf_dir: str, reps: int, rows_dir: str
     return {"runs": runs, "checks": checks}
 
 
+def _schema_diff(base: str, change: str) -> list[str]:
+    """Each field position where the arms' schema JSONs differ: the
+    field's name, type, nullable flag and any metadata in each arm
+    (``-`` where the arm has no such field)."""
+
+    def describe(f: dict | None) -> str:
+        if f is None:
+            return "-"
+        t = f["type"] if isinstance(f["type"], str) else json.dumps(f["type"])
+        return f"{f['name']} {t} nullable={f['nullable']} {f['metadata'] or ''}".rstrip()
+
+    fields = (json.loads(s)["fields"] for s in (base, change))
+    return [
+        f"field {i}: {describe(b)} -> {describe(c)}"
+        for i, (b, c) in enumerate(itertools.zip_longest(*fields)) if b != c
+    ]
+
+
 def _report_queries(result: dict) -> bool:
     """Prints the per-query table; True when every query is identical."""
     same = True
@@ -322,6 +342,9 @@ def _report_queries(result: dict) -> bool:
             k: {a: statistics.median(r[k] for r in arms[a]) for a in ARMS}
             for k in ("build_ms", "collect_ms", "py4j")
         }
+        if not chk["schema_equal"]:
+            for line in _schema_diff(arms["base"][0]["schema"], arms["change"][0]["schema"]):
+                print(f"    schema {line}")
         print(
             f"    build {med['build_ms']['base']:.1f} -> {med['build_ms']['change']:.1f} ms; "
             f"collect {med['collect_ms']['base']:.1f} -> {med['collect_ms']['change']:.1f} ms; "
